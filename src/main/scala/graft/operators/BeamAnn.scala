@@ -15,25 +15,24 @@ import org.apache.spark.sql.functions._
   *    corpus size) rides the driver as a LocalRelation between hops, so
   *    the expand/score joins broadcast it while corpus-side scoring stays
   *    distributed.
-  *  - driver replay below `driverRowThreshold` corpus/edge rows (the
-  *    [[Scc]]/[[Boruvka]]/[[Mmr]] adaptive contract): the SAME recurrence
-  *    over collected vectors — identical decimal dot accumulation
-  *    ([[graft.expressions.DotDecimal]]'s scale-20 HALF_UP per-product
-  *    rounding), identical 12 dp Spark-Round cosine, identical
+  *  - driver replay below `ReplayBound` corpus/edge rows (the
+  *    [[DriverReplay]] gate, long ids and float-array embeddings only):
+  *    the SAME recurrence over collected vectors — identical decimal dot
+  *    accumulation ([[graft.expressions.DotDecimal]]'s scale-20 HALF_UP
+  *    per-product rounding), identical 12 dp Spark-Round cosine, identical
   *    (cos DESC, node ASC) beam order — because at sf scale the
   *    distributed route's cost is 7 × per-hop plan/JIT latency
   *    (ProbeQueryJobs: 49 jobs, ~1.6 s driver gaps for 40-row hop state),
-  *    not compute. Larger corpora take the distributed rounds unchanged
-  *    (forced via `driverRowThreshold = 0`); both routes are pinned
-  *    output-identical in BeamAnnSpec.
+  *    not compute. Larger corpora take the distributed rounds unchanged;
+  *    both routes are pinned output-identical in BeamAnnSpec, including
+  *    on edges whose dst has no embedding (both drop the candidate).
   */
 object BeamAnn {
 
-  /** Routing observability (the [[Components]]/[[Scc]]/[[Boruvka]]
-    * probe-counter precedent) — specs pin that a sub-threshold corpus
-    * takes the replay and a forced run takes the distributed rounds.
+  /** Corpus and edge rows at or below which the search replays on the
+    * driver.
     */
-  private[graft] val driverPathRuns = new java.util.concurrent.atomic.AtomicLong()
+  private val ReplayBound = 200000
 
   /** Top-`k` beam-search neighbors for every query vector (`vec_id <
     * maxQueryId`), entered at the min vec_id, over `edges` (src, dst).
@@ -43,18 +42,24 @@ object BeamAnn {
     * semantics.
     */
   def searchTopK(emb: DataFrame, edges: DataFrame, maxQueryId: Long,
-      width: Int, hops: Int, k: Int,
-      driverRowThreshold: Long = 200000L): DataFrame = {
-    // routing probe: corpus and edge-list sizes (two metadata-cheap counts
-    // against single-scan frames; the replay collects both, so BOTH must
-    // be bounded). Long vec_ids + float-array embeddings are the only
-    // shapes the replay handles — anything else takes the distributed path.
-    val replayable =
-      emb.schema("vec_id").dataType == org.apache.spark.sql.types.LongType &&
-        (driverRowThreshold > 0 && emb.count() <= driverRowThreshold &&
-          edges.count() <= driverRowThreshold)
-    if (replayable) searchDriver(emb, edges, maxQueryId, width, hops, k)
-    else searchDistributed(emb, edges, maxQueryId, width, hops, k)
+      width: Int, hops: Int, k: Int): DataFrame = {
+    import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
+    // the replay collects corpus AND edges, so both must be bounded; long
+    // vec_ids + float-array embeddings are the only shapes it reads —
+    // anything else takes the distributed path
+    val replayable = emb.schema("vec_id").dataType == LongType &&
+      (emb.schema("embedding").dataType match {
+        case ArrayType(FloatType, _) => true
+        case _ => false
+      })
+    DriverReplay.probeAll(Seq(
+        emb.select(col("vec_id"), col("embedding")),
+        edges.select(col("src").cast("long"), col("dst").cast("long"))),
+      ReplayBound, replayable) match {
+      case Some(rows) => searchDriver(emb.sparkSession, rows(0), rows(1),
+        maxQueryId, width, hops, k)
+      case None => searchDistributed(emb, edges, maxQueryId, width, hops, k)
+    }
   }
 
   private def searchDistributed(emb: DataFrame, edges: DataFrame,
@@ -99,18 +104,19 @@ object BeamAnn {
       .orderBy("q_id", "rank")
   }
 
-  /** Exact replay of the distributed recurrence over collected vectors. */
-  private def searchDriver(emb: DataFrame, edges: DataFrame,
+  /** Exact replay of the distributed recurrence over collected
+    * (vec_id, embedding) and (src, dst) rows.
+    */
+  private def searchDriver(s: org.apache.spark.sql.SparkSession,
+      emb: Array[org.apache.spark.sql.Row], edges: Array[org.apache.spark.sql.Row],
       maxQueryId: Long, width: Int, hops: Int, k: Int): DataFrame = {
-    driverPathRuns.incrementAndGet()
-    val s = emb.sparkSession
     import s.implicits._
     val vecs = new java.util.HashMap[Long, Array[Float]]()
-    emb.select(col("vec_id"), col("embedding")).collect().foreach { r =>
-      vecs.put(r.getLong(0), r.getSeq[Float](1).toArray)
-    }
+    emb.foreach(r => vecs.put(r.getLong(0), r.getSeq[Float](1).toArray))
+    // an edge whose dst is null or has no embedding is dropped, as the
+    // distributed route's inner join with the corpus drops that candidate
     val adj = new java.util.HashMap[Long, List[Long]]()
-    edges.select(col("src").cast("long"), col("dst").cast("long")).collect()
+    edges.filter(r => !r.isNullAt(0) && !r.isNullAt(1) && vecs.containsKey(r.getLong(1)))
       .foreach { r =>
         adj.merge(r.getLong(0), List(r.getLong(1)), (o, n) => n ::: o)
       }

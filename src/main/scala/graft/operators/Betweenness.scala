@@ -44,20 +44,19 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Betweenness {
 
-  /** Edge bound for the serial driver path — the [[Bfs.LocalEdgeThreshold]]
-    * adaptive contract: same rounded-contribution grid replayed with
-    * java.math.BigDecimal, so the collapse to one bounded collect is
-    * bit-identical to the distributed loop.
+  /** Edge bound for the serial driver path ([[DriverReplay]]): same
+    * rounded-contribution grid replayed with java.math.BigDecimal, so the
+    * collapse to one bounded collect is bit-identical to the distributed
+    * loop.
     */
-  val LocalEdgeThreshold = 100000
+  private val ReplayBound = 100000
 
   private val Dec15 = DecimalType(38, 15)
 
   def run(
       edges: DataFrame, srcCol: String, dstCol: String, sources: Seq[Long],
       maxLevels: Int = 8, undirected: Boolean = true,
-      checkpointDir: Option[String] = None,
-      localEdgeThreshold: Int = LocalEdgeThreshold): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = {
     require(sources.nonEmpty, "need at least one source")
     require(maxLevels >= 1, s"maxLevels must be >= 1, got $maxLevels")
     val spark = edges.sparkSession
@@ -65,12 +64,9 @@ object Betweenness {
     val dir0 = edges.select(
       col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
 
-    if (localEdgeThreshold > 0) {
-      val probe = dir0.limit(localEdgeThreshold + 1).collect()
-      if (probe.length <= localEdgeThreshold) {
-        val es = probe.map(r => (r.getLong(0), r.getLong(1)))
-        return localRun(spark, es, sources, maxLevels, undirected)
-      }
+    DriverReplay.probe(dir0, ReplayBound).foreach { probe =>
+      val es = probe.map(r => (r.getLong(0), r.getLong(1)))
+      return localRun(spark, es, sources, maxLevels, undirected)
     }
 
     val e = {

@@ -27,12 +27,12 @@ import org.apache.spark.sql.functions._
   */
 object Bfs {
 
-  /** Edge bound for the serial driver path — the [[Hits.LocalEdgeThreshold]]
-    * adaptive contract: hop counts are integers, so the serial replay is
-    * trivially bit-identical, and O(diameter) scheduled rounds collapse
-    * to one bounded collect on aggregate-sized graphs.
+  /** Edge bound for the serial driver path ([[DriverReplay]]): hop counts
+    * are integers, so the serial replay is trivially bit-identical, and
+    * O(diameter) scheduled rounds collapse to one bounded collect on
+    * aggregate-sized graphs.
     */
-  val LocalEdgeThreshold = 100000
+  private val ReplayBound = 100000
 
   /** (node, hop) for every node reachable from `source` within `maxHops`,
     * hop = BFS distance (source itself at hop 0).
@@ -40,44 +40,40 @@ object Bfs {
   def run(
       edges: DataFrame, srcCol: String, dstCol: String, source: Long,
       maxHops: Int = 64, undirected: Boolean = true,
-      checkpointDir: Option[String] = None,
-      localEdgeThreshold: Int = LocalEdgeThreshold): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
     val spark = edges.sparkSession
     val e0 = edges.select(
       col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
 
-    if (localEdgeThreshold > 0) {
-      val probe = e0.limit(localEdgeThreshold + 1).collect()
-      if (probe.length <= localEdgeThreshold) {
-        val es = probe.map(r => (r.getLong(0), r.getLong(1)))
-        val adjM = new java.util.HashMap[Long, java.util.ArrayList[Long]]()
-        def add(a: Long, b: Long): Unit =
-          if (a != b) adjM.computeIfAbsent(a, _ => new java.util.ArrayList[Long]()).add(b)
-        es.foreach { case (s, d) => add(s, d); if (undirected) add(d, s) }
-        val hops = new java.util.HashMap[Long, Long]()
-        hops.put(source, 0L)
-        var frontier = List(source)
-        var hop = 0L
-        while (frontier.nonEmpty && hop < maxHops) {
-          hop += 1
-          val next = scala.collection.mutable.ListBuffer.empty[Long]
-          frontier.foreach { u =>
-            val nbrs = adjM.get(u)
-            if (nbrs != null) {
-              val it = nbrs.iterator()
-              while (it.hasNext) {
-                val v = it.next()
-                if (!hops.containsKey(v)) { hops.put(v, hop); next += v }
-              }
+    DriverReplay.probe(e0, ReplayBound).foreach { probe =>
+      val es = probe.map(r => (r.getLong(0), r.getLong(1)))
+      val adjM = new java.util.HashMap[Long, java.util.ArrayList[Long]]()
+      def add(a: Long, b: Long): Unit =
+        if (a != b) adjM.computeIfAbsent(a, _ => new java.util.ArrayList[Long]()).add(b)
+      es.foreach { case (s, d) => add(s, d); if (undirected) add(d, s) }
+      val hops = new java.util.HashMap[Long, Long]()
+      hops.put(source, 0L)
+      var frontier = List(source)
+      var hop = 0L
+      while (frontier.nonEmpty && hop < maxHops) {
+        hop += 1
+        val next = scala.collection.mutable.ListBuffer.empty[Long]
+        frontier.foreach { u =>
+          val nbrs = adjM.get(u)
+          if (nbrs != null) {
+            val it = nbrs.iterator()
+            while (it.hasNext) {
+              val v = it.next()
+              if (!hops.containsKey(v)) { hops.put(v, hop); next += v }
             }
           }
-          frontier = next.toList
         }
-        val rows = scala.jdk.CollectionConverters.MapHasAsScala(hops).asScala
-          .toSeq.map { case (n, h) => (n, h) }
-        return spark.createDataFrame(rows).toDF("node", "hop")
+        frontier = next.toList
       }
+      val rows = scala.jdk.CollectionConverters.MapHasAsScala(hops).asScala
+        .toSeq.map { case (n, h) => (n, h) }
+      return spark.createDataFrame(rows).toDF("node", "hop")
     }
     val adj = (if (undirected) e0.union(e0.select(col("d").as("s"), col("s").as("d")))
       else e0)

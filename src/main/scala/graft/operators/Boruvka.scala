@@ -35,31 +35,25 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Boruvka {
 
-  /** Observability for the adaptive routing (the [[Components]] /
-    * [[Scc]] probe-counter precedent): specs pin that a sub-threshold
-    * graph takes the driver replay and a forced run takes the rounds.
-    */
-  private[graft] val driverPathRuns = new java.util.concurrent.atomic.AtomicLong()
+  /** Edge count at or below which the census replays on the driver. */
+  private val ReplayBound = 200000
 
   /** Per-round census of the growing forest over canonical weighted edges
     * `(a, b, w)` with a < b. Returns one row per round:
     * (round, n_selected, round_weight, n_components).
     *
-    * Adaptive (the [[Components.connectedComponents]] /
-    * [[Scc.run]] contract): the recurrence is a fixed number of
+    * Adaptive ([[DriverReplay]]): the recurrence is a fixed number of
     * driver-synchronous rounds, each ~25 shuffle stages (cross join,
     * per-component window, `jumps` label joins, census aggregates) —
     * measured 133 AQE-stage jobs ≈ 7.6 s at sf0.1 for a 10 k-edge knn
-    * graph, pure scheduling tax. Below `driverEdgeThreshold` edges
-    * (integral ids + double weights) the SAME recurrence replays on the
-    * driver: identical selection order (w, a, b), identical fixed-depth
+    * graph, pure scheduling tax. Below `ReplayBound` edges (integral ids
+    * + double weights) the SAME recurrence replays on the driver:
+    * identical selection order (w, a, b), identical fixed-depth
     * contraction, identical decimal(38,6) weight census — differential-
-    * pinned against the distributed rounds in Round10OpsSpec. Larger
-    * graphs take the distributed path unchanged (forced via
-    * `driverEdgeThreshold = 0`).
+    * pinned against the distributed rounds in BoruvkaSpec. Larger graphs
+    * take the distributed path unchanged.
     */
-  def forestCensus(edges: DataFrame, rounds: Int, jumps: Int,
-      driverEdgeThreshold: Long = 200000L): DataFrame = {
+  def forestCensus(edges: DataFrame, rounds: Int, jumps: Int): DataFrame = {
     val dec6 = DecimalType(38, 6)
     // one materialization of the edge list: every round's cross-edge join,
     // and nothing else, re-reads it (without the cut, each of the ~6
@@ -71,7 +65,7 @@ object Boruvka {
       Seq("a", "b").forall(c => Seq(ByteType, ShortType, IntegerType, LongType)
         .contains(e.schema(c).dataType)) && e.schema("w").dataType == DoubleType
     }
-    if (driverEdgeThreshold > 0 && nE <= driverEdgeThreshold && integralIds)
+    if (DriverReplay.admits(e.sparkSession, nE, ReplayBound, integralIds))
       return forestCensusDriver(e, rounds, jumps)
     // Round 13 (guide §2.2/§2.4 — VERDICT item 7): the rounds carry the
     // CONTRACTED cross-edge frame (w, a, b, ca, cb) instead of a
@@ -92,7 +86,7 @@ object Boruvka {
     // An edge's (ca, cb) after r rounds equals lab_r(…lab_1(a)…) —
     // exactly the old comp-join labels — so selection, contraction and
     // census see identical inputs (differential-pinned vs the driver
-    // replay in Round10OpsSpec, incl. a forced-distributed run).
+    // replay in BoruvkaSpec, incl. a forced-distributed run).
     var nComp = e.select(col("a").as("node"))
       .union(e.select(col("b").as("node"))).distinct().count()
     var eR = Components.cut(
@@ -168,10 +162,9 @@ object Boruvka {
     * arithmetic: each selected w cast to DECIMAL(38,6) (HALF_UP, exactly
     * Spark's double→decimal cast) summed exactly, cast back to double and
     * rounded at 6 (Spark's Round semantics). Input is the already-cut
-    * canonical edge frame; bound by the caller's threshold.
+    * canonical edge frame, at most `ReplayBound` rows.
     */
   private def forestCensusDriver(e: DataFrame, rounds: Int, jumps: Int): DataFrame = {
-    driverPathRuns.incrementAndGet()
     val spark = e.sparkSession
     import spark.implicits._
     val rows = e.select(col("a").cast("long"), col("b").cast("long"), col("w"))

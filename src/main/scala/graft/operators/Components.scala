@@ -92,45 +92,42 @@ object Components {
   /** (id, cluster_id) for every node appearing in `pairs`, cluster_id =
     * min node id of the component.
     *
-    * Adaptive: near-dup edge lists are typically a vanishing fraction of
-    * the corpus (duplicates are the exception), so below
-    * `driverEdgeThreshold` edges the closure runs as driver-side
-    * union-find — microseconds instead of O(diameter) distributed rounds.
-    * Larger graphs take the distributed label-propagation path.
+    * Adaptive ([[DriverReplay]]): near-dup edge lists are typically a
+    * vanishing fraction of the corpus (duplicates are the exception), so
+    * below `ReplayBound` edges the closure runs as driver-side union-find
+    * — microseconds instead of O(diameter) distributed rounds. Larger
+    * graphs take the distributed label-propagation path.
     */
   def connectedComponents(
       pairs: DataFrame, srcCol: String, dstCol: String,
-      maxIters: Int = 20, driverEdgeThreshold: Long = 1000000L,
+      maxIters: Int = 20,
       checkpointDir: Option[String] = None): DataFrame = {
-    // scoped persist: the threshold probe AND the chosen path both execute
-    // `pairs` (often an expensive near-dup pipeline). Persist before the
-    // probe, unpersist after the path has materialized (driver path
-    // collect()s; distributed path eagerly localCheckpoints `sym`), so the
-    // upstream pipeline runs once and nothing outlives this call.
+    // scoped persist: the probe AND the chosen path both execute `pairs`
+    // (often an expensive near-dup pipeline). Persist before the probe,
+    // unpersist after the path has materialized (the driver path holds the
+    // probed rows; the distributed path eagerly localCheckpoints `sym`), so
+    // the upstream pipeline runs once and nothing outlives this call.
     val cached = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      if (driverEdgeThreshold > 0 &&
-          cached.limit(driverEdgeThreshold.toInt + 1).count() <= driverEdgeThreshold)
-        driverUnionFind(cached, srcCol, dstCol)
-      else distributedCC(cached, srcCol, dstCol, maxIters, checkpointDir)
+      DriverReplay.probe(cached.select(col(srcCol), col(dstCol)), ReplayBound) match {
+        case Some(edges) =>
+          driverUnionFind(pairs.sparkSession, edges, pairs.schema(srcCol).dataType)
+        case None => distributedCC(cached, srcCol, dstCol, maxIters, checkpointDir)
+      }
     } finally cached.unpersist()
   }
+
+  /** Edge count at or below which [[connectedComponents]] closes on the
+    * driver.
+    */
+  private val ReplayBound = 1000000
 
   /** Union-find with path compression over collected edges; ids keep their
     * type through a local index mapping.
     */
-  /** Test observability for the probe bound: the scale-safety claim is
-    * that a graph past `driverEdgeThreshold` NEVER reaches this path's
-    * `collect()` — OpsProps watches this counter to pin the routing
-    * (output equality alone can't distinguish the paths by design).
-    */
-  private[graft] val driverPathRuns = new java.util.concurrent.atomic.AtomicLong()
-
-  private def driverUnionFind(
-      pairs: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    driverPathRuns.incrementAndGet()
-    val spark = pairs.sparkSession
-    val edges = pairs.select(col(srcCol).as("src"), col(dstCol).as("dst")).collect()
+  private def driverUnionFind(spark: org.apache.spark.sql.SparkSession,
+      edges: Array[org.apache.spark.sql.Row],
+      idType: org.apache.spark.sql.types.DataType): DataFrame = {
     val index = new java.util.LinkedHashMap[Any, Int]()
     edges.foreach { r =>
       index.computeIfAbsent(r.get(0), _ => index.size)
@@ -169,7 +166,6 @@ object Components {
       minOfRoot.put(r, smaller)
     }
     val out = ids.indices.map(i => org.apache.spark.sql.Row(ids(i), minOfRoot.get(find(i))))
-    val idType = pairs.schema(srcCol).dataType
     spark.createDataFrame(
       spark.sparkContext.parallelize(out, 1),
       org.apache.spark.sql.types.StructType(Seq(
@@ -321,17 +317,15 @@ object Components {
 
   /** Cluster assignment for near-duplicate documents plus the survivor
     * flag (lowest doc_id in each cluster survives — the cross-document
-    * generalization of [[Dedup.firstWriterWins]]). `driverEdgeThreshold`
-    * and `checkpointDir` pass through to [[connectedComponents]]; a
-    * threshold of 0 forces the distributed closure (how q77 proves that
-    * path end-to-end under the oracle).
+    * generalization of [[Dedup.firstWriterWins]]). `checkpointDir`
+    * passes through to [[connectedComponents]]; [[DriverReplay]]'s switch
+    * forces the distributed closure (how q77 proves that path end-to-end
+    * under the oracle).
     */
   def neardupClusters(
-      pairs: DataFrame, driverEdgeThreshold: Long = 1000000L,
+      pairs: DataFrame,
       checkpointDir: Option[String] = None): DataFrame =
-    connectedComponents(pairs, "doc_a", "doc_b",
-        driverEdgeThreshold = driverEdgeThreshold,
-        checkpointDir = checkpointDir)
+    connectedComponents(pairs, "doc_a", "doc_b", checkpointDir = checkpointDir)
       .select(col("id").as("doc_id"), col("cluster_id"),
         (col("id") === col("cluster_id")).as("is_survivor"))
 
@@ -356,7 +350,7 @@ object Components {
     * OpsProps).
     */
   def neardupClustersContracted(
-      pairs: DataFrame, driverEdgeThreshold: Long = 1000000L,
+      pairs: DataFrame,
       checkpointDir: Option[String] = None,
       clique: Column = col("jaccard") === 1.0): DataFrame = {
     // read once: rep aggregate, node census, and cross projection all
@@ -380,8 +374,7 @@ object Components {
         greatest(col("ra"), col("rb")).as("doc_b"))
       .filter(col("doc_a") =!= col("doc_b"))
       .distinct()
-    val comp = connectedComponents(cross, "doc_a", "doc_b",
-      driverEdgeThreshold = driverEdgeThreshold, checkpointDir = checkpointDir)
+    val comp = connectedComponents(cross, "doc_a", "doc_b", checkpointDir = checkpointDir)
     repOf.join(comp.select(col("id").as("rep"), col("cluster_id")), Seq("rep"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_id"), col("rep")).as("cluster_id"))

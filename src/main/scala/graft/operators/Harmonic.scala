@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
 
 /** Harmonic centrality by data-parallel multi-source BFS: every node is
   * simultaneously a BFS source, the frontier is a (src, node) pair set,
@@ -38,6 +39,15 @@ object Harmonic {
     */
   val SamplePivots = 256
 
+  /** Edge bound for the serial driver path ([[DriverReplay]]): integer
+    * BFS layers plus a serial replay of the fixed-point 1/d quantization
+    * ([[graft.expressions.FixedPointSumAgg]] at scale 15) and the
+    * round-12 finish — bit-identical to the distributed aggregate.
+    * Applies to the exact and explicit-sources modes; the pivot-ESTIMATOR
+    * mode stays distributed (its xxhash64 source sampling is plan-side).
+    */
+  private val ReplayBound = 100000
+
   /** (node, n_reached, harmonic) per source node, harmonic rounded at
     * 12 dp from fixed-point 1/d sums. `und`: undirected edges (uCol <
     * vCol, deduplicated). `sources`: optional one-column frame limiting
@@ -47,45 +57,28 @@ object Harmonic {
     * scaled by (n−1)/m over distances TO the pivots — exact d(p,v) by
     * undirected symmetry; n_reached = pivots reaching v).
     */
-  /** Edge bound for the serial driver path ([[Bfs.LocalEdgeThreshold]]
-    * contract): integer BFS layers plus a serial replay of the
-    * fixed-point 1/d quantization ([[graft.expressions.FixedPointSumAgg]]
-    * at scale 15) and the round-12 finish — bit-identical to the
-    * distributed aggregate. Applies to the exact and explicit-sources
-    * modes; the pivot-ESTIMATOR mode stays distributed (its xxhash64
-    * source sampling is plan-side).
-    */
-  val LocalEdgeThreshold = 100000
-
   def run(und: DataFrame, uCol: String = "u", vCol: String = "v",
       maxHops: Int = 8, sources: Option[DataFrame] = None,
-      maxExactNodes: Long = MaxExactNodes,
-      localEdgeThreshold: Int = LocalEdgeThreshold): DataFrame = {
+      maxExactNodes: Long = MaxExactNodes): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
 
-    if (localEdgeThreshold > 0) {
-      val probe = und.select(col(uCol), col(vCol)).limit(localEdgeThreshold + 1).collect()
-      if (probe.length <= localEdgeThreshold) {
-        val es = probe.map(r => (r.get(0), r.get(1)))
-        val nodes: Array[Any] = (es.map(_._1) ++ es.map(_._2)).distinct
-        val srcSeeds: Option[Array[Any]] = sources match {
-          case None if nodes.length <= maxExactNodes => Some(nodes)
-          case None => None // pivot-estimator mode: distributed path below
-          case Some(sd) =>
-            val sp = sd.select(col(sd.columns.head))
-              .distinct().limit(localEdgeThreshold + 1).collect()
-            if (sp.length <= localEdgeThreshold) {
-              val inGraph = nodes.toSet
-              Some(sp.map(_.get(0)).distinct.filter(inGraph.contains))
-            } else None
-        }
-        srcSeeds match {
-          case Some(seeds) =>
-            return runLocal(und.sparkSession, es, nodes, seeds, maxHops,
-              if (probe.isEmpty) org.apache.spark.sql.types.StringType
-              else probe.head.schema.fields(0).dataType)
-          case None => () // fall through to the distributed path
-        }
+    // explicit sources must be bounded too — the replay collects both
+    val replayInputs = und.select(col(uCol), col(vCol)) +:
+      sources.toSeq.map(sd => sd.select(col(sd.columns.head)).distinct())
+    DriverReplay.probeAll(replayInputs, ReplayBound).foreach { rows =>
+      val probe = rows.head
+      val es = probe.map(r => (r.get(0), r.get(1)))
+      val nodes: Array[Any] = (es.map(_._1) ++ es.map(_._2)).distinct
+      val seeds: Option[Array[Any]] = rows.lift(1) match {
+        case Some(sp) =>
+          val inGraph = nodes.toSet
+          Some(sp.map(_.get(0)).distinct.filter(inGraph.contains))
+        case None if nodes.length <= maxExactNodes => Some(nodes)
+        case None => None // pivot-estimator mode: distributed path below
+      }
+      seeds.foreach { sd =>
+        return runLocal(und.sparkSession, es, nodes, sd, maxHops,
+          if (probe.isEmpty) StringType else probe.head.schema.fields(0).dataType)
       }
     }
 
@@ -163,7 +156,7 @@ object Harmonic {
       spark: org.apache.spark.sql.SparkSession,
       es: Array[(Any, Any)], nodes: Array[Any], seeds: Array[Any],
       maxHops: Int,
-      nodeType: org.apache.spark.sql.types.DataType): DataFrame = {
+      nodeType: DataType): DataFrame = {
     val adj = new java.util.HashMap[Any, java.util.ArrayList[Any]]()
     def add(a: Any, b: Any): Unit =
       adj.computeIfAbsent(a, _ => new java.util.ArrayList[Any]()).add(b)
@@ -212,16 +205,8 @@ object Harmonic {
       (src, reached, rnd12(acc.doubleValue() / pow))
     }.filter(_._2 > 0).toSeq // sources reaching nothing carry no dist>0 rows
 
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", nodeType),
-      org.apache.spark.sql.types.StructField(
-        "n_reached", org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField(
-        "harmonic", org.apache.spark.sql.types.DoubleType, nullable = true)))
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(
-          out.map(t => org.apache.spark.sql.Row(t._1, t._2, t._3))).asJava),
-      schema)
+    val schema = StructType(Seq(StructField("node", nodeType),
+      StructField("n_reached", LongType, nullable = false), StructField("harmonic", DoubleType)))
+    spark.createDataFrame(java.util.Arrays.asList(out.map(t => Row(t._1, t._2, t._3)): _*), schema)
   }
 }

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, DoubleType, StringType, StructField, StructType}
 
 /** HITS (hubs and authorities) over an edge-list DataFrame — the
   * complement to [[PageRank]]: authority scores reward being pointed at
@@ -26,17 +26,16 @@ import org.apache.spark.sql.types.DecimalType
 object Hits {
 
   /** Edge-count bound below which the whole computation runs serially on
-    * the driver (one bounded collect, zero per-round jobs) — the same
-    * adaptive contract as [[Components]]' union-find threshold: iterative
-    * graph rounds at aggregate-graph sizes (trade graphs, category
-    * graphs) are pure job-scheduling overhead on a cluster, while real
-    * web/doc graphs exceed the bound and take the distributed path. The
-    * serial path replays the distributed arithmetic EXACTLY (same
-    * BigDecimal.valueOf round/cast sequence Catalyst executes), so the
-    * two paths are bit-identical — pinned by HitsSpec's differential
-    * test and the q112 oracle.
+    * the driver ([[DriverReplay]]): iterative graph rounds at
+    * aggregate-graph sizes (trade graphs, category graphs) are pure
+    * job-scheduling overhead on a cluster, while real web/doc graphs
+    * exceed the bound and take the distributed path. The serial path
+    * replays the distributed arithmetic EXACTLY (same BigDecimal.valueOf
+    * round/cast sequence Catalyst executes), so the two paths are
+    * bit-identical — pinned by HitsSpec's differential test and the q112
+    * oracle.
     */
-  val LocalEdgeThreshold = 100000
+  private val ReplayBound = 100000
 
   /** (node, authority, hub) for every node of `edges`, both columns
     * L1-normalized and rounded at 12 dp.
@@ -46,18 +45,14 @@ object Hits {
       weightCol: Option[String] = None,
       iterations: Int = 5,
       checkpointEvery: Int = 5,
-      checkpointDir: Option[String] = None,
-      localEdgeThreshold: Int = LocalEdgeThreshold): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
 
     val w = weightCol.map(col(_).cast("double")).getOrElse(lit(1.0))
     val eSel = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w"))
 
-    if (localEdgeThreshold > 0) {
-      // bounded probe: if limit(t+1) returns <= t rows it IS the full set
-      val probe = eSel.limit(localEdgeThreshold + 1).collect()
-      if (probe.length <= localEdgeThreshold)
-        return runLocal(edges.sparkSession, probe, iterations)
+    DriverReplay.probe(eSel, ReplayBound).foreach { probe =>
+      return runLocal(edges.sparkSession, probe, iterations)
     }
 
     val e = eSel
@@ -143,13 +138,17 @@ object Hits {
     * then the hub half from the fresh authorities. Every step maps 1:1
     * to a distributed-plan expression, so partials/order can't diverge
     * (decimal adds are associative there, sequential here — same total).
+    * A null-weight edge contributes nothing, as its null product does to
+    * the plan's sum.
     */
   private def runLocal(
       spark: org.apache.spark.sql.SparkSession,
-      edgeRows: Array[org.apache.spark.sql.Row],
+      edgeRows: Array[Row],
       iterations: Int): DataFrame = {
-    val edges = edgeRows.map(r => (r.get(0), r.get(1), r.getDouble(2)))
-    val nodes: Array[Any] = (edges.map(_._1) ++ edges.map(_._2)).distinct
+    val edges = edgeRows.filterNot(_.isNullAt(2))
+      .map(r => (r.get(0), r.get(1), r.getDouble(2)))
+    val nodes: Array[Any] =
+      (edgeRows.map(_.get(0)) ++ edgeRows.map(_.get(1))).distinct
     val n = nodes.length.toDouble
     val init = rnd(1.0 / n, 12)
     var auth = nodes.map(_ -> init).toMap
@@ -176,20 +175,10 @@ object Hits {
       hub = half(auth, bySrc = false)  // hubs from the FRESH authorities
     }
 
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(
-        "node",
-        if (edgeRows.isEmpty) org.apache.spark.sql.types.StringType
-        else edgeRows.head.schema.fields(1).dataType),
-      org.apache.spark.sql.types.StructField(
-        "auth", org.apache.spark.sql.types.DoubleType, nullable = true),
-      org.apache.spark.sql.types.StructField(
-        "hub", org.apache.spark.sql.types.DoubleType, nullable = true)))
-    val out = nodes.toSeq.map(v =>
-      org.apache.spark.sql.Row(v, auth(v), hub(v)))
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(out).asJava),
-      schema)
+    val nodeType = if (edgeRows.isEmpty) StringType else edgeRows.head.schema.fields(1).dataType
+    val schema = StructType(Seq(StructField("node", nodeType),
+      StructField("auth", DoubleType), StructField("hub", DoubleType)))
+    val out = nodes.toSeq.map(v => Row(v, auth(v), hub(v)))
+    spark.createDataFrame(java.util.Arrays.asList(out: _*), schema)
   }
 }

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** k-core decomposition by synchronous peeling: repeatedly remove every
   * node with degree < k (together with its edges) until none remains; the
@@ -26,59 +27,49 @@ import org.apache.spark.sql.functions._
   */
 object KCore {
 
+  /** Edge bound for the serial driver path ([[DriverReplay]]): the peel
+    * is all-integer and round-synchronous, so the serial replay is
+    * bit-identical.
+    */
+  private val ReplayBound = 100000
+
   /** Peel `und` (undirected edges, one row per edge, uCol < vCol, no
     * duplicates) for the k-core. Output: (node, peel_round) — the
     * 1-based round at which the node was removed, or 0 for k-core
     * members. Nodes isolated in the INPUT never appear (they carry no
     * edge); nodes isolated BY peeling are peeled like any other.
     */
-  /** Edge bound for the serial driver path ([[Bfs.LocalEdgeThreshold]]
-    * contract): the peel is all-integer and round-synchronous, so the
-    * serial replay is bit-identical.
-    */
-  val LocalEdgeThreshold = 100000
-
   def run(und: DataFrame, k: Int, uCol: String = "u", vCol: String = "v",
-      maxRounds: Int = 8, localEdgeThreshold: Int = LocalEdgeThreshold): DataFrame = {
+      maxRounds: Int = 8): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     var edges = und.select(col(uCol).as("u"), col(vCol).as("v"))
 
-    if (localEdgeThreshold > 0) {
-      val probe = edges.limit(localEdgeThreshold + 1).collect()
-      if (probe.length <= localEdgeThreshold) {
-        var es = probe.map(r => (r.get(0), r.get(1))).toSeq
-        var live = (es.map(_._1) ++ es.map(_._2)).distinct.toSet
-        val peel = scala.collection.mutable.Map.empty[Any, Int]
-        var round = 0
-        var done = false
-        while (round < maxRounds && !done) {
-          round += 1
-          val deg = (es.map(_._1) ++ es.map(_._2)).groupBy(identity)
-            .map { case (n, xs) => n -> xs.size }
-          val toRemove = live.filter(n => deg.getOrElse(n, 0) < k)
-          if (toRemove.isEmpty) done = true
-          else {
-            val r = round
-            toRemove.foreach(n => peel(n) = r)
-            live --= toRemove
-            es = es.filter(e => !toRemove(e._1) && !toRemove(e._2))
-          }
+    DriverReplay.probe(edges, ReplayBound).foreach { probe =>
+      var es = probe.map(r => (r.get(0), r.get(1))).toSeq
+      var live = (es.map(_._1) ++ es.map(_._2)).distinct.toSet
+      val peel = scala.collection.mutable.Map.empty[Any, Int]
+      var round = 0
+      var done = false
+      while (round < maxRounds && !done) {
+        round += 1
+        val deg = (es.map(_._1) ++ es.map(_._2)).groupBy(identity)
+          .map { case (n, xs) => n -> xs.size }
+        val toRemove = live.filter(n => deg.getOrElse(n, 0) < k)
+        if (toRemove.isEmpty) done = true
+        else {
+          val r = round
+          toRemove.foreach(n => peel(n) = r)
+          live --= toRemove
+          es = es.filter(e => !toRemove(e._1) && !toRemove(e._2))
         }
-        val nodeType =
-          if (probe.isEmpty) org.apache.spark.sql.types.LongType
-          else probe.head.schema.fields(0).dataType
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", nodeType),
-          org.apache.spark.sql.types.StructField(
-            "peel_round", org.apache.spark.sql.types.IntegerType, nullable = false)))
-        val rows = (live.toSeq.map(n => org.apache.spark.sql.Row(n, 0)) ++
-          peel.toSeq.map { case (n, r) => org.apache.spark.sql.Row(n, r) })
-        return und.sparkSession.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](
-            scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-          schema)
       }
+      val nodeType = if (probe.isEmpty) LongType else probe.head.schema.fields(0).dataType
+      val schema = StructType(Seq(StructField("node", nodeType),
+        StructField("peel_round", IntegerType, nullable = false)))
+      val rows = (live.toSeq.map(n => Row(n, 0)) ++
+        peel.toSeq.map { case (n, r) => Row(n, r) })
+      return und.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
     }
     var live = Components.cut(
       edges.select(col("u").as("node"))

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** k-truss decomposition by synchronous support peeling: repeatedly
   * remove every edge participating in fewer than k−2 triangles, until
@@ -22,63 +23,52 @@ import org.apache.spark.sql.functions._
   */
 object KTruss {
 
+  /** Edge bound for the serial driver path ([[DriverReplay]]): integer
+    * triangle counts, round-synchronous peel — the serial replay is
+    * bit-identical.
+    */
+  private val ReplayBound = 100000
+
   /** Peel `und` (undirected edges, uCol < vCol, deduplicated) for the
     * k-truss. Output: (u, v, peel_round) — 1-based round at which the
     * edge was removed, 0 for k-truss members.
     */
-  /** Edge bound for the serial driver path ([[Bfs.LocalEdgeThreshold]]
-    * contract): integer triangle counts, round-synchronous peel — the
-    * serial replay is bit-identical.
-    */
-  val LocalEdgeThreshold = 100000
-
   def run(und: DataFrame, k: Int, uCol: String = "u", vCol: String = "v",
-      maxRounds: Int = 8, localEdgeThreshold: Int = LocalEdgeThreshold): DataFrame = {
+      maxRounds: Int = 8): DataFrame = {
     require(k >= 3, s"k must be >= 3, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val minSupport = k - 2
     var edges = und.select(col(uCol).as("u"), col(vCol).as("v"))
 
-    if (localEdgeThreshold > 0) {
-      val probe = edges.limit(localEdgeThreshold + 1).collect()
-      if (probe.length <= localEdgeThreshold) {
-        var es = probe.map(r => (r.get(0), r.get(1))).toSeq
-        val peel = scala.collection.mutable.Map.empty[(Any, Any), Int]
-        var round = 0
-        var done = false
-        while (round < maxRounds && !done) {
-          round += 1
-          val nbrs: Map[Any, Set[Any]] =
-            (es.map(e => (e._1, e._2)) ++ es.map(e => (e._2, e._1)))
-              .groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2).toSet }
-          val toRemove = es.filter { case (u, v) =>
-            nbrs(u).intersect(nbrs(v)).size < minSupport
-          }
-          if (toRemove.isEmpty) done = true
-          else {
-            val r = round
-            val rm = toRemove.toSet
-            toRemove.foreach(e => peel(e) = r)
-            es = es.filterNot(rm)
-          }
+    DriverReplay.probe(edges, ReplayBound).foreach { probe =>
+      var es = probe.map(r => (r.get(0), r.get(1))).toSeq
+      val peel = scala.collection.mutable.Map.empty[(Any, Any), Int]
+      var round = 0
+      var done = false
+      while (round < maxRounds && !done) {
+        round += 1
+        val nbrs: Map[Any, Set[Any]] =
+          (es.map(e => (e._1, e._2)) ++ es.map(e => (e._2, e._1)))
+            .groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2).toSet }
+        val toRemove = es.filter { case (u, v) =>
+          nbrs(u).intersect(nbrs(v)).size < minSupport
         }
-        val t =
-          if (probe.isEmpty) (org.apache.spark.sql.types.LongType,
-            org.apache.spark.sql.types.LongType)
-          else (probe.head.schema.fields(0).dataType,
-            probe.head.schema.fields(1).dataType)
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("u", t._1),
-          org.apache.spark.sql.types.StructField("v", t._2),
-          org.apache.spark.sql.types.StructField(
-            "peel_round", org.apache.spark.sql.types.IntegerType, nullable = false)))
-        val rows = (es.map { case (u, v) => org.apache.spark.sql.Row(u, v, 0) } ++
-          peel.toSeq.map { case ((u, v), r) => org.apache.spark.sql.Row(u, v, r) })
-        return und.sparkSession.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](
-            scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-          schema)
+        if (toRemove.isEmpty) done = true
+        else {
+          val r = round
+          val rm = toRemove.toSet
+          toRemove.foreach(e => peel(e) = r)
+          es = es.filterNot(rm)
+        }
       }
+      val t =
+        if (probe.isEmpty) (LongType, LongType)
+        else (probe.head.schema.fields(0).dataType, probe.head.schema.fields(1).dataType)
+      val schema = StructType(Seq(StructField("u", t._1), StructField("v", t._2),
+        StructField("peel_round", IntegerType, nullable = false)))
+      val rows = (es.map { case (u, v) => Row(u, v, 0) } ++
+        peel.toSeq.map { case ((u, v), r) => Row(u, v, r) })
+      return und.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
     }
     var removed: DataFrame = null
     var round = 0

@@ -28,44 +28,40 @@ import org.apache.spark.sql.functions._
   */
 object Lpa {
 
+  /** Edge bound for the serial driver path ([[DriverReplay]]):
+    * all-integer argmax with the identical (count desc, label asc)
+    * tie-break, so the serial replay is bit-identical.
+    */
+  private val ReplayBound = 100000
+
   /** (node, label) after `rounds` synchronous updates over the undirected
     * simple graph induced by `edges` (self-loops dropped, duplicates
     * collapsed).
     */
-  /** Edge bound for the serial driver path ([[Bfs.LocalEdgeThreshold]]
-    * contract): all-integer argmax with the identical (count desc, label
-    * asc) tie-break, so the serial replay is bit-identical.
-    */
-  val LocalEdgeThreshold = 100000
-
   def run(
       edges: DataFrame, srcCol: String, dstCol: String, rounds: Int = 4,
-      checkpointDir: Option[String] = None,
-      localEdgeThreshold: Int = LocalEdgeThreshold): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val e0 = edges.select(
       col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
 
-    if (localEdgeThreshold > 0) {
-      val probe = e0.limit(localEdgeThreshold + 1).collect()
-      if (probe.length <= localEdgeThreshold) {
-        val raw = probe.map(r => (r.getLong(0), r.getLong(1)))
-        val und = (raw ++ raw.map(t => (t._2, t._1))).filter(t => t._1 != t._2).distinct
-        val nbrs: Map[Long, Seq[Long]] =
-          und.groupBy(_._2).map { case (d, es) => d -> es.map(_._1).toSeq }
-        val nodes = und.map(_._1).distinct
-        var labels = nodes.map(n => n -> n).toMap
-        for (_ <- 1 to rounds) {
-          val prev = labels
-          labels = nodes.map { v =>
-            val counts: Map[Long, Int] =
-              nbrs.getOrElse(v, Seq.empty).groupBy(prev).map { case (l, xs) => (l, xs.size) }
-            if (counts.isEmpty) v -> prev(v)
-            else v -> counts.toSeq.minBy { case (l, c) => (-c, l) }._1
-          }.toMap
-        }
-        return edges.sparkSession.createDataFrame(labels.toSeq).toDF("node", "label")
+    DriverReplay.probe(e0, ReplayBound).foreach { probe =>
+      val raw = probe.map(r => (r.getLong(0), r.getLong(1)))
+      val und = (raw ++ raw.map(t => (t._2, t._1))).filter(t => t._1 != t._2).distinct
+      val nbrs: Map[Long, Seq[Long]] =
+        und.groupBy(_._2).map { case (d, es) => d -> es.map(_._1).toSeq }
+      val nodes = und.map(_._1).distinct
+      var labels = nodes.map(n => n -> n).toMap
+      for (_ <- 1 to rounds) {
+        val prev = labels
+        labels = nodes.map { v =>
+          val counts: Map[Long, Int] =
+            nbrs.getOrElse(v, Seq.empty).groupBy(prev).map { case (l, xs) => (l, xs.size) }
+          if (counts.isEmpty) v -> prev(v)
+          else v -> counts.toSeq.minBy { case (l, c) => (-c, l) }._1
+        }.toMap
       }
+      return edges.sparkSession.createDataFrame(labels.toSeq).toDF("node", "label")
     }
     val adj = e0.union(e0.select(col("d").as("s"), col("s").as("d")))
       .filter(col("s") =!= col("d"))

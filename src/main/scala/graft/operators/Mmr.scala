@@ -20,9 +20,10 @@ import org.apache.spark.sql.functions._
   */
 object Mmr {
 
-  /** Routing observability — the [[Components]]/[[Boruvka]] probe-counter
-    * precedent, pinned by the differential spec. */
-  private[graft] val driverPathRuns = new java.util.concurrent.atomic.AtomicLong()
+  /** Shortlist and sim rows at or below which the selection replays on
+    * the driver.
+    */
+  private val ReplayBound = 200000
 
   /** Select `k` per query. `short`: (qCol, cCol, rel). `sims`:
     * (qCol, cCol, mCol, sim) — pairwise sims among each query's
@@ -32,19 +33,18 @@ object Mmr {
     *
     * Adaptive (round 12): the k-step loop is k driver-synchronous rounds
     * of ~6 shuffle stages each (measured 57 AQE-stage jobs ≈ 2.9 s at
-    * sf0.1 over 120 shortlist rows). Below `driverRowThreshold` shortlist
-    * rows (integral ids, double scores) the SAME greedy recurrence
-    * replays on the driver — identical per-step rounding (λ·rel and
-    * λ·rel − (1−λ)·pen rounded at 12, Spark Round semantics), identical
-    * (score desc, candidate asc) argmax, identical missing-sim → 0
-    * penalty — differential-pinned against the distributed rounds in
+    * sf0.1 over 120 shortlist rows). Below `ReplayBound` shortlist and
+    * sim rows ([[DriverReplay]]; long ids, double scores) the SAME greedy
+    * recurrence replays on the driver — identical per-step rounding
+    * (λ·rel and λ·rel − (1−λ)·pen rounded at 12, Spark Round semantics),
+    * identical (score desc, candidate asc) argmax, identical missing-sim
+    * → 0 penalty — differential-pinned against the distributed rounds in
     * AnnSpec. Shortlists are bounded per query by construction, so the
-    * collect is threshold-bounded; corpus-scale query sets take the
-    * distributed path unchanged (forced via threshold 0).
+    * collect is bounded; corpus-scale query sets take the distributed path
+    * unchanged.
     */
   def select(short: DataFrame, sims: DataFrame, lambda: Double, k: Int,
-      qCol: String = "q_id", cCol: String = "n_id", mCol: String = "m_id",
-      driverRowThreshold: Long = 200000L): DataFrame = {
+      qCol: String = "q_id", cCol: String = "n_id", mCol: String = "m_id"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(lambda > 0 && lambda <= 1, s"lambda must be in (0,1], got $lambda")
     val integral = {
@@ -56,15 +56,18 @@ object Mmr {
         short.schema("rel").dataType == DoubleType &&
         sims.schema("sim").dataType == DoubleType
     }
-    // BOTH inputs are probed (round 13, ADVICE): `sims` is O(Σ per-query
-    // shortlist²) "both directions" — a shortlist under the row bound can
-    // still carry an unbounded sim table (1 k queries × 200 candidates ≈
-    // 40 M sim rows), and collecting it would OOM the driver where the
-    // distributed path handles it. Same limit+count probe shape as `short`.
-    if (driverRowThreshold > 0 && integral &&
-        short.limit(driverRowThreshold.toInt + 1).count() <= driverRowThreshold &&
-        sims.limit(driverRowThreshold.toInt + 1).count() <= driverRowThreshold)
-      return selectDriver(short, sims, lambda, k, qCol, cCol, mCol)
+    // BOTH inputs are probed: `sims` is O(Σ per-query shortlist²) "both
+    // directions" — a shortlist under the row bound can still carry an
+    // unbounded sim table (1 k queries × 200 candidates ≈ 40 M sim rows),
+    // and collecting it would OOM the driver where the distributed path
+    // handles it.
+    DriverReplay.probeAll(Seq(
+        short.select(col(qCol), col(cCol), col("rel")),
+        sims.select(col(qCol).cast("long"), col(cCol).cast("long"),
+          col(mCol).cast("long"), col("sim"))),
+      ReplayBound, integral).foreach { rows =>
+      return selectDriver(short.sparkSession, rows(0), rows(1), lambda, k, qCol, cCol)
+    }
     val wRel = Window.partitionBy(qCol).orderBy(col("rel").desc, col(cCol))
     var selected = short
       .withColumn("__rk", row_number().over(wRel)).filter(col("__rk") === 1)
@@ -96,29 +99,26 @@ object Mmr {
   }
 
   /** Driver replay of the exact distributed recurrence over collected
-    * shortlists. Rounding is Spark's Round (HALF_UP via BigDecimal.valueOf)
-    * and score arithmetic is the same IEEE sequence (λ·rel, then
-    * λ·rel − (1−λ)·pen with the pre-computed 1−λ constant), so every step
-    * picks the identical candidate.
+    * shortlist (q, c, rel) and sim (q, c, m, sim) rows. Rounding is Spark's
+    * Round (HALF_UP via BigDecimal.valueOf) and score arithmetic is the
+    * same IEEE sequence (λ·rel, then λ·rel − (1−λ)·pen with the
+    * pre-computed 1−λ constant), so every step picks the identical
+    * candidate.
     */
-  private def selectDriver(short: DataFrame, sims: DataFrame, lambda: Double,
-      k: Int, qCol: String, cCol: String, mCol: String): DataFrame = {
-    driverPathRuns.incrementAndGet()
-    val spark = short.sparkSession
+  private def selectDriver(spark: org.apache.spark.sql.SparkSession,
+      short: Array[org.apache.spark.sql.Row], sims: Array[org.apache.spark.sql.Row],
+      lambda: Double, k: Int, qCol: String, cCol: String): DataFrame = {
     import spark.implicits._
     def r12(x: Double): Double =
       java.math.BigDecimal.valueOf(x).setScale(12, java.math.RoundingMode.HALF_UP)
         .doubleValue
     val oneMinus = 1 - lambda // the lit(1 - lambda) constant, same IEEE op
-    val shortRows = short.select(col(qCol).cast("long"), col(cCol).cast("long"),
-        col("rel")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val shortRows = short.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     // duplicate (q, c, m) sim rows merge with MAX — the distributed path
     // aggregates max(sim) over ALL rows, and a plain toMap would keep the
     // last row's value, diverging from the replay contract on inputs with
-    // duplicate sim entries (round 13, ADVICE)
-    val simRows = sims.select(col(qCol).cast("long"), col(cCol).cast("long"),
-        col(mCol).cast("long"), col("sim")).collect()
+    // duplicate sim entries
+    val simRows = sims
       .map(r => ((r.getLong(0), r.getLong(1), r.getLong(2)), r.getDouble(3)))
       .groupMapReduce(_._1)(_._2)(math.max)
     val byQ = shortRows.groupBy(_._1)

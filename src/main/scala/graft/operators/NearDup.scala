@@ -503,7 +503,7 @@ object NearDup {
     * never builds.
     */
   def hammingDedupClusters(hashed0: DataFrame, idCol: String, hashCol: String,
-      maxHamming: Int = 3, driverEdgeThreshold: Long = 1000000L,
+      maxHamming: Int = 3,
       checkpointDir: Option[String] = None): DataFrame = {
     val hashed = materialized(
       hashed0.select(col(idCol).as("__id"), col(hashCol).as("__h")), checkpointDir)
@@ -513,7 +513,7 @@ object NearDup {
         maxHamming, checkpointDir)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
     val comp = Components.connectedComponents(repPairs, "doc_a", "doc_b",
-      driverEdgeThreshold = driverEdgeThreshold, checkpointDir = checkpointDir)
+      checkpointDir = checkpointDir)
     hashed.join(fam, "__h")
       .join(comp.select(col("id").as("rep"), col("cluster_id")), Seq("rep"), "left")
       .select(col("__id").as("doc_id"),
@@ -537,7 +537,6 @@ object NearDup {
     * shingle hashes, frame hashes, minhash bands).
     */
   def setOverlapDedupClusters(items: DataFrame, idCol: String, elemCol: String,
-      driverEdgeThreshold: Long = 1000000L,
       checkpointDir: Option[String] = None): DataFrame = {
     val sets = items.select(col(idCol).as("__id"), col(elemCol).as("__e")).distinct()
     val sigs = materialized(
@@ -559,7 +558,7 @@ object NearDup {
       .filter(col("shared") * 2 >= least(col("na"), col("nb")))
       .select("doc_a", "doc_b")
     val comp = Components.connectedComponents(repPairs, "doc_a", "doc_b",
-      driverEdgeThreshold = driverEdgeThreshold, checkpointDir = checkpointDir)
+      checkpointDir = checkpointDir)
     sigs.join(fam.select(col("__sig"), col("rep")), "__sig")
       .join(comp.select(col("id").as("rep"), col("cluster_id")), Seq("rep"), "left")
       .select(col("__id").as("doc_id"),

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, DoubleType, StringType, StructField, StructType}
 
 /** Distributed weighted PageRank over an edge-list DataFrame.
   *
@@ -44,13 +44,13 @@ import org.apache.spark.sql.types.DecimalType
 object PageRank {
 
   /** Edge-count bound below which the recurrence runs serially on the
-    * driver — the [[Hits.LocalEdgeThreshold]] adaptive contract: one
-    * bounded collect replaces O(iterations) scheduled jobs for
-    * aggregate-sized graphs, with the serial path replaying the
-    * distributed BigDecimal round/cast sequence bit-for-bit (pinned by
-    * PageRankSpec's differential test and the q108/q156 oracles).
+    * driver ([[DriverReplay]]): one bounded collect replaces
+    * O(iterations) scheduled jobs for aggregate-sized graphs, with the
+    * serial path replaying the distributed BigDecimal round/cast sequence
+    * bit-for-bit (pinned by PageRankSpec's differential test and the
+    * q108/q156 oracles).
     */
-  val LocalEdgeThreshold = 100000
+  private val ReplayBound = 100000
 
   /** Ranks for every node of `edges` (`node`, `rank`), rank summing to 1.
     *
@@ -66,8 +66,7 @@ object PageRank {
       weightCol: Option[String] = None,
       iterations: Int = 10, damping: Double = 0.85,
       checkpointEvery: Int = 5,
-      checkpointDir: Option[String] = None,
-      localEdgeThreshold: Int = LocalEdgeThreshold): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
 
@@ -79,10 +78,8 @@ object PageRank {
     val eSel = edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w"))
 
-    if (localEdgeThreshold > 0) {
-      val probe = eSel.limit(localEdgeThreshold + 1).collect()
-      if (probe.length <= localEdgeThreshold)
-        return runLocal(edges.sparkSession, probe, iterations, damping, None)
+    DriverReplay.probe(eSel, ReplayBound).foreach { probe =>
+      return runLocal(edges.sparkSession, probe, iterations, damping, None)
     }
 
     val e = eSel
@@ -178,8 +175,7 @@ object PageRank {
       weightCol: Option[String] = None,
       iterations: Int = 10, damping: Double = 0.85,
       checkpointEvery: Int = 5,
-      checkpointDir: Option[String] = None,
-      localEdgeThreshold: Int = LocalEdgeThreshold): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
 
@@ -187,16 +183,12 @@ object PageRank {
     val eSel = edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w"))
 
-    if (localEdgeThreshold > 0) {
-      val probe = eSel.limit(localEdgeThreshold + 1).collect()
-      if (probe.length <= localEdgeThreshold) {
-        // seeds must be bounded too — same probe contract
-        val seedProbe = seeds.select(col(seeds.columns.head).as("node"))
-          .distinct().limit(localEdgeThreshold + 1).collect()
-        if (seedProbe.length <= localEdgeThreshold)
-          return runLocal(edges.sparkSession, probe, iterations, damping,
-            Some(seedProbe.map(_.get(0)).toSet))
-      }
+    // seeds must be bounded too — the replay collects both
+    DriverReplay.probeAll(
+        Seq(eSel, seeds.select(col(seeds.columns.head).as("node")).distinct()),
+        ReplayBound).foreach { rows =>
+      return runLocal(edges.sparkSession, rows(0), iterations, damping,
+        Some(rows(1).map(_.get(0)).toSet))
     }
 
     val e = eSel
@@ -279,24 +271,29 @@ object PageRank {
     * ([[runPersonalized]]). Every arithmetic step mirrors a plan
     * expression 1:1: out-weight decimal sums, double `frac` divides,
     * rnd15+dec15 contributions, coalesced dangling decimal sum, the
-    * round-12 rank update.
+    * round-12 rank update. A null weight is skipped by every sum and
+    * yields a null fraction, exactly as the plan's null propagation does.
     */
   private def runLocal(
       spark: org.apache.spark.sql.SparkSession,
-      edgeRows: Array[org.apache.spark.sql.Row],
+      edgeRows: Array[Row],
       iterations: Int, damping: Double,
       seedSet: Option[Set[Any]]): DataFrame = {
-    val edges = edgeRows.map(r => (r.get(0), r.get(1), r.getDouble(2)))
+    val edges = edgeRows.map(r =>
+      (r.get(0), r.get(1), if (r.isNullAt(2)) None else Some(r.getDouble(2))))
     val nodes: Array[Any] = (edges.map(_._1) ++ edges.map(_._2)).distinct
     val n = nodes.length.toDouble
 
     // out-weight per src: decimal sum → correctly-rounded double
     val outW = new java.util.HashMap[Any, java.math.BigDecimal]()
-    edges.foreach { case (s, _, w) => outW.merge(s, dec15(w), (a, b) => a.add(b)) }
-    // normalized fractions, srcs with out_w <= 0 dropped (same filter)
+    edges.foreach { case (s, _, w) =>
+      w.foreach(x => outW.merge(s, dec15(x), (a, b) => a.add(b)))
+    }
+    // normalized fractions, srcs with a null or <= 0 out_w dropped (same
+    // filter)
     val norm = edges.flatMap { case (s, d, w) =>
-      val ow = outW.get(s).doubleValue()
-      if (ow > 0) Some((s, d, w / ow)) else None
+      Option(outW.get(s)).map(_.doubleValue()).filter(_ > 0)
+        .map(ow => (s, d, w.map(_ / ow)))
     }
     val emitters: Set[Any] = norm.map(_._1).toSet
 
@@ -317,7 +314,7 @@ object PageRank {
     for (_ <- 1 to iterations) {
       val sums = new java.util.HashMap[Any, java.math.BigDecimal]()
       norm.foreach { case (s, d, frac) =>
-        sums.merge(d, dec15(rnd(ranks(s) * frac, 15)), (a, b) => a.add(b))
+        frac.foreach(f => sums.merge(d, dec15(rnd(ranks(s) * f, 15)), (a, b) => a.add(b)))
       }
       val dmAcc = nodes.filterNot(emitters.contains)
         .map(v => dec15(ranks(v)))
@@ -333,18 +330,10 @@ object PageRank {
       }.toMap
     }
 
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(
-        "node",
-        if (edgeRows.isEmpty) org.apache.spark.sql.types.StringType
-        else edgeRows.head.schema.fields(0).dataType),
-      org.apache.spark.sql.types.StructField(
-        "rank", org.apache.spark.sql.types.DoubleType, nullable = true)))
-    val out = nodes.toSeq.map(v => org.apache.spark.sql.Row(v, ranks(v)))
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(out).asJava),
-      schema)
+    val nodeType = if (edgeRows.isEmpty) StringType else edgeRows.head.schema.fields(0).dataType
+    val schema = StructType(Seq(StructField("node", nodeType), StructField("rank", DoubleType)))
+    val out = nodes.toSeq.map(v => Row(v, ranks(v)))
+    spark.createDataFrame(java.util.Arrays.asList(out: _*), schema)
   }
 
 }

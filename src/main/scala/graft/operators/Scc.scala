@@ -32,13 +32,14 @@ import org.apache.spark.sql.functions._
   * rounds = recursion depth (O(n) on a path of singleton SCCs — the same
   * bound serial FW-BW has, and the practical killer on DAG-heavy graphs:
   * one pivot settles per partition per round, each round several
-  * driver-synchronous jobs). Hence the [[Components.neardupClusters]]
-  * adaptive contract applied here: once the LIVE internal edge count —
-  * read off the round's own materialization, never an extra job — drops
-  * to `driverEdgeThreshold`, the remainder finishes as iterative Tarjan
-  * on the driver (bounded by the threshold; microseconds instead of
-  * O(depth) rounds). Distributed rounds carry the 100 TB story;
-  * `driverEdgeThreshold = 0` forces them end-to-end (the spec does).
+  * driver-synchronous jobs). Hence the [[DriverReplay]] gate applied
+  * here: once the LIVE internal edge count — read off the round's own
+  * materialization, never an extra job — drops to `ReplayBound`, the
+  * remainder finishes as iterative Tarjan on the driver (microseconds
+  * instead of O(depth) rounds). Distributed rounds
+  * carry the 100 TB story; switching replays off forces them end-to-end
+  * (the spec does), and a remainder without internal edges then settles
+  * as singletons in the same round.
   * `maxIters` makes non-convergence loud rather than silent truncation.
   * Every frame that meets a sibling derived from the same
   * `active`/`pivots` lineage joins through fully-renamed columns (cut
@@ -47,9 +48,14 @@ import org.apache.spark.sql.functions._
   */
 object Scc {
 
+  /** Live internal edges at or below which the remainder finishes as
+    * driver-side Tarjan.
+    */
+  private val ReplayBound = 200000
+
   def run(
       edges: DataFrame, srcCol: String, dstCol: String,
-      maxIters: Int = 64, driverEdgeThreshold: Long = 200000L,
+      maxIters: Int = 64,
       checkpointDir: Option[String] = None): DataFrame = {
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
     val spark = edges.sparkSession
@@ -109,11 +115,10 @@ object Scc {
         .filter(col("part") === col("pd"))
         .select(col("s").as("es"), col("d").as("ed"), col("part").as("epart")),
         checkpointDir)
-      if (ieN <= driverEdgeThreshold) {
-        // adaptive finish (the Components.neardupClusters contract): the
-        // live remainder fits the driver bound — edges are already
-        // partition-internal, so per-part SCC structure is preserved by
-        // keying Tarjan nodes on (node, part)
+      if (DriverReplay.admits(spark, ieN, ReplayBound)) {
+        // adaptive finish: the live remainder fits the driver bound —
+        // edges are already partition-internal, so per-part SCC structure
+        // is preserved by keying Tarjan nodes on (node, part)
         val edgesLocal = ie.select("es", "ed", "epart").collect()
           .map(r => ((r.getLong(0), r.getLong(2)), (r.getLong(1), r.getLong(2))))
         val nodesLocal = active.select("node", "part").collect()
@@ -181,7 +186,7 @@ object Scc {
 
   /** Iterative Tarjan over (node, part)-keyed vertices, labels = SCC
     * minimum node id. Driver-side finisher for the adaptive path; input
-    * size is bounded by `driverEdgeThreshold` + the live node set.
+    * size is bounded by `ReplayBound` + the live node set.
     */
   private def tarjanMinLabels(
       nodes: Array[(Long, Long)],

@@ -29,22 +29,23 @@ import org.apache.spark.sql.functions._
   */
 object Sssp {
 
+  /** Edge bound for the serial driver path ([[DriverReplay]]). The serial
+    * replay is round-synchronous Bellman–Ford with the identical IEEE adds
+    * and order-free mins, so it is bit-identical to the distributed
+    * rounds.
+    */
+  private val ReplayBound = 100000
+
   /** (node, dist) for every node reachable from `source` within `rounds`
     * edges; dist = exact min-weight path (source at 0.0). Unreachable
-    * nodes are absent.
+    * nodes are absent. A null weight is an unknown length: `min` skips it
+    * like SQL's aggregate does, so a node reached only over null-weight
+    * edges is present with a null dist.
     */
-  /** Edge bound for the serial driver path ([[Bfs.LocalEdgeThreshold]]
-    * contract). The serial replay is round-synchronous Bellman–Ford with
-    * the identical IEEE adds and order-free mins, so it is bit-identical
-    * to the distributed rounds.
-    */
-  val LocalEdgeThreshold = 100000
-
   def run(
       edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
       source: Long, rounds: Int = 8, undirected: Boolean = true,
-      checkpointDir: Option[String] = None,
-      localEdgeThreshold: Int = LocalEdgeThreshold): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val spark = edges.sparkSession
     val e0 = edges.select(
@@ -55,34 +56,32 @@ object Sssp {
         concat(lit("Sssp requires non-negative weights, got "), col(weightCol))))
         .otherwise(col(weightCol)).cast("double").as("w"))
 
-    if (localEdgeThreshold > 0) {
-      val probe = e0.limit(localEdgeThreshold + 1).collect()
-      if (probe.length <= localEdgeThreshold) {
-        val raw = probe.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        val both = if (undirected) raw ++ raw.map(t => (t._2, t._1, t._3)) else raw
-        // parallel edges: keep the lightest (min is order-free)
-        val adjM = new java.util.HashMap[(Long, Long), Double]()
-        both.foreach { case (s, d, w) =>
-          if (s != d) adjM.merge((s, d), w, (a, b) => math.min(a, b))
-        }
-        val edgesBySrc = scala.jdk.CollectionConverters.MapHasAsScala(adjM).asScala
-          .toSeq.map { case ((s, d), w) => (s, d, w) }.groupBy(_._1)
-        var dist = Map[Long, Double](source -> 0.0)
-        for (_ <- 1 to rounds) {
-          // round-SYNCHRONOUS: relaxations read the previous round's table
-          val next = new java.util.HashMap[Long, java.lang.Double]()
-          dist.foreach { case (n, dv) => next.merge(n, dv, (a, b) => math.min(a, b)) }
-          dist.foreach { case (u, du) =>
-            edgesBySrc.getOrElse(u, Nil).foreach { case (_, v, w) =>
-              val cand = du + w
-              next.merge(v, cand, (a, b) => math.min(a, b))
-            }
-          }
-          dist = scala.jdk.CollectionConverters.MapHasAsScala(next).asScala
-            .map { case (k, v) => k -> v.doubleValue() }.toMap
-        }
-        return spark.createDataFrame(dist.toSeq).toDF("node", "dist")
+    DriverReplay.probe(e0, ReplayBound).foreach { probe =>
+      // SQL min: nulls skipped, null only when every value is null
+      def minOpt(a: Option[Double], b: Option[Double]): Option[Double] =
+        (a ++ b).reduceOption((x: Double, y: Double) => math.min(x, y))
+      val raw = probe.map(r =>
+        (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) None else Some(r.getDouble(2))))
+      val both = if (undirected) raw ++ raw.map(t => (t._2, t._1, t._3)) else raw
+      // parallel edges: keep the lightest (min is order-free)
+      val adjM = scala.collection.mutable.Map.empty[(Long, Long), Option[Double]]
+      both.foreach { case (s, d, w) =>
+        if (s != d) adjM((s, d)) = adjM.get((s, d)).fold(w)(minOpt(_, w))
       }
+      val edgesBySrc = adjM.toSeq.map { case ((s, d), w) => (s, d, w) }.groupBy(_._1)
+      var dist = Map[Long, Option[Double]](source -> Some(0.0))
+      for (_ <- 1 to rounds) {
+        // round-SYNCHRONOUS: relaxations read the previous round's table
+        val next = scala.collection.mutable.Map.from(dist)
+        dist.foreach { case (u, du) =>
+          edgesBySrc.getOrElse(u, Nil).foreach { case (_, v, w) =>
+            val cand = for (a <- du; b <- w) yield a + b
+            next(v) = next.get(v).fold(cand)(minOpt(_, cand))
+          }
+        }
+        dist = next.toMap
+      }
+      return spark.createDataFrame(dist.toSeq).toDF("node", "dist")
     }
     val adj = (if (undirected) e0.union(e0.select(col("d").as("s"), col("s").as("d"), col("w")))
       else e0)

@@ -239,11 +239,7 @@ object Medallion {
     * executors freed by an earlier job's straggler tail, so N independent
     * layer writes cost ~max instead of ~sum. Rethrows the first failure
     * after all tasks settle (no partially-abandoned staging writes).
-    */
-  private[pipeline] def inParallel(tasks: Seq[() => Unit]): Unit =
-    inParallelNamed(tasks.zipWithIndex.map { case (t, i) => (s"medallion-$i", t) })
-
-  /** [[inParallel]] with a per-task job description (guide §1.5): job
+    * Each task carries its own job description (guide §1.5): job
     * descriptions are thread-local, so each concurrent write is labelled
     * correctly in the UI / ProbeQueryJobs.
     */

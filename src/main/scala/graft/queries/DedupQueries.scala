@@ -242,7 +242,7 @@ object DedupQueries {
             JOIN sizes sb ON p.doc_b = sb.doc_id
             ORDER BY p.doc_a, p.doc_b"""))
 
-  /** q33's pipeline with `driverEdgeThreshold = 0` — the distributed
+  /** q33's pipeline with driver replays switched off — the distributed
     * min-label-propagation closure forced end-to-end under the SAME
     * recursive-CTE oracle, so the scale path (the one a 100 TB corpus
     * would actually take) is hash-gated too, not just spec-differenced
@@ -250,10 +250,12 @@ object DedupQueries {
     */
   private val q77 = GraftQuery(
     "q77_neardup_clusters_distributed",
-    (s, dir) =>
-      graft.operators.Components.neardupClustersContracted(
-        textPairsShared(s, dir), driverEdgeThreshold = 0L)
-        .orderBy("doc_id"),
+    (s, dir) => {
+      val pairs = textPairsShared(s, dir)
+      graft.operators.DriverReplay.distributedOnly(s) {
+        graft.operators.Components.neardupClustersContracted(pairs)
+      }.orderBy("doc_id")
+    },
     q33.oracle)
 
   /** Canonical-document selection — the step AFTER near-dup clustering:

@@ -300,7 +300,6 @@ object GraphQueries {
     * round happens before any path arithmetic so both engines accumulate
     * identical doubles.
     */
-  private[graft] def knnEdgesWForProbe(s: org.apache.spark.sql.SparkSession, dir: String) = knnEdgesW(s, dir)
   private def knnEdgesW(s: org.apache.spark.sql.SparkSession, dir: String) =
     knnTopK(s, dir)
       .select(col("q_id").as("src"), col("n_id").as("dst"),

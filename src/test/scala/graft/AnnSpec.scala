@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Ann, Components, NearDup}
+import graft.operators.{Ann, Components, DriverReplay, NearDup}
 import org.apache.spark.sql.functions._
 
 /** IVF ANN recall vs brute force, and connected-components correctness. */
@@ -172,19 +172,18 @@ class AnnSpec extends SparkSpec {
   test("distributed CC path (threshold 0) agrees with driver union-find") {
     val pairs = Seq((1L, 2L), (2L, 3L), (9L, 3L), (5L, 6L), (7L, 8L), (8L, 5L))
       .toDF("doc_a", "doc_b")
-    def asSet(threshold: Long) =
-      Components.connectedComponents(pairs, "doc_a", "doc_b",
-          driverEdgeThreshold = threshold)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(asSet(0L) === asSet(1000L))
+    def asSet = Components.connectedComponents(pairs, "doc_a", "doc_b")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(DriverReplay.distributedOnly(spark)(asSet) === asSet)
   }
 
   test("reliable-checkpoint path: distributed CC cuts lineage to the checkpoint dir") {
     val dir = graft.queries.Scratch.tempDir("graft_cc_ckpt")
     val chain = (0L until 12L).sliding(2).map(s => (s(0), s(1))).toSeq.toDF("doc_a", "doc_b")
-    val labels = Components.connectedComponents(chain, "doc_a", "doc_b",
-        driverEdgeThreshold = 0L, checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(1)).distinct
+    val labels = DriverReplay.distributedOnly(spark) {
+      Components.connectedComponents(chain, "doc_a", "doc_b", checkpointDir = Some(dir))
+        .collect()
+    }.map(r => r.getLong(1)).distinct
     assert(labels === Array(0L))
     // the cuts really went to (stand-in) reliable storage: RDD checkpoint
     // part files exist under the dir — executor loss can't kill the run
@@ -199,9 +198,9 @@ class AnnSpec extends SparkSpec {
     // this returned SPLIT clusters with a stderr warning; the contract now
     // is exact components via largeStarSmallStar over the contracted graph.
     val chain = (0L until 50L).sliding(2).map(s => (s(0), s(1))).toSeq.toDF("doc_a", "doc_b")
-    val got = Components.connectedComponents(chain, "doc_a", "doc_b",
-        maxIters = 2, driverEdgeThreshold = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val got = DriverReplay.distributedOnly(spark) {
+      Components.connectedComponents(chain, "doc_a", "doc_b", maxIters = 2).collect()
+    }.map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === (0L until 50L).map(i => (i, 0L)).toSet)
   }
 
@@ -243,8 +242,9 @@ class AnnSpec extends SparkSpec {
     val small = Seq((1L, 2L), (2L, 3L), (3L, 4L), (9L, 4L), (7L, 8L))
       .toDF("doc_a", "doc_b")
     assert(labels(Components.largeStarSmallStar(small, "doc_a", "doc_b")) ===
-      labels(Components.connectedComponents(small, "doc_a", "doc_b",
-        driverEdgeThreshold = 0L)))
+      labels(DriverReplay.distributedOnly(spark) {
+        Components.connectedComponents(small, "doc_a", "doc_b")
+      }))
   }
 
   test("largeStarSmallStar == local union-find on seeded random graphs") {

@@ -1,12 +1,14 @@
 package graft
 
+import graft.operators.{BeamAnn, DriverReplay}
 import org.apache.spark.sql.functions._
 
-/** Differential pin for [[graft.operators.BeamAnn]] (round 13): the
-  * driver replay must be bit-identical to the distributed rounds —
-  * same beam membership under the (cos DESC, node ASC) order, same
-  * 12 dp Spark-Round cosines from the scale-20 decimal dot contract,
-  * same final top-k after self-exclusion.
+/** Differential pin for [[graft.operators.BeamAnn]]: the driver replay
+  * must be bit-identical to the distributed rounds — same beam membership
+  * under the (cos DESC, node ASC) order, same 12 dp Spark-Round cosines
+  * from the scale-20 decimal dot contract, same final top-k after
+  * self-exclusion — including on dangling edges and on corpora the replay
+  * does not read.
   */
 class BeamAnnSpec extends SparkSpec {
   import spark.implicits._
@@ -31,29 +33,55 @@ class BeamAnnSpec extends SparkSpec {
         (i.toLong, ((i * 2 + 1) % n).toLong))
     }.toDF("src", "dst")
 
-  test("beam search: driver replay is bit-identical to the distributed rounds") {
-    val emb = corpus(60, 8)
-    val e = ring(60)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r =>
-        (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
-    val before = graft.operators.BeamAnn.driverPathRuns.get()
-    val replay = rows(graft.operators.BeamAnn.searchTopK(
-      emb, e, maxQueryId = 5, width = 4, hops = 6, k = 3))
-    assert(graft.operators.BeamAnn.driverPathRuns.get() === before + 1,
-      "sub-threshold corpus must take the driver replay")
-    val dist = rows(graft.operators.BeamAnn.searchTopK(
-      emb, e, maxQueryId = 5, width = 4, hops = 6, k = 3,
-      driverRowThreshold = 0))
-    assert(graft.operators.BeamAnn.driverPathRuns.get() === before + 1,
-      "threshold 0 must force the distributed rounds")
-    assert(replay.size === dist.size)
-    replay.zip(dist).foreach { case (a, b) =>
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r =>
+      (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+
+  /** Both routes over the same input, with the number of replays the gate
+    * admitted on the default route.
+    */
+  private def bothRoutes(emb: org.apache.spark.sql.DataFrame,
+      e: org.apache.spark.sql.DataFrame) = {
+    def search = rows(BeamAnn.searchTopK(emb, e, maxQueryId = 5, width = 4, hops = 6, k = 3))
+    val before = DriverReplay.runs.get()
+    val default = search
+    val admitted = DriverReplay.runs.get() - before
+    val dist = DriverReplay.distributedOnly(spark)(search)
+    assert(DriverReplay.runs.get() === before + admitted,
+      "replays switched off must force the distributed rounds")
+    assert(default.size === dist.size)
+    default.zip(dist).foreach { case (a, b) =>
       assert(a._1 === b._1 && a._2 === b._2 && a._3 === b._3, s"$a vs $b")
       assert(java.lang.Double.compare(a._4, b._4) === 0, s"cos of $a vs $b")
     }
+    (default, admitted)
+  }
+
+  test("beam search: driver replay is bit-identical to the distributed rounds") {
+    val (replay, admitted) = bothRoutes(corpus(60, 8), ring(60))
+    assert(admitted === 1, "sub-bound corpus must take the driver replay")
     // sanity: every query emitted k rows and never its own node
     assert(replay.map(_._1).distinct.size === 5)
     assert(replay.forall { case (q, _, n, _) => q != n })
+  }
+
+  test("beam search: edges to ids without an embedding are dropped on both routes") {
+    // every node also points at an id the corpus lacks, plus null targets
+    val dangling = (0 until 60).map(i => (i.toLong, Option(1000L + i))) ++
+      Seq((1L, None), (2L, None))
+    val e = ring(60).union(dangling.toDF("src", "dst"))
+    val (replay, admitted) = bothRoutes(corpus(60, 8), e)
+    assert(admitted === 1)
+    assert(replay.forall(_._3 < 60), s"a dangling target was ranked: $replay")
+  }
+
+  test("beam search: a double-array corpus routes to the distributed rounds") {
+    val emb = corpus(60, 8).select(col("vec_id"),
+      col("embedding").cast("array<double>").as("embedding"))
+    val (got, admitted) = bothRoutes(emb, ring(60))
+    assert(admitted === 0, "the replay reads float arrays only")
+    // same neighbours as the float corpus (the element cast is exact)
+    assert(got === rows(BeamAnn.searchTopK(
+      corpus(60, 8), ring(60), maxQueryId = 5, width = 4, hops = 6, k = 3)))
   }
 }

@@ -48,8 +48,8 @@ class GraphExtrasSpec extends SparkSpec {
     def toMapOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     val local = toMapOf(graft.operators.Harmonic.run(und, maxHops = 6))
-    val dist = toMapOf(graft.operators.Harmonic.run(und, maxHops = 6,
-      localEdgeThreshold = 0))
+    val dist = toMapOf(graft.operators.DriverReplay.distributedOnly(spark)(
+      graft.operators.Harmonic.run(und, maxHops = 6)))
     assert(local.keySet === dist.keySet)
     local.foreach { case (k, (n, h)) =>
       assert(n === dist(k)._1, s"n_reached($k)")
@@ -165,16 +165,18 @@ class GraphExtrasSpec extends SparkSpec {
       if a != b && rnd.nextDouble() < 0.6 // sparse: exercises pen-0 rows
     } yield (q, a, b, math.rint(rnd.nextDouble() * 1e4) / 1e4))
       .toDF("q_id", "n_id", "m_id", "sim")
-    val before = graft.operators.Mmr.driverPathRuns.get()
+    val runs = graft.operators.DriverReplay.runs
+    val before = runs.get()
     val drv = graft.operators.Mmr.select(short, sims, lambda = 0.7, k = 5)
       .orderBy("q_id", "step").collect().map(_.toSeq).toSeq
-    assert(graft.operators.Mmr.driverPathRuns.get() == before + 1,
-      "sub-threshold shortlists must take the driver replay")
-    val dist = graft.operators.Mmr.select(short, sims, lambda = 0.7, k = 5,
-        driverRowThreshold = 0L)
-      .orderBy("q_id", "step").collect().map(_.toSeq).toSeq
-    assert(graft.operators.Mmr.driverPathRuns.get() == before + 1,
-      "threshold 0 must never take the driver replay")
+    assert(runs.get() == before + 1,
+      "sub-bound shortlists must take the driver replay")
+    val dist = graft.operators.DriverReplay.distributedOnly(spark) {
+      graft.operators.Mmr.select(short, sims, lambda = 0.7, k = 5)
+        .orderBy("q_id", "step").collect().map(_.toSeq).toSeq
+    }
+    assert(runs.get() == before + 1,
+      "replays switched off must never take the driver replay")
     assert(drv == dist, s"driver $drv\nvs distributed $dist")
   }
 
@@ -193,9 +195,10 @@ class GraphExtrasSpec extends SparkSpec {
       .toDF("q_id", "n_id", "m_id", "sim")
     val drv = graft.operators.Mmr.select(short, sims, lambda = 0.5, k = 3)
       .orderBy("step").collect().map(_.toSeq).toSeq
-    val dist = graft.operators.Mmr.select(short, sims, lambda = 0.5, k = 3,
-        driverRowThreshold = 0L)
-      .orderBy("step").collect().map(_.toSeq).toSeq
+    val dist = graft.operators.DriverReplay.distributedOnly(spark) {
+      graft.operators.Mmr.select(short, sims, lambda = 0.5, k = 3)
+        .orderBy("step").collect().map(_.toSeq).toSeq
+    }
     assert(drv == dist, s"driver $drv\nvs distributed $dist")
     assert(drv.map(_(2)) == Seq(1L, 3L, 2L))
   }
@@ -219,17 +222,19 @@ class GraphExtrasSpec extends SparkSpec {
   test("betweenness on a path graph, all sources: exact Brandes dependencies") {
     // path 1-2-3-4-5; dep(v) = Σ_s δ_s(v) = 2·bc(v): dep(2)=6, dep(3)=8, dep(4)=6
     val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("u", "v")
-    def depMap(threshold: Int) = graft.operators.Betweenness
-      .run(e, "u", "v", sources = Seq(1L, 2L, 3L, 4L, 5L),
-        localEdgeThreshold = threshold)
-      .collect().map(r => r.getLong(0) -> r.getDecimal(1)).toMap
-    val local = depMap(100000)
+    def depMap(replay: Boolean) = {
+      def rows = graft.operators.Betweenness
+        .run(e, "u", "v", sources = Seq(1L, 2L, 3L, 4L, 5L)).collect()
+      (if (replay) rows else graft.operators.DriverReplay.distributedOnly(spark)(rows))
+        .map(r => r.getLong(0) -> r.getDecimal(1)).toMap
+    }
+    val local = depMap(replay = true)
     assert(local.keySet === Set(2L, 3L, 4L))
     assert(local(2L).doubleValue() === 6.0)
     assert(local(3L).doubleValue() === 8.0)
     assert(local(4L).doubleValue() === 6.0)
-    // distributed path (threshold 0) is bit-identical, decimal for decimal
-    val dist = depMap(0)
+    // distributed path (replays off) is bit-identical, decimal for decimal
+    val dist = depMap(replay = false)
     assert(dist.view.mapValues(_.toPlainString).toMap
       === local.view.mapValues(_.toPlainString).toMap)
   }
@@ -253,14 +258,16 @@ class GraphExtrasSpec extends SparkSpec {
     // grid.
     val e = Seq((0L, 1L), (0L, 2L), (0L, 3L), (1L, 4L), (2L, 5L), (3L, 5L),
       (4L, 6L), (5L, 6L)).toDF("u", "v")
-    def depMap(threshold: Int) = graft.operators.Betweenness
-      .run(e, "u", "v", sources = Seq(0L), localEdgeThreshold = threshold)
-      .collect().map(r => r.getLong(0) -> r.getDecimal(1)).toMap
-    val local = depMap(100000)
+    def depMap(replay: Boolean) = {
+      def rows = graft.operators.Betweenness.run(e, "u", "v", sources = Seq(0L)).collect()
+      (if (replay) rows else graft.operators.DriverReplay.distributedOnly(spark)(rows))
+        .map(r => r.getLong(0) -> r.getDecimal(1)).toMap
+    }
+    val local = depMap(replay = true)
     assert(local(4L).stripTrailingZeros.toPlainString === "0.333333333333333")
     assert(local(5L).stripTrailingZeros.toPlainString === "0.666666666666667")
     assert(local(1L).stripTrailingZeros.toPlainString === "1.333333333333333")
-    val dist = depMap(0)
+    val dist = depMap(replay = false)
     assert(dist.view.mapValues(_.toPlainString).toMap
       === local.view.mapValues(_.toPlainString).toMap)
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Hits
+import graft.operators.{DriverReplay, Hits}
 
 class HitsSpec extends SparkSpec {
   import spark.implicits._
@@ -36,19 +36,38 @@ class HitsSpec extends SparkSpec {
   }
 
   test("distributed path is bit-identical to the driver-local path") {
-    // default run() takes the local path (tiny graph); threshold 0 forces
-    // the distributed rounds — both must produce the IDENTICAL doubles,
-    // or the adaptive cutover would change query results at the boundary
+    // default run() takes the local path (tiny graph); switching replays
+    // off forces the distributed rounds — both must produce the IDENTICAL
+    // doubles, or the adaptive cutover would change query results at the
+    // boundary
     val g = Seq(("a", "b", 2.0), ("b", "c", 1.7), ("c", "a", 3.0),
       ("a", "c", 1.1), ("d", "a", 0.9), ("c", "d", 2.3), ("b", "d", 0.3))
     val df = g.toDF("src", "dst", "w")
     val local = Hits.run(df, "src", "dst", Some("w"), iterations = 5)
       .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    val dist = Hits.run(df, "src", "dst", Some("w"), iterations = 5,
-      localEdgeThreshold = 0)
-      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    val dist = DriverReplay.distributedOnly(spark) {
+      Hits.run(df, "src", "dst", Some("w"), iterations = 5).collect()
+    }.map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
     assert(local.keySet === dist.keySet)
     local.foreach { case (k, (a, h)) =>
+      assert(java.lang.Double.compare(a, dist(k)._1) === 0, s"auth($k)")
+      assert(java.lang.Double.compare(h, dist(k)._2) === 0, s"hub($k)")
+    }
+  }
+
+  test("null weights: the driver replay returns the distributed scores") {
+    val df = Seq(("a", "b", Some(2.0)), ("a", "c", None), ("b", "c", Some(1.7)),
+      ("c", "a", Some(3.0)), ("e", "a", None), ("c", "d", Some(2.3)))
+      .toDF("src", "dst", "w")
+    def scores = Hits.run(df, "src", "dst", Some("w"), iterations = 5)
+      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    val before = DriverReplay.runs.get()
+    val replay = scores
+    assert(DriverReplay.runs.get() === before + 1, "tiny graph must replay")
+    val dist = DriverReplay.distributedOnly(spark)(scores)
+    assert(replay.keySet === Set("a", "b", "c", "d", "e"))
+    assert(replay.keySet === dist.keySet)
+    replay.foreach { case (k, (a, h)) =>
       assert(java.lang.Double.compare(a, dist(k)._1) === 0, s"auth($k)")
       assert(java.lang.Double.compare(h, dist(k)._2) === 0, s"hub($k)")
     }

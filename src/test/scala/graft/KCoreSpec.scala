@@ -50,12 +50,14 @@ class KCoreSpec extends SparkSpec {
     val es = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L), (4L, 6L),
       (5L, 6L), (6L, 7L))
     val coreL = runMap(es, 2)
-    val coreD = KCore.run(es.toDF("u", "v"), 2, localEdgeThreshold = 0)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val coreD = graft.operators.DriverReplay.distributedOnly(spark) {
+      KCore.run(es.toDF("u", "v"), 2).collect()
+    }.map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(coreL === coreD)
     val trussL = trussMap(es, 3)
-    val trussD = graft.operators.KTruss.run(es.toDF("u", "v"), 3, localEdgeThreshold = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
+    val trussD = graft.operators.DriverReplay.distributedOnly(spark) {
+      graft.operators.KTruss.run(es.toDF("u", "v"), 3).collect()
+    }.map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
     assert(trussL === trussD)
   }
 

@@ -251,32 +251,33 @@ object OpsProps extends Properties("Operators") {
     }
   }
 
-  // the connectedComponents probe bound is load-bearing for the 100 TB
-  // claim: a graph whose edge count EXCEEDS driverEdgeThreshold must
-  // never reach the driver union-find's collect() (watched via the
-  // driverPathRuns counter — the two paths are output-identical by
-  // design, so equality alone can't pin the routing), while a graph at
-  // or under the bound takes the driver path; both must agree with the
-  // naive transitive closure on cluster membership.
+  // the connectedComponents replay gate is load-bearing for the 100 TB
+  // claim: a graph the gate refuses must never reach the driver
+  // union-find (watched via DriverReplay.runs — the two paths are
+  // output-identical by design, so equality alone can't pin the routing;
+  // DriverReplaySpec pins the bound itself), while an admitted graph takes
+  // the driver path; both must agree with the naive transitive closure on
+  // cluster membership.
   property("connectedComponents routes by the probe bound; paths agree") = {
     val edgeGen = for {
       a <- Gen.chooseNum(0L, 12L)
       b <- Gen.chooseNum(0L, 12L)
     } yield (math.min(a, b), math.max(a, b))
     val graphGen = Gen.chooseNum(1, 30).flatMap(n => Gen.listOfN(n, edgeGen))
-    Prop.forAllNoShrink(graphGen) { edges =>
+    Prop.forAllNoShrink(graphGen, Gen.oneOf(true, false)) { (edges, replay) =>
       import spark.implicits._
       val df = edges.toDF("src", "dst")
-      val threshold = 10L
-      val exceeds = edges.length > threshold
-      val before = graft.operators.Components.driverPathRuns.get()
-      val got = graft.operators.Components
-        .connectedComponents(df, "src", "dst", driverEdgeThreshold = threshold)
+      val runs = graft.operators.DriverReplay.runs
+      val before = runs.get()
+      def closure = graft.operators.Components
+        .connectedComponents(df, "src", "dst")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val after = graft.operators.Components.driverPathRuns.get()
+      val got =
+        if (replay) closure
+        else graft.operators.DriverReplay.distributedOnly(spark)(closure)
       val routedCorrectly =
-        if (exceeds) after == before // never collected on the driver
-        else after == before + 1
+        if (replay) runs.get() == before + 1
+        else runs.get() == before // never collected on the driver
       // reference closure: iterate min-label to fixpoint on the edge list
       val adj = (edges ++ edges.map(e => (e._2, e._1)))
         .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSet }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.PageRank
+import graft.operators.{DriverReplay, PageRank}
 import org.apache.spark.sql.functions._
 
 class PageRankSpec extends SparkSpec {
@@ -94,19 +94,43 @@ class PageRankSpec extends SparkSpec {
     def toMapOf(r: org.apache.spark.sql.DataFrame) =
       r.collect().map(x => x.getString(0) -> x.getDouble(1)).toMap
     val local = toMapOf(PageRank.run(df, "src", "dst", Some("w"), iterations = 6))
-    val dist = toMapOf(PageRank.run(df, "src", "dst", Some("w"), iterations = 6,
-      localEdgeThreshold = 0))
+    val dist = toMapOf(DriverReplay.distributedOnly(spark) {
+      PageRank.run(df, "src", "dst", Some("w"), iterations = 6)
+    })
     assert(local.keySet === dist.keySet)
     local.foreach { case (k, v) =>
       assert(java.lang.Double.compare(v, dist(k)) === 0, s"rank($k)") }
     val seeds = Seq("a", "d").toDF("node")
     val pLocal = toMapOf(PageRank.runPersonalized(df, "src", "dst", seeds,
       Some("w"), iterations = 6))
-    val pDist = toMapOf(PageRank.runPersonalized(df, "src", "dst", seeds,
-      Some("w"), iterations = 6, localEdgeThreshold = 0))
+    val pDist = toMapOf(DriverReplay.distributedOnly(spark) {
+      PageRank.runPersonalized(df, "src", "dst", seeds, Some("w"), iterations = 6)
+    })
     assert(pLocal.keySet === pDist.keySet)
     pLocal.foreach { case (k, v) =>
       assert(java.lang.Double.compare(v, pDist(k)) === 0, s"pprank($k)") }
+  }
+
+  test("null weights: the driver replay returns the distributed ranks (both variants)") {
+    // "e"'s only out-edge has a null weight (null out-weight: "e" dangles),
+    // "a" mixes a null-weight edge with weighted ones (null fraction)
+    val df = Seq(("a", "b", Some(2.0)), ("a", "c", None), ("b", "c", Some(1.7)),
+      ("c", "a", Some(3.0)), ("e", "a", None), ("c", "d", Some(2.3)))
+      .toDF("src", "dst", "w")
+    val seeds = Seq("a", "e").toDF("node")
+    def bothRoutes(run: => org.apache.spark.sql.DataFrame): Unit = {
+      def ranks = run.collect().map(x => x.getString(0) -> x.getDouble(1)).toMap
+      val before = DriverReplay.runs.get()
+      val replay = ranks
+      assert(DriverReplay.runs.get() === before + 1, "tiny graph must replay")
+      val dist = DriverReplay.distributedOnly(spark)(ranks)
+      assert(replay.keySet === Set("a", "b", "c", "d", "e"))
+      assert(replay.keySet === dist.keySet)
+      replay.foreach { case (k, v) =>
+        assert(java.lang.Double.compare(v, dist(k)) === 0, s"rank($k)") }
+    }
+    bothRoutes(PageRank.run(df, "src", "dst", Some("w"), iterations = 6))
+    bothRoutes(PageRank.runPersonalized(df, "src", "dst", seeds, Some("w"), iterations = 6))
   }
 
   test("personalized: seeds outside the graph are ignored; dangling mass returns to seeds") {

@@ -8,10 +8,11 @@ import graft.operators.Scc
 class SccSpec extends SparkSpec {
   import spark.implicits._
 
-  private def run(edges: Seq[(Long, Long)], driverThreshold: Long = 200000L): Map[Long, Long] =
-    Scc.run(edges.toDF("src", "dst"), "src", "dst",
-        driverEdgeThreshold = driverThreshold)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  private def run(edges: Seq[(Long, Long)], replay: Boolean = true): Map[Long, Long] = {
+    def rows = Scc.run(edges.toDF("src", "dst"), "src", "dst").collect()
+    (if (replay) rows else graft.operators.DriverReplay.distributedOnly(spark)(rows))
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+  }
 
   /** Ground truth: boolean transitive closure, scc_id = min mutual. */
   private def sccByClosure(edges: Seq[(Long, Long)]): Map[Long, Long] = {
@@ -32,8 +33,8 @@ class SccSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L), (4L, 3L))
     val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L)
     assert(run(edges) === expected)
-    // threshold 0 forces the distributed FW-BW rounds end-to-end
-    assert(run(edges, driverThreshold = 0L) === expected)
+    // replays off forces the distributed FW-BW rounds end-to-end
+    assert(run(edges, replay = false) === expected)
   }
 
   test("a DAG is all singleton SCCs; a full cycle is one SCC") {
@@ -41,6 +42,17 @@ class SccSpec extends SparkSpec {
       Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
     assert(run(Seq((1L, 2L), (2L, 3L), (3L, 1L))) ===
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+  }
+
+  test("distributed rounds settle a remainder without internal edges as singletons") {
+    // a DAG: after the first pivot round no remainder partition keeps an
+    // internal edge, so the forced rounds must finish it without Tarjan
+    val before = graft.operators.DriverReplay.runs.get()
+    assert(run(Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)), replay = false) ===
+      Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L))
+    // self-loops only: no edge survives, the very first remainder is empty
+    assert(run(Seq((5L, 5L)), replay = false) === Map.empty)
+    assert(graft.operators.DriverReplay.runs.get() === before)
   }
 
   test("nested cycles with a shared node collapse into one SCC") {
@@ -59,7 +71,7 @@ class SccSpec extends SparkSpec {
       val expected = sccByClosure(edges)
       assert(run(edges) === expected, s"trial $trial (driver): $edges")
       if (trial == 1) // one distributed end-to-end differential is enough
-        assert(run(edges, driverThreshold = 0L) === expected, s"trial $trial (dist): $edges")
+        assert(run(edges, replay = false) === expected, s"trial $trial (dist): $edges")
     }
   }
 }

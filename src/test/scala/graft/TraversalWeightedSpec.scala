@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Lpa, Sssp}
+import graft.operators.{DriverReplay, Lpa, Sssp}
 
 /** Hand-built ground truths for the weighted-traversal operators (q135
   * Bellman–Ford SSSP, q136 synchronous label propagation).
@@ -63,24 +63,42 @@ class TraversalWeightedSpec extends SparkSpec {
       .toDF("src", "dst", "w")
     val bfsL = graft.operators.Bfs.run(e, "src", "dst", 1L, maxHops = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val bfsD = graft.operators.Bfs.run(e, "src", "dst", 1L, maxHops = 4,
-      localEdgeThreshold = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val bfsD = DriverReplay.distributedOnly(spark) {
+      graft.operators.Bfs.run(e, "src", "dst", 1L, maxHops = 4).collect()
+    }.map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(bfsL === bfsD)
     val ssspL = graft.operators.Sssp.run(e, "src", "dst", "w", 1L, rounds = 5)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val ssspD = graft.operators.Sssp.run(e, "src", "dst", "w", 1L, rounds = 5,
-      localEdgeThreshold = 0)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val ssspD = DriverReplay.distributedOnly(spark) {
+      graft.operators.Sssp.run(e, "src", "dst", "w", 1L, rounds = 5).collect()
+    }.map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(ssspL.keySet === ssspD.keySet)
     ssspL.foreach { case (k, v) =>
       assert(java.lang.Double.compare(v, ssspD(k)) === 0, s"dist($k)") }
     val lpaL = graft.operators.Lpa.run(e, "src", "dst", rounds = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val lpaD = graft.operators.Lpa.run(e, "src", "dst", rounds = 4,
-      localEdgeThreshold = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val lpaD = DriverReplay.distributedOnly(spark) {
+      graft.operators.Lpa.run(e, "src", "dst", rounds = 4).collect()
+    }.map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(lpaL === lpaD)
+  }
+
+  test("Sssp: null weights give the distributed route's distances on the replay") {
+    // 4 is reached only over a null-weight edge (present with a null
+    // dist); 3 has a weighted route next to a null-weight one; 5 hangs
+    // off 4 by a weighted edge (null + w stays null)
+    val e = Seq((1L, 2L, Some(1.0)), (2L, 3L, Some(2.0)), (1L, 3L, None),
+      (1L, 4L, None), (4L, 5L, Some(1.0)), (2L, 2L, None))
+      .toDF("src", "dst", "w")
+    def dists = Sssp.run(e, "src", "dst", "w", 1L, rounds = 4)
+      .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    val before = DriverReplay.runs.get()
+    val replay = dists
+    assert(DriverReplay.runs.get() === before + 1, "tiny graph must replay")
+    val dist = DriverReplay.distributedOnly(spark)(dists)
+    assert(replay === dist)
+    assert(replay === Map(1L -> Some(0.0), 2L -> Some(1.0), 3L -> Some(3.0),
+      4L -> None, 5L -> None))
   }
 
   test("Lpa: deterministic across runs (fixed rounds, min-label ties)") {
