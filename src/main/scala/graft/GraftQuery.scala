@@ -28,6 +28,11 @@ object Registry {
       graft.queries.GraphQueries.all ++
       graft.queries.StatsQueries.all
 
+  /** Built once per JVM. Lookups serve `run`; some oracles embed a path
+    * landed at run time (q76, q89), so oracle SQL is read through [[all]].
+    */
+  private lazy val index: Map[String, GraftQuery] = all.map(q => q.name -> q).toMap
+
   def byName(name: String): GraftQuery =
-    all.find(_.name == name).getOrElse(sys.error(s"no such query: $name"))
+    index.getOrElse(name, sys.error(s"no such query: $name"))
 }

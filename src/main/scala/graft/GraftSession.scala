@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared session factory for the engine's entry points (Verify, Bench,
-  * ScaleUp, PlanAudit, TuneLsh) — one place that owns the shuffle-sizing
-  * policy so every main gets the same, zero-hand-tuning behavior.
+  * ProbeQueryJobs, and the perfbench harness) — one place that owns the
+  * shuffle-sizing policy so every main gets the same, zero-hand-tuning
+  * behavior. The core count (`SPARK_GRAFT_CPUS`) is the one deployment
+  * setting; every other conf below is a constant.
   *
   * Shuffle sizing is RUNTIME-DERIVED, not a fixed knob: the ×100
   * self-scale probe measured a 3.7–7× spill tail on the five fact-join
@@ -49,16 +51,13 @@ object GraftSession {
     val spark = SparkSession.builder()
       .appName(appName)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         InitialShufflePartitions.toString)
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // Cached/persisted plans keep their FINAL stage at the pre-coalesce
       // shuffle width by default (the conservative default preserves cached
@@ -77,9 +76,8 @@ object GraftSession {
       // subset, best-of-2 at sf0.1) and measured 8.91 s vs 8.66 s — no
       // win (these joins are broadcast- or scheduling-bound, not
       // sort-bound), so the flip isn't worth SHJ's no-spill build-side
-      // risk. Env override kept for future probes.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
+      // risk.
+      .config("spark.sql.join.preferSortMergeJoin", "true")
       // ObjectHashAggregate (every TypedImperativeAggregate: TopKAgg, HLL,
       // DDSketch, CountMin) falls back to SORT-based aggregation after
       // only 128 distinct keys per task by default — the bounded-heap
@@ -92,7 +90,7 @@ object GraftSession {
       // the probe heap sizes absorb and sf-scale data never reaches per
       // AQE-bounded partitions.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJAGG_FALLBACK", (1 << 20).toString))
+        (1 << 20).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -694,7 +694,7 @@ object NearDup {
     hyperplaneBuckets(emb, bits, dim, tables = 1)
       .select(col("vec_id"), col("bkt.bucket").as("cluster"))
 
-  private[graft] def hyperplaneBuckets(
+  private def hyperplaneBuckets(
       emb: DataFrame, bits: Int, dim: Int, tables: Int): DataFrame = {
     val planes: Seq[Seq[Float]] = (0 until tables * bits).map { p =>
       (0 until dim).map { d =>

@@ -8,9 +8,11 @@ import org.apache.spark.sql.functions._
   * (SURVEY.md §3; reference lifecycle /root/reference/src/main.py:19-85).
   *
   * Reference semantics reproduced:
-  *  - L1 insert-if-absent keyed bronze load (load.py:25-128) → anti join of
-  *    the incoming batch against existing bronze keys, append.
-  *  - L2/L3 append-only snapshots (load.py:130-235) → plain appends.
+  *  - L1 insert-if-absent keyed bronze load (load.py:25-128) → one keyed
+  *    first-writer window over the committed bronze and the incoming
+  *    batches; a null id is a named error, not a row.
+  *  - L2/L3 append-only snapshots (load.py:130-235) → committed history
+  *    plus this run's snapshot.
   *  - L4 audit stamp (load.py:47,140,174) → injectable `clock` column so
   *    runs are reproducible in tests (SURVEY.md §7.4: nondeterministic
   *    current_timestamp would break differential comparison).
@@ -23,9 +25,11 @@ import org.apache.spark.sql.functions._
   *
   * The reference's SQLite-file-through-S3 round trip (main.py:40-49,67-69)
   * disappears: each layer is a Parquet directory addressed directly (s3a://
-  * in production). Its single end-of-run commit becomes an atomic Parquet
-  * overwrite per table. At warehouse scale the same plans run unchanged over
-  * a transactional table format; nothing here loops on the driver.
+  * in production). Its single end-of-run commit becomes one `_LATEST`
+  * pointer flip over a staged version of all seven tables
+  * ([[runAtomicBatches]], the only writer). At warehouse scale the same
+  * plans run unchanged over a transactional table format; nothing here
+  * loops on the driver.
   */
 final case class Medallion(root: String) {
   val bronzeTx = s"$root/bronze/transactions"
@@ -36,31 +40,11 @@ final case class Medallion(root: String) {
   val silverMerchants = s"$root/silver/merchants"
   val goldMonthly = s"$root/gold/monthly_spending"
 
-  private def readOr(spark: SparkSession, path: String, like: DataFrame): DataFrame =
-    try spark.read.parquet(path)
-    catch { case _: org.apache.spark.sql.AnalysisException => like.limit(0) }
-
-  /** L1+L4 — idempotent keyed bronze load: append only ids not yet present,
-    * stamped with `clock`. Loading the same batch twice is a no-op.
-    */
-  def loadBronzeTransactions(spark: SparkSession, incoming: DataFrame, clock: Column): Unit = {
-    val stamped = incoming.withColumn("date_retrieved", clock)
-    val existing = readOr(spark, bronzeTx, stamped)
-    val fresh = Dedup.firstWriterWins(
-      Dedup.insertIfAbsent(stamped, existing, Seq("id")),
-      Seq("id"), Seq(col("created").asc_nulls_last, col("id").asc))
-    fresh.write.mode(SaveMode.Append).parquet(bronzeTx)
-  }
-
-  /** L2/L3+L4 — unconditional snapshot append. */
-  def appendSnapshot(df: DataFrame, path: String, clock: Column): Unit =
-    df.withColumn("date_retrieved", clock).write.mode(SaveMode.Append).parquet(path)
-
   /** T1-T4 — bronze → silver. Deterministic first-writer order: earliest
     * `date_retrieved`, then `created`, then PK (SQLite's pick among
     * duplicates is scan order; we fix a total order, SURVEY.md §7.4).
     */
-  def transformSilver(spark: SparkSession): Unit = {
+  private[pipeline] def transformSilver(spark: SparkSession): Unit = {
     val bronze = spark.read.parquet(bronzeTx)
     val order = Seq(col("date_retrieved").asc, col("created").asc_nulls_last, col("id").asc)
 
@@ -89,11 +73,10 @@ final case class Medallion(root: String) {
     // T3+T4 — fact projection: drop denormalized merchant/counterparty
     // attribute columns, keep FKs, widen amount to double, stamp inserted_at.
     // No per-id dedup here (round 13, guide §2.4 — a distinct on already-
-    // unique data is a wasted exchange): BOTH bronze load paths enforce id
-    // uniqueness (loadBronzeTransactions appends only absent keys after an
-    // in-batch first-writer pick; runAtomicBatches is one keyed
-    // first-writer window), so the fact is a pure projection that fuses
-    // onto the bronze scan.
+    // unique data is a wasted exchange): a staged bronze holds every id
+    // exactly once and no null id — runAtomicBatches rejects null ids and
+    // lands one keyed first-writer window — so the fact is a pure
+    // projection that fuses onto the bronze scan.
     val fact = bronze
       .select(
         col("id"), col("description"),
@@ -124,7 +107,7 @@ final case class Medallion(root: String) {
     * positive totals; reference leaves the populate unwritten, shape is
     * create_gold_layer.sql:1-6: month, year, total_spend, avg_spend).
     */
-  def buildGold(spark: SparkSession): Unit = {
+  private[pipeline] def buildGold(spark: SparkSession): Unit = {
     val silver = spark.read.parquet(silverTx)
     GoldAgg.monthlySpend(
         silver.filter(col("amount") < 0).withColumn("spend", -col("amount")),
@@ -134,49 +117,28 @@ final case class Medallion(root: String) {
       .write.mode(SaveMode.Overwrite).parquet(goldMonthly)
   }
 
-  /** Entry-point-1 shape (main.py:19-85): load → transform → gold.
-    * Each layer lands in place as it completes — a crash mid-run leaves
-    * bronze newer than silver/gold. [[runAtomic]] is the
-    * single-commit-per-run variant matching the reference's one
-    * `commit()` (load.py:271).
-    */
-  def run(spark: SparkSession, transactions: DataFrame, balance: DataFrame,
-      pots: DataFrame, clock: Column): Unit = {
-    loadBronzeTransactions(spark, transactions, clock)
-    appendSnapshot(balance, bronzeBalance, clock)
-    appendSnapshot(pots, bronzePots, clock)
-    transformSilver(spark)
-    buildGold(spark)
-  }
-
   /** The committed medallion view: a Medallion rooted at the current
     * version directory, so `.silverTx` etc. address the last ATOMICALLY
-    * published run. Empty until the first [[runAtomic]] commit.
+    * published run. Empty until the first [[runAtomicBatches]] commit.
     */
   def committed(spark: SparkSession): Option[Medallion] =
     Versions.latest(spark, root).map { case (_, dir) => Medallion(dir) }
 
-  /** [[run]] with the reference's single-commit semantics
-    * (/root/reference/src/load/load.py:271 — one `commit()` after every
-    * layer is written): all seven tables are staged under `root/v<N>`,
-    * computed against the PREVIOUS committed version's bronze, and the
-    * `_LATEST` pointer flips once at the end ([[Versions.publish]]) —
-    * bronze, silver and gold appear together or not at all. A crash at
-    * any point (injectable via `afterSilver`, the widest window) leaves
-    * readers on the old consistent version; rerunning the batch stages
-    * the same version again and commits.
+  /** Entry-point-1 shape (main.py:19-85) with the reference's
+    * single-commit semantics (/root/reference/src/load/load.py:271 — one
+    * `commit()` after every layer is written, all API pages loaded
+    * before it). Every batch folds into the staged bronze with its own
+    * audit clock, then ONE transform + gold + flip: all seven tables are
+    * staged under `root/v<N>`, computed against the PREVIOUS committed
+    * version's bronze, and the `_LATEST` pointer flips once at the end
+    * ([[Versions.publish]]) — bronze, silver and gold appear together or
+    * not at all. A crash at any point (injectable via `afterSilver`, the
+    * widest window) leaves readers on the old consistent version;
+    * rerunning the batches stages the same version again and commits.
+    * A null transaction id in any batch fails the stage-bronze job with
+    * `bronze: null transaction id` before anything is published.
     *
     * Returns the committed version number.
-    */
-  def runAtomic(spark: SparkSession, transactions: DataFrame, balance: DataFrame,
-      pots: DataFrame, clock: Column,
-      afterSilver: () => Unit = () => ()): Long =
-    runAtomicBatches(spark, Seq(transactions -> clock), balance, pots, clock,
-      afterSilver)
-
-  /** [[runAtomic]] for a multi-page ingest: every batch folds into the
-    * staged bronze with its own audit clock (the reference loads all API
-    * pages before its single commit), then ONE transform + gold + flip.
     */
   def runAtomicBatches(spark: SparkSession, batches: Seq[(DataFrame, Column)],
       balance: DataFrame, pots: DataFrame, snapClock: Column,
@@ -194,13 +156,17 @@ final case class Medallion(root: String) {
     // as batch 0 — picks exactly the same survivor per id: the committed
     // row if the key exists (ids are unique in a committed bronze, which
     // this same pass enforces), else the earliest batch's in-batch winner.
-    // One window, one exchange, regardless of batch count.
+    // One window, one exchange, regardless of batch count. A null id would
+    // partition as one key and collapse to one row, so each incoming row's
+    // id passes a raise_error guard evaluated inside this same job.
+    val nullId = raise_error(lit("bronze: null transaction id"))
     val committed = curM.map(m => spark.read.parquet(m.bronzeTx))
       .getOrElse(batches.head._1.withColumn("date_retrieved", batches.head._2).limit(0))
     val bronze = Dedup.firstWriterWins(
       batches.zipWithIndex.foldLeft(committed.withColumn("__batch", lit(0))) {
         case (acc, ((df, clk), i)) =>
-          acc.unionByName(df.withColumn("date_retrieved", clk)
+          acc.unionByName(df.withColumn("id", coalesce(col("id"), nullId))
+            .withColumn("date_retrieved", clk)
             .withColumn("__batch", lit(i + 1)))
       },
       Seq("id"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Versioned-snapshot publish protocol shared by the streaming CDC sink
   * ([[graft.streaming.StreamingCdcLoad]]) and the batch medallion
-  * ([[Medallion.runAtomic]]): writers stage a complete version under
+  * ([[Medallion.runAtomicBatches]]): writers stage a complete version under
   * `root/v<N>`, drop a `v<N>/_SUCCESS` completion file, and flip the
   * `root/_LATEST` pointer with a write-then-atomic-rename — the same
   * two-phase publish a transactional table format performs natively.

@@ -1301,8 +1301,8 @@ object DedupQueries {
     * budget and target threshold 0.5, score every (bands, rows) split by
     * the S-curve's integrated deviation from the ideal step —
     * ∫|1−(1−sʳ)ᵇ − 1[s ≥ t]| ds on a 101-point grid — and mark the
-    * argmin. This is `TuneLsh`'s planning math exposed through the
-    * registry so the choice q20/q205 run with is itself oracle-audited:
+    * argmin. The planning math is exposed through the registry so the
+    * choice q20/q205 run with is itself oracle-audited:
     * both engines evaluate the same 7×101 closed-form grid (terms round
     * at 12 dp onto the decimal grid before the order-free mean — pow is
     * libm on both sides, the q103 rounding contract), and the argmin

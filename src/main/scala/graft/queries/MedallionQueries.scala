@@ -526,9 +526,10 @@ object MedallionQueries {
   /** L1+L4 graded directly: bronze read-back after the two-batch load,
     * including the `date_retrieved` audit stamp
     * (/root/reference/src/load/load.py:47,140,174). The injectable clock
-    * ([[graft.pipeline.Medallion.loadBronzeTransactions]]'s `clock` column,
-    * fixed to T1/T2 literals here, `current_timestamp` in production) makes
-    * the stamp deterministic, so the hash compare covers the one reference
+    * (the per-batch `clock` column of
+    * [[graft.pipeline.Medallion.runAtomicBatches]], fixed to T1/T2 literals
+    * here, `current_timestamp` in production) makes the stamp
+    * deterministic, so the hash compare covers the one reference
     * row (L4) that a wall-clock stamp would have excluded from the oracle:
     * rows carried by batch 1 must read exactly T1 — a re-stamp on the
     * batch-2 re-send, a duplicate, or a dropped stamp all fail the hash.

@@ -38,12 +38,12 @@ object StreamOps {
         .parquet(streamDir(sfDir))
 
   /** The parquet file source requires a directory of leaf FILES; the
-    * harness ships one file per table, while ScaleUp probe dirs carry a
-    * Spark-written DIRECTORY (part files + _SUCCESS). Stage a directory
-    * of symlinks to the actual part files either way — linking the
+    * harness ships one file per table, while a table Spark wrote itself
+    * is a DIRECTORY (part files + _SUCCESS). Stage a directory of
+    * symlinks to the actual part files either way — linking the
     * directory itself (the pre-round-10 behavior) made the file source
-    * list ZERO files and every scale-probe streaming drain silently
-    * processed an empty stream. (A production deployment points the
+    * list ZERO files and a drain over such a table silently processed an
+    * empty stream. (A production deployment points the
     * source at the landing directory directly.)
     */
   private def streamDir(sfDir: String): String = {
@@ -214,7 +214,7 @@ object StreamOps {
     * single-part: a wider trigger would otherwise merge two later frames
     * into one batch. Returns (stagedDir, firstFrameParts).
     */
-  private[graft] def stageOrderedParts(scratchDir: String,
+  private def stageOrderedParts(scratchDir: String,
       batches: Seq[(DataFrame, String, Int)]): (String, Int) = {
     require(batches.head._3 == 1 || batches.tail.forall(_._3 == 1),
       "multi-part staging is only ordered for (data, sentinel...) shapes")

@@ -9,9 +9,11 @@ import org.apache.spark.sql.streaming.Trigger
 /** Streaming CDC apply: a change stream (I/U/D rows) folded into a keyed
   * snapshot, one copy-on-write version per micro-batch.
   *
-  * [[StreamingBronzeLoad]] is the reference's insert-only L1; this is the
-  * general MERGE form. Each batch is compacted to its latest change per
-  * key (ordered by `seqCol` — CDC feeds carry a log sequence number),
+  * The batch medallion's keyed first-writer bronze load
+  * ([[graft.pipeline.Medallion.runAtomicBatches]]) is the reference's
+  * insert-only L1; this is the general MERGE form. Each batch is
+  * compacted to its latest change per key (ordered by `seqCol` — CDC
+  * feeds carry a log sequence number),
   * merged with [[Cdc.applyChanges]], and written to `v<batchId>` with a
   * marker-file pointer flip (the [[graft.pipeline.Versions]] two-phase
   * publish, shared with the batch medallion's atomic commit).

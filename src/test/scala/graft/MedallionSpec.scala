@@ -3,12 +3,14 @@ package graft
 import graft.pipeline.Medallion
 import graft.schema.MonzoSchemas
 import graft.sources.MonzoSource
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end medallion semantics vs the reference pipeline
-  * (/root/reference/src/main.py:19-85): idempotent keyed bronze load
-  * (test_load.py semantics: same id twice → one row), first-writer-wins
-  * dims, fact projection, gold rollup.
+  * (/root/reference/src/main.py:19-85), every run landed through the
+  * atomic commit and read back from its committed view: idempotent keyed
+  * bronze load (test_load.py semantics: same id twice → one row),
+  * first-writer-wins dims, fact projection, gold rollup.
   */
 class MedallionSpec extends SparkSpec {
 
@@ -24,46 +26,96 @@ class MedallionSpec extends SparkSpec {
   private def bronzeBatch(rows: String*) =
     MonzoSource.flattenTransactions(jsonDf(MonzoSchemas.apiTransaction, rows: _*))
 
+  private def ts(t: String) = lit(t).cast("timestamp")
+
+  /** One atomic run with one-row balance/pots snapshots; returns the
+    * committed view it published.
+    */
+  private def land(m: Medallion, batches: (DataFrame, String)*): Medallion = {
+    import spark.implicits._
+    val bal = Seq((100L, "GBP")).toDF("balance", "currency")
+    val pots = Seq(("pot_1", 50L)).toDF("pot_id", "balance")
+    m.runAtomicBatches(spark, batches.map { case (df, t) => df -> ts(t) },
+      bal, pots, ts(batches.last._2))
+    m.committed(spark).get
+  }
+
   test("keyed bronze load is idempotent: same batch twice loads once") {
     val m = Medallion(tmpDir("medallion"))
     val batch = bronzeBatch(
       tx("tx_1", -100, "2025-01-01T00:00:00Z"),
       tx("tx_2", -200, "2025-01-02T00:00:00Z"))
-    val clock = lit("2025-02-01T00:00:00Z").cast("timestamp")
-    m.loadBronzeTransactions(spark, batch, clock)
-    m.loadBronzeTransactions(spark, batch, clock)
-    assert(spark.read.parquet(m.bronzeTx).count() === 2)
+    land(m, batch -> "2025-02-01T00:00:00Z")
+    val c = land(m, batch -> "2025-02-01T00:00:00Z")
+    assert(spark.read.parquet(c.bronzeTx).count() === 2)
   }
 
   test("incremental load appends only unseen ids") {
     val m = Medallion(tmpDir("medallion"))
-    val clock = lit("2025-02-01T00:00:00Z").cast("timestamp")
-    m.loadBronzeTransactions(spark, bronzeBatch(tx("tx_1", -100, "2025-01-01T00:00:00Z")), clock)
-    m.loadBronzeTransactions(spark, bronzeBatch(
+    land(m, bronzeBatch(tx("tx_1", -100, "2025-01-01T00:00:00Z")) -> "2025-02-01T00:00:00Z")
+    val c = land(m, bronzeBatch(
       tx("tx_1", -999, "2025-01-01T00:00:00Z"), // replay with changed amount: ignored
-      tx("tx_3", -300, "2025-01-05T00:00:00Z")), clock)
-    val bronze = spark.read.parquet(m.bronzeTx)
+      tx("tx_3", -300, "2025-01-05T00:00:00Z")) -> "2025-02-01T00:00:00Z")
+    val bronze = spark.read.parquet(c.bronzeTx)
     assert(bronze.count() === 2)
     assert(bronze.filter(col("id") === "tx_1").select("amount").collect()(0).getLong(0) === -100L)
   }
 
+  test("overlapping re-delivery across two batches of one run lands each id once, first clock") {
+    val m = Medallion(tmpDir("medallion"))
+    // the reference's 30-day re-extraction window in miniature: page 2
+    // re-sends tx_2 (with a changed amount) next to an unseen tx_3
+    val c = land(m,
+      bronzeBatch(
+        tx("tx_1", -100, "2025-01-01T00:00:00Z"),
+        tx("tx_2", -200, "2025-01-02T00:00:00Z")) -> "2025-02-01T00:00:00Z",
+      bronzeBatch(
+        tx("tx_2", -222, "2025-01-02T00:00:00Z"),
+        tx("tx_3", -300, "2025-01-03T00:00:00Z")) -> "2025-02-02T00:00:00Z")
+    val got = spark.read.parquet(c.bronzeTx)
+      .select(col("id"), col("amount"), col("date_retrieved").cast("string"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2)))
+      .sortBy(_._1).toSeq
+    assert(got === Seq(
+      ("tx_1", -100L, "2025-02-01 00:00:00"),
+      ("tx_2", -200L, "2025-02-01 00:00:00"),
+      ("tx_3", -300L, "2025-02-02 00:00:00")))
+    assert(spark.read.parquet(c.silverTx).count() === 3)
+  }
+
+  test("null transaction id fails the run by name and publishes nothing") {
+    val root = tmpDir("medallion")
+    val m = Medallion(root)
+    land(m, bronzeBatch(tx("tx_1", -100, "2025-01-01T00:00:00Z")) -> "2025-02-01T00:00:00Z")
+    def nullId(amount: Long) =
+      tx("x", amount, "2025-01-03T00:00:00Z").replace("\"id\":\"x\"", "\"id\":null")
+    val boom = intercept[Exception] {
+      land(m, bronzeBatch(tx("tx_2", -200, "2025-01-02T00:00:00Z")) -> "2025-02-02T00:00:00Z",
+        bronzeBatch(nullId(-1), nullId(-2)) -> "2025-02-02T00:00:00Z")
+    }
+    val named = Iterator.iterate(boom: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("bronze: null transaction id")))
+    assert(named, s"unnamed failure: $boom")
+    assert(graft.pipeline.Versions.latest(spark, root).get._1 === 1L)
+    assert(spark.read.parquet(m.committed(spark).get.bronzeTx).count() === 1)
+  }
+
   test("silver: first-writer-wins merchant dim + fact keeps FKs, drops denormalized cols") {
     val m = Medallion(tmpDir("medallion"))
-    val clock = lit("2025-02-01T00:00:00Z").cast("timestamp")
-    m.loadBronzeTransactions(spark, bronzeBatch(
+    val c = land(m, bronzeBatch(
       tx("tx_1", -100, "2025-01-01T00:00:00Z", merchName = "First Name"),
-      tx("tx_2", -200, "2025-01-02T00:00:00Z", merchName = "Changed Name")), clock)
-    m.transformSilver(spark)
+      tx("tx_2", -200, "2025-01-02T00:00:00Z", merchName = "Changed Name")) ->
+      "2025-02-01T00:00:00Z")
 
-    val merchants = spark.read.parquet(m.silverMerchants)
+    val merchants = spark.read.parquet(c.silverMerchants)
     assert(merchants.count() === 1)
     assert(merchants.select("name").collect()(0).getString(0) === "First Name")
 
-    val cps = spark.read.parquet(m.silverCounterparties)
+    val cps = spark.read.parquet(c.silverCounterparties)
     assert(cps.count() === 1)
     assert(cps.columns.toSet === Set("account_num", "sort_code", "name"))
 
-    val fact = spark.read.parquet(m.silverTx)
+    val fact = spark.read.parquet(c.silverTx)
     assert(fact.count() === 2)
     assert(!fact.columns.contains("merchant_name"))
     assert(fact.columns.contains("merchant_id"))
@@ -84,24 +136,27 @@ class MedallionSpec extends SparkSpec {
       tx("tx_2", -300, "2025-01-20T00:00:00Z"),
       tx("tx_3", 5000, "2025-01-25T00:00:00Z"), // income: excluded from spend
       tx("tx_4", -50, "2025-02-01T00:00:00Z"))
-    m.run(spark, batch, MonzoSource.shapeBalance(balance),
-      MonzoSource.explodePots(pots), lit("2025-03-01T00:00:00Z").cast("timestamp"))
+    def run(clock: String): Medallion = {
+      m.runAtomicBatches(spark, Seq(batch -> ts(clock)), MonzoSource.shapeBalance(balance),
+        MonzoSource.explodePots(pots), ts(clock))
+      m.committed(spark).get
+    }
+    val c1 = run("2025-03-01T00:00:00Z")
 
-    val gold = spark.read.parquet(m.goldMonthly).orderBy("year", "month").collect()
+    val gold = spark.read.parquet(c1.goldMonthly).orderBy("year", "month").collect()
     assert(gold.length === 2)
     assert(gold(0).getAs[Long]("year") === 2025L || gold(0).getAs[Int]("year") === 2025)
     assert(gold(0).getAs[Double]("total_spend") === 400.0)
     assert(gold(0).getAs[Double]("avg_spend") === 200.0)
     assert(gold(1).getAs[Double]("total_spend") === 50.0)
-    // snapshots appended
-    assert(spark.read.parquet(m.bronzeBalance).count() === 1)
-    assert(spark.read.parquet(m.bronzePots).count() === 1)
+    // one snapshot per commit
+    assert(spark.read.parquet(c1.bronzeBalance).count() === 1)
+    assert(spark.read.parquet(c1.bronzePots).count() === 1)
     // re-run is idempotent for bronze/silver; snapshots append (by design)
-    m.run(spark, batch, MonzoSource.shapeBalance(balance),
-      MonzoSource.explodePots(pots), lit("2025-03-02T00:00:00Z").cast("timestamp"))
-    assert(spark.read.parquet(m.bronzeTx).count() === 4)
-    assert(spark.read.parquet(m.silverTx).count() === 4)
-    assert(spark.read.parquet(m.bronzeBalance).count() === 2)
+    val c2 = run("2025-03-02T00:00:00Z")
+    assert(spark.read.parquet(c2.bronzeTx).count() === 4)
+    assert(spark.read.parquet(c2.silverTx).count() === 4)
+    assert(spark.read.parquet(c2.bronzeBalance).count() === 2)
   }
 
   test("Scd2.buildScd2: runs, null attrs, re-emerging values, open tail") {
@@ -178,8 +233,8 @@ class MedallionSpec extends SparkSpec {
     val clock1 = lit("2025-02-01T00:00:00Z").cast("timestamp")
     val clock2 = lit("2025-02-02T00:00:00Z").cast("timestamp")
 
-    val v1 = m.runAtomic(spark,
-      bronzeBatch(tx("tx_1", -100, "2025-01-01T00:00:00Z")), bal, pots, clock1)
+    val v1 = m.runAtomicBatches(spark,
+      Seq(bronzeBatch(tx("tx_1", -100, "2025-01-01T00:00:00Z")) -> clock1), bal, pots, clock1)
     assert(v1 === 1L)
     val c1 = m.committed(spark).get
     assert(spark.read.parquet(c1.bronzeTx).count() === 1)
@@ -188,8 +243,8 @@ class MedallionSpec extends SparkSpec {
 
     // inject a crash in the widest window: silver staged, gold not built
     val boom = intercept[RuntimeException] {
-      m.runAtomic(spark,
-        bronzeBatch(tx("tx_2", -200, "2025-01-02T00:00:00Z")), bal, pots, clock2,
+      m.runAtomicBatches(spark,
+        Seq(bronzeBatch(tx("tx_2", -200, "2025-01-02T00:00:00Z")) -> clock2), bal, pots, clock2,
         afterSilver = () => throw new RuntimeException("injected crash"))
     }
     assert(boom.getMessage === "injected crash")
@@ -203,8 +258,8 @@ class MedallionSpec extends SparkSpec {
       === goldBefore)
 
     // recovery: rerunning the batch stages v2 again and flips all layers at once
-    val v2 = m.runAtomic(spark,
-      bronzeBatch(tx("tx_2", -200, "2025-01-02T00:00:00Z")), bal, pots, clock2)
+    val v2 = m.runAtomicBatches(spark,
+      Seq(bronzeBatch(tx("tx_2", -200, "2025-01-02T00:00:00Z")) -> clock2), bal, pots, clock2)
     assert(v2 === 2L)
     val c2 = m.committed(spark).get
     assert(spark.read.parquet(c2.bronzeTx).count() === 2)

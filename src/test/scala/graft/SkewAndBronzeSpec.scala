@@ -1,11 +1,9 @@
 package graft
 
 import graft.operators.SkewJoin
-import graft.streaming.StreamingBronzeLoad
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
-/** Salted-join equivalence and streaming bronze-load idempotence. */
+/** Salted-join and bloom semi-join equivalence. */
 class SkewAndBronzeSpec extends SparkSpec {
   import spark.implicits._
 
@@ -19,28 +17,6 @@ class SkewAndBronzeSpec extends SparkSpec {
     val plain = probe.join(build, Seq("k")).select("k", "v", "name")
     assert(salted.count() === plain.count())
     assert(salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty)
-  }
-
-  test("streaming bronze load: re-delivered keys land exactly once") {
-    val root = Files.createTempDirectory("graft-bronze").toString
-    val src = s"$root/src"
-    val bronze = s"$root/bronze"
-    val ckpt = s"$root/ckpt"
-    Files.createDirectories(java.nio.file.Paths.get(src))
-
-    Seq(("tx_1", 100L), ("tx_2", 200L)).toDF("id", "amount")
-      .write.mode("append").parquet(src)
-    StreamingBronzeLoad.run(spark, src, bronze, "id", ckpt)
-    // second delivery overlaps (tx_2 again) — the reference's 30-day
-    // re-extraction window in miniature
-    Seq(("tx_2", 200L), ("tx_3", 300L)).toDF("id", "amount")
-      .write.mode("append").parquet(src)
-    StreamingBronzeLoad.run(spark, src, bronze, "id", ckpt)
-
-    val got = spark.read.parquet(bronze)
-    assert(got.count() === 3)
-    assert(got.select("id").as[String].collect().sorted === Array("tx_1", "tx_2", "tx_3"))
-    assert(got.columns.contains("date_retrieved"))
   }
 
   test("bloom semi-join: equals plain join, actually prunes the fact side") {
