@@ -15,10 +15,12 @@ import org.apache.spark.sql.functions._
   */
 object GoldAgg {
 
-  /** Monthly spend rollup: (year, month, total_spend, avg_spend, n_rows).
-    * Output year/month column names are parameterized so both the TPC-H
-    * query surface (o_year/o_month) and the medallion gold mart share one
-    * implementation.
+  /** Monthly spend rollup: (year, month, total_spend, avg_spend, n_rows),
+    * unordered — a caller that needs month order sorts (a global sort costs
+    * the medallion's gold write two more jobs, and nothing reads gold by
+    * file order). Output year/month column names are parameterized so both
+    * the TPC-H query surface (o_year/o_month) and the medallion gold mart
+    * share one implementation.
     */
   def monthlySpend(
       fact: DataFrame, dateCol: String, amountCol: String,
@@ -31,7 +33,6 @@ object GoldAgg {
         Exact.sumD(col(amountCol)).as("total_spend"),
         Exact.avgD(col(amountCol)).as("avg_spend"),
         count(lit(1)).as("n_rows"))
-      .orderBy(yearName, monthName)
 
   /** Incremental-maintenance form of [[monthlySpend]]: per-batch partial
     * state `(year, month, total_dec, n_rows)` with the total carried as

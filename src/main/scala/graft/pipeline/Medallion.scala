@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.operators.{Dedup, GoldAgg, Normalize}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Bronze → silver → gold medallion orchestration over Parquet directories
   * (SURVEY.md §3; reference lifecycle /root/reference/src/main.py:19-85).
@@ -26,7 +27,9 @@ import org.apache.spark.sql.functions._
   * The reference's SQLite-file-through-S3 round trip (main.py:40-49,67-69)
   * disappears: each layer is a Parquet directory addressed directly (s3a://
   * in production). Its single end-of-run commit becomes one `_LATEST`
-  * pointer flip over a staged version of all seven tables
+  * pointer flip over a staged version of all seven tables, written in two
+  * concurrent waves — {bronze, balance, pots}, then {counterparties,
+  * merchants, fact, gold} — with the crash seam after both
   * ([[runAtomicBatches]], the only writer). At warehouse scale the same
   * plans run unchanged over a transactional table format; nothing here
   * loops on the driver.
@@ -40,12 +43,13 @@ final case class Medallion(root: String) {
   val silverMerchants = s"$root/silver/merchants"
   val goldMonthly = s"$root/gold/monthly_spending"
 
-  /** T1-T4 — bronze → silver. Deterministic first-writer order: earliest
+  /** T1-T4 + G1 — staged bronze → silver and gold, as one wave of four
+    * concurrent writes. Deterministic first-writer order: earliest
     * `date_retrieved`, then `created`, then PK (SQLite's pick among
     * duplicates is scan order; we fix a total order, SURVEY.md §7.4).
     */
-  private[pipeline] def transformSilver(spark: SparkSession): Unit = {
-    val bronze = spark.read.parquet(bronzeTx)
+  private def stageSilverAndGold(spark: SparkSession): Unit = {
+    val bronze = Medallion.readParquet(spark, bronzeTx)
     val order = Seq(col("date_retrieved").asc, col("created").asc_nulls_last, col("id").asc)
 
     // T1 — counterparties dim, composite key (account_num, sort_code).
@@ -90,31 +94,30 @@ final case class Medallion(root: String) {
         // (create_silver_layer.sql:1-19)
         col("date_retrieved").as("inserted_at"))
 
-    // three independent outputs of one bronze read: submit the writes
+    // G1 — gold monthly spending mart (spend = negative amounts, stored as
+    // positive totals; reference leaves the populate unwritten, shape is
+    // create_gold_layer.sql:1-6: month, year, total_spend, avg_spend).
+    // Aggregated from the fact plan, so gold is written in this wave
+    // beside silver instead of waiting for it to land.
+    val gold = GoldAgg.monthlySpend(
+        fact.filter(col("amount") < 0).withColumn("spend", -col("amount")),
+        dateCol = "created", amountCol = "spend",
+        yearName = "year", monthName = "month")
+      .drop("n_rows")
+
+    // four independent outputs of one bronze read: submit the writes
     // concurrently (guide §2.6 — the scheduler back-fills each job's tail
     // with the next job's tasks; sequential submission left the cluster
-    // idle across three write barriers)
+    // idle across the write barriers)
     Medallion.inParallelNamed(Seq(
       ("medallion: silver counterparties",
         () => counterparties.write.mode(SaveMode.Overwrite).parquet(silverCounterparties)),
       ("medallion: silver merchants",
         () => merchants.write.mode(SaveMode.Overwrite).parquet(silverMerchants)),
       ("medallion: silver fact",
-        () => fact.write.mode(SaveMode.Overwrite).parquet(silverTx))))
-  }
-
-  /** G1 — gold monthly spending mart (spend = negative amounts, stored as
-    * positive totals; reference leaves the populate unwritten, shape is
-    * create_gold_layer.sql:1-6: month, year, total_spend, avg_spend).
-    */
-  private[pipeline] def buildGold(spark: SparkSession): Unit = {
-    val silver = spark.read.parquet(silverTx)
-    GoldAgg.monthlySpend(
-        silver.filter(col("amount") < 0).withColumn("spend", -col("amount")),
-        dateCol = "created", amountCol = "spend",
-        yearName = "year", monthName = "month")
-      .drop("n_rows")
-      .write.mode(SaveMode.Overwrite).parquet(goldMonthly)
+        () => fact.write.mode(SaveMode.Overwrite).parquet(silverTx)),
+      ("medallion: gold monthly",
+        () => gold.write.mode(SaveMode.Overwrite).parquet(goldMonthly))))
   }
 
   /** The committed medallion view: a Medallion rooted at the current
@@ -127,14 +130,19 @@ final case class Medallion(root: String) {
   /** Entry-point-1 shape (main.py:19-85) with the reference's
     * single-commit semantics (/root/reference/src/load/load.py:271 — one
     * `commit()` after every layer is written, all API pages loaded
-    * before it). Every batch folds into the staged bronze with its own
-    * audit clock, then ONE transform + gold + flip: all seven tables are
-    * staged under `root/v<N>`, computed against the PREVIOUS committed
-    * version's bronze, and the `_LATEST` pointer flips once at the end
-    * ([[Versions.publish]]) — bronze, silver and gold appear together or
-    * not at all. A crash at any point (injectable via `afterSilver`, the
-    * widest window) leaves readers on the old consistent version;
-    * rerunning the batches stages the same version again and commits.
+    * before it). All seven tables are staged under `root/v<N>` in two
+    * concurrent waves, computed against the PREVIOUS committed version:
+    *  1. bronze (every batch folded in with its own audit clock) and the
+    *     balance and pots snapshots;
+    *  2. silver's two dims and fact, and gold, all from the staged bronze.
+    * Then `_SUCCESS` and ONE `_LATEST` pointer flip ([[Versions.publish]])
+    * — bronze, silver and gold appear together or not at all. Every Spark
+    * job the call runs is one of these writes: committed and staged tables
+    * are read with their footer schema ([[Medallion.readParquet]]), never
+    * inferred. A crash at any point (injectable via `afterSilver`, after
+    * both waves and before `_SUCCESS`: the widest window) leaves readers
+    * on the old consistent version; rerunning the batches stages the same
+    * version again and commits.
     * A null transaction id in any batch fails the stage-bronze job with
     * `bronze: null transaction id` before anything is published.
     *
@@ -160,7 +168,7 @@ final case class Medallion(root: String) {
     // partition as one key and collapse to one row, so each incoming row's
     // id passes a raise_error guard evaluated inside this same job.
     val nullId = raise_error(lit("bronze: null transaction id"))
-    val committed = curM.map(m => spark.read.parquet(m.bronzeTx))
+    val committed = curM.map(m => Medallion.readParquet(spark, m.bronzeTx))
       .getOrElse(batches.head._1.withColumn("date_retrieved", batches.head._2).limit(0))
     val bronze = Dedup.firstWriterWins(
       batches.zipWithIndex.foldLeft(committed.withColumn("__batch", lit(0))) {
@@ -175,12 +183,12 @@ final case class Medallion(root: String) {
     // L2/L3 snapshots: committed history ∪ this run's stamped snapshot
     def stageSnapshot(df: DataFrame, prev: Option[String], path: String): Unit = {
       val snap = df.withColumn("date_retrieved", snapClock)
-      val hist = prev.map(spark.read.parquet).getOrElse(snap.limit(0))
+      val hist = prev.map(Medallion.readParquet(spark, _)).getOrElse(snap.limit(0))
       hist.unionByName(snap).write.mode(SaveMode.Overwrite).parquet(path)
     }
     // bronze + the two snapshots touch disjoint staged paths and disjoint
-    // inputs — stage them concurrently (guide §2.6); silver then reads the
-    // landed bronze as before
+    // inputs — stage them concurrently (guide §2.6); the silver wave then
+    // reads the landed bronze
     Medallion.inParallelNamed(Seq(
       ("medallion: stage bronze",
         () => bronze.write.mode(SaveMode.Overwrite).parquet(stage.bronzeTx)),
@@ -189,9 +197,8 @@ final case class Medallion(root: String) {
       ("medallion: stage pots snapshot",
         () => stageSnapshot(pots, curM.map(_.bronzePots), stage.bronzePots))))
 
-    stage.transformSilver(spark)
-    afterSilver() // crash-injection seam: silver staged, gold not yet
-    stage.buildGold(spark)
+    stage.stageSilverAndGold(spark)
+    afterSilver() // crash-injection seam: every table staged, no _SUCCESS yet
 
     Versions.markComplete(spark, root, next)
     Versions.publish(spark, root, next)
@@ -200,6 +207,33 @@ final case class Medallion(root: String) {
 }
 
 object Medallion {
+  /** The key under which Spark's parquet writer stores the table's Spark
+    * schema (as JSON) in every part file's footer.
+    */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The parquet table at `dir`, read with the Spark schema stored in one
+    * part file's footer (opened directly, no Spark job) instead of an
+    * inferring `spark.read.parquet`, which launches a job per read. It is the
+    * schema inference would yield, so `unionByName` still rejects a
+    * committed table whose columns differ from the incoming batch's.
+    */
+  private def readParquet(spark: SparkSession, dir: String): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val part = Option(path.getFileSystem(conf)
+        .globStatus(new org.apache.hadoop.fs.Path(path, "part-*.parquet")))
+      .flatMap(_.headOption)
+      .getOrElse(throw new IllegalStateException(s"medallion: no parquet file under $dir"))
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(part, conf))
+    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
+      finally reader.close()
+    if (json == null)
+      throw new IllegalStateException(s"medallion: no Spark schema in ${part.getPath}")
+    spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]).parquet(dir)
+  }
+
   /** Run independent write jobs concurrently from a small pool (guide
     * §2.6): Spark's FIFO scheduler lets a later job's tasks back-fill
     * executors freed by an earlier job's straggler tail, so N independent

@@ -143,7 +143,8 @@ object CoreQueries {
     (s, dir) =>
       GoldAgg.monthlySpend(Tables.orders(s, dir), "o_orderdate", "o_totalprice")
         .withColumn("o_year", col("o_year").cast("long"))
-        .withColumn("o_month", col("o_month").cast("long")),
+        .withColumn("o_month", col("o_month").cast("long"))
+        .orderBy("o_year", "o_month"),
     Some("""SELECT year(o_orderdate) AS o_year, month(o_orderdate) AS o_month,
                    CAST(SUM(CAST(o_totalprice AS DECIMAL(30,4))) AS DOUBLE) AS total_spend,
                    CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,4))) AS DOUBLE)

@@ -921,8 +921,10 @@ object CurationQueries {
       // (round 13, §1.2): bt/bs/nt/ns each launched their own broadcast
       // job over dbc — the conditional sums land identical values
       // (missing side = 0, exactly the old full_outer + coalesce(·, 0))
-      // in ONE aggregate, and both totals ride one more
-      val bucketTab = dbc.groupBy("bucket").agg(
+      // in ONE aggregate, and both totals ride one more. Rows with a null
+      // is_t are neither target nor pool: dropped before the sums, so a
+      // bucket holding only such rows gets no row (not a (0, 0) row)
+      val bucketTab = dbc.filter(col("is_t").isNotNull).groupBy("bucket").agg(
         sum(when(col("is_t"), col("n_db")).otherwise(0L)).as("ct"),
         sum(when(!col("is_t"), col("n_db")).otherwise(0L)).as("cs"))
       val tot = bucketTab.agg(

@@ -1,49 +1,15 @@
 package graft
 
 import graft.operators.DriverReplay
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** The driver-replay gate: what it admits, and how many Spark jobs each
   * decision costs (counted by a SparkListener).
   */
 class DriverReplaySpec extends SparkSpec {
 
-  /** Spark jobs started by `body`. Listener events arrive asynchronously
-    * but in order, so one marker job before and one after `body` bracket
-    * exactly its jobs once the closing marker has been delivered.
-    */
   private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        seen.put(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    def marker(tag: String): Unit = {
-      sc.setJobDescription(tag)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-    }
-    val open = s"replay-spec-open-${System.nanoTime()}"
-    val close = s"replay-spec-close-${System.nanoTime()}"
-    sc.addSparkListener(listener)
-    try {
-      marker(open)
-      val out = body
-      marker(close)
-      var jobs = -1
-      var done = false
-      while (!done) {
-        val d = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
-        assert(d != null, "listener never saw the closing marker job")
-        if (d == open) jobs = 0
-        else if (d == close) done = true
-        else if (jobs >= 0) jobs += 1
-      }
-      (out, jobs)
-    } finally sc.removeSparkListener(listener)
+    val (out, jobs) = jobDescriptionsOf(body)
+    (out, jobs.size)
   }
 
   /** `n` rows in ONE partition, so a limit collect takes exactly one job. */

@@ -100,6 +100,47 @@ class MedallionSpec extends SparkSpec {
     assert(spark.read.parquet(m.committed(spark).get.bronzeTx).count() === 1)
   }
 
+  test("schema drift: a committed bronze column the batch lacks fails the run, publishes nothing") {
+    val root = tmpDir("medallion")
+    val m = Medallion(root)
+    land(m, bronzeBatch(tx("tx_1", -100, "2025-01-01T00:00:00Z"))
+      .withColumn("extra", lit("x")) -> "2025-02-01T00:00:00Z")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      land(m, bronzeBatch(tx("tx_2", -200, "2025-01-02T00:00:00Z")) -> "2025-02-02T00:00:00Z")
+    }
+    assert(graft.pipeline.Versions.latest(spark, root).get._1 === 1L)
+    val bronze = spark.read.parquet(m.committed(spark).get.bronzeTx)
+    assert(bronze.columns.contains("extra"))
+    assert(bronze.count() === 1)
+  }
+
+  test("a committed table with no part file fails the run by name, publishes nothing") {
+    val root = tmpDir("medallion")
+    val m = Medallion(root)
+    val c1 = land(m, bronzeBatch(tx("tx_1", -100, "2025-01-01T00:00:00Z")) -> "2025-02-01T00:00:00Z")
+    new java.io.File(c1.bronzeTx).listFiles()
+      .filter(_.getName.startsWith("part-")).foreach(f => assert(f.delete()))
+    val boom = intercept[IllegalStateException] {
+      land(m, bronzeBatch(tx("tx_2", -200, "2025-01-02T00:00:00Z")) -> "2025-02-02T00:00:00Z")
+    }
+    assert(boom.getMessage === s"medallion: no parquet file under ${c1.bronzeTx}")
+    assert(graft.pipeline.Versions.latest(spark, root).get._1 === 1L)
+  }
+
+  test("one run is at most 11 Spark jobs, each labelled medallion:, fresh or committed root") {
+    val m = Medallion(tmpDir("medallion"))
+    def run(clock: String) = jobDescriptionsOf(land(m,
+      bronzeBatch(
+        tx("tx_1", -100, "2025-01-01T00:00:00Z"),
+        tx("tx_2", -200, "2025-01-02T00:00:00Z")) -> clock,
+      bronzeBatch(tx("tx_3", -300, "2025-01-03T00:00:00Z")) -> clock))._2
+    for ((jobs, root) <- Seq(run("2025-02-01T00:00:00Z") -> "fresh",
+        run("2025-02-02T00:00:00Z") -> "committed")) {
+      assert(jobs.size <= 11, s"$root root: ${jobs.size} jobs: ${jobs.mkString(", ")}")
+      assert(jobs.forall(_.startsWith("medallion:")), s"$root root: ${jobs.mkString(", ")}")
+    }
+  }
+
   test("silver: first-writer-wins merchant dim + fact keeps FKs, drops denormalized cols") {
     val m = Medallion(tmpDir("medallion"))
     val c = land(m, bronzeBatch(
@@ -224,7 +265,7 @@ class MedallionSpec extends SparkSpec {
       (5L, "update", None, Some("e"))))
   }
 
-  test("atomic commit: crash between silver and gold leaves readers on the old version") {
+  test("atomic commit: crash before _SUCCESS leaves readers on the old version") {
     import spark.implicits._
     val root = tmpDir("medallion_atomic")
     val m = Medallion(root)
@@ -241,7 +282,8 @@ class MedallionSpec extends SparkSpec {
     assert(spark.read.parquet(c1.silverTx).count() === 1)
     val goldBefore = spark.read.parquet(c1.goldMonthly).collect().map(_.toString).sorted
 
-    // inject a crash in the widest window: silver staged, gold not built
+    // inject a crash in the widest window: bronze, silver and gold all
+    // staged under v2, neither _SUCCESS nor the _LATEST flip written
     val boom = intercept[RuntimeException] {
       m.runAtomicBatches(spark,
         Seq(bronzeBatch(tx("tx_2", -200, "2025-01-02T00:00:00Z")) -> clock2), bal, pots, clock2,
@@ -256,6 +298,12 @@ class MedallionSpec extends SparkSpec {
     assert(spark.read.parquet(cAfter.silverTx).count() === 1)
     assert(spark.read.parquet(cAfter.goldMonthly).collect().map(_.toString).sorted
       === goldBefore)
+    // v2 is not marked complete, so the recovery scan skips it too: with
+    // the pointer cache gone, readers still resolve to v1
+    assert(!new java.io.File(s"$root/v2/_SUCCESS").exists())
+    assert(new java.io.File(s"$root/v2/gold/monthly_spending").isDirectory)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$root/_LATEST"))
+    assert(graft.pipeline.Versions.latest(spark, root).get._1 === 1L)
 
     // recovery: rerunning the batch stages v2 again and flips all layers at once
     val v2 = m.runAtomicBatches(spark,

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,6 +16,45 @@ trait SparkSpec extends AnyFunSuite {
   def jsonDf(schema: org.apache.spark.sql.types.StructType, rows: String*): DataFrame = {
     import spark.implicits._
     spark.read.schema(schema).json(spark.createDataset(rows))
+  }
+
+  /** The descriptions of the Spark jobs started by `body`, in start order
+    * (`""` for an unlabelled job). Listener events arrive asynchronously
+    * but in order, so one marker job before and one after `body` bracket
+    * exactly its jobs once the closing marker has been delivered.
+    */
+  def jobDescriptionsOf[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        seen.put(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    def marker(tag: String): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+    }
+    val open = s"job-count-open-${System.nanoTime()}"
+    val close = s"job-count-close-${System.nanoTime()}"
+    sc.addSparkListener(listener)
+    try {
+      marker(open)
+      val out = body
+      marker(close)
+      var jobs: Option[Vector[String]] = None
+      var done = false
+      while (!done) {
+        val d = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+        assert(d != null, "listener never saw the closing marker job")
+        if (d == open) jobs = Some(Vector.empty)
+        else if (d == close) done = true
+        else jobs = jobs.map(_ :+ d)
+      }
+      (out, jobs.getOrElse(Vector.empty))
+    } finally sc.removeSparkListener(listener)
   }
 
   def tmpDir(prefix: String): String =
