@@ -2,12 +2,15 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
-/** Job-level wall-time profile of one or more registry queries — the
-  * measurement tool behind the round-12 optimization pass (guide §1:
-  * measure first). For each named query it runs the builder + count twice
+/** Plan and job-level wall-time profile of one or more registry queries —
+  * the measurement tool behind the round-12 optimization pass (guide §1:
+  * measure first). For each named query it prints the formatted physical
+  * plan (filter/column pushdown into parquet scans, join strategy choice,
+  * whole-stage-codegen coverage), then runs the builder + count twice
   * (cold, then warm-in-JVM) and prints every Spark job the run submitted:
   * job id, wall ms, first stage name — plus the gap between jobs
-  * (driver-side think time: planning, collect handling, loops).
+  * (driver-side think time: planning, collect handling, loops). Printing
+  * the plan is kept out of the cold run's total.
   *
   * At sf0.1 the corpus is small enough that most of a slow query's time
   * is job COUNT × fixed job cost (driver-synchronous rounds), not data
@@ -18,8 +21,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   */
 object ProbeQueryJobs {
 
+  private final case class J(id: Int, start: Long, var end: Long, desc: String, tasks: Int)
+
   private final class JobLog extends SparkListener {
-    final case class J(id: Int, start: Long, var end: Long, desc: String, tasks: Int)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
     override def onJobStart(js: SparkListenerJobStart): Unit = {
       // the job's description (guide §1.5 labels) when set, else the
@@ -49,8 +53,13 @@ object ProbeQueryJobs {
       (1 to 2).foreach { run =>
         log.clear()
         val t0 = System.nanoTime()
-        q.run(spark, sfDir).count()
-        val total = (System.nanoTime() - t0) / 1e6
+        val df = q.run(spark, sfDir)
+        val built = System.nanoTime()
+        if (run == 1) println(s"\n=== $name plan ===\n" +
+          df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
+        val t1 = System.nanoTime()
+        df.count()
+        val total = (built - t0 + System.nanoTime() - t1) / 1e6
         // listener bus is async — let the tail events land
         Thread.sleep(300)
         import scala.jdk.CollectionConverters._

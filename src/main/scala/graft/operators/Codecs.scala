@@ -6,12 +6,10 @@ package graft.operators
   * format, which stands in for multi-frame video — and canonical WAV
   * (RIFF/WAVE, PCM16 mono). Encoders exist so tests and queries can
   * synthesize REAL containers from arbitrary bytes; [[JvmDecoder]] parses
-  * the actual headers (magic, geometry, payload layout) rather than
-  * deriving pseudo-media from byte length like the Fake stand-in.
+  * the actual headers (magic, geometry, payload layout).
   *
-  * Malformed input throws [[MediaDecodeException]] — the quarantine lane
-  * in [[Multimodal.withMetaQuarantine]] catches it per row (the q89
-  * corrupt-record pattern, applied to binary payloads).
+  * Malformed input throws [[MediaDecodeException]] with a message naming
+  * what was wrong, so a corrupt blob fails the job by name.
   */
 object Codecs {
 
@@ -135,8 +133,7 @@ object Codecs {
       while (pos < bytes.length && (bytes(pos) >= '0' && bytes(pos) <= '9')) pos += 1
       if (pos == start) fail(s"PPM expected integer at offset $start")
       // bound the digit count BEFORE toInt: an oversized token would throw
-      // NumberFormatException, which is not a MediaDecodeException and
-      // would escape the quarantine lane
+      // an unnamed NumberFormatException instead of a MediaDecodeException
       if (pos - start > 9) fail(s"PPM integer too large at offset $start")
       new String(bytes, start, pos - start, java.nio.charset.StandardCharsets.US_ASCII).toInt
     }

@@ -23,10 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Exact dedup on key columns; arbitrary survivor (hash-agg, one shuffle). */
-  def exact(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.dropDuplicates(keys)
-
   /** Deterministic first-writer-wins: keep, per key, the first row under
     * `order` (must be a total order within each key group).
     */

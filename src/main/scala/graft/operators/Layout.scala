@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Data-layout utilities: how tables should be WRITTEN so reads scale.
@@ -10,11 +10,6 @@ import org.apache.spark.sql.functions._
   *   before any I/O (`PartitionFilters` in the scan, vs `PushedFilters`
   *   which still opens files). The first lever for 100 TB time-series:
   *   partition by date, prune to the queried window.
-  * - [[writeRangeSorted]]: range-repartition + in-file sort on a column →
-  *   parquet row-group min/max statistics become selective, so point/range
-  *   predicates skip row groups inside files (the poor man's Z-order; for
-  *   one dominant filter column it is strictly better than Z-order).
-  * - Bucketed layout for join locality lives in [[Bucketing]].
   */
 object Layout {
 
@@ -23,14 +18,6 @@ object Layout {
     */
   def writePartitioned(df: DataFrame, dir: String, cols: Seq[String]): Unit =
     df.write.mode("overwrite").partitionBy(cols: _*).parquet(dir)
-
-  /** Write range-partitioned, per-file-sorted parquet so row-group stats
-    * on `col` are tight and disjoint across files.
-    */
-  def writeRangeSorted(df: DataFrame, dir: String, col: String, files: Int): Unit =
-    df.repartitionByRange(files, df(col))
-      .sortWithinPartitions(col)
-      .write.mode("overwrite").parquet(dir)
 
   /** Morton (Z-order) value over numeric columns, each first normalized to
     * a `bits`-bit bucket index by [[bucketize]], then bit-interleaved
@@ -125,34 +112,5 @@ object Layout {
       .sortWithinPartitions("__h")
       .drop(cols.map(c => Seq(s"__lo_$c", s"__hi_$c")).flatten :+ "__h": _*)
       .write.mode("overwrite").parquet(dir)
-  }
-
-  /** Compact a parquet directory toward `targetFileBytes` per output file
-    * (small-file maintenance: streaming appends and per-batch loads leave
-    * many small files, and file-open overhead then dominates scans). File
-    * count derives from the CURRENT on-disk size — one listing, no data
-    * pass — then a single coalesce-rewrite into a fresh directory (the
-    * atomic-swap publish is the caller's/table-format's job; compaction
-    * never overwrites what it is reading).
-    */
-  def compact(spark: SparkSession, dir: String, outDir: String,
-      targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    require(targetFileBytes > 0)
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(path).getLength
-    val files = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    spark.read.parquet(dir).coalesce(files).write.mode("overwrite").parquet(outDir)
-  }
-
-  /** True iff reading `dir` with `condition` prunes partitions at plan
-    * time (some scan carries a non-empty partition-filter list — inspected
-    * on the plan nodes, not the display string, which truncates).
-    */
-  def prunesPartitions(spark: SparkSession, dir: String, condition: String): Boolean = {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    val plan = spark.read.parquet(dir).filter(condition).queryExecution.executedPlan
-    plan.collect { case s: FileSourceScanExec => s }
-      .exists(_.partitionFilters.exists(!_.references.isEmpty))
   }
 }

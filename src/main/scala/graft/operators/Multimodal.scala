@@ -10,12 +10,11 @@ import org.apache.spark.sql.functions._
   * driver involvement and with one decoder context per partition (the Scala
   * analog of a Pandas-batched UDF).
   *
-  * Decoding is pluggable behind [[MediaDecoder]]: [[Codecs.JvmDecoder]]
-  * parses REAL containers (BMP, PPM/PPM-stream, WAV — pure JVM, no native
-  * deps) with a malformed-blob quarantine lane
-  * ([[withMetaQuarantine]]); [[FakeDecoder]] remains as the deterministic
-  * stand-in for formats that would need native codecs (JPEG/MP4), deriving
-  * pseudo-media from the bytes so tests can assert exact outputs.
+  * Decoding sits behind [[MediaDecoder]]; every operator defaults to
+  * [[Codecs.JvmDecoder]], which parses REAL containers (BMP, PPM/PPM-stream,
+  * WAV — pure JVM, no native deps) and fails a malformed blob with a named
+  * [[Codecs.MediaDecodeException]]. The trait is the seam a spec uses to
+  * substitute its own decoder.
   */
 object Multimodal {
 
@@ -37,37 +36,11 @@ object Multimodal {
     def decode(bytes: Array[Byte]): Decoded
 
     /** Decode with the format already sniffed — callers that need BOTH the
-      * format and the decode (the meta lanes) sniff once and pass it here
-      * instead of paying a second magic parse per row. Default delegates;
-      * real decoders override to dispatch on `format` directly.
+      * format and the decode ([[withMeta]], the WAV lanes) sniff once and
+      * pass it here instead of paying a second magic parse per row. Default
+      * delegates; real decoders override to dispatch on `format` directly.
       */
     def decode(bytes: Array[Byte], format: String): Decoded = decode(bytes)
-  }
-
-  /** Deterministic stand-in decoder: dimensions from byte length, samples
-    * from a splitmix64 stream seeded by the content — NOT a real codec (see
-    * object Scaladoc), but stable across runs/partitions so tests can
-    * assert exact outputs.
-    */
-  object FakeDecoder extends MediaDecoder {
-    import graft.functions.Sketches.splitmix64
-
-    override def sniffFormat(bytes: Array[Byte]): String =
-      if (bytes.length % 3 == 0) "img" else if (bytes.length % 3 == 1) "audio" else "video"
-
-    override def decode(bytes: Array[Byte]): Decoded = {
-      val w = 4 + (bytes.length % 5)
-      val h = 4 + (bytes.length % 3)
-      val nFrames = if (sniffFormat(bytes) == "video") 8 else 1
-      var seed = bytes.foldLeft(1469598103934665603L)((a, b) => (a ^ b) * 1099511628211L)
-      val frames = Array.fill(nFrames) {
-        Array.fill(w * h) {
-          seed = splitmix64(seed)
-          ((seed >>> 40).toInt & 0xFF) / 255.0f
-        }
-      }
-      Decoded(w, h, frames)
-    }
   }
 
   /** Attach typed metadata to (media_id, payload) rows — one decoder per
@@ -75,7 +48,7 @@ object Multimodal {
     */
   def withMeta(
       spark: SparkSession, media: DataFrame,
-      decoder: MediaDecoder = FakeDecoder): Dataset[MediaMeta] = {
+      decoder: MediaDecoder = Codecs.JvmDecoder): Dataset[MediaMeta] = {
     import spark.implicits._
     media.select(col("media_id").as[Long], col("payload").as[Array[Byte]])
       .mapPartitions { rows =>
@@ -97,7 +70,7 @@ object Multimodal {
     */
   def extractFeatures(
       spark: SparkSession, media: DataFrame, dim: Int = 16,
-      decoder: MediaDecoder = FakeDecoder): Dataset[MediaFeatures] = {
+      decoder: MediaDecoder = Codecs.JvmDecoder): Dataset[MediaFeatures] = {
     import spark.implicits._
     media.select(col("media_id").as[Long], col("payload").as[Array[Byte]])
       .mapPartitions { rows =>
@@ -112,25 +85,6 @@ object Multimodal {
           }
           val norm = math.sqrt(feat.foldLeft(0.0)((a, v) => a + v.toDouble * v)).toFloat
           MediaFeatures(id, if (norm == 0f) feat else feat.map(_ / norm))
-        }
-      }
-  }
-
-  /** Sample every `stride`-th frame of video items (frame-sampling stage of
-    * a video pipeline; pass-through for single-frame media).
-    */
-  final case class FrameSample(media_id: Long, frame_idx: Int, width: Int, height: Int)
-
-  def sampleFrames(
-      spark: SparkSession, media: DataFrame, stride: Int,
-      decoder: MediaDecoder = FakeDecoder): Dataset[FrameSample] = {
-    require(stride >= 1, s"stride must be >= 1, got $stride")
-    import spark.implicits._
-    media.select(col("media_id").as[Long], col("payload").as[Array[Byte]])
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          val d = decoder.decode(bytes)
-          d.frames.indices.by(stride).map(i => FrameSample(id, i, d.width, d.height))
         }
       }
   }
@@ -157,7 +111,7 @@ object Multimodal {
     */
   def sampleAndResize(
       spark: SparkSession, media: DataFrame, stride: Int, tw: Int, th: Int,
-      decoder: MediaDecoder = FakeDecoder): Dataset[ResizedFrame] = {
+      decoder: MediaDecoder = Codecs.JvmDecoder): Dataset[ResizedFrame] = {
     require(stride >= 1 && tw >= 1 && th >= 1,
       s"need stride/tw/th >= 1, got $stride/$tw/$th")
     import spark.implicits._
@@ -233,7 +187,7 @@ object Multimodal {
 
   def dhashes(
       spark: SparkSession, media: DataFrame,
-      decoder: MediaDecoder = FakeDecoder): Dataset[MediaPHash] = {
+      decoder: MediaDecoder = Codecs.JvmDecoder): Dataset[MediaPHash] = {
     import spark.implicits._
     media.select(col("media_id").as[Long], col("payload").as[Array[Byte]])
       .mapPartitions { rows =>
@@ -256,7 +210,7 @@ object Multimodal {
     */
   def frameDhashes(
       spark: SparkSession, media: DataFrame,
-      decoder: MediaDecoder = FakeDecoder): Dataset[FrameHash] = {
+      decoder: MediaDecoder = Codecs.JvmDecoder): Dataset[FrameHash] = {
     import spark.implicits._
     media.select(col("media_id").as[Long], col("payload").as[Array[Byte]])
       .mapPartitions { rows =>
@@ -290,7 +244,7 @@ object Multimodal {
     */
   def audioSamples(
       spark: SparkSession, media: DataFrame,
-      decoder: MediaDecoder = FakeDecoder): Dataset[AudioSample] = {
+      decoder: MediaDecoder = Codecs.JvmDecoder): Dataset[AudioSample] = {
     import spark.implicits._
     media.select(col("media_id").as[Long], col("payload").as[Array[Byte]])
       .mapPartitions { rows =>
@@ -316,7 +270,7 @@ object Multimodal {
     */
   def audioFrameFeatures(
       spark: SparkSession, media: DataFrame, frameLen: Int = 32,
-      decoder: MediaDecoder = FakeDecoder): Dataset[AudioFrameFeatures] = {
+      decoder: MediaDecoder = Codecs.JvmDecoder): Dataset[AudioFrameFeatures] = {
     require(frameLen >= 1, s"frameLen must be >= 1, got $frameLen")
     import spark.implicits._
     media.select(col("media_id").as[Long], col("payload").as[Array[Byte]])
@@ -364,7 +318,7 @@ object Multimodal {
     */
   def audioFingerprints(
       spark: SparkSession, media: DataFrame,
-      decoder: MediaDecoder = FakeDecoder): Dataset[AudioFingerprint] = {
+      decoder: MediaDecoder = Codecs.JvmDecoder): Dataset[AudioFingerprint] = {
     import spark.implicits._
     media.select(col("media_id").as[Long], col("payload").as[Array[Byte]])
       .mapPartitions { rows =>
@@ -386,58 +340,10 @@ object Multimodal {
       }
   }
 
-  /** The harness ships no binary table; derive one from `documents` (UTF-8
-    * payloads) — the plumbing under test is byte-domain and agnostic to
-    * what produced the bytes.
-    */
-  def mediaFromDocuments(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id").as("media_id"),
-      encode(col("text"), "UTF-8").as("payload"))
-
-  /** [[withMeta]] with a quarantine lane (the q89 corrupt-record pattern
-    * for binary payloads): rows whose payload fails to parse emit
-    * (media_id, error) with null meta instead of killing the job — at
-    * 100 TB a corrupt blob is a certainty, not an edge case.
-    */
-  final case class MediaMetaOrError(
-      media_id: Long, format: Option[String], byte_len: Option[Long],
-      width: Option[Int], height: Option[Int], n_frames: Option[Int],
-      error: Option[String])
-
-  def withMetaQuarantine(
-      spark: SparkSession, media: DataFrame,
-      decoder: MediaDecoder = Codecs.JvmDecoder): Dataset[MediaMetaOrError] = {
-    import spark.implicits._
-    media.select(col("media_id").as[Long], col("payload").as[Array[Byte]])
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes) =>
-          try {
-            // sniff once: the format both becomes the output column and
-            // dispatches the decode (no second magic parse on the hot path)
-            val fmt = decoder.sniffFormat(bytes)
-            val d = decoder.decode(bytes, fmt)
-            MediaMetaOrError(id, Some(fmt),
-              Some(bytes.length.toLong), Some(d.width), Some(d.height),
-              Some(d.frames.length), None)
-          } catch {
-            // NonFatal, not just MediaDecodeException: a corrupt blob that
-            // trips an unanticipated parser path (NumberFormat, index out
-            // of bounds, OOM-adjacent allocation guards) must still land
-            // in the error lane rather than kill the job — surviving
-            // arbitrary garbage is this lane's whole contract
-            case scala.util.control.NonFatal(e) =>
-              MediaMetaOrError(id, None, None, None, None, None,
-                Some(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
-          }
-        }
-      }
-  }
-
   /** REAL media containers deterministically synthesized from `documents`:
     * doc_id mod 3 picks BMP (single image) / WAV (PCM16 mono) / PPM P6
     * stream (multi-frame "video"), geometry derived from the text's UTF-8
-    * byte length, payload bytes cycled from the text bytes. Unlike
-    * [[mediaFromDocuments]] (raw bytes for the Fake decoder), these parse
+    * byte length, payload bytes cycled from the text bytes. These parse
     * under [[Codecs.JvmDecoder]] as genuine format decodes, and the
     * generative geometry formulas are simple enough for a SQL oracle to
     * replay (q30).

@@ -83,16 +83,4 @@ object Sharding {
           .otherwise("test"))
       .drop("__scr", "__one")
   }
-
-  /** Materialize [[shuffleShards]] output as one parquet directory per
-    * shard (`shard_id=K/`), rows within each shard's files in `shard_pos`
-    * order — the layout N loader workers stream independently. The
-    * pre-write repartition co-locates each shard so a shard's rows aren't
-    * scattered across nShards × shufflePartitions tiny files.
-    */
-  def writeShards(sharded: DataFrame, path: String): Unit =
-    sharded
-      .repartition(col("shard_id"))
-      .sortWithinPartitions("shard_id", "shard_pos")
-      .write.partitionBy("shard_id").mode("overwrite").parquet(path)
 }

@@ -27,7 +27,7 @@ object SkewJoin {
     // stage retry (same class as SPARK-23207); hash of the whole row keeps
     // retries stable and spreads a hot key by its non-key columns
     val salted = probe.withColumn("_salt",
-      pmod(xxhash64(probe.columns.map(col): _*), lit(factor.toLong)).cast("int"))
+      pmod(xxhash64(probe.columns.toIndexedSeq.map(col): _*), lit(factor.toLong)).cast("int"))
     val replicated = build.withColumn("_salt",
       explode(sequence(lit(0), lit(factor - 1))))
     salted.join(replicated, keys :+ "_salt").drop("_salt")

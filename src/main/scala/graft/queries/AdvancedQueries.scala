@@ -805,9 +805,8 @@ object AdvancedQueries {
     * through Spark's PERMISSIVE csv parser with an explicit schema and
     * `columnNameOfCorruptRecord` — good rows parse to typed columns,
     * malformed rows land whole in the quarantine column instead of
-    * killing the job (the text twin of q31's binary-blob quarantine, and
-    * the semantics a 100 TB CSV backfill needs: one bad export line
-    * must cost one row, not a task retry storm).
+    * killing the job (the semantics a 100 TB CSV backfill needs: one bad
+    * export line must cost one row, not a task retry storm).
     *
     * Grading: the oracle never touches the CSV — it replays the
     * GENERATOR from `orders`, so the Spark side's parse must reproduce

@@ -279,7 +279,7 @@ object GraphQueries {
     "q126_bfs_knn_hops",
     (s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val source = emb.agg(min(col("vec_id"))).head.getLong(0)
+      val source = emb.agg(min(col("vec_id"))).head().getLong(0)
       graft.operators.Bfs.run(knnEdges(s, dir), "src", "dst", source, maxHops = 16)
         .orderBy("node")
     },
@@ -361,7 +361,7 @@ object GraphQueries {
     "q135_sssp_knn",
     (s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val source = emb.agg(min(col("vec_id"))).head.getLong(0)
+      val source = emb.agg(min(col("vec_id"))).head().getLong(0)
       graft.operators.Sssp.run(
         knnEdgesW(s, dir), "src", "dst", "w", source, rounds = SsspRounds)
         .select(col("node"), round(col("dist"), 9).as("dist"))

@@ -25,8 +25,7 @@ object MultimodalQueries {
     (s, dir) =>
       Multimodal.withMeta(
         s,
-        Multimodal.encodedMediaFromDocuments(s, Tables.documents(s, dir)),
-        decoder = graft.operators.Codecs.JvmDecoder)
+        Multimodal.encodedMediaFromDocuments(s, Tables.documents(s, dir)))
         .toDF()
         .orderBy("media_id"),
     Some("""WITH g AS (
@@ -66,8 +65,7 @@ object MultimodalQueries {
     (s, dir) => {
       val path = Landed.land("q31_multimodal_features", dir)
       Multimodal.extractFeatures(
-        s, Multimodal.encodedMediaFromDocuments(s, Tables.documents(s, dir)),
-        decoder = graft.operators.Codecs.JvmDecoder)
+        s, Multimodal.encodedMediaFromDocuments(s, Tables.documents(s, dir)))
         .toDF()
         .withColumn("embedding_json", to_json(col("embedding")))
         .repartition(1) // see q24: empty-safe single part file
@@ -106,8 +104,7 @@ object MultimodalQueries {
       val path = Landed.land("q207_multimodal_frame_resize", dir)
       Multimodal.sampleAndResize(
         s, Multimodal.encodedMediaFromDocuments(s, Tables.documents(s, dir)),
-        stride = 2, tw = 8, th = 8,
-        decoder = graft.operators.Codecs.JvmDecoder)
+        stride = 2, tw = 8, th = 8)
         .toDF()
         .withColumn("samples_json", to_json(col("samples")))
         .repartition(1) // see q24: empty-safe single part file
@@ -160,8 +157,7 @@ object MultimodalQueries {
     (s, dir) => {
       val path = Landed.land("q283_phash_pairs", dir)
       Multimodal.dhashes(
-          s, Multimodal.encodedMediaFromDocuments(s, Tables.documents(s, dir)),
-          decoder = graft.operators.Codecs.JvmDecoder)
+          s, Multimodal.encodedMediaFromDocuments(s, Tables.documents(s, dir)))
         .toDF()
         .repartition(1) // see q24: empty-safe single part file
         .write.mode("overwrite").parquet(path)
@@ -199,8 +195,7 @@ object MultimodalQueries {
     (s, dir) => {
       val path = Landed.land("q285_image_dedup_clusters", dir)
       Multimodal.dhashes(
-          s, Multimodal.encodedMediaFromDocuments(s, Tables.documents(s, dir)),
-          decoder = graft.operators.Codecs.JvmDecoder)
+          s, Multimodal.encodedMediaFromDocuments(s, Tables.documents(s, dir)))
         .toDF()
         .repartition(1) // see q24: empty-safe single part file
         .write.mode("overwrite").parquet(path)
@@ -256,12 +251,11 @@ object MultimodalQueries {
     (s, dir) => {
       val path = Landed.land("q288_audio_frame_features", dir)
       val media = Multimodal.encodedMediaFromDocuments(s, Tables.documents(s, dir))
-      Multimodal.audioSamples(s, media, decoder = graft.operators.Codecs.JvmDecoder)
+      Multimodal.audioSamples(s, media)
         .toDF()
         .repartition(1) // see q24: empty-safe single part file
         .write.mode("overwrite").parquet(path)
-      Multimodal.audioFrameFeatures(s, media, frameLen = 32,
-          decoder = graft.operators.Codecs.JvmDecoder)
+      Multimodal.audioFrameFeatures(s, media, frameLen = 32)
         .toDF()
         .select(col("media_id"), col("frame_idx"), col("frame_len"),
           col("zero_crossings"), col("energy"),
@@ -317,8 +311,7 @@ object MultimodalQueries {
     (s, dir) => {
       val path = Landed.land("q289_audio_dedup_clusters", dir)
       Multimodal.audioFingerprints(
-          s, Multimodal.encodedMediaFromDocuments(s, Tables.documents(s, dir)),
-          decoder = graft.operators.Codecs.JvmDecoder)
+          s, Multimodal.encodedMediaFromDocuments(s, Tables.documents(s, dir)))
         .toDF()
         .repartition(1) // see q24: empty-safe single part file
         .write.mode("overwrite").parquet(path)
@@ -377,8 +370,7 @@ object MultimodalQueries {
           s, Multimodal.encodedMediaFromDocuments(
             // doc_id mod 3 == 2 is the PPM-stream ("video") lane by
             // construction — only clips are decoded or landed
-            s, Tables.documents(s, dir).filter(col("doc_id") % 3 === 2)),
-          decoder = graft.operators.Codecs.JvmDecoder)
+            s, Tables.documents(s, dir).filter(col("doc_id") % 3 === 2)))
         .toDF()
         .repartition(1) // see q24: empty-safe single part file
         .write.mode("overwrite").parquet(path)

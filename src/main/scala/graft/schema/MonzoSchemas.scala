@@ -55,51 +55,6 @@ object MonzoSchemas {
       StructField("foursquare_id", StringType),
       StructField("website", StringType))))))
 
-  /** bronze_transactions: 31 flat data columns + date_retrieved audit stamp
-    * (create_bronze_layer.sql:1-35; column list load.py:60-93).
-    */
-  val bronzeTransactions: StructType = StructType(Seq(
-    StructField("id", StringType, nullable = false),
-    StructField("description", StringType),
-    StructField("amount", LongType),
-    StructField("currency", StringType),
-    StructField("created", TimestampType),
-    StructField("category", StringType),
-    StructField("notes", StringType),
-    StructField("is_load", BooleanType),
-    StructField("settled", TimestampType),
-    StructField("local_amount", LongType),
-    StructField("local_currency", StringType),
-    StructField("counterparty_name", StringType),
-    StructField("counterparty_account_num", LongType),
-    StructField("counterparty_sort_code", LongType),
-    StructField("merchant_id", StringType),
-    StructField("merchant_name", StringType),
-    StructField("merchant_category", StringType),
-    StructField("merchant_logo", StringType),
-    StructField("merchant_emoji", StringType),
-    StructField("merchant_online", BooleanType),
-    StructField("merchant_atm", BooleanType),
-    StructField("merchant_address", StringType),
-    StructField("merchant_city", StringType),
-    StructField("merchant_postcode", StringType),
-    StructField("merchant_country", StringType),
-    StructField("merchant_latitude", DoubleType),
-    StructField("merchant_longitude", DoubleType),
-    StructField("merchant_google_places_id", StringType),
-    StructField("merchant_suggested_tags", StringType),
-    StructField("merchant_foursquare_id", StringType),
-    StructField("merchant_website", StringType),
-    StructField("date_retrieved", TimestampType)))
-
-  /** bronze_balance snapshot row (create_bronze_layer.sql:37-43). */
-  val bronzeBalance: StructType = StructType(Seq(
-    StructField("balance", LongType),
-    StructField("total_balance", LongType),
-    StructField("currency", StringType),
-    StructField("spend_today", LongType),
-    StructField("date_retrieved", TimestampType)))
-
   /** bronze_pots snapshot row (create_bronze_layer.sql:45-65; field list
     * load.py:176-218).
     */

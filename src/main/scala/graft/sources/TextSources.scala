@@ -41,27 +41,12 @@ object TextSources {
     * structurally-valid-but-type-bad lines — measured in
     * JsonlSourceSpec's DROPMALFORMED case). Counting clean lines costs a
     * full parse: insert
-    * an explicit materialization barrier first (lazy `localCheckpoint`,
-    * as [[readJsonlCorrupt]] does) or count a data column.
+    * an explicit materialization barrier first (a lazy `localCheckpoint`)
+    * or count a data column.
     */
   def readJsonlClean(spark: SparkSession, path: String, schema: StructType): DataFrame =
     readJsonl(spark, path, schema).filter(org.apache.spark.sql.functions.col(CorruptCol).isNull)
       .drop(CorruptCol)
-
-  /** The quarantine view: raw text of every line that failed the schema.
-    * Spark disallows querying ONLY the corrupt column off a raw scan
-    * (QUERY_ONLY_CORRUPT_RECORD_COLUMN — column pruning would leave the
-    * parser nothing to fail on); the documented recipe is to materialize
-    * the parsed frame first. A LAZY localCheckpoint is that boundary
-    * without a session-lifetime cache entry: blocks are computed on first
-    * use and freed by the ContextCleaner when the frame is unreferenced.
-    * A job splitting one parse into clean + quarantine sinks should
-    * instead persist [[readJsonl]]'s result once and filter it twice.
-    */
-  def readJsonlCorrupt(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    readJsonl(spark, path, schema).localCheckpoint(eager = false)
-      .filter(org.apache.spark.sql.functions.col(CorruptCol).isNotNull)
-      .select(CorruptCol)
 
   /** Write a frame as JSONL (one object per line, one file per partition —
     * the layout every downstream tokenizer/loader consumes).

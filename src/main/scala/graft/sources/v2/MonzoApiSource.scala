@@ -25,10 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * filtering after the fetch.
   *
   * FETCH IS STUBBED: no network in this environment, so partitions
-  * synthesize deterministic rows (same pattern as Multimodal.FakeDecoder);
-  * the DSv2 plumbing — schema, partition planning, pushdown, reader
-  * lifecycle — is real. Swap [[SyntheticFetcher]] for an HTTP client to go
-  * live.
+  * synthesize deterministic rows; the DSv2 plumbing — schema, partition
+  * planning, pushdown, reader lifecycle — is real. Swap
+  * [[SyntheticFetcher]] for an HTTP client to go live.
   *
   * Usage:
   * {{{

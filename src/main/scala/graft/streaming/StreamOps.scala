@@ -83,19 +83,6 @@ object StreamOps {
     dir.toString
   }
 
-  /** Watermarked tumbling 1-hour aggregate per event_type (streaming form
-    * of q25). Late data beyond 1 hour is dropped; closed windows finalize.
-    */
-  def tumblingAgg(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        Exact.sumD(col("value")).as("sum_value"))
-      .select(col("window.start").as("ws"), col("event_type"),
-        col("n_events"), col("sum_value"))
-
   /** Watermarked session windows per user, 30-minute gap (streaming form of
     * q27; Spark merges/extends open sessions incrementally in state).
     */
@@ -151,7 +138,7 @@ object StreamOps {
       col("user_id").cast("long").as("user_id"),
       col("ts").cast("timestamp").as("ts"),
       col("value").cast("double").as("value"))
-    val head = data.agg(max(col("ts")), count(lit(1))).head
+    val head = data.agg(max(col("ts")), count(lit(1))).head()
     require(!head.isNullAt(0),
       "sessionAggAppend: events frame is empty or ts is all-null — no max " +
         "event time to stamp the drain sentinel with")
@@ -175,17 +162,6 @@ object StreamOps {
       .filter(col("user_id") =!= sentinelUser)
   }
 
-  /** Stage each frame as one parquet file in `scratchDir/staged`, with
-    * modification times pinned 60 s apart in sequence order — the file
-    * source orders batches by modification time, so under
-    * `maxFilesPerTrigger = 1` each frame becomes its own micro-batch in
-    * the given order (a sentinel can never land in, or before, the data
-    * batch). Returns the staged directory.
-    */
-  private def stageOrdered(scratchDir: String,
-      batches: Seq[(DataFrame, String)]): String =
-    stageOrderedParts(scratchDir, batches.map { case (df, n) => (df, n, 1) })._1
-
   /** Part-file count for staging a drain's data batch: one per million
     * rows, capped at 16 — the gate corpora (≤ 1 M events) keep the
     * single-file legacy layout (and its bit-identical drain), while a
@@ -205,9 +181,11 @@ object StreamOps {
     */
   def statePartitionsFor(nRows: Long): Int = if (nRows >= 2000000L) 32 else 8
 
-  /** [[stageOrdered]] generalized to multi-part frames: frame k lands as
-    * `parts_k` parquet files sharing one pinned modification time, 60 s
-    * after frame k−1's. A drain sets `maxFilesPerTrigger` to the FIRST
+  /** Stage frames under `scratchDir/staged` in sequence order: frame k
+    * lands as `parts_k` parquet files sharing one pinned modification
+    * time, 60 s after frame k−1's — the file source orders batches by
+    * modification time, so a sentinel can never land in, or before, the
+    * data batch. A drain sets `maxFilesPerTrigger` to the FIRST
     * frame's part count so the whole data frame is one micro-batch and
     * each later (single-part) frame its own — which is why every frame
     * after the first must stage as exactly one part unless everything is
@@ -361,37 +339,6 @@ object StreamOps {
       }
   }
 
-  final case class TypeDistinct(event_type: String, est_distinct_users: Long)
-
-  /** Streaming approximate distinct users per event type: the mergeable
-    * HLL register array ([[graft.functions.HllAgg]]) IS the group state —
-    * 2^p bytes per key forever, no per-user state growth — and the sketch
-    * is deterministic, so the running estimate after draining a stream
-    * equals the batch aggregate over the same rows exactly (asserted in
-    * StreamingSpec). The per-row hash is the same seed-42 xxhash64 the
-    * batch column form applies.
-    */
-  def streamingDistinctUsers(spark: SparkSession, events: DataFrame,
-      p: Int = 12): Dataset[TypeDistinct] = {
-    import spark.implicits._
-    import graft.functions.HllAgg
-    events
-      .select(col("event_type").as[String], col("user_id").as[Long])
-      .groupByKey(_._1)
-      .mapGroupsWithState[Array[Byte], TypeDistinct](GroupStateTimeout.NoTimeout) {
-        case (tpe, rows, state: GroupState[Array[Byte]]) =>
-          val agg = new HllAgg.HllAggregator(p)
-          val buf = state.getOption.map(HllAgg.Buf(_)).getOrElse(agg.zero)
-          rows.foreach { case (_, uid) =>
-            agg.reduce(buf,
-              org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
-                uid, org.apache.spark.sql.types.LongType, 42L))
-          }
-          state.update(buf.regs)
-          TypeDistinct(tpe, agg.finish(buf))
-      }
-  }
-
   /** Stream-stream interval join: purchases matched to the same user's
     * clicks from the preceding hour. Both sides are watermarked and the
     * join condition bounds event-time distance, so each side's join state
@@ -467,7 +414,7 @@ object StreamOps {
       col("user_id").cast("long").as("user_id"),
       col("event_type").cast("string").as("event_type"),
       col("ts").cast("timestamp").as("ts"))
-    val head = data.agg(max(col("ts")), count(lit(1))).head
+    val head = data.agg(max(col("ts")), count(lit(1))).head()
     require(!head.isNullAt(0),
       "clickPurchaseOuterDrain: events frame is empty or ts is all-null — " +
         "no max event time to stamp the drain sentinels with")

@@ -35,11 +35,4 @@ object DedupProps extends Properties("Dedup") {
       val want = rows.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
       got == want
     }
-
-  property("exact dedup keeps one row per key set") =
-    Prop.forAll(rowsGen) { rows =>
-      import spark.implicits._
-      val df = rows.toDF("id", "amount")
-      Dedup.exact(df, Seq("id")).count() == rows.map(_._1).distinct.size.toLong
-    }
 }

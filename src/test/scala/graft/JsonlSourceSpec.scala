@@ -39,11 +39,6 @@ class JsonlSourceSpec extends SparkSpec {
       .option("mode", "DROPMALFORMED").json(dir).count()
     assert(dropMalformedCount === 3L,
       s"DROPMALFORMED pruned count was $dropMalformedCount (documented miscount)")
-    val corrupt = TextSources.readJsonlCorrupt(spark, dir, schema)
-      .collect().map(_.getString(0)).sorted
-    assert(corrupt.length === 2)
-    assert(corrupt.contains("this is not json at all"))
-    assert(corrupt.exists(_.contains("not-a-number")), "type-mismatched line quarantined raw")
     // PERMISSIVE keeps PARTIAL results on type-bad rows: 'text' is still
     // populated alongside _corrupt_record — corrupt-row detection must
     // test the corrupt column, never a data-column null

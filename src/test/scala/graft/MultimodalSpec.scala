@@ -9,18 +9,24 @@ import org.apache.spark.sql.functions._
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
 
-  private def media = Multimodal.mediaFromDocuments(
-    Seq((1L, "abc"), (2L, "abcd"), (3L, "abcde"), (4L, "x" * 100))
+  // one item per container lane of encodedMediaFromDocuments (doc_id mod 3):
+  // WAV (1, 4), a 3-frame PPM stream (2), BMP (3)
+  private def media = Multimodal.encodedMediaFromDocuments(spark,
+    Seq((1L, "abc"), (2L, "abcdef"), (3L, "abcde"), (4L, "x" * 100))
       .toDF("doc_id", "text"))
 
   test("withMeta derives format/geometry from bytes deterministically") {
     val meta = Multimodal.withMeta(spark, media).collect().map(m => m.media_id -> m).toMap
-    assert(meta(1L).format === "img")     // 3 bytes % 3 == 0
-    assert(meta(2L).format === "audio")   // 4 % 3 == 1
-    assert(meta(3L).format === "video")   // 5 % 3 == 2
-    assert(meta(1L).byte_len === 3L)
-    assert(meta(1L).width === 4 + 3 % 5 && meta(1L).height === 4 + 3 % 3)
-    assert(meta(3L).n_frames === 8 && meta(1L).n_frames === 1)
+    assert(Multimodal.withMeta(spark, media.repartition(3)).collect()
+      .map(m => m.media_id -> m).toMap === meta)
+    assert(meta(1L).format === "wav" && meta(4L).format === "wav")
+    assert(meta(2L).format === "ppm" && meta(3L).format === "bmp")
+    // BMP: 54-byte header + 4-byte-aligned rows of 3·w bytes
+    assert(meta(3L).byte_len === 54L + (3 * 4 + 3) / 4 * 4 * 6)
+    assert(meta(3L).width === 4 + 5 % 5 && meta(3L).height === 4 + 5 % 3)
+    assert(meta(2L).width === 4 + 6 % 5 && meta(2L).height === 4 + 6 % 3)
+    assert(meta(1L).width === 16 + 3 % 100 && meta(1L).height === 1)
+    assert(meta(2L).n_frames === 1 + 6 % 4 && meta(3L).n_frames === 1)
   }
 
   test("extractFeatures: fixed dim, L2-normalized, run-to-run identical") {
@@ -29,18 +35,12 @@ class MultimodalSpec extends SparkSpec {
     val b = Multimodal.extractFeatures(spark, media, dim = 16).collect()
       .map(f => f.media_id -> f.embedding.toSeq).toMap
     assert(a === b)
+    assert(a.size === 4)
     a.values.foreach { e =>
       assert(e.length === 16)
       val n = math.sqrt(e.map(v => v.toDouble * v).sum)
       assert(math.abs(n - 1.0) < 1e-5)
     }
-  }
-
-  test("sampleFrames strides video frames, passes single-frame media through") {
-    val frames = Multimodal.sampleFrames(spark, media, stride = 2).collect()
-      .groupBy(_.media_id).view.mapValues(_.map(_.frame_idx).sorted.toSeq).toMap
-    assert(frames(3L) === Seq(0, 2, 4, 6)) // video: 8 frames, stride 2
-    assert(frames(1L) === Seq(0))          // img: 1 frame
   }
 
   test("decode path preserves partitioning (no shuffle in mapPartitions)") {
@@ -75,17 +75,20 @@ class MultimodalSpec extends SparkSpec {
     assert(d.frames(0)(20) === (0 + 32768).toFloat / 65535f)
   }
 
+  // The decoder's named MediaDecodeException is the error lane: a bad blob
+  // fails with a message that says what is wrong, never with an NPE, a
+  // NumberFormatException or a wrapped array size.
+  private def assertDecodeFails(bytes: Array[Byte], msg: String): Unit = {
+    val e = intercept[Codecs.MediaDecodeException](Codecs.JvmDecoder.decode(bytes))
+    assert(e.getMessage.contains(msg), s"want '$msg' in: ${e.getMessage}")
+  }
+
   test("withMetaQuarantine: malformed blobs land in the error lane, good rows decode") {
     val good = Codecs.encodeBmp(4, 4, Array.fill(4 * 4 * 3)(1.toByte))
-    val truncated = good.take(30) // valid magic, truncated header
-    val garbage = Array[Byte](0x00, 0x01, 0x02, 0x03)
-    val df = Seq((1L, good), (2L, truncated), (3L, garbage)).toDF("media_id", "payload")
-    val rows = Multimodal.withMetaQuarantine(spark, df).collect()
-      .map(r => r.media_id -> r).toMap
-    assert(rows(1L).error.isEmpty && rows(1L).format.contains("bmp")
-      && rows(1L).width.contains(4))
-    assert(rows(2L).error.exists(_.contains("truncated")) && rows(2L).format.isEmpty)
-    assert(rows(3L).error.exists(_.contains("unrecognized")))
+    val d = Codecs.JvmDecoder.decode(good)
+    assert(d.width === 4 && d.height === 4 && d.frames.length === 1)
+    assertDecodeFails(good.take(30), "truncated") // valid magic, truncated header
+    assertDecodeFails(Array[Byte](0x00, 0x01, 0x02, 0x03), "unrecognized")
   }
 
   test("crafted headers with overflow-scale dims quarantine instead of crashing") {
@@ -93,31 +96,41 @@ class MultimodalSpec extends SparkSpec {
     // token (would throw NumberFormatException pre-hardening) and one
     // whose fw*fh*3 wraps past the truncation guard
     val bmp = Codecs.encodeBmp(4, 4, Array.fill(4 * 4 * 3)(1.toByte))
-    val buf = java.nio.ByteBuffer.wrap(bmp).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    buf.putInt(18, 715827883) // w: rowSize arithmetic would wrap in Int
+    java.nio.ByteBuffer.wrap(bmp).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(18, 715827883) // w: rowSize arithmetic would wrap in Int
     val ppmHuge = "P6\n99999999999 4\n255\n".getBytes ++ Array.fill(48)(1.toByte)
     val ppmWrap = "P6\n40000 40000\n255\n".getBytes ++ Array.fill(48)(1.toByte)
     // WAV whose data-chunk length wraps the Int bounds check negative
-    val wav = Codecs.encodeWav(Array.tabulate(4)(_.toShort))
-    val wavWrap = wav.clone()
+    val wavWrap = Codecs.encodeWav(Array.tabulate(4)(_.toShort))
     java.nio.ByteBuffer.wrap(wavWrap).order(java.nio.ByteOrder.LITTLE_ENDIAN)
       .putInt(40, 0x7FFFFFF0) // 'data' chunk len
-    val df = Seq((1L, bmp), (2L, ppmHuge), (3L, ppmWrap), (4L, wavWrap))
-      .toDF("media_id", "payload")
-    val rows = Multimodal.withMetaQuarantine(spark, df).collect()
-      .map(r => r.media_id -> r).toMap
-    assert(rows(1L).error.isDefined && rows(1L).format.isEmpty)
-    assert(rows(2L).error.exists(_.contains("integer too large")))
-    assert(rows(3L).error.exists(_.contains("exceeds")))
-    assert(rows(4L).error.exists(_.contains("truncated chunk")))
+    assertDecodeFails(bmp, "exceeds")
+    assertDecodeFails(ppmHuge, "integer too large")
+    assertDecodeFails(ppmWrap, "exceeds")
+    assertDecodeFails(wavWrap, "truncated chunk")
+  }
+
+  test("withMeta on a corrupt blob fails the job by name: no partial result, no NPE") {
+    val good = Codecs.encodeBmp(4, 4, Array.fill(4 * 4 * 3)(1.toByte))
+    val garbage = Array[Byte](0x00, 0x01, 0x02, 0x03)
+    val df = Seq((1L, good), (2L, garbage)).toDF("media_id", "payload")
+    val e = intercept[org.apache.spark.SparkException] {
+      Multimodal.withMeta(spark, df).collect()
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[Codecs.MediaDecodeException] &&
+      c.getMessage.contains("unrecognized")), s"no named decode error in: $e")
+    assert(!causes.exists(_.isInstanceOf[NullPointerException]))
   }
 
   test("encodedMediaFromDocuments: real containers parse under JvmDecoder, per doc_id mod 3") {
     val docs = Seq((0L, "abc"), (1L, "abcd"), (2L, "abcde"), (3L, ""), (4L, "y"), (5L, "zz"))
       .toDF("doc_id", "text")
     val enc = Multimodal.encodedMediaFromDocuments(spark, docs)
-    val meta = Multimodal.withMeta(spark, enc, decoder = Codecs.JvmDecoder)
+    // a payload that failed to decode would fail this job
+    val meta = Multimodal.withMeta(spark, enc)
       .collect().map(m => m.media_id -> m).toMap
+    assert(meta.size === 6)
     assert(meta(0L).format === "bmp" && meta(3L).format === "bmp")
     assert(meta(1L).format === "wav" && meta(4L).format === "wav")
     assert(meta(2L).format === "ppm" && meta(5L).format === "ppm")
@@ -125,9 +138,6 @@ class MultimodalSpec extends SparkSpec {
     assert(meta(0L).width === 4 + 3 % 5 && meta(0L).height === 4 + 3 % 3)
     assert(meta(1L).width === 16 + 4 % 100 && meta(1L).height === 1)
     assert(meta(2L).n_frames === 1 + 5 % 4)
-    // every payload decodes cleanly — zero quarantine rows
-    assert(Multimodal.withMetaQuarantine(spark, enc)
-      .filter(_.error.isDefined).count() === 0)
   }
 
   test("sampleAndResize: stride keeps every 2nd frame, nearest-neighbor grid exact") {

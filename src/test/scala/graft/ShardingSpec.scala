@@ -52,21 +52,6 @@ class ShardingSpec extends SparkSpec {
     half.foreach { case (id, s) => assert(full(id) === s, s"doc $id changed split") }
   }
 
-  test("writeShards: one directory per shard, rows in shard_pos order inside") {
-    val dir = graft.queries.Scratch.tempDir("graft_shards")
-    Sharding.writeShards(sharded(), dir)
-    val shardDirs = new java.io.File(dir).listFiles().filter(_.getName.startsWith("shard_id="))
-    assert(shardDirs.length === 8)
-    val back = spark.read.parquet(dir)
-    assert(back.count() === sharded().count())
-    // within-file order: read one shard's files directly and check
-    // shard_pos is nondecreasing in file order (sortWithinPartitions wrote
-    // each shard sorted; parquet preserves row order per file)
-    val one = spark.read.parquet(dir + "/shard_id=0")
-    val pos = one.select("shard_pos").collect().map(_.getLong(0))
-    assert(pos.length > 0 && pos.zip(pos.tail).forall { case (a, b) => a <= b })
-  }
-
   test("prefixSumBy: composite key breaks ties deterministically (matches serial scan)") {
     // duplicate primary keys, unique tiebreaker
     val df = Seq((1L, 10L, 1L), (1L, 11L, 2L), (0L, 12L, 3L), (2L, 13L, 4L))
