@@ -55,8 +55,7 @@ object Betweenness {
 
   def run(
       edges: DataFrame, srcCol: String, dstCol: String, sources: Seq[Long],
-      maxLevels: Int = 8, undirected: Boolean = true,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxLevels: Int = 8, undirected: Boolean = true): DataFrame = {
     require(sources.nonEmpty, "need at least one source")
     require(maxLevels >= 1, s"maxLevels must be >= 1, got $maxLevels")
     val spark = edges.sparkSession
@@ -73,13 +72,12 @@ object Betweenness {
       val both =
         if (undirected) dir0.union(dir0.select(col("d").as("s"), col("s").as("d")))
         else dir0
-      Components.cut(both.filter(col("s") =!= col("d")).distinct(), checkpointDir)
+      Components.cut(both.filter(col("s") =!= col("d")).distinct())
     }
 
     // forward: levels(k) = (src, node, sigma) settled at distance k
     val lvl0 = Components.cut(
-      sources.toDF("src").select(col("src"), col("src").as("node"), lit(1L).as("sigma")),
-      checkpointDir)
+      sources.toDF("src").select(col("src"), col("src").as("node"), lit(1L).as("sigma")))
     var levels = Vector(lvl0)
     var settled = lvl0
     var frontierSize = 1L
@@ -89,11 +87,11 @@ object Betweenness {
         .select(col("src"), col("d").as("node"), col("sigma"))
         .groupBy("src", "node").agg(sum("sigma").as("sigma"))
         .join(settled.select("src", "node"), Seq("src", "node"), "left_anti")
-      val (nxtCut, n) = Components.cutCounted(nxt, checkpointDir)
+      val (nxtCut, n) = Components.cutCounted(nxt)
       frontierSize = n
       if (n > 0) {
         levels = levels :+ nxtCut
-        settled = Components.cut(settled.unionByName(nxtCut), checkpointDir)
+        settled = Components.cut(settled.unionByName(nxtCut))
       }
       k += 1
     }
@@ -113,7 +111,7 @@ object Betweenness {
           round(col("sigma").cast("double") / col("wsig").cast("double")
             * (lit(1.0) + col("wdelta").cast("double")), 15).cast(Dec15).as("c"))
         .groupBy("src", "node").agg(sum(col("c")).cast(Dec15).as("delta"))
-      val deltaJC = Components.cut(deltaJ, checkpointDir)
+      val deltaJC = Components.cut(deltaJ)
       bcParts = deltaJC :: bcParts
       deltaNext = deltaJC
     }

@@ -15,10 +15,10 @@ import org.apache.spark.sql.functions._
   * Scale shape: per round ONE join (frontier ⋈ edges; the frontier is the
   * small side and AQE broadcasts it while it fits) + one distinct + one
   * anti-join against the visited set (shuffle on node). Every round's
-  * frontier is cut through [[Components.cut]] (reliable under
-  * `checkpointDir`), so the plan tree never accretes across rounds; the
-  * visited set is a lazy union of ALREADY-MATERIALIZED per-round frames,
-  * which keeps each round's write O(frontier), not O(visited).
+  * frontier is cut through [[Components.cut]], so the plan tree never
+  * accretes across rounds; the visited set is a lazy union of
+  * ALREADY-MATERIALIZED per-round frames, which keeps each round's write
+  * O(frontier), not O(visited).
   *
   * `maxHops` is a safety contract, not a tuning knob: nodes farther than
   * `maxHops` from the source are reported as unreachable (use diameter
@@ -39,8 +39,7 @@ object Bfs {
     */
   def run(
       edges: DataFrame, srcCol: String, dstCol: String, source: Long,
-      maxHops: Int = 64, undirected: Boolean = true,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxHops: Int = 64, undirected: Boolean = true): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
     val spark = edges.sparkSession
     val e0 = edges.select(
@@ -81,8 +80,7 @@ object Bfs {
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val seed = Components.cut(
-      spark.createDataFrame(Seq(Tuple2(source, 0L))).toDF("node", "hop"),
-      checkpointDir)
+      spark.createDataFrame(Seq(Tuple2(source, 0L))).toDF("node", "hop"))
     var visited = seed // lazy union of cut frames — each already materialized
     var frontier = seed
     var hop = 0L
@@ -95,8 +93,7 @@ object Bfs {
         frontier.join(adj, frontier("node") === adj("s"))
           .select(col("d").as("node")).distinct()
           .join(visited, Seq("node"), "left_anti")
-          .withColumn("hop", lit(hop)),
-        checkpointDir)
+          .withColumn("hop", lit(hop)))
       if (n == 0) expanding = false
       else {
         visited = visited.unionByName(next)

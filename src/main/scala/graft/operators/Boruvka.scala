@@ -59,7 +59,7 @@ object Boruvka {
     // and nothing else, re-reads it (without the cut, each of the ~6
     // consumers per round would replay the caller's edge derivation).
     // Its count doubles as the routing probe — no extra job.
-    val (e, nE) = Components.cutCounted(edges.select("a", "b", "w"), None)
+    val (e, nE) = Components.cutCounted(edges.select("a", "b", "w"))
     val integralIds = {
       import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, DoubleType}
       Seq("a", "b").forall(c => Seq(ByteType, ShortType, IntegerType, LongType)
@@ -92,7 +92,7 @@ object Boruvka {
     var eR = Components.cut(
       e.select(col("w"), col("a"), col("b"),
         col("a").as("ca"), col("b").as("cb"))
-        .filter(col("ca") =!= col("cb")), None)
+        .filter(col("ca") =!= col("cb")))
     val censuses = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (r <- 1 to rounds) {
       val cand = eR.select(col("ca").as("c"), col("w"), col("a"), col("b"),
@@ -107,7 +107,7 @@ object Boruvka {
           Window.partitionBy("c").orderBy(col("w"), col("a"), col("b"))))
         .filter(col("rn") === 1)
         .select("w", "a", "b", "ca", "cb")
-        .distinct(), None)
+        .distinct())
       // contract along the selected forest: min-label propagation over the
       // ACTIVE component ids, exactly `jumps` hops (partial contraction is
       // allowed — see scaladoc)
@@ -130,7 +130,7 @@ object Boruvka {
       // materialize the jumps chain ONCE (three consumers: the merge
       // census and both relabel sides); its cut count IS |active|, and
       // the label-image size is one tiny scan of the checkpointed frame
-      val (labCut, nActive) = Components.cutCounted(lab, None)
+      val (labCut, nActive) = Components.cutCounted(lab)
       lab = labCut
       nComp -= nActive -
         lab.agg(countDistinct(col("lab"))).head().getLong(0)
@@ -144,7 +144,7 @@ object Boruvka {
           .select(col("w"), col("a"), col("b"),
             coalesce(col("la"), col("ca")).as("ca"),
             coalesce(col("lb"), col("cb")).as("cb"))
-          .filter(col("ca") =!= col("cb")), None)
+          .filter(col("ca") =!= col("cb")))
       censuses += sel.agg(
           count(lit(1)).as("n_selected"),
           coalesce(sum(col("w").cast(dec6)), lit(0).cast(dec6)).as("w_sum"))

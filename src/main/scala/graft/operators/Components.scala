@@ -12,44 +12,31 @@ import org.apache.spark.sql.functions._
   * neighbors' labels; converged when nothing changes. Rounds ≤ graph
   * diameter, and near-dup graphs are unions of small dense blobs
   * (diameter ~2-3), so 3-5 rounds close them. Each round is one
-  * join + groupBy shuffle on the edge list; lineage is cut per round so
-  * the plan doesn't grow. By default the cut is `localCheckpoint` (blocks
-  * pinned to executors — fine single-JVM, lost with a dead executor at
-  * cluster scale); pass `checkpointDir` to cut to reliable storage
-  * (HDFS/object store) instead, making every iterative path here
-  * executor-loss-safe. If propagation runs out of rounds, it
+  * join + groupBy shuffle on the edge list; lineage is cut per round with
+  * [[cut]] so the plan doesn't grow. If propagation runs out of rounds, it
   * auto-finishes on [[largeStarSmallStar]] over the label-contracted
   * graph, so callers never receive silently-split clusters.
   */
 object Components {
 
-  /** Cut lineage after an iterative round: reliable `checkpoint` when a
-    * checkpoint dir is given, `localCheckpoint` otherwise.
+  /** The engine's lineage cut: [[cutCounted]] without the count. */
+  private[graft] def cut(df: DataFrame): DataFrame = cutCounted(df)._1
+
+  /** Cut `df`'s lineage with a `localCheckpoint` and return it with its
+    * row count. Iterative operators cut after every round so the plan
+    * doesn't grow; queries cut a frame that downstream plans reference
+    * several times, so each reuse is a block read instead of a recompute.
+    * Unlike `persist`, the blocks are NOT registered in the session
+    * CacheManager — the ContextCleaner frees them once the returned plan
+    * is unreachable, so a lazy result can safely escape its operator.
     *
-    * `setCheckpointDir` is SparkContext-GLOBAL and appends a per-set UUID
-    * subdir, so it is re-issued only when the requested dir changes (not
-    * per cut — that would spray one subdir per iteration, and not never —
-    * that would silently ignore a second caller's different dir, sending
-    * its checkpoints, and any cleanup it does of its own dir, to the
-    * wrong location). Checkpoint files are NOT auto-deleted unless
-    * `spark.cleaner.referenceTracking.cleanCheckpoints` is set; the
-    * caller owns the dir's lifecycle.
-    */
-  private val cutLock = new Object
-  private var lastSetDir: String = null
-
-  private[graft] def cut(df: DataFrame, checkpointDir: Option[String]): DataFrame =
-    cutCounted(df, checkpointDir)._1
-
-  /** [[cut]], also returning the frame's row count. The materializing
-    * action is a `count` on BOTH paths (lazy checkpoint + count, instead
-    * of `eager = true` whose internal count is discarded), so iterative
+    * The checkpoint is lazy and materialized by a `count` (not
+    * `eager = true`, whose internal count is discarded), so iterative
     * operators that terminate on an empty frontier ([[Bfs]], the
     * distributed components loop) get the termination scalar from the
     * materialization job itself — no second `isEmpty` job per round.
     */
-  private[graft] def cutCounted(
-      df: DataFrame, checkpointDir: Option[String]): (DataFrame, Long) = {
+  private[graft] def cutCounted(df: DataFrame): (DataFrame, Long) = {
     // Width control (round-12 measurement, guide §2.2/§2.4): a checkpoint
     // materializes through `.toRdd`, and AQE never re-optimizes THAT final
     // stage — the cut frame keeps the session's pre-coalesce shuffle width
@@ -58,35 +45,14 @@ object Components {
     // Measured on q144 (25-node SCC): 513/1025-task jobs of 0.8-1.6 s each,
     // pure task-scheduling tax. `coalesce` (narrow, no shuffle) caps the
     // materialized width at the session's BASE shuffle partition count —
-    // the same width the AQE-disabled fallback would give every shuffle, so
-    // cluster deployments keep their configured parallelism; only the
-    // never-coalesced 512-wide tail is merged. NOTE: must be
+    // the same width the AQE-disabled fallback would give every shuffle;
+    // only the never-coalesced 512-wide tail is merged. NOTE: must be
     // defaultNumShufflePartitions — numShufflePartitions returns the AQE
     // initialPartitionNum (512) when coalescing is enabled, which would
     // make this cap a no-op.
     val width = df.sparkSession.sessionState.conf.defaultNumShufflePartitions
-    val narrowed = df.coalesce(width)
-    checkpointDir match {
-      case Some(dir) =>
-        // set-dir + checkpoint REGISTRATION are serialized: check-then-act
-        // on the CONTEXT-GLOBAL dir without the lock would let a concurrent
-        // caller's setCheckpointDir land between this caller's set and its
-        // registration (misdirected checkpoints). Registration (lazy
-        // checkpoint) captures the dir, so the expensive materialization
-        // job runs OUTSIDE the lock — concurrent rounds don't serialize.
-        val cp = cutLock.synchronized {
-          val sc = df.sparkSession.sparkContext
-          if (sc.getCheckpointDir.isEmpty || lastSetDir != dir) {
-            sc.setCheckpointDir(dir)
-            lastSetDir = dir
-          }
-          narrowed.checkpoint(eager = false)
-        }
-        (cp, cp.count()) // materialize (the eager semantics), unlocked
-      case None =>
-        val cp = narrowed.localCheckpoint(eager = false)
-        (cp, cp.count()) // first action materializes the marked RDD
-    }
+    val cp = df.coalesce(width).localCheckpoint(eager = false)
+    (cp, cp.count()) // first action materializes the marked RDD
   }
 
   /** (id, cluster_id) for every node appearing in `pairs`, cluster_id =
@@ -100,8 +66,7 @@ object Components {
     */
   def connectedComponents(
       pairs: DataFrame, srcCol: String, dstCol: String,
-      maxIters: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxIters: Int = 20): DataFrame = {
     // scoped persist: the probe AND the chosen path both execute `pairs`
     // (often an expensive near-dup pipeline). Persist before the probe,
     // unpersist after the path has materialized (the driver path holds the
@@ -112,7 +77,7 @@ object Components {
       DriverReplay.probe(cached.select(col(srcCol), col(dstCol)), ReplayBound) match {
         case Some(edges) =>
           driverUnionFind(pairs.sparkSession, edges, pairs.schema(srcCol).dataType)
-        case None => distributedCC(cached, srcCol, dstCol, maxIters, checkpointDir)
+        case None => distributedCC(cached, srcCol, dstCol, maxIters)
       }
     } finally cached.unpersist()
   }
@@ -174,16 +139,15 @@ object Components {
   }
 
   private def distributedCC(
-      pairs: DataFrame, srcCol: String, dstCol: String, maxIters: Int,
-      checkpointDir: Option[String]): DataFrame = {
+      pairs: DataFrame, srcCol: String, dstCol: String, maxIters: Int): DataFrame = {
     // no cast: the algorithm only needs an orderable id type, and casting
     // would silently null non-numeric ids
     val edges = pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val sym = cut(edges
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct(), checkpointDir)
+      .distinct())
     var labels = cut(sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")), checkpointDir)
+      .withColumn("label", col("id")))
     def propagate(ls: DataFrame): DataFrame = {
       val nbrMin = sym
         .join(ls.select(col("id").as("dst"), col("label").as("nbr_label")), "dst")
@@ -204,8 +168,7 @@ object Components {
       val next = cut(propagate(mid)
         .withColumnRenamed("label", "new_label")
         .join(labels, "id")
-        .select(col("id"), col("label").as("old_label"), col("new_label").as("label")),
-        checkpointDir)
+        .select(col("id"), col("label").as("old_label"), col("new_label").as("label")))
       changed = next.filter(col("label") =!= col("old_label")).count()
       mid.unpersist()
       labels = next.select("id", "label")
@@ -230,8 +193,7 @@ object Components {
         .select(col("lsrc"), col("ldst"))
         .filter(col("lsrc") =!= col("ldst"))
         .distinct()
-      val roots = largeStarSmallStar(contracted, "lsrc", "ldst",
-        checkpointDir = checkpointDir)
+      val roots = largeStarSmallStar(contracted, "lsrc", "ldst")
         .select(col("id").as("label"), col("cluster_id").as("root"))
       // labels whose component fully converged have no cross-label edge →
       // absent from `contracted`; their label IS the component min
@@ -260,14 +222,13 @@ object Components {
     */
   def largeStarSmallStar(
       pairs: DataFrame, srcCol: String, dstCol: String,
-      maxIters: Int = 50, checkpointDir: Option[String] = None,
-      strict: Boolean = true): DataFrame = {
+      maxIters: Int = 50, strict: Boolean = true): DataFrame = {
     // canonical (hi, lo) orientation, self-loops dropped
     val (edges0, nEdges0) = cutCounted(pairs
       .select(greatest(col(srcCol), col(dstCol)).as("hi"),
         least(col(srcCol), col(dstCol)).as("lo"))
       .filter(col("hi") =!= col("lo"))
-      .distinct(), checkpointDir)
+      .distinct())
     var edges = edges0
     var iter = 0
     var done = nEdges0 == 0
@@ -292,7 +253,7 @@ object Components {
         .filter(col("a") =!= col("b"))
         .select(greatest(col("a"), col("b")).as("hi"),
           least(col("a"), col("b")).as("lo"))
-        .distinct(), checkpointDir)
+        .distinct())
       done =
         next.except(edges).limit(1).count() == 0 &&
           edges.except(next).limit(1).count() == 0
@@ -317,15 +278,12 @@ object Components {
 
   /** Cluster assignment for near-duplicate documents plus the survivor
     * flag (lowest doc_id in each cluster survives — the cross-document
-    * generalization of [[Dedup.firstWriterWins]]). `checkpointDir`
-    * passes through to [[connectedComponents]]; [[DriverReplay]]'s switch
-    * forces the distributed closure (how q77 proves that path end-to-end
+    * generalization of [[Dedup.firstWriterWins]]). [[DriverReplay]]'s
+    * switch forces the distributed closure (how q77 proves that path end-to-end
     * under the oracle).
     */
-  def neardupClusters(
-      pairs: DataFrame,
-      checkpointDir: Option[String] = None): DataFrame =
-    connectedComponents(pairs, "doc_a", "doc_b", checkpointDir = checkpointDir)
+  def neardupClusters(pairs: DataFrame): DataFrame =
+    connectedComponents(pairs, "doc_a", "doc_b")
       .select(col("id").as("doc_id"), col("cluster_id"),
         (col("id") === col("cluster_id")).as("is_survivor"))
 
@@ -351,15 +309,13 @@ object Components {
     */
   def neardupClustersContracted(
       pairs: DataFrame,
-      checkpointDir: Option[String] = None,
       clique: Column = col("jaccard") === 1.0): DataFrame = {
     // read once: rep aggregate, node census, and cross projection all
     // consume the pair list. `clique` marks the edges that are clique
     // edges BY CONSTRUCTION (J = 1.0 set equality for text pairs,
     // hamming = 0 hash equality for perceptual pairs) — any transitive
     // equality whose expansion emits every member pair qualifies.
-    val p = cut(pairs.select(col("doc_a"), col("doc_b"), clique.as("__clique")),
-      checkpointDir)
+    val p = cut(pairs.select(col("doc_a"), col("doc_b"), clique.as("__clique")))
     val rep = p.filter(col("__clique"))
       .groupBy(col("doc_b").as("doc_id")).agg(min(col("doc_a")).as("rep"))
     val repOf = p.select(col("doc_a").as("doc_id"))
@@ -374,7 +330,7 @@ object Components {
         greatest(col("ra"), col("rb")).as("doc_b"))
       .filter(col("doc_a") =!= col("doc_b"))
       .distinct()
-    val comp = connectedComponents(cross, "doc_a", "doc_b", checkpointDir = checkpointDir)
+    val comp = connectedComponents(cross, "doc_a", "doc_b")
     repOf.join(comp.select(col("id").as("rep"), col("cluster_id")), Seq("rep"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_id"), col("rep")).as("cluster_id"))

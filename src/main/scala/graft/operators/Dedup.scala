@@ -112,7 +112,7 @@ object Dedup {
           when(col("n_tokens") >= w,
             transform(sequence(lit(1), (col("n_tokens") - (w - 1)).cast("int")),
               i => xxhash64(concat_ws("\u0001", slice(col("t"), i, lit(w))))))
-            .otherwise(array().cast("array<bigint>")).as("hs"): _*), None)
+            .otherwise(array().cast("array<bigint>")).as("hs"): _*))
     // (doc_id, p, h): window start p (1-based); empty hs ⇒ no rows
     val grams = per.select(col("doc_id"), posexplode(col("hs")))
       .select(col("doc_id"), (col("pos") + 1).as("p"), col("col").as("h"))

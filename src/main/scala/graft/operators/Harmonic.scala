@@ -101,7 +101,7 @@ object Harmonic {
         sd.select(col(sd.columns.head).as("node")).distinct().join(allNodes, "node")
     }
     var visited = Components.cut(
-      srcs.select(col("node").as("src"), col("node"), lit(0).as("dist")), None)
+      srcs.select(col("node").as("src"), col("node"), lit(0).as("dist")))
     var frontier = visited
     var hop = 0
     var done = false
@@ -112,11 +112,10 @@ object Harmonic {
           frontier.join(nb, "node")
             .select(col("src"), col("nbr").as("node"), lit(hop).as("dist"))
             .distinct()
-            .join(visited.select("src", "node"), Seq("src", "node"), "left_anti"),
-          None)
+            .join(visited.select("src", "node"), Seq("src", "node"), "left_anti"))
         if (n == 0) done = true
         else {
-          visited = Components.cut(visited.unionByName(next), None)
+          visited = Components.cut(visited.unionByName(next))
           frontier = next
         }
       }

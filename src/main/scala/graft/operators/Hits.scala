@@ -20,8 +20,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, StringType, StructFi
   * partition-order free); the L1 norm is the decimal sum of the rounded
   * scores kept in-plan via broadcast crossJoin; lineage is cut every
   * round (the round plan reads the previous scores multiple times — an
-  * uncut tree grows geometrically, see PageRank's note), reliably on the
-  * `checkpointEvery` cadence when `checkpointDir` is given.
+  * uncut tree grows geometrically, see PageRank's note).
   */
 object Hits {
 
@@ -43,9 +42,7 @@ object Hits {
   def run(
       edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: Option[String] = None,
-      iterations: Int = 5,
-      checkpointEvery: Int = 5,
-      checkpointDir: Option[String] = None): DataFrame = {
+      iterations: Int = 5): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
 
     val w = weightCol.map(col(_).cast("double")).getOrElse(lit(1.0))
@@ -73,7 +70,7 @@ object Hits {
     var scores = nodes.select(col("node"),
       round(lit(1.0) / n, 12).as("auth"), round(lit(1.0) / n, 12).as("hub"))
     try {
-      for (i <- 1 to iterations) {
+      for (_ <- 1 to iterations) {
         // authorities from current hubs
         val aRaw = scores.select(col("node"), col("hub"))
           .join(e, col("node") === col("src"))
@@ -102,9 +99,7 @@ object Hits {
           .select(col("node"), coalesce(col("h_raw"), lit(0.0)).as("hub"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val h = l1Normalize(hPre, "hub")
-        scores = Components.cut(
-          a.join(h, "node"),
-          if (i % checkpointEvery == 0 || i == iterations) checkpointDir else None)
+        scores = Components.cut(a.join(h, "node"))
         // the cut's count materialized everything downstream of the caches
         aPre.unpersist()
         hPre.unpersist()

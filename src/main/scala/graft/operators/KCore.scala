@@ -74,7 +74,7 @@ object KCore {
     var live = Components.cut(
       edges.select(col("u").as("node"))
         .unionByName(edges.select(col("v").as("node")))
-        .distinct(), None)
+        .distinct())
     var removed: DataFrame = null
     var round = 0
     var done = false
@@ -87,19 +87,19 @@ object KCore {
         live.join(deg, Seq("node"), "left")
           .select(col("node"), coalesce(col("deg"), lit(0L)).as("deg"))
           .filter(col("deg") < k)
-          .withColumn("peel_round", lit(round)), None)
+          .withColumn("peel_round", lit(round)))
       if (nRemoved == 0) done = true
       else {
         removed =
           if (removed == null) toRemove
           else removed.unionByName(toRemove)
         val rm = toRemove.select("node")
-        live = Components.cut(live.join(rm, Seq("node"), "left_anti"), None)
+        live = Components.cut(live.join(rm, Seq("node"), "left_anti"))
         edges = Components.cut(
           edges
             .join(rm.withColumnRenamed("node", "u"), Seq("u"), "left_anti")
             .join(rm.withColumnRenamed("node", "v"), Seq("v"), "left_anti")
-            .select("u", "v"), None)
+            .select("u", "v"))
       }
     }
     val survivors = live.withColumn("peel_round", lit(0))

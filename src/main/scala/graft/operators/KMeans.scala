@@ -39,21 +39,18 @@ object KMeans {
     * d2 = 12 dp-rounded squared distance to the FINAL centroid.
     */
   def run(
-      vecs: DataFrame, k: Int, iterations: Int, seed: Long,
-      checkpointDir: Option[String] = None): DataFrame = {
+      vecs: DataFrame, k: Int, iterations: Int, seed: Long): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val dot = graft.functions.Similarity.dotExact _
 
     val v = Components.cut(
       vecs.select(col("vec_id"), col("embedding"),
-        round(dot(col("embedding"), col("embedding")), 12).as("xx")),
-      checkpointDir)
+        round(dot(col("embedding"), col("embedding")), 12).as("xx")))
 
     var centroids = Components.cut(
       Sampling.sampleExactN(vecs.select("vec_id", "embedding"), "vec_id", k, seed)
-        .select(col("vec_id").as("cid"), col("embedding").as("ce")),
-      checkpointDir)
+        .select(col("vec_id").as("cid"), col("embedding").as("ce")))
 
     def assign(cs: DataFrame): DataFrame = {
       val withD = v.crossJoin(broadcast(
@@ -83,8 +80,7 @@ object KMeans {
           transform(col("ms"), m => round(m("mean"), 12).cast("float")).as("nce"))
       centroids = Components.cut(
         centroids.join(means, Seq("cid"), "left")
-          .select(col("cid"), coalesce(col("nce"), col("ce")).as("ce")),
-        checkpointDir)
+          .select(col("cid"), coalesce(col("nce"), col("ce")).as("ce")))
     }
     assign(centroids).select(col("vec_id"), col("cluster"), col("d2"))
   }

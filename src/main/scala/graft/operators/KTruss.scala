@@ -88,14 +88,14 @@ object KTruss {
           coalesce(col("support"), lit(0L)).as("support"))
       val (toRemove, nRemoved) = Components.cutCounted(
         withSupport.filter(col("support") < minSupport)
-          .select(col("u"), col("v")).withColumn("peel_round", lit(round)), None)
+          .select(col("u"), col("v")).withColumn("peel_round", lit(round)))
       if (nRemoved == 0) done = true
       else {
         removed =
           if (removed == null) toRemove
           else removed.unionByName(toRemove)
         edges = Components.cut(
-          edges.join(toRemove.select("u", "v"), Seq("u", "v"), "left_anti"), None)
+          edges.join(toRemove.select("u", "v"), Seq("u", "v"), "left_anti"))
       }
     }
     val survivors = edges.withColumn("peel_round", lit(0))

@@ -39,8 +39,7 @@ object Lpa {
     * collapsed).
     */
   def run(
-      edges: DataFrame, srcCol: String, dstCol: String, rounds: Int = 4,
-      checkpointDir: Option[String] = None): DataFrame = {
+      edges: DataFrame, srcCol: String, dstCol: String, rounds: Int = 4): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val e0 = edges.select(
       col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
@@ -70,7 +69,7 @@ object Lpa {
     val nodes = adj.select(col("s").as("node")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    var labels = Components.cut(nodes.withColumn("label", col("node")), checkpointDir)
+    var labels = Components.cut(nodes.withColumn("label", col("node")))
     val byNode = Window.partitionBy("node")
       .orderBy(col("cnt").desc, col("nbr_label").asc)
     for (_ <- 1 to rounds) {
@@ -83,8 +82,7 @@ object Lpa {
       labels = Components.cut(
         labels.join(winner, Seq("node"), "left")
           .select(col("node"),
-            coalesce(col("new_label"), col("label")).as("label")),
-        checkpointDir)
+            coalesce(col("new_label"), col("label")).as("label")))
     }
     adj.unpersist()
     nodes.unpersist()

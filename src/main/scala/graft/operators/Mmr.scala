@@ -93,7 +93,7 @@ object Mmr {
           round(lit(lambda) * col("rel") - lit(1 - lambda) * col("pen"), 12))
         .withColumn("__rk", row_number().over(wM)).filter(col("__rk") === 1)
         .select(col(qCol), col(cCol), col("rel"), col("mmr"), lit(i).as("step"))
-      selected = Components.cut(selected.unionByName(pick), None)
+      selected = Components.cut(selected.unionByName(pick))
     }
     selected.select(col(qCol), col("step"), col(cCol), col("rel"), col("mmr"))
   }

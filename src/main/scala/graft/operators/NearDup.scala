@@ -65,21 +65,6 @@ object NearDup {
       .filter(size(col("shingles")) > 0)
   }
 
-  /** Materialize a DataFrame that downstream plans reference several times,
-    * without a cache leak. Default: `localCheckpoint(eager = true)` stores
-    * the rows in the executors' block manager (MEMORY_AND_DISK) and cuts
-    * lineage, so each reuse is a block read instead of a recompute; unlike
-    * `persist`, the blocks are NOT registered in the session CacheManager —
-    * the ContextCleaner frees them once the returned plan is unreachable,
-    * so a lazy result can safely escape this operator. On a real cluster
-    * with dynamic allocation, local checkpoint blocks die with their
-    * executor — pass `checkpointDir` (threaded through every public
-    * operator here) to cut to reliable storage via [[Components.cut]]
-    * instead, the same knob Components/Packing expose.
-    */
-  private def materialized(df: DataFrame, checkpointDir: Option[String]): DataFrame =
-    Components.cut(df, checkpointDir)
-
   /** Exact n-gram Jaccard near-dup pairs: J(a,b) ≥ threshold, a < b.
     * Inverted-index join: explode shingles, self-join on a 64-bit shingle
     * hash (8-byte shuffle keys instead of ~25-byte strings; a collision
@@ -89,11 +74,10 @@ object NearDup {
     * (skew guard; makes the result approximate).
     */
   def ngramJaccardPairs(
-      docs: DataFrame, n: Int, threshold: Double, maxDocFreq: Long = 0L,
-      checkpointDir: Option[String] = None): DataFrame = {
+      docs: DataFrame, n: Int, threshold: Double, maxDocFreq: Long = 0L): DataFrame = {
     // referenced three times (sizes + both join sides): materialize once —
-    // `materialized` (localCheckpoint) avoids the per-call cache leak that
-    // ruled out persist here, and one shingle pass beats three.
+    // the cut avoids the per-call cache leak that ruled out persist here,
+    // and one shingle pass beats three.
     // `__ck` canonicalizes IDENTICAL shingle sets (exact clones — the
     // dominant duplication mode in scraped corpora): the quadratic
     // inverted-index join runs over one REPRESENTATIVE per set, and pairs
@@ -103,10 +87,9 @@ object NearDup {
     // third document, and 1.0 within the group. (Key collision would
     // need two distinct shingle ARRAYS at the same xxhash64 —
     // P ≈ n_docs²/2⁶⁵, the same risk already accepted per shingle.)
-    val sets = materialized(
+    val sets = Components.cut(
       shingleSets(docs, n, widen = true)
-        .withColumn("__ck", xxhash64(concat_ws("\u0001", col("shingles")))),
-      checkpointDir)
+        .withColumn("__ck", xxhash64(concat_ws("\u0001", col("shingles")))))
     val groups = sets.select("doc_id", "__ck")
     val repIds = groups.groupBy("__ck").agg(min(col("doc_id")).as("doc_id"))
     val repSets = sets.join(repIds, Seq("__ck", "doc_id"))
@@ -180,12 +163,10 @@ object NearDup {
     * pairs are 1.0 both ways by identity).
     */
   def ngramContainmentPairs(
-      docs: DataFrame, n: Int, threshold: Double, maxDocFreq: Long = 0L,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val sets = materialized(
+      docs: DataFrame, n: Int, threshold: Double, maxDocFreq: Long = 0L): DataFrame = {
+    val sets = Components.cut(
       shingleSets(docs, n, widen = true)
-        .withColumn("__ck", xxhash64(concat_ws("\u0001", col("shingles")))),
-      checkpointDir)
+        .withColumn("__ck", xxhash64(concat_ws("\u0001", col("shingles")))))
     val groups = sets.select("doc_id", "__ck")
     val repIds = groups.groupBy("__ck").agg(min(col("doc_id")).as("doc_id"))
     val repSets = sets.join(repIds, Seq("__ck", "doc_id"))
@@ -237,18 +218,17 @@ object NearDup {
 
   def ngramJaccardPairsIncremental(
       corpus: DataFrame, batch: DataFrame, n: Int, threshold: Double,
-      maxDocFreq: Long = 0L,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxDocFreq: Long = 0L): DataFrame = {
     val all = corpus.select(col("doc_id"), col("text"), lit(false).as("is_new"))
       .unionByName(batch.select(col("doc_id"), col("text"), lit(true).as("is_new")))
     // same clone canonicalization as ngramJaccardPairs — a batch of
     // verbatim re-crawls (the COMMON increment in practice) must not pay
     // g clones x df postings each; only DIRTY groups (containing >= 1 new
     // member) drive the index join, one representative per distinct set
-    val sets0 = materialized(
+    val sets0 = Components.cut(
       shingleSets(all.select("doc_id", "text"), n)
         .withColumn("__ck", xxhash64(concat_ws("\u0001", col("shingles"))))
-        .join(all.select("doc_id", "is_new"), "doc_id"), checkpointDir)
+        .join(all.select("doc_id", "is_new"), "doc_id"))
     val groups = sets0.select("doc_id", "__ck", "is_new")
     val repIds = groups.groupBy("__ck").agg(min(col("doc_id")).as("doc_id"))
     val dirty = groups.filter(col("is_new")).select("__ck").distinct()
@@ -313,8 +293,7 @@ object NearDup {
     */
   def minhashLshPairs(
       docs: DataFrame, n: Int, threshold: Double,
-      numPerms: Int = 64, bands: Int = 16,
-      checkpointDir: Option[String] = None): DataFrame = {
+      numPerms: Int = 64, bands: Int = 16): DataFrame = {
     require(numPerms % bands == 0, "bands must divide numPerms")
     val rowsPerBand = numPerms / bands
     // `__ck` canonicalizes IDENTICAL shingle sets (exact clones), the
@@ -324,15 +303,14 @@ object NearDup {
     // exactly afterwards — a group of g clones costs g·pairs instead of
     // g²·bands candidate rows (measured ×9 over linear on a ×100
     // clone-heavy corpus without this).
-    val sets0 = materialized(shingleSets(docs, n, widen = true)
-      .withColumn("__ck", xxhash64(concat_ws("\u0001", col("shingles")))),
-      checkpointDir)
+    val sets0 = Components.cut(shingleSets(docs, n, widen = true)
+      .withColumn("__ck", xxhash64(concat_ws("\u0001", col("shingles")))))
     val repIds = sets0.groupBy("__ck").agg(min(col("doc_id")).as("doc_id"))
     // referenced three times (bucketing + both re-attach joins)
-    val sets = materialized(sets0
+    val sets = Components.cut(sets0
       .join(repIds, Seq("__ck", "doc_id"))
       .withColumn("sig", Sketches.minhashSignature(col("shingles"), numPerms))
-      .filter(col("sig").isNotNull), checkpointDir)
+      .filter(col("sig").isNotNull))
     // members of groups whose rep survived the sig filter (sig is
     // set-determined, so survival is group-uniform by construction)
     val groups = sets0.select("doc_id", "__ck")
@@ -379,8 +357,7 @@ object NearDup {
     * whole-set Jaccard dilutes below any usable threshold.
     */
   def winnowingPairs(
-      docs: DataFrame, k: Int = 16, w: Int = 12, minShared: Int = 5,
-      checkpointDir: Option[String] = None): DataFrame = {
+      docs: DataFrame, k: Int = 16, w: Int = 12, minShared: Int = 5): DataFrame = {
     // materialize the fingerprint pass BEFORE filter + self-join: without
     // the cut, Catalyst substitutes the `size(fps) > 0` filter below the
     // project (evaluating the winnow expression ~3x per row) and the
@@ -394,11 +371,10 @@ object NearDup {
     // n_shared = |fps| bit-for-bit)
     // no widen here: measured 1.59 → 1.99 s at sf0.1 — the winnow pass is
     // cheaper than the text shuffle it would buy (contrast shingleSets)
-    val fps0 = materialized(
+    val fps0 = Components.cut(
       docs.select(col("doc_id"),
         graft.expressions.WinnowExpr.winnowFingerprints(
-          TextFunctions.normalizeText(col("text")), k, w).as("fps")),
-      checkpointDir)
+          TextFunctions.normalizeText(col("text")), k, w).as("fps")))
       .filter(size(col("fps")) > 0)
       .withColumn("__ck", xxhash64(col("fps")))
     val groups = fps0.select(col("doc_id"), col("__ck"), size(col("fps")).as("nfp"))
@@ -437,14 +413,13 @@ object NearDup {
     * intra-group pairs are hamming 0 ≤ every maxHamming. A clone group of
     * g costs g·pairs in the expansion instead of g²·4 block-join rows.
     */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
-      checkpointDir: Option[String] = None): DataFrame =
+  def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame =
     // no widen here: measured 1.08 → 1.84 s at sf0.1 — the simhash pass is
     // cheaper than the text shuffle it would buy (contrast shingleSets)
     hammingPairs64(
       docs.select(col("doc_id"),
         Sketches.simhash(TextFunctions.tokens(col("text"))).as("simhash")),
-      "doc_id", "simhash", maxHamming, checkpointDir)
+      "doc_id", "simhash", maxHamming)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("hamming"))
 
   /** Hamming ≤ `maxHamming` pairs over ANY (id, 64-bit hash) table —
@@ -459,12 +434,12 @@ object NearDup {
     * (dHash over decoded media, q283).
     */
   def hammingPairs64(hashed0: DataFrame, idCol: String, hashCol: String,
-      maxHamming: Int = 3, checkpointDir: Option[String] = None): DataFrame = {
+      maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3, "4x16-bit blocking is only complete for hamming <= 3")
     // referenced three ways (rep derivation + both expansion sides + intra):
     // one hash pass over the corpus, not five
-    val hashed = materialized(
-      hashed0.select(col(idCol).as("__id"), col(hashCol).as("__h")), checkpointDir)
+    val hashed = Components.cut(
+      hashed0.select(col(idCol).as("__id"), col(hashCol).as("__h")))
     val repIds = hashed.groupBy("__h").agg(min(col("__id")).as("__id"))
     val blocks = repIds.select(col("__id"), col("__h"),
       explode(Sketches.simhashBlocks(col("__h"))).as("blk"))
@@ -503,17 +478,15 @@ object NearDup {
     * never builds.
     */
   def hammingDedupClusters(hashed0: DataFrame, idCol: String, hashCol: String,
-      maxHamming: Int = 3,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val hashed = materialized(
-      hashed0.select(col(idCol).as("__id"), col(hashCol).as("__h")), checkpointDir)
+      maxHamming: Int = 3): DataFrame = {
+    val hashed = Components.cut(
+      hashed0.select(col(idCol).as("__id"), col(hashCol).as("__h")))
     val fam = hashed.groupBy("__h").agg(min(col("__id")).as("rep"))
     val repPairs = hammingPairs64(
         fam.select(col("rep").as("id"), col("__h").as("h")), "id", "h",
-        maxHamming, checkpointDir)
+        maxHamming)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-    val comp = Components.connectedComponents(repPairs, "doc_a", "doc_b",
-      checkpointDir = checkpointDir)
+    val comp = Components.connectedComponents(repPairs, "doc_a", "doc_b")
     hashed.join(fam, "__h")
       .join(comp.select(col("id").as("rep"), col("cluster_id")), Seq("rep"), "left")
       .select(col("__id").as("doc_id"),
@@ -536,17 +509,15 @@ object NearDup {
     * operator is domain-agnostic (any exact-match element works —
     * shingle hashes, frame hashes, minhash bands).
     */
-  def setOverlapDedupClusters(items: DataFrame, idCol: String, elemCol: String,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def setOverlapDedupClusters(items: DataFrame, idCol: String, elemCol: String): DataFrame = {
     val sets = items.select(col(idCol).as("__id"), col(elemCol).as("__e")).distinct()
-    val sigs = materialized(
+    val sigs = Components.cut(
       sets.groupBy("__id")
         .agg(sort_array(collect_set(col("__e"))).as("__hs"))
-        .withColumn("__sig", md5(to_json(col("__hs")))), checkpointDir)
-    val fam = materialized(
+        .withColumn("__sig", md5(to_json(col("__hs")))))
+    val fam = Components.cut(
       sigs.groupBy("__sig")
-        .agg(min(col("__id")).as("rep"), first(col("__hs")).as("__hs")),
-      checkpointDir)
+        .agg(min(col("__id")).as("rep"), first(col("__hs")).as("__hs")))
     val repElems = fam.select(col("rep"), size(col("__hs")).as("nf"),
       explode(col("__hs")).as("__e"))
     val shared = repElems.as("a").join(repElems.as("b"),
@@ -557,8 +528,7 @@ object NearDup {
     val repPairs = shared
       .filter(col("shared") * 2 >= least(col("na"), col("nb")))
       .select("doc_a", "doc_b")
-    val comp = Components.connectedComponents(repPairs, "doc_a", "doc_b",
-      checkpointDir = checkpointDir)
+    val comp = Components.connectedComponents(repPairs, "doc_a", "doc_b")
     sigs.join(fam.select(col("__sig"), col("rep")), "__sig")
       .join(comp.select(col("id").as("rep"), col("cluster_id")), Seq("rep"), "left")
       .select(col("__id").as("doc_id"),
@@ -575,17 +545,15 @@ object NearDup {
     * docs have no n-grams (< n tokens) drop out (inner join), matching
     * the shingle-CTE oracle shape.
     */
-  private def pairsWithShingles(docs: DataFrame, pairs: DataFrame, n: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
+  private def pairsWithShingles(docs: DataFrame, pairs: DataFrame, n: Int): DataFrame = {
     val ids = pairs.select(col("doc_a").as("doc_id"))
       .union(pairs.select(col("doc_b").as("doc_id")))
       .distinct()
     // no broadcast hint: AQE picks broadcast while the pair list is small
     // (the normal case) and falls back to a shuffled semi-join if a
     // pathological candidate list outgrows the threshold
-    val sets = materialized(
-      shingleSets(docs.join(ids, Seq("doc_id"), "left_semi"), n),
-      checkpointDir)
+    val sets = Components.cut(
+      shingleSets(docs.join(ids, Seq("doc_id"), "left_semi"), n))
     pairs
       .join(sets.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a")), "doc_a")
       .join(sets.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b")), "doc_b")
@@ -597,9 +565,8 @@ object NearDup {
     * generates candidates, this computes the exact score a serial engine
     * can hash-compare.
     */
-  def verifyPairsJaccard(docs: DataFrame, pairs: DataFrame, n: Int,
-      checkpointDir: Option[String] = None): DataFrame =
-    pairsWithShingles(docs, pairs, n, checkpointDir)
+  def verifyPairsJaccard(docs: DataFrame, pairs: DataFrame, n: Int): DataFrame =
+    pairsWithShingles(docs, pairs, n)
       .withColumn("jaccard", Sketches.jaccard(col("sh_a"), col("sh_b")))
       .drop("sh_a", "sh_b")
 
@@ -608,9 +575,8 @@ object NearDup {
     * (containment is the score winnowing candidates are judged by, since
     * whole-set Jaccard dilutes a copied paragraph).
     */
-  def verifyPairsContainment(docs: DataFrame, pairs: DataFrame, n: Int,
-      checkpointDir: Option[String] = None): DataFrame =
-    pairsWithShingles(docs, pairs, n, checkpointDir)
+  def verifyPairsContainment(docs: DataFrame, pairs: DataFrame, n: Int): DataFrame =
+    pairsWithShingles(docs, pairs, n)
       .withColumn("containment",
         size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
           / least(size(col("sh_a")), size(col("sh_b"))).cast("double"))
@@ -715,7 +681,7 @@ object NearDup {
 
   def embeddingNearDupLsh(
       emb: DataFrame, threshold: Double, bits: Int = 4, dim: Int = 64,
-      tables: Int = 8, checkpointDir: Option[String] = None): DataFrame = {
+      tables: Int = 8): DataFrame = {
     // `__ck` canonicalizes on the FULL LSH SIGNATURE (every table's
     // bucket, order-canonical, hashed): vectors in the same cell agree on
     // ALL tables × bits sign bits — exact clones always, perturbed
@@ -736,13 +702,12 @@ object NearDup {
     // Recall for a cross-cell pair now keys on its REPS sharing a bucket
     // (rep angle ≈ pair angle ± cell diameter — cells are signature-tight
     // by construction).
-    val v0 = materialized(withNorm(emb), checkpointDir)
-    val allBuckets = materialized(
-      hyperplaneBuckets(emb, bits, dim, tables), checkpointDir)
-    val groups = materialized(
+    val v0 = Components.cut(withNorm(emb))
+    val allBuckets = Components.cut(
+      hyperplaneBuckets(emb, bits, dim, tables))
+    val groups = Components.cut(
       allBuckets.groupBy("vec_id")
-        .agg(xxhash64(sort_array(collect_list(col("bkt")))).as("__ck")),
-      checkpointDir)
+        .agg(xxhash64(sort_array(collect_list(col("bkt")))).as("__ck")))
     val repIds = groups.groupBy("__ck").agg(min(col("vec_id")).as("vec_id"))
     val repBuckets = allBuckets.join(repIds, Seq("vec_id"))
     // Ball-cover pruning of the rep candidate join (round-11 ×100
@@ -777,11 +742,10 @@ object NearDup {
           Similarity.dotFast(col("embedding"), col("re")),
           col("nrm"), col("rn")))).as("ang"))
       .groupBy("__ck").agg(max(col("ang")).as("radius"))
-    val repGeo = materialized(
+    val repGeo = Components.cut(
       repIds.join(v0, "vec_id").join(radius, "__ck")
         .select(col("vec_id").as("rid"), col("embedding").as("rv"),
-          col("nrm").as("rnrm"), col("radius")),
-      checkpointDir)
+          col("nrm").as("rnrm"), col("radius")))
     // cheap after materialization: a block-stat count, no recompute
     val broadcastGeo = repGeo.count() <= ballCoverBroadcastMaxCells
     val geoSide = (suffix: String) => {
@@ -882,14 +846,12 @@ object NearDup {
     * the knobs hold ≥ `0.95` where geometry allows, see the knob doc).
     */
   def embeddingNearDupPairsAuto(
-      emb: DataFrame, threshold: Double, smallN: Long = 10000L,
-      checkpointDir: Option[String] = None): DataFrame = {
+      emb: DataFrame, threshold: Double, smallN: Long = 10000L): DataFrame = {
     val n = emb.count()
     if (n <= smallN) embeddingNearDupPairs(emb, threshold)
     else {
       val (bits, tables) = scaledPairLshKnobs(n, threshold, smallN)
-      embeddingNearDupLsh(emb, threshold, bits = bits, tables = tables,
-        checkpointDir = checkpointDir)
+      embeddingNearDupLsh(emb, threshold, bits = bits, tables = tables)
     }
   }
 
@@ -959,14 +921,13 @@ object NearDup {
     * tf·ln(D/df) rounded at 12 dp (the q115 scoring fragment).
     */
   def tfidfCosinePairs(
-      docs: DataFrame, threshold: Double, maxDocFreqFrac: Double = 0.15,
-      checkpointDir: Option[String] = None): DataFrame = {
+      docs: DataFrame, threshold: Double, maxDocFreqFrac: Double = 0.15): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val occ = docs.select(col("doc_id"),
       explode(graft.functions.TextFunctions.tokens(col("text"))).as("word"))
     // (doc × word)-sized cut: __ck derivation and the rep projection read it
-    val tf = materialized(
-      occ.groupBy("doc_id", "word").agg(count(lit(1)).as("tf")), checkpointDir)
+    val tf = Components.cut(
+      occ.groupBy("doc_id", "word").agg(count(lit(1)).as("tf")))
     // `__ck` canonicalizes IDENTICAL token MULTISETS (exact clones), the
     // ngramJaccardPairs contraction: tf·idf weights, norms, dots and cosine
     // are all functions of the multiset (df counts members, see below), so
@@ -974,10 +935,10 @@ object NearDup {
     // multiset — a corpus where every doc has g clones costs the g=1 join,
     // not g²·Σdf² (measured ×10 over linear on a ×100 clone-heavy corpus
     // without this). sort_array makes the hash input order-canonical.
-    val ck = materialized(tf
+    val ck = Components.cut(tf
       .groupBy("doc_id")
       .agg(xxhash64(sort_array(collect_list(struct(col("word"), col("tf")))))
-        .as("__ck")), checkpointDir)
+        .as("__ck")))
     val repIds = ck.groupBy("__ck").agg(min(col("doc_id")).as("doc_id"))
     val gsz = ck.groupBy("__ck").agg(count(lit(1)).as("gsz"))
     val dTot = docs.agg(count(lit(1)).as("d_total"))
@@ -990,13 +951,13 @@ object NearDup {
       .filter(col("df") <= ceil(lit(maxDocFreqFrac) * col("d_total")))
       .select("word", "df")
     // read four ways below (norms + self-dots + both join sides) — cut once
-    val wts = materialized(repTf
+    val wts = Components.cut(repTf
       .join(dfreq, "word")
       .crossJoin(broadcast(dTot))
       .select(col("doc_id"), col("word"),
         round(col("tf").cast("double")
           * log(col("d_total").cast("double") / col("df").cast("double")), 12)
-          .as("w")), checkpointDir)
+          .as("w")))
     val norms = wts.groupBy("doc_id")
       .agg(sqrt(sum((col("w") * col("w")).cast(DecimalType(38, 20)))
         .cast("double")).as("nrm"))

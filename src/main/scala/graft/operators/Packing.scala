@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   *
   * [[prefixSum]] is the classic two-phase scan instead:
   *   1. range-repartition on the (unique) order key, so partition i holds
-  *      keys strictly below partition i+1, and pin the layout with an eager
-  *      `localCheckpoint` (at warehouse scale: a reliable checkpoint);
+  *      keys strictly below partition i+1, and pin the layout with
+  *      [[Components.cut]];
   *   2. one tiny job computes per-partition totals (numPartitions rows to
   *      the driver), whose exclusive scan gives each partition's base
   *      offset;
@@ -30,25 +30,17 @@ object Packing {
     * would make the total order, and so the sum, ambiguous).
     */
   def prefixSum(df: DataFrame, orderCol: String, valueCol: String, out: String,
-      numPartitions: Int = 0, checkpointDir: Option[String] = None): DataFrame =
-    prefixSumBy(df, Seq(orderCol), valueCol, out, numPartitions, checkpointDir)
+      numPartitions: Int = 0): DataFrame =
+    prefixSumBy(df, Seq(orderCol), valueCol, out, numPartitions)
 
   /** [[prefixSum]] over a composite order key: ascending lexicographic
     * (orderCols...) order, which must be duplicate-free as a TUPLE — this
     * is how a non-unique primary sort column (a hash, a score) gets a
     * deterministic total order by appending a unique tiebreaker.
-    *
-    * The pinned layout is `localCheckpoint` by default (blocks die with
-    * their executor — and a lost block here loses the partition ids the
-    * whole scan is keyed on, killing the job); pass `checkpointDir` to pin
-    * to reliable storage instead ([[Components.cut]], the same knob the
-    * other iterative operators expose) for cluster runs with preemption
-    * or dynamic allocation.
     */
   def prefixSumBy(df: DataFrame, orderCols: Seq[String], valueCol: String,
-      out: String, numPartitions: Int = 0,
-      checkpointDir: Option[String] = None): DataFrame =
-    prefixSumByWithTotal(df, orderCols, valueCol, out, numPartitions, checkpointDir)._1
+      out: String, numPartitions: Int = 0): DataFrame =
+    prefixSumByWithTotal(df, orderCols, valueCol, out, numPartitions)._1
 
   /** As [[prefixSumBy]], but also returns the grand total of `valueCol` —
     * read off the per-partition counts the scan already collected for its
@@ -59,16 +51,14 @@ object Packing {
     * pass.
     */
   def prefixSumByWithTotal(df: DataFrame, orderCols: Seq[String], valueCol: String,
-      out: String, numPartitions: Int = 0,
-      checkpointDir: Option[String] = None): (DataFrame, Long) = {
+      out: String, numPartitions: Int = 0): (DataFrame, Long) = {
     require(orderCols.nonEmpty, "prefixSumBy needs at least one order column")
     val n = if (numPartitions > 0) numPartitions
       else df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val parted = Components.cut(df
       .repartitionByRange(n, orderCols.map(col): _*)
       .sortWithinPartitions(orderCols.head, orderCols.tail: _*)
-      .withColumn("__pid", spark_partition_id()),
-      checkpointDir) // pin partition ids + cut lineage (scoped, eager)
+      .withColumn("__pid", spark_partition_id())) // pin partition ids + cut lineage
     val totals = parted.groupBy("__pid").agg(sum(col(valueCol).cast("long")).as("t"))
       // an all-NULL partition sums to NULL — treat as 0, matching the
       // window sum below which skips nulls
@@ -96,9 +86,9 @@ object Packing {
     * sequential, so it does not distribute).
     */
   def packBins(df: DataFrame, orderCol: String, tokenCol: String,
-      capacity: Long, checkpointDir: Option[String] = None): DataFrame = {
+      capacity: Long): DataFrame = {
     require(capacity > 0, s"capacity must be positive, got $capacity")
-    prefixSum(df, orderCol, tokenCol, "offset", checkpointDir = checkpointDir)
+    prefixSum(df, orderCol, tokenCol, "offset")
       .withColumn("bin_id", expr(s"offset div ${capacity}L")) // integral div (`/` would widen to double)
       .withColumn("bin_pos", col("offset") % capacity)
   }

@@ -24,10 +24,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, StringType, StructFi
   *    iterations reuse the cached normalized edge list.
   *  - Lineage is cut through [[Components.cut]] EVERY round (the round
   *    plan reads the previous ranks three times, so an uncut plan tree
-  *    grows 3^k and the driver, not the data, becomes the bottleneck);
-  *    on the `checkpointEvery` cadence the cut is a reliable
-  *    `checkpoint` when `checkpointDir` is given — the executor-loss
-  *    recovery knob — and a `localCheckpoint` otherwise.
+  *    grows 3^k and the driver, not the data, becomes the bottleneck).
   *
   * Float determinism (the differential-testing contract, same as
   * q102/q103): every per-edge contribution is one fixed double expression
@@ -64,9 +61,7 @@ object PageRank {
   def run(
       edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: Option[String] = None,
-      iterations: Int = 10, damping: Double = 0.85,
-      checkpointEvery: Int = 5,
-      checkpointDir: Option[String] = None): DataFrame = {
+      iterations: Int = 10, damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
 
@@ -114,12 +109,9 @@ object PageRank {
     // the rank join), so without a cut the round-k LOGICAL PLAN embeds
     // round k−1 three times — 3^k tree growth that OOMs the driver on plan
     // rendering alone (persist doesn't help: caching dedups execution, not
-    // the plan). Every round therefore cuts lineage via [[Components.cut]]
-    // — localCheckpoint normally, a reliable checkpoint on the
-    // `checkpointEvery` cadence when `checkpointDir` is given (the
-    // executor-loss-safety knob, same contract as Components/NearDup).
+    // the plan). Every round therefore cuts lineage via [[Components.cut]].
     try {
-      for (i <- 1 to iterations) {
+      for (_ <- 1 to iterations) {
         // arriving mass per destination: decimal-summed, order-independent
         val contribs = ranks
           .join(norm, "node")
@@ -141,8 +133,7 @@ object PageRank {
             round(lit((1 - damping) / n)
               + lit(damping) * (coalesce(col("contrib"), lit(0.0)) + col("dm") / n),
               12).as("rank"))
-        ranks = Components.cut(next,
-          if (i % checkpointEvery == 0 || i == iterations) checkpointDir else None)
+        ranks = Components.cut(next)
       }
       ranks
     } finally {
@@ -173,9 +164,7 @@ object PageRank {
   def runPersonalized(
       edges: DataFrame, srcCol: String, dstCol: String, seeds: DataFrame,
       weightCol: Option[String] = None,
-      iterations: Int = 10, damping: Double = 0.85,
-      checkpointEvery: Int = 5,
-      checkpointDir: Option[String] = None): DataFrame = {
+      iterations: Int = 10, damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
 
@@ -224,7 +213,7 @@ object PageRank {
 
     var ranks = reset.select(col("node"), round(col("rv"), 12).as("rank"))
     try {
-      for (i <- 1 to iterations) {
+      for (_ <- 1 to iterations) {
         val contribs = ranks
           .join(norm, "node")
           .select(col("dst").as("node"),
@@ -244,8 +233,7 @@ object PageRank {
             round(lit(1 - damping) * col("rv")
               + lit(damping) * (coalesce(col("contrib"), lit(0.0)) + col("dm") * col("rv")),
               12).as("rank"))
-        ranks = Components.cut(next,
-          if (i % checkpointEvery == 0 || i == iterations) checkpointDir else None)
+        ranks = Components.cut(next)
       }
       ranks
     } finally {

@@ -119,12 +119,10 @@ object Sampling {
     * window). The order-key tuple must be duplicate-free (append a unique
     * tiebreaker, exactly like [[Packing.prefixSumBy]] requires).
     */
-  def rankBins(df: DataFrame, orderCols: Seq[String], nBins: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def rankBins(df: DataFrame, orderCols: Seq[String], nBins: Int): DataFrame = {
     require(nBins > 0, s"nBins must be positive, got $nBins")
     val (ranked, total) = Packing.prefixSumByWithTotal(
-      df.withColumn("__one", lit(1L)), orderCols, "__one", "__rank",
-      checkpointDir = checkpointDir)
+      df.withColumn("__one", lit(1L)), orderCols, "__one", "__rank")
     // total comes from the SAME per-partition counts the ranks were built
     // from (prefixSumByWithTotal), so it cannot disagree with max(__rank)+1
     // even on a nondeterministic input — and it saves the independent count
@@ -162,16 +160,14 @@ object Sampling {
     * `idCol` is the usual unique tiebreaker.
     */
   def quantileNormalize(df: DataFrame, strataCol: String, scoreCol: String,
-      idCol: String, checkpointDir: Option[String] = None): DataFrame = {
+      idCol: String): DataFrame = {
     val keyed = df.withColumn("__one", lit(1L))
     val (bySrc, n) = Packing.prefixSumByWithTotal(
-      keyed, Seq(strataCol, scoreCol, idCol), "__one", "__gr",
-      checkpointDir = checkpointDir)
+      keyed, Seq(strataCol, scoreCol, idCol), "__one", "__gr")
     val strata = bySrc.groupBy(strataCol)
       .agg(min(col("__gr")).as("__base"), count(lit(1)).as("__m"))
     val globalRanked = Packing.prefixSumBy(
-      keyed, Seq(scoreCol, idCol), "__one", "__rg",
-      checkpointDir = checkpointDir)
+      keyed, Seq(scoreCol, idCol), "__one", "__rg")
       .select(col("__rg").as("__target"), col(scoreCol).as("calibrated"))
     bySrc
       .join(broadcast(strata), strataCol)

@@ -55,8 +55,7 @@ object Scc {
 
   def run(
       edges: DataFrame, srcCol: String, dstCol: String,
-      maxIters: Int = 64,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxIters: Int = 64): DataFrame = {
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -70,8 +69,7 @@ object Scc {
     // every endpoint starts in one partition (label 0)
     var active = Components.cut(
       e0.select(col("s").as("node")).union(e0.select(col("d").as("node")))
-        .distinct().withColumn("part", lit(0L)),
-      checkpointDir)
+        .distinct().withColumn("part", lit(0L)))
     var result = Seq.empty[(Long, Long)].toDF("node", "scc_id")
     var iter = 0
     var activeCount = -1L
@@ -85,7 +83,7 @@ object Scc {
       */
     def sweep(pivots: DataFrame, ep: DataFrame): DataFrame = {
       var reached = Components.cut(
-        pivots.select(col("pivot").as("node"), col("part_").as("part")), checkpointDir)
+        pivots.select(col("pivot").as("node"), col("part_").as("part")))
       var frontier = reached
       var growing = true
       while (growing) {
@@ -93,8 +91,7 @@ object Scc {
           frontier.join(ep, col("node") === col("es") && col("part") === col("epart"))
             .select(col("ed").as("node"), col("epart").as("part")).distinct()
             .join(reached.select(col("node").as("rn"), col("part").as("rp")),
-              col("node") === col("rn") && col("part") === col("rp"), "left_anti"),
-          checkpointDir)
+              col("node") === col("rn") && col("part") === col("rp"), "left_anti"))
         if (n == 0) growing = false
         else {
           reached = reached.unionByName(next)
@@ -113,8 +110,7 @@ object Scc {
         .join(active.select(col("node").as("s"), col("part")), "s")
         .join(active.select(col("node").as("d"), col("part").as("pd")), "d")
         .filter(col("part") === col("pd"))
-        .select(col("s").as("es"), col("d").as("ed"), col("part").as("epart")),
-        checkpointDir)
+        .select(col("s").as("es"), col("d").as("ed"), col("part").as("epart")))
       if (DriverReplay.admits(spark, ieN, ReplayBound)) {
         // adaptive finish: the live remainder fits the driver bound —
         // edges are already partition-internal, so per-part SCC structure
@@ -137,10 +133,10 @@ object Scc {
       val singles = active
         .join(busyParts.select(col("part").as("bp1")), col("part") === col("bp1"), "left_anti")
         .select(col("node"), col("node").as("scc_id"))
-      result = result.unionByName(Components.cut(singles, checkpointDir))
+      result = result.unionByName(Components.cut(singles))
       val (busy, busyN) = Components.cutCounted(
         active.join(busyParts.select(col("part").as("bp2")), col("part") === col("bp2"))
-          .select("node", "part"), checkpointDir)
+          .select("node", "part"))
       active = busy
       if (busyN == 0L) { activeCount = 0L }
       else {
@@ -148,7 +144,7 @@ object Scc {
       // the active lineage's own `part`
       val pivots = Components.cut(
         active.groupBy("part").agg(min(col("node")).as("pivot"))
-          .select(col("part").as("part_"), col("pivot")), checkpointDir)
+          .select(col("part").as("part_"), col("pivot")))
       val fw = sweep(pivots, ie)
       val bw = sweep(pivots,
         ie.select(col("ed").as("es"), col("es").as("ed"), col("epart")))
@@ -157,7 +153,7 @@ object Scc {
           col("node") === col("bn") && col("part") === col("bp"))
         .join(pivots, col("part") === col("part_"))
         .select(col("node"), col("pivot").as("scc_id"))
-      result = result.unionByName(Components.cut(scc, checkpointDir))
+      result = result.unionByName(Components.cut(scc))
       // remainder classes: FW-only -> 3p+1, BW-only -> 3p+2, neither -> 3p+3
       // keyed by pivot (unique across partitions), so labels never collide
       val classed = active
@@ -171,7 +167,7 @@ object Scc {
           when(col("__f").isNotNull, col("pivot") * 3 + 1)
             .when(col("__b").isNotNull, col("pivot") * 3 + 2)
             .otherwise(col("pivot") * 3 + 3).as("part"))
-      val (nextActive, n) = Components.cutCounted(classed, checkpointDir)
+      val (nextActive, n) = Components.cutCounted(classed)
       active = nextActive
       activeCount = n
       }

@@ -43,8 +43,7 @@ object SetSimJoin {
     * ride 8-byte keys.
     */
   def prefixJaccardJoin(
-      docs: DataFrame, n: Int, threshold: Double,
-      checkpointDir: Option[String] = None): DataFrame = {
+      docs: DataFrame, n: Int, threshold: Double): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     // (doc_id, sorted distinct shingle-hash array) — read by the ordering
@@ -60,8 +59,7 @@ object SetSimJoin {
         .filter(size(col("sh")) > 0)
         .select(col("doc_id"),
           array_sort(transform(col("sh"), s => xxhash64(s))).as("sh"))
-        .withColumn("__ck", xxhash64(col("sh"))),
-      checkpointDir)
+        .withColumn("__ck", xxhash64(col("sh"))))
     val groups = sets0.select(col("doc_id"), col("__ck"), size(col("sh")).as("nsh"))
     val repIds = groups.groupBy("__ck").agg(min(col("doc_id")).as("doc_id"))
     val sets = sets0.join(repIds, Seq("__ck", "doc_id"))
@@ -108,7 +106,7 @@ object SetSimJoin {
           && (least(col("a.m") - col("a.pos"), col("b.m") - col("b.pos")) + 1)
             >= lit(threshold) * (col("a.m") + col("b.m")) / lit(1 + threshold) - eps)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .dropDuplicates("doc_a", "doc_b"), checkpointDir)
+      .dropDuplicates("doc_a", "doc_b"))
     // verify is compute-dense on slim-byte inputs (an array intersect per
     // pair): AQE's byte-based coalescing lands it on 1-2 tasks — spread it
     // at the session's base shuffle width instead (the doc_a exchange is

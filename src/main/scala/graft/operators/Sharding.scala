@@ -64,8 +64,7 @@ object Sharding {
     * `idCol` must be unique and non-negative.
     */
   def shuffleShards(df: DataFrame, idCol: String, nShards: Int, seed: Long,
-      trainPct: Int = 90, valPct: Int = 5,
-      checkpointDir: Option[String] = None): DataFrame = {
+      trainPct: Int = 90, valPct: Int = 5): DataFrame = {
     require(nShards > 0, s"nShards must be positive, got $nShards")
     require(trainPct >= 0 && valPct >= 0 && trainPct + valPct <= 100,
       s"invalid split percentages: train=$trainPct val=$valPct")
@@ -73,8 +72,7 @@ object Sharding {
       .withColumn("__scr", scramble(col(idCol), seed))
       .withColumn("__one", lit(1L))
     val bucket = scramble(col(idCol), seed + 1, mult = 2246822519L) % 100
-    Packing.prefixSumBy(keyed, Seq("__scr", idCol), "__one", "rank",
-        checkpointDir = checkpointDir)
+    Packing.prefixSumBy(keyed, Seq("__scr", idCol), "__one", "rank")
       .withColumn("shard_id", (col("rank") % nShards).cast("int"))
       .withColumn("shard_pos", expr(s"rank div ${nShards}L"))
       .withColumn("split",

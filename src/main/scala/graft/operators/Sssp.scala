@@ -44,8 +44,7 @@ object Sssp {
     */
   def run(
       edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
-      source: Long, rounds: Int = 8, undirected: Boolean = true,
-      checkpointDir: Option[String] = None): DataFrame = {
+      source: Long, rounds: Int = 8, undirected: Boolean = true): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val spark = edges.sparkSession
     val e0 = edges.select(
@@ -91,14 +90,12 @@ object Sssp {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     var dist = Components.cut(
-      spark.createDataFrame(Seq(Tuple2(source, 0.0))).toDF("node", "dist"),
-      checkpointDir)
+      spark.createDataFrame(Seq(Tuple2(source, 0.0))).toDF("node", "dist"))
     for (_ <- 1 to rounds) {
       val relaxed = dist.join(adj, dist("node") === adj("s"))
         .select(col("d").as("node"), (col("dist") + col("w")).as("dist"))
       dist = Components.cut(
-        dist.unionByName(relaxed).groupBy("node").agg(min(col("dist")).as("dist")),
-        checkpointDir)
+        dist.unionByName(relaxed).groupBy("node").agg(min(col("dist")).as("dist")))
     }
     adj.unpersist()
     dist

@@ -34,7 +34,7 @@ object Triangles {
     val und = Components.cut(
       e0.filter(col("s") =!= col("d"))
         .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-        .distinct(), None)
+        .distinct())
     val deg = und.select(col("a").as("node")).union(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
     // orient by (deg, id) ascending: u → v iff key(u) < key(v)
@@ -46,7 +46,7 @@ object Triangles {
         when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
           struct(col("a").as("u"), col("b").as("v")))
           .otherwise(struct(col("b").as("u"), col("a").as("v"))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v")), None)
+        .select(col("e.u").as("u"), col("e.v").as("v")))
     // wedges at the min-key center: pairs of out-neighbors, canonically
     // ordered by node id so the closing edge is probed under ONE key
     val wedges = oriented.as("x").join(oriented.as("y"),

@@ -687,14 +687,14 @@ object AdvancedQueries {
           .repartition(width, col("l_orderkey"))
           .join(broadcast(Tables.part(s, dir).select("p_partkey", "p_brand")),
             col("l_partkey") === col("p_partkey"))
-          .select(col("l_orderkey"), col("p_brand")).distinct(), None)
+          .select(col("l_orderkey"), col("p_brand")).distinct())
       val nB = b.select(countDistinct(col("l_orderkey")).as("n_baskets"))
       val item = b.groupBy("p_brand").agg(count(lit(1)).as("c_item"))
       val pairs = graft.operators.Components.cut(
         b.select(col("l_orderkey"), col("p_brand").as("x"))
           .join(b.select(col("l_orderkey"), col("p_brand").as("y")), "l_orderkey")
           .filter(col("x") < col("y"))
-          .groupBy("x", "y").agg(count(lit(1)).as("c_pair")), None)
+          .groupBy("x", "y").agg(count(lit(1)).as("c_pair")))
       val rules = pairs.select(col("x").as("antecedent"), col("y").as("consequent"), col("c_pair"))
         .unionByName(pairs.select(col("y").as("antecedent"), col("x").as("consequent"), col("c_pair")))
       rules
@@ -762,7 +762,7 @@ object AdvancedQueries {
           .agg(max(col("o_orderdate")).as("last_order"),
             count(lit(1)).as("n_orders"),
             sum(col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(30, 4)))
-              .as("spend")), None)
+              .as("spend")))
       def binned(d: org.apache.spark.sql.DataFrame, by: String, name: String) =
         Sampling.rankBins(d, Seq(by, "o_custkey"), 5)
           .withColumnRenamed("bin", name)

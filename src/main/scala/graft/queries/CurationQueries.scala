@@ -760,7 +760,7 @@ object CurationQueries {
           TextFunctions.fingerprint(col("text")).as("fp")),
         Seq("fp"), Seq(col("doc_id").asc))
         .select("doc_id", "source", "text")
-      val s1c = graft.operators.Components.cut(s1, None)
+      val s1c = graft.operators.Components.cut(s1)
       // 2. near-dup pairs over stage-1 survivors: drop each pair's larger
       // id. 3-gram Jaccard is a PAIRWISE function — pairs(s1) is exactly
       // pairs(docs) restricted to s1×s1 — so stage 2 reads the shared
@@ -774,12 +774,12 @@ object CurationQueries {
         .join(s1ids.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
         .select(col("doc_b").as("doc_id")).distinct()
       val s2 = graft.operators.Components.cut(
-        s1c.join(dupB, Seq("doc_id"), "left_anti"), None)
+        s1c.join(dupB, Seq("doc_id"), "left_anti"))
       // 3. repetition gate (docs with < 3 tokens carry no row and pass)
       val rep = TextQueries.repetitionPerDoc(s2).filter(col("flagged") === 1L)
         .select("doc_id")
       val s3 = graft.operators.Components.cut(
-        s2.join(rep, Seq("doc_id"), "left_anti"), None)
+        s2.join(rep, Seq("doc_id"), "left_anti"))
       // 4. eval holdout
       val s4 = s3.filter(col("doc_id") % 11 =!= 0)
       // 5. decontamination vs the ORIGINAL corpus's eval slice (q146)
@@ -916,7 +916,7 @@ object CurationQueries {
           expr("conv(substring(md5(word), 1, 15), 16, 10)").cast("long") % B)
       val dbc = graft.operators.Components.cut(
         occ.groupBy("doc_id", "source", "is_t", "bucket")
-          .agg(count(lit(1)).as("n_db")), None)
+          .agg(count(lit(1)).as("n_db")))
       // one ≤256-row bucket table instead of separate target/pool frames
       // (round 13, §1.2): bt/bs/nt/ns each launched their own broadcast
       // job over dbc — the conditional sums land identical values
@@ -1128,7 +1128,7 @@ object CurationQueries {
         Tables.documents(s, dir)
           .select(col("doc_id"), col("source"),
             TextFunctions.tokenCount(col("text")).cast("long").as("n_tok"))
-          .filter(col("n_tok") > 0), None)
+          .filter(col("n_tok") > 0))
       val totals = tok.groupBy("source").agg(sum("n_tok").as("t_tokens"))
         .withColumn("sw", round(sqrt(col("t_tokens").cast("double")), 6))
       val sums = totals.agg(

@@ -550,8 +550,7 @@ object DedupQueries {
           .select(col("doc_id"), col("source"),
             explode(expr(
               "transform(sequence(1, size(t) - 7, 8), i -> md5(concat_ws(' ', slice(t, i, 8))))"))
-              .as("fp")),
-        None)
+              .as("fp")))
       val fpDocs = ch.groupBy("fp")
         .agg(countDistinct(col("doc_id")).as("nd"))
       val perDoc = ch.join(fpDocs, "fp")
@@ -852,8 +851,7 @@ object DedupQueries {
         .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
       val toks = graft.operators.Components.cut(
         docs.join(ids, Seq("doc_id"), "left_semi")
-          .select(col("doc_id"), graft.functions.TextFunctions.tokens(col("text")).as("t")),
-        None)
+          .select(col("doc_id"), graft.functions.TextFunctions.tokens(col("text")).as("t")))
       def gramCounts(n: Int) = {
         val grams =
           if (n == 1) toks.select(col("doc_id"), explode(col("t")).as("g"))
@@ -863,8 +861,8 @@ object DedupQueries {
               .as("g"))
         grams.groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
       }
-      val gc1 = graft.operators.Components.cut(gramCounts(1), None)
-      val gc2 = graft.operators.Components.cut(gramCounts(2), None)
+      val gc1 = graft.operators.Components.cut(gramCounts(1))
+      val gc2 = graft.operators.Components.cut(gramCounts(2))
       def scores(gc: org.apache.spark.sql.DataFrame, tag: String) = {
         val tot = gc.groupBy("doc_id").agg(sum(col("c")).as("tot"))
         // pairs DRIVE the overlap join (never gram x gram across the
@@ -990,8 +988,7 @@ object DedupQueries {
           .select(col("doc_id"),
             graft.functions.Sketches.wordShingles(col("text"), 8).as("shingles"))
           .filter(size(col("shingles")) > 0)
-          .select(col("doc_id"), explode(col("shingles")).as("s")),
-        None)
+          .select(col("doc_id"), explode(col("shingles")).as("s")))
       val df = sh.groupBy("s").agg(count(lit(1)).as("df"))
       sh.join(df, "s")
         .groupBy("doc_id")
@@ -1175,7 +1172,7 @@ object DedupQueries {
           p0.groupBy("blk", "p_brand").agg(count(lit(1)).as("bsz")),
           Seq("blk", "p_brand"))
           .filter(col("bsz") <= FsMaxBlock)
-          .drop("bsz"), None)
+          .drop("bsz"))
       // the block join's per-pair Levenshtein is compute-dense on slim
       // bytes — AQE's byte-based coalescing lands every pair on one task
       // (measured: a 2.4 s single-task job). Pin both sides to the base

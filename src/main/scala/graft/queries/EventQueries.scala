@@ -649,7 +649,7 @@ object EventQueries {
       .groupBy(col("prev_type"), col("event_type").as("next_type"))
       .agg(count(lit(1)).as("n"))
     val counts =
-      if (materialize) graft.operators.Components.cut(countsRaw, None) else countsRaw
+      if (materialize) graft.operators.Components.cut(countsRaw) else countsRaw
     val totals = counts.groupBy("prev_type").agg(sum("n").as("n_prev"))
     counts
       .join(broadcast(totals), "prev_type")
@@ -737,7 +737,7 @@ object EventQueries {
     // one event-log pass: first-seen = min over the DISTINCT (user, week)
     // frame (identical to min over raw events), so the cut distinct frame
     // feeds both sides instead of two independent corpus shuffles
-    val active = graft.operators.Components.cut(e.distinct(), None)
+    val active = graft.operators.Components.cut(e.distinct())
     val firstSeen = active.groupBy("user_id").agg(min("wk").as("cohort_wk"))
     active
       .join(firstSeen, "user_id")
@@ -877,8 +877,7 @@ object EventQueries {
     * concurrency (each day's deltas net to zero before the next begins)
     * — no per-day window, no single-task stage.
     */
-  def peakConcurrency(events: org.apache.spark.sql.DataFrame,
-      checkpointDir: Option[String] = None): org.apache.spark.sql.DataFrame = {
+  def peakConcurrency(events: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val iv = events
       .groupBy(col("user_id"), to_date(col("ts")).as("day"))
       .agg(min(col("ts")).as("t0"), max(col("ts")).as("t1"))
@@ -890,8 +889,7 @@ object EventQueries {
       // start and one end row, distinguished by ord even when t0 == t1
       .withColumn("ord", -col("delta"))
     graft.operators.Packing
-      .prefixSumBy(deltas, Seq("ts", "ord", "user_id"), "delta", "before",
-        checkpointDir = checkpointDir)
+      .prefixSumBy(deltas, Seq("ts", "ord", "user_id"), "delta", "before")
       .withColumn("active", col("before") + col("delta"))
       .groupBy("day")
       .agg(
@@ -1145,7 +1143,7 @@ object EventQueries {
     */
   def stickiness(events: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val act = graft.operators.Components.cut(
-      events.select(col("user_id"), to_date(col("ts")).as("day")).distinct(), None)
+      events.select(col("user_id"), to_date(col("ts")).as("day")).distinct())
     val days = act.select("day").distinct()
     val dau = act.groupBy("day").agg(count(lit(1)).as("dau"))
     val wau = broadcast(days)

@@ -1090,7 +1090,7 @@ object GraphQueries {
             .select(col("walk_id"), col("dst"), h.as("h"))
             .groupBy("walk_id")
             .agg(min(struct(col("h"), col("dst"))).as("m"))
-            .select(col("walk_id"), col("m.dst").as("node")), None)
+            .select(col("walk_id"), col("m.dst").as("node")))
         steps += frontier.withColumn("step", lit(t))
       }
       steps.reduce(_ unionByName _)

@@ -409,7 +409,7 @@ object SimilarityQueries {
         .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "v")))
         .groupBy("label", "dim")
         .agg(round((sum(col("v").cast("double").cast(DecimalType(38, 20)))
-          .cast("double") / count(lit(1))).cast("double"), 12).as("m")), None)
+          .cast("double") / count(lit(1))).cast("double"), 12).as("m")))
       val a = cent.select(col("label").as("label_a"), col("dim"), col("m").as("ma"))
       val b = cent.select(col("label").as("label_b"), col("dim"), col("m").as("mb"))
       val prods = a.join(b, "dim")
@@ -963,7 +963,7 @@ object SimilarityQueries {
       val short = graft.operators.Components.cut(
         graft.operators.NearDup.knnBruteForce(
           emb.filter(col("vec_id") < 10), emb, k = MmrShortlist)
-          .select(col("q_id"), col("n_id"), round(col("cos"), 12).as("rel")), None)
+          .select(col("q_id"), col("n_id"), round(col("cos"), 12).as("rel")))
       val sims = graft.operators.Components.cut(
         short.select(col("q_id"), col("n_id"))
           .join(short.select(col("q_id"), col("n_id").as("m_id")), "q_id")
@@ -971,8 +971,7 @@ object SimilarityQueries {
           .join(emb.select(col("vec_id").as("n_id"), col("embedding").as("ea")), "n_id")
           .join(emb.select(col("vec_id").as("m_id"), col("embedding").as("eb")), "m_id")
           .select(col("q_id"), col("n_id"), col("m_id"),
-            round(graft.functions.Similarity.cosine(col("ea"), col("eb")), 12).as("sim")),
-        None)
+            round(graft.functions.Similarity.cosine(col("ea"), col("eb")), 12).as("sim")))
       graft.operators.Mmr.select(short, sims, MmrLambda, MmrK)
         .orderBy("q_id", "step")
     },
@@ -1251,7 +1250,7 @@ object SimilarityQueries {
       // the checkpoint keeps the widened layout for all later rounds
       var state = graft.operators.Components.cut(
         graft.Tables.widen(emb.select(col("vec_id"), col("embedding")))
-          .select(col("vec_id"), col("embedding"), dTo(seed._2).as("dist")), None)
+          .select(col("vec_id"), col("embedding"), dTo(seed._2).as("dist")))
       for (j <- 1 until KcRounds) {
         val next = state
           .filter(!col("vec_id").isin(selectedIds: _*))
@@ -1262,7 +1261,7 @@ object SimilarityQueries {
         if (j < KcRounds - 1)
           state = graft.operators.Components.cut(
             state.select(col("vec_id"), col("embedding"),
-              least(col("dist"), dTo(next._2)).as("dist")), None)
+              least(col("dist"), dTo(next._2)).as("dist")))
       }
       picked.toSeq.toDF("sel_round", "vec_id", "dist")
         .orderBy("sel_round")

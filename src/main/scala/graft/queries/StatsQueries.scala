@@ -504,8 +504,7 @@ object StatsQueries {
     val dev = graft.operators.Components.cut(
       v.join(broadcast(med), "event_type")
         .select(col("event_type"), col("event_id"), col("n"), col("med"),
-          abs(col("value") - col("med")).as("dev")),
-      None)
+          abs(col("value") - col("med")).as("dev")))
     val w2 = Window.partitionBy("event_type").orderBy(col("dev"), col("event_id"))
     val mad = dev
       .withColumn("rn", row_number().over(w2))

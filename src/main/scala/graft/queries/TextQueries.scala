@@ -363,7 +363,7 @@ object TextQueries {
     // the full token stream — the cut makes "one corpus shuffle" physically
     // true (the cached frame is (source × word)-sized, vocab-scale)
     val sw = graft.operators.Components.cut(
-      occ.groupBy(groupCol, "word").agg(count(lit(1)).as("c_sw")), None)
+      occ.groupBy(groupCol, "word").agg(count(lit(1)).as("c_sw")))
     val srcTot = sw.groupBy(groupCol).agg(sum("c_sw").as("n_s"))
     val wTot = sw.groupBy("word").agg(sum("c_sw").as("c_w"))
     val tot = wTot.agg(sum("c_w").as("n"))
@@ -421,7 +421,7 @@ object TextQueries {
     // vocab-sized cut: the corpus total would otherwise re-run the whole
     // scan+explode+aggregate pipeline just to sum the counts
     val wTot = graft.operators.Components.cut(
-      occ.groupBy("word").agg(count(lit(1)).as("c_w")), None)
+      occ.groupBy("word").agg(count(lit(1)).as("c_w")))
     val tot = wTot.agg(sum("c_w").as("n"))
     occ
       .join(wTot, "word")
@@ -472,7 +472,7 @@ object TextQueries {
     // sides — uncut, the corpus distinct-shuffle would run three times
     val dw = graft.operators.Components.cut(docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("word"))
-      .distinct(), None)
+      .distinct())
     val dfreq = dw.groupBy("word").agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf)
     val dwf = dw.join(broadcast(dfreq), "word")
@@ -541,7 +541,7 @@ object TextQueries {
     // bigram-vocab-sized cut: the context-count aggregate and the scoring
     // join both read it — uncut, each re-runs the corpus bigram shuffle
     val bgCnt = graft.operators.Components.cut(
-      bg.groupBy("w1", "w2").agg(count(lit(1)).as("c_b")), None)
+      bg.groupBy("w1", "w2").agg(count(lit(1)).as("c_b")))
     val ctxCnt = bgCnt.groupBy("w1").agg(sum("c_b").as("c_ctx"))
     val vocab = docs
       .select(explode(tokens(col("text"))).as("word"))
@@ -602,7 +602,7 @@ object TextQueries {
     // uncut, the corpus distinct-shuffle would run three times
     val sw = graft.operators.Components.cut(docs
       .select(col("source"), explode(tokens(col("text"))).as("word"))
-      .distinct(), None)
+      .distinct())
     val sizes = sw.groupBy("source").agg(count(lit(1)).as("sz"))
     val a = sw.select(col("source").as("source_a"), col("word"))
     val b = sw.select(col("source").as("source_b"), col("word"))
@@ -652,7 +652,7 @@ object TextQueries {
     // (doc × word)-sized cut: df derivation and the scoring join both
     // read it — uncut, the corpus tf shuffle would run twice
     val tf = graft.operators.Components.cut(
-      occ.groupBy("doc_id", "word").agg(count(lit(1)).as("tf")), None)
+      occ.groupBy("doc_id", "word").agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy("word").agg(count(lit(1)).as("df"))
     val dTot = docs.agg(count(lit(1)).as("d_total"))
     val scored = tf
@@ -1103,7 +1103,7 @@ object TextQueries {
       .filter(size(col("t")) > 0)
     val tf = graft.operators.Components.cut(
       toks.select(col("doc_id"), size(col("t")).as("dl"), explode(col("t")).as("term"))
-        .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf")), None)
+        .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf")))
     val dfT = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val stats = toks.agg(
       count(lit(1)).cast("double").as("n_docs"),
@@ -1356,8 +1356,7 @@ object TextQueries {
         .groupBy("w").agg(count(lit(1)).as("wf"))
         .select(col("w"), concat(lit(" "),
           array_join(filter(split(col("w"), ""), x => x =!= ""), " "),
-          lit(" ")).as("s"), col("wf")),
-      None)
+          lit(" ")).as("s"), col("wf")))
     val learned = scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
     var r = 1
     var exhausted = false
@@ -1382,8 +1381,7 @@ object TextQueries {
         val rep = lit(s" $l$rt ")
         state = graft.operators.Components.cut(
           state.select(col("w"),
-            replace(replace(col("s"), pat, rep), pat, rep).as("s"), col("wf")),
-          None)
+            replace(replace(col("s"), pat, rep), pat, rep).as("s"), col("wf")))
         r += 1
       }
     }
@@ -1506,7 +1504,7 @@ object TextQueries {
       val test = docs.filter(col("doc_id") % 5 === 0)
       val occTr = train.select(col("lang"), explode(tokens(col("text"))).as("word"))
       val cw = graft.operators.Components.cut(
-        occTr.groupBy("lang", "word").agg(count(lit(1)).as("c_lw")), None)
+        occTr.groupBy("lang", "word").agg(count(lit(1)).as("c_lw")))
       val ct = cw.groupBy("lang").agg(sum("c_lw").as("n_l"))
       val vocab = cw.agg(countDistinct(col("word")).as("v"))
       val priors = train.groupBy("lang").agg(count(lit(1)).as("d_l"))
@@ -1606,7 +1604,7 @@ object TextQueries {
       val occ = Tables.documents(s, dir)
         .select(col("source"), explode(tokens(col("text"))).as("word"))
       val sw = graft.operators.Components.cut(
-        occ.groupBy("source", "word").agg(count(lit(1)).as("c_sw")), None)
+        occ.groupBy("source", "word").agg(count(lit(1)).as("c_sw")))
       val srcTot = sw.groupBy("source").agg(sum("c_sw").as("n_s"))
       val wTot = sw.groupBy("word").agg(sum("c_sw").as("c_w"))
       val tot = wTot.agg(sum("c_w").as("n"))
@@ -1807,7 +1805,7 @@ object TextQueries {
     val train = tok.filter(col("doc_id") % 2 === 0)
     val vocab = graft.operators.Components.cut(
       train.groupBy("word").agg(count(lit(1)).as("c"))
-        .filter(col("c") >= 2).select("word"), None)
+        .filter(col("c") >= 2).select("word"))
     val vSize = vocab.agg((count(lit(1)) + 1).as("v"))
     val mapped = tok
       .join(vocab.withColumn("in_v", lit(1)), Seq("word"), "left")
@@ -1820,7 +1818,7 @@ object TextQueries {
       .select(col("doc_id"), col("source"), col("w1"), col("mw").as("w2"))
     val cB = graft.operators.Components.cut(
       bg.filter(col("doc_id") % 2 === 0)
-        .groupBy("w1", "w2").agg(count(lit(1)).as("c_b")), None)
+        .groupBy("w1", "w2").agg(count(lit(1)).as("c_b")))
     val cCtx = cB.groupBy("w1").agg(sum(col("c_b")).as("c_ctx"))
     val scored = bg.filter(col("doc_id") % 2 === 1)
       .join(cB, Seq("w1", "w2"), "left")

@@ -177,21 +177,6 @@ class AnnSpec extends SparkSpec {
     assert(DriverReplay.distributedOnly(spark)(asSet) === asSet)
   }
 
-  test("reliable-checkpoint path: distributed CC cuts lineage to the checkpoint dir") {
-    val dir = graft.queries.Scratch.tempDir("graft_cc_ckpt")
-    val chain = (0L until 12L).sliding(2).map(s => (s(0), s(1))).toSeq.toDF("doc_a", "doc_b")
-    val labels = DriverReplay.distributedOnly(spark) {
-      Components.connectedComponents(chain, "doc_a", "doc_b", checkpointDir = Some(dir))
-        .collect()
-    }.map(r => r.getLong(1)).distinct
-    assert(labels === Array(0L))
-    // the cuts really went to (stand-in) reliable storage: RDD checkpoint
-    // part files exist under the dir — executor loss can't kill the run
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-    try assert(files.anyMatch(p => p.getFileName.toString.startsWith("part-")))
-    finally files.close()
-  }
-
   test("propagation hitting its round cap auto-finishes exactly via LSS fallback") {
     // 50-chain (diameter 49), forced distributed, capped at 2 iterations =
     // 4 hops of propagation: labels are then only a coarsening. Previously

@@ -14,21 +14,21 @@ class EventQueriesSpec extends SparkSpec {
   test("tumbling windows partition all events exactly once") {
     val events = Tables.events(spark, sf)
     val windowed = Registry.byName("q25_window_tumbling_agg").run(spark, sf)
-    val total = windowed.agg(sum("n_events")).head.getLong(0)
+    val total = windowed.agg(sum("n_events")).head().getLong(0)
     assert(total === events.count())
   }
 
   test("sliding 1h/15m windows hold each event exactly 4 times") {
     val events = Tables.events(spark, sf)
     val windowed = Registry.byName("q26_window_sliding_counts").run(spark, sf)
-    val total = windowed.agg(sum("n_events")).head.getLong(0)
+    val total = windowed.agg(sum("n_events")).head().getLong(0)
     assert(total === 4 * events.count())
   }
 
   test("session windows: events covered once, gaps within sessions < 30 min") {
     val events = Tables.events(spark, sf)
     val sessions = Registry.byName("q27_session_window").run(spark, sf)
-    assert(sessions.agg(sum("n_events")).head.getLong(0) === events.count())
+    assert(sessions.agg(sum("n_events")).head().getLong(0) === events.count())
     // session_end = last event + gap, so every session spans ≥ 30 minutes
     val badSpan = sessions
       .filter(col("session_end") < col("session_start") + expr("INTERVAL 30 minutes"))

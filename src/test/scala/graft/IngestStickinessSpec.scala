@@ -41,8 +41,8 @@ class IngestStickinessSpec extends SparkSpec {
     val good = raw.filter(col("_bad").isNull)
     val bad = raw.filter(col("_bad").isNotNull)
     assert(good.count() === 2L && bad.count() === 1L)
-    assert(good.agg(sum("k")).head.getLong(0) === 24L)
-    assert(bad.head.getAs[String]("_bad") === "oops,not-a-long,nah")
+    assert(good.agg(sum("k")).head().getLong(0) === 24L)
+    assert(bad.head().getAs[String]("_bad") === "oops,not-a-long,nah")
   }
   test("markovEval: held-out accuracy against the trained argmax") {
     import spark.implicits._

@@ -164,6 +164,6 @@ class MonzoApiSourceSpec extends SparkSpec {
     assert(a === b)
     val df = read("2024-02-01", "2024-02-03")
     assert(df.filter(col("amount") > 0).count() === 0)
-    assert(df.select(countDistinct("id")).head.getLong(0) === df.count())
+    assert(df.select(countDistinct("id")).head().getLong(0) === df.count())
   }
 }

@@ -24,17 +24,6 @@ class NearDupSpec extends SparkSpec {
     assert(pairs === Set((1L, 2L), (1L, 4L), (2L, 4L)))
   }
 
-  test("ngramJaccardPairs with a reliable checkpoint dir: same pairs, cuts on disk") {
-    val dir = graft.queries.Scratch.tempDir("graft_neardup_ckpt")
-    val pairs = NearDup.ngramJaccardPairs(fixtureDocs, n = 3, threshold = 0.5,
-        checkpointDir = Some(dir))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs === Set((1L, 2L), (1L, 4L), (2L, 4L)))
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-    try assert(files.anyMatch(p => p.getFileName.toString.startsWith("part-")))
-    finally files.close()
-  }
-
   test("minhashLshPairs recall = 1.0 vs exact jaccard pairs on documents") {
     val docs = Tables.documents(spark, sf)
     val exact = NearDup.ngramJaccardPairs(docs, 3, 0.3)

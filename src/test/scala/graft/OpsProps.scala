@@ -314,7 +314,7 @@ object OpsProps extends Properties("Operators") {
           .doubleValue() / pow
         val got = xs.toDF("x").repartition(parts)
           .agg(graft.functions.Exact.sumFx(col("x"), scale))
-          .head.getDouble(0)
+          .head().getDouble(0)
         java.lang.Double.compare(got, expect) == 0
     }
   }

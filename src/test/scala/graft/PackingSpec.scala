@@ -33,22 +33,6 @@ class PackingSpec extends SparkSpec {
     }
   }
 
-  test("prefixSum with a reliable checkpoint dir: same result, cuts on disk") {
-    val df = randomDocs(997, seed = 7)
-    val dir = graft.queries.Scratch.tempDir("graft_packing_ckpt")
-    val expected = Packing.prefixSum(df, "id", "toks", "off")
-      .select("id", "off").as[(Long, Long)].collect().sortBy(_._1)
-    val got = Packing.prefixSum(df, "id", "toks", "off",
-        checkpointDir = Some(dir))
-      .select("id", "off").as[(Long, Long)].collect().sortBy(_._1)
-    assert(got === expected)
-    // the pinned layout really went to (stand-in) reliable storage —
-    // executor loss can't kill the partition ids mid-job
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-    try assert(files.anyMatch(p => p.getFileName.toString.startsWith("part-")))
-    finally files.close()
-  }
-
   test("packBins: offsets contiguous, bin ids monotone, bin_pos < capacity") {
     val df = randomDocs(500, seed = 11)
     val rows = Packing.packBins(df, "id", "toks", capacity = 1000L)
