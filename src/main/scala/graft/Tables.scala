@@ -1,16 +1,68 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 
 /** Readers for the harness parquet tables (see TESTDATA.md).
   *
   * All engine queries receive a scale-factor directory and read only from
-  * it; schemas are fixed by the driver's generator so we do not re-infer
-  * or re-declare them here (parquet carries them).
+  * it. The tables' schemas are fixed by the driver's generator and carried
+  * in each file's footer; [[parquet]] reads that footer on the driver
+  * instead of letting Spark infer it with a job.
   */
 object Tables {
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** The parquet file or directory at `path`, read with the schema in one
+    * data file's footer. Every engine parquet read that declares no schema
+    * goes through here (q140's `mergeSchema` read aside; InferringReadSpec
+    * keeps it so). A bare `spark.read.parquet` infers the schema with a
+    * Spark job (`ParquetFileFormat.mergeSchemasInParallel`) on every call;
+    * this opens the same footer on the driver, with no job, and derives the
+    * schema the way that job does ([[ParquetFileFormat.readSchemaFromFooter]]:
+    * the Spark schema key when a Spark writer left one, else the converted
+    * parquet schema under the session's conf). Without `mergeSchema`,
+    * inference also reads only the first data file, so the result is the
+    * same DataFrame. Fails by name (`<owner>: no parquet file under <path>`)
+    * when a directory holds no data file.
+    */
+  def parquet(spark: SparkSession, path: String, owner: String = "tables"): DataFrame = {
+    val schema = ParquetFileFormat.readSchemaFromFooter(
+      firstFooter(spark, path, owner), new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** The footer (row groups skipped) of the first data file at `path`. A
+    * plain file is used as is; in a directory, files named `_*` or `.*`
+    * (`_SUCCESS`, checksums) are skipped as Spark's file index skips them,
+    * and the first by name is taken — the one inference picks. A directory
+    * with no such file searches its subdirectories in name order (a Hive
+    * `k=v` layout; Spark adds the partition columns itself).
+    */
+  private def firstFooter(spark: SparkSession, path: String, owner: String): Footer = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def visible(st: FileStatus) = !st.getPath.getName.startsWith("_") &&
+      !st.getPath.getName.startsWith(".")
+    def firstFile(st: FileStatus): Option[FileStatus] =
+      if (st.isFile) Some(st)
+      else {
+        val (files, dirs) = fs.listStatus(st.getPath).filter(visible)
+          .sortBy(_.getPath.getName).partition(_.isFile)
+        files.headOption.orElse(dirs.iterator.flatMap(firstFile).nextOption())
+      }
+    val file = firstFile(fs.getFileStatus(root)).getOrElse(
+      throw new IllegalStateException(s"$owner: no parquet file under $path"))
+    new Footer(file.getPath, ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+  }
 
   /** Conditional round-robin fan-out for COMPUTE-DENSE per-row stages
     * (round 12, guide §2.5/§1.2): the harness tables are single small
@@ -72,17 +124,16 @@ object Tables {
     "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string"
   val NanosAsLongOption = "spark.sql.legacy.parquet.nanosAsLong"
 
-  /** True when `events.parquet` stores `ts` as TIMESTAMP(NANOS). Decided by
-    * one footer-schema read (with the legacy flag on, so both layouts infer
-    * cleanly: NANOS arrives as `bigint`, MICROS as `timestamp`) and cached
-    * per path — the footer is read once per JVM, not once per query.
+  /** True when `events.parquet` stores `ts` as TIMESTAMP(NANOS), read
+    * from the file's footer annotation on the driver (no Spark job).
     */
   def eventsTsIsNanos(spark: SparkSession, sfDir: String): Boolean =
-    tsUnitCache.computeIfAbsent(s"$sfDir/events.parquet", path => {
-      val inferred = spark.read.option(NanosAsLongOption, "true").parquet(path).schema
-      inferred("ts").dataType == org.apache.spark.sql.types.LongType
-    })
-  private val tsUnitCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+    firstFooter(spark, s"$sfDir/events.parquet", "tables").getParquetMetadata
+      .getFileMetaData.getSchema.getColumnDescription(Array("ts")).getPrimitiveType
+      .getLogicalTypeAnnotation match {
+        case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+        case _ => false
+      }
 
   /** Events with `ts` normalized to a µs TimestampType regardless of the
     * file's physical unit. The legacy-nanos path reads the raw long with an

@@ -3,7 +3,6 @@ package graft.pipeline
 import graft.operators.{Dedup, GoldAgg, Normalize}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Bronze → silver → gold medallion orchestration over Parquet directories
   * (SURVEY.md §3; reference lifecycle /root/reference/src/main.py:19-85).
@@ -49,7 +48,7 @@ final case class Medallion(root: String) {
     * duplicates is scan order; we fix a total order, SURVEY.md §7.4).
     */
   private def stageSilverAndGold(spark: SparkSession): Unit = {
-    val bronze = Medallion.readParquet(spark, bronzeTx)
+    val bronze = graft.Tables.parquet(spark, bronzeTx, "medallion")
     val order = Seq(col("date_retrieved").asc, col("created").asc_nulls_last, col("id").asc)
 
     // T1 — counterparties dim, composite key (account_num, sort_code).
@@ -138,7 +137,7 @@ final case class Medallion(root: String) {
     * Then `_SUCCESS` and ONE `_LATEST` pointer flip ([[Versions.publish]])
     * — bronze, silver and gold appear together or not at all. Every Spark
     * job the call runs is one of these writes: committed and staged tables
-    * are read with their footer schema ([[Medallion.readParquet]]), never
+    * are read with their footer schema ([[graft.Tables.parquet]]), never
     * inferred. A crash at any point (injectable via `afterSilver`, after
     * both waves and before `_SUCCESS`: the widest window) leaves readers
     * on the old consistent version; rerunning the batches stages the same
@@ -168,7 +167,7 @@ final case class Medallion(root: String) {
     // partition as one key and collapse to one row, so each incoming row's
     // id passes a raise_error guard evaluated inside this same job.
     val nullId = raise_error(lit("bronze: null transaction id"))
-    val committed = curM.map(m => Medallion.readParquet(spark, m.bronzeTx))
+    val committed = curM.map(m => graft.Tables.parquet(spark, m.bronzeTx, "medallion"))
       .getOrElse(batches.head._1.withColumn("date_retrieved", batches.head._2).limit(0))
     val bronze = Dedup.firstWriterWins(
       batches.zipWithIndex.foldLeft(committed.withColumn("__batch", lit(0))) {
@@ -183,7 +182,7 @@ final case class Medallion(root: String) {
     // L2/L3 snapshots: committed history ∪ this run's stamped snapshot
     def stageSnapshot(df: DataFrame, prev: Option[String], path: String): Unit = {
       val snap = df.withColumn("date_retrieved", snapClock)
-      val hist = prev.map(Medallion.readParquet(spark, _)).getOrElse(snap.limit(0))
+      val hist = prev.map(graft.Tables.parquet(spark, _, "medallion")).getOrElse(snap.limit(0))
       hist.unionByName(snap).write.mode(SaveMode.Overwrite).parquet(path)
     }
     // bronze + the two snapshots touch disjoint staged paths and disjoint
@@ -207,33 +206,6 @@ final case class Medallion(root: String) {
 }
 
 object Medallion {
-  /** The key under which Spark's parquet writer stores the table's Spark
-    * schema (as JSON) in every part file's footer.
-    */
-  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
-
-  /** The parquet table at `dir`, read with the Spark schema stored in one
-    * part file's footer (opened directly, no Spark job) instead of an
-    * inferring `spark.read.parquet`, which launches a job per read. It is the
-    * schema inference would yield, so `unionByName` still rejects a
-    * committed table whose columns differ from the incoming batch's.
-    */
-  private def readParquet(spark: SparkSession, dir: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val part = Option(path.getFileSystem(conf)
-        .globStatus(new org.apache.hadoop.fs.Path(path, "part-*.parquet")))
-      .flatMap(_.headOption)
-      .getOrElse(throw new IllegalStateException(s"medallion: no parquet file under $dir"))
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(part, conf))
-    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
-      finally reader.close()
-    if (json == null)
-      throw new IllegalStateException(s"medallion: no Spark schema in ${part.getPath}")
-    spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]).parquet(dir)
-  }
-
   /** Run independent write jobs concurrently from a small pool (guide
     * §2.6): Spark's FIFO scheduler lets a later job's tasks back-fill
     * executors freed by an earlier job's straggler tail, so N independent

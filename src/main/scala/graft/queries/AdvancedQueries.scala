@@ -354,7 +354,7 @@ object AdvancedQueries {
         Tables.orders(s, dir)
           .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"),
         out, Seq("o_custkey", "o_totalprice"), files = 8)
-      s.read.parquet(out).orderBy("o_orderkey")
+      Tables.parquet(s, out).orderBy("o_orderkey")
     },
     Some("""SELECT o_orderkey, o_custkey, o_totalprice, o_orderdate
             FROM orders ORDER BY o_orderkey"""))
@@ -375,7 +375,7 @@ object AdvancedQueries {
         Tables.orders(s, dir)
           .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"),
         out, Seq("o_custkey", "o_totalprice"), files = 8)
-      s.read.parquet(out).orderBy("o_orderkey")
+      Tables.parquet(s, out).orderBy("o_orderkey")
     },
     Some("""SELECT o_orderkey, o_custkey, o_totalprice, o_orderdate
             FROM orders ORDER BY o_orderkey"""))
@@ -1828,7 +1828,7 @@ object AdvancedQueries {
       graft.operators.Layout.writePartitioned(
         Tables.events(s, dir).withColumn("day", to_date(col("ts"))),
         path, Seq("event_type"))
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .filter(col("event_type").isin("purchase", "signup"))
         .groupBy("event_type", "day")
         .agg(count(lit(1)).as("n"), Exact.sumD(col("value")).as("sum_value"))

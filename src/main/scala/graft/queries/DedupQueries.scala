@@ -126,7 +126,7 @@ object DedupQueries {
         .repartition(1)
         .write.mode("overwrite").parquet(path)
       NearDup.verifyPairsJaccard(
-          Tables.documents(s, dir), s.read.parquet(path), n = 3)
+          Tables.documents(s, dir), Tables.parquet(s, path), n = 3)
         .select("doc_a", "doc_b", "hamming", "jaccard")
         .orderBy("doc_a", "doc_b")
     },
@@ -213,7 +213,7 @@ object DedupQueries {
         .repartition(1) // see q21: empty-safe single part file
         .write.mode("overwrite").parquet(path)
       NearDup.verifyPairsContainment(
-          Tables.documents(s, dir), s.read.parquet(path), n = 3)
+          Tables.documents(s, dir), Tables.parquet(s, path), n = 3)
         .select("doc_a", "doc_b", "n_shared", "containment")
         .orderBy("doc_a", "doc_b")
     },
@@ -1087,7 +1087,7 @@ object DedupQueries {
       NearDup.minhashLshPairs(Tables.documents(s, dir), n = 3, threshold = 0.3)
         .repartition(1) // see q21: empty-safe single part file
         .write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .select(col("doc_a"), col("doc_b"),
           round(col("est_jaccard"), 12).as("est_jaccard"),
           col("jaccard"),

@@ -167,7 +167,7 @@ object EventQueries {
           element_at(col("q"), 3).as("p99"))
         .repartition(1)
         .write.mode("overwrite").parquet(path)
-      val est = s.read.parquet(path)
+      val est = Tables.parquet(s, path)
       val exact = Tables.events(s, dir).groupBy("event_type")
         .agg(countDistinct(col("user_id")).as("exact_users"))
       val brackets = OrderStats.rankBrackets(
@@ -428,7 +428,7 @@ object EventQueries {
         .agg(graft.functions.HllAgg.hllDistinct(col("user_id")).as("est_users"))
         .repartition(1)
         .write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .join(
           Tables.events(s, dir).groupBy("event_type")
             .agg(countDistinct(col("user_id")).as("exact_users")),
@@ -476,7 +476,7 @@ object EventQueries {
         .write.mode("overwrite").parquet(path)
       val exact = OrderStats.rankTargets(
         Tables.events(s, dir), "event_type", "value", Seq(0.5, 0.95, 0.99))
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .join(exact, "event_type")
         .select(
           col("event_type"), col("dd_p50"), col("dd_p95"), col("dd_p99"),

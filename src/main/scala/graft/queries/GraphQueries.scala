@@ -45,7 +45,7 @@ object GraphQueries {
         .coalesce(1)
         .write.mode("overwrite").parquet(p)
     })
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   private val PrIters = 5
@@ -251,7 +251,7 @@ object GraphQueries {
         knnGraphEdges(Tables.embeddings(s, dir), k = 5)
           .write.mode("overwrite").parquet(p)
       })
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   private def knnEdges(s: org.apache.spark.sql.SparkSession, dir: String) =

@@ -143,7 +143,7 @@ object MedallionQueries {
   private val q44 = GraftQuery(
     "q44_medallion_silver_fact",
     (s, dir) =>
-      s.read.parquet(runPipeline(s, dir).silverTx).orderBy("id"),
+      Tables.parquet(s, runPipeline(s, dir).silverTx).orderBy("id"),
     Some(s"""$bronzeCte
              SELECT id, description, CAST(amount AS DOUBLE) AS amount, currency,
                     created, category, notes, is_load, settled,
@@ -158,7 +158,7 @@ object MedallionQueries {
   private val q47 = GraftQuery(
     "q47_medallion_merchants_dim",
     (s, dir) =>
-      s.read.parquet(sharedPipeline(s, dir).silverMerchants).orderBy("id"),
+      Tables.parquet(s, sharedPipeline(s, dir).silverMerchants).orderBy("id"),
     Some(s"""$bronzeCte
              SELECT id, name, category FROM (
                SELECT merchant_id AS id, merchant_name AS name,
@@ -172,7 +172,7 @@ object MedallionQueries {
   private val q48 = GraftQuery(
     "q48_medallion_counterparties_dim",
     (s, dir) =>
-      s.read.parquet(sharedPipeline(s, dir).silverCounterparties)
+      Tables.parquet(s, sharedPipeline(s, dir).silverCounterparties)
         .orderBy("account_num", "sort_code"),
     Some(s"""$bronzeCte
              SELECT account_num, sort_code, name FROM (
@@ -193,7 +193,7 @@ object MedallionQueries {
   private val q49 = GraftQuery(
     "q49_medallion_gold",
     (s, dir) =>
-      s.read.parquet(sharedPipeline(s, dir).goldMonthly)
+      Tables.parquet(s, sharedPipeline(s, dir).goldMonthly)
         .withColumn("year", col("year").cast("long"))
         .withColumn("month", col("month").cast("long"))
         .orderBy("year", "month"),
@@ -448,7 +448,7 @@ object MedallionQueries {
         nestedFixture(s, dir).write.mode("overwrite").parquet(path)
         q76Written.add(path)
       }
-      graft.sources.MonzoSource.flattenTransactions(s.read.parquet(path))
+      graft.sources.MonzoSource.flattenTransactions(Tables.parquet(s, path))
         .orderBy("id")
     },
     Some(s"""SELECT id, description, COALESCE(amount, 0) AS amount, currency,
@@ -517,7 +517,7 @@ object MedallionQueries {
         s, staged, root, keys = Seq("c_custkey"), seqCol = "seq",
         checkpointDir = ckpt)
       val (_, snapDir) = graft.streaming.StreamingCdcLoad.latest(s, root).get
-      s.read.parquet(snapDir).orderBy("c_custkey")
+      Tables.parquet(s, snapDir).orderBy("c_custkey")
     },
     Some("""SELECT c_custkey, 'V' || c_name AS c_name
             FROM customer WHERE c_custkey % 5 <> 0
@@ -537,7 +537,7 @@ object MedallionQueries {
   private val q100 = GraftQuery(
     "q100_medallion_bronze_audit",
     (s, dir) =>
-      s.read.parquet(sharedPipeline(s, dir).bronzeTx).orderBy("id"),
+      Tables.parquet(s, sharedPipeline(s, dir).bronzeTx).orderBy("id"),
     Some(s"""$bronzeCte
              SELECT id, description, amount, currency, created, category,
                     notes, is_load, settled, local_amount, local_currency,

@@ -70,7 +70,7 @@ object MultimodalQueries {
         .withColumn("embedding_json", to_json(col("embedding")))
         .repartition(1) // see q24: empty-safe single part file
         .write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .select(
           col("media_id"),
           size(col("embedding")).as("dim"),
@@ -109,7 +109,7 @@ object MultimodalQueries {
         .withColumn("samples_json", to_json(col("samples")))
         .repartition(1) // see q24: empty-safe single part file
         .write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .select(
           col("media_id"), col("frame_idx"), col("src_width"), col("src_height"),
           size(col("samples")).as("n_samples"),

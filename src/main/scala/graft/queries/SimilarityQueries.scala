@@ -179,7 +179,7 @@ object SimilarityQueries {
           centroidStore = centroidStore(dir))
         .repartition(1) // see q24: empty-safe single part file
         .write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .withColumn("cos", round(col("cos"), 12))
         .orderBy("q_id", "rank")
     },
@@ -213,10 +213,10 @@ object SimilarityQueries {
             .write.mode("overwrite").parquet(p)
         })
       val path = Landed.land("q142_lsh_knn_graph", dir)
-      s.read.parquet(built)
+      Tables.parquet(s, built)
         .repartition(1) // see q24: empty-safe single part file
         .write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .withColumn("cos", round(col("cos"), 12))
         .orderBy("q_id", "rank")
     },
@@ -310,7 +310,7 @@ object SimilarityQueries {
           centroidStore = centroidStore(dir))
         .repartition(1) // see q24: empty-safe single part file
         .write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .withColumn("cos", round(col("cos"), 12))
         .orderBy("q_id", "rank")
     },
@@ -549,7 +549,7 @@ object SimilarityQueries {
           .coalesce(1)
           .write.mode("overwrite").parquet(p)
       })
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   private val q128 = GraftQuery(
@@ -575,7 +575,7 @@ object SimilarityQueries {
       kmeansShared(s, dir)
         .repartition(1)
         .write.mode("overwrite").parquet(path)
-      val byLabel = s.read.parquet(path)
+      val byLabel = Tables.parquet(s, path)
         .join(Tables.embeddings(s, dir).select("vec_id", "label"), "vec_id")
         .groupBy(col("cluster"), col("label"))
         .agg(count(lit(1)).as("cnt"))
@@ -699,7 +699,7 @@ object SimilarityQueries {
       val vDf = s.createDataFrame(v.zipWithIndex.map { case (x, i) => (i, x) }.toSeq)
         .toDF("dim", "loading")
       vDf.repartition(1).write.mode("overwrite").parquet(path)
-      val vBack = s.read.parquet(path)
+      val vBack = Tables.parquet(s, path)
       val cv = cov
         .join(broadcast(vBack.select(col("dim").as("j"), col("loading").as("vj"))), "j")
         .groupBy("i")
@@ -1031,7 +1031,7 @@ object SimilarityQueries {
       semdedupAssign(s, dir)
         .repartition(1)
         .write.mode("overwrite").parquet(path)
-      val assign = s.read.parquet(path).select("vec_id", "cluster")
+      val assign = Tables.parquet(s, path).select("vec_id", "cluster")
       val pairs = NearDup
         .semDedupPairs(Tables.embeddings(s, dir), assign, threshold = 0.4)
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))

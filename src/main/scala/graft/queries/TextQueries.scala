@@ -313,7 +313,7 @@ object TextQueries {
         .select(col("n"), explode(col("hh")).as(Seq("word", "est")))
         .repartition(1)
         .write.mode("overwrite").parquet(path)
-      val landed = s.read.parquet(path)
+      val landed = Tables.parquet(s, path)
       // exact counts for the <=49 candidate words only: broadcast
       // semi-join BEFORE the aggregate, so the shuffle carries candidate
       // rows, never the full vocabulary (the cost this sketch exists to

@@ -52,7 +52,7 @@ object StreamingCdcLoad {
     val compacted = Dedup.firstWriterWins(
       changes, keys, Seq(col(seqCol).desc)).drop(seqCol)
     val snapshot = current match {
-      case Some((_, dir)) => spark.read.parquet(dir)
+      case Some((_, dir)) => graft.Tables.parquet(spark, dir)
       case None => compacted.drop(opCol).limit(0)
     }
     val next = Cdc.applyChanges(snapshot, compacted, keys, opCol)
@@ -68,7 +68,7 @@ object StreamingCdcLoad {
     */
   def run(spark: SparkSession, srcDir: String, root: String, keys: Seq[String],
       seqCol: String, checkpointDir: String, filesPerBatch: Int = 1): Unit = {
-    val schema = spark.read.parquet(srcDir).schema
+    val schema = graft.Tables.parquet(spark, srcDir).schema
     val q = spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", filesPerBatch)
