@@ -8,11 +8,15 @@ tables, loads the engine's parquet output, and compares:
   - values, bit-exact, in produced row order (queries are totally ordered)
   - a canonical order-insensitive hash as a fallback signal
 
+Each oracle line carries its DuckDB seconds; the five slowest oracles are
+listed after the totals.
+
 Usage: python3 scripts/local_verify.py <sfDir> <outDir> [query ...]
 (Assumes `sbt "runMain graft.Verify <sfDir> <outDir>"` already ran.)
 """
 import json
 import sys
+import time
 
 import duckdb
 import numpy as np
@@ -37,6 +41,7 @@ def main() -> int:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    oracle_s = {}  # query -> DuckDB seconds
     # Rows-only queries: output parquet exists but no oracle entry.
     import os
     for d in sorted(os.listdir(out_dir)):
@@ -54,11 +59,15 @@ def main() -> int:
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
             continue
+        t0 = time.perf_counter()
         try:
-            exp = canon(con.sql(sql).df())
+            try:
+                exp = canon(con.sql(sql).df())
+            finally:
+                oracle_s[name] = time.perf_counter() - t0
             got = canon(pd.read_parquet(f"{out_dir}/{name}"))
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: load error: {e}")
+            print(f"FAIL {name} (duckdb {oracle_s[name]:.2f} s): load error: {e}")
             n_fail += 1
             continue
         problems = []
@@ -87,13 +96,18 @@ def main() -> int:
                             f"got={g_.dtype}), first@{i}: exp={e_.iloc[i]!r} got={g_.iloc[i]!r}")
         if problems:
             n_fail += 1
-            print(f"FAIL {name}:")
+            print(f"FAIL {name} (duckdb {oracle_s[name]:.2f} s):")
             for p in problems:
                 print(f"   {p}")
         else:
             n_pass += 1
-            print(f"PASS {name} ({len(exp)} rows x {len(exp.columns)} cols)")
+            print(f"PASS {name} ({len(exp)} rows x {len(exp.columns)} cols, "
+                  f"duckdb {oracle_s[name]:.2f} s)")
     print(f"\n{n_pass} pass, {n_fail} fail")
+    if oracle_s:
+        print("slowest oracles (DuckDB seconds):")
+        for name, secs in sorted(oracle_s.items(), key=lambda kv: -kv[1])[:5]:
+            print(f"  {secs:8.2f}  {name}")
     return 1 if n_fail else 0
 
 

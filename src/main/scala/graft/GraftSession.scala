@@ -46,8 +46,8 @@ object GraftSession {
     */
   val InitialShufflePartitions = 512
 
-  def build(appName: String, defaultCpus: String = "4"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
+  def build(appName: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .appName(appName)
       .master(s"local[$cpus]")

@@ -39,8 +39,8 @@ import org.apache.spark.sql.types.DecimalType
   *
   * Returns (node, dep): Σ over sources of the node's dependency, as
   * DECIMAL(38,15); node ∉ sources' reach ⇒ absent (callers join +
-  * coalesce 0). For undirected graphs the conventional score halves the
-  * sum — display arithmetic owned by the caller.
+  * coalesce 0). Edges are read as undirected; the conventional score
+  * halves the sum — display arithmetic owned by the caller.
   */
 object Betweenness {
 
@@ -55,7 +55,7 @@ object Betweenness {
 
   def run(
       edges: DataFrame, srcCol: String, dstCol: String, sources: Seq[Long],
-      maxLevels: Int = 8, undirected: Boolean = true): DataFrame = {
+      maxLevels: Int = 8): DataFrame = {
     require(sources.nonEmpty, "need at least one source")
     require(maxLevels >= 1, s"maxLevels must be >= 1, got $maxLevels")
     val spark = edges.sparkSession
@@ -65,15 +65,12 @@ object Betweenness {
 
     DriverReplay.probe(dir0, ReplayBound).foreach { probe =>
       val es = probe.map(r => (r.getLong(0), r.getLong(1)))
-      return localRun(spark, es, sources, maxLevels, undirected)
+      return localRun(spark, es, sources, maxLevels)
     }
 
-    val e = {
-      val both =
-        if (undirected) dir0.union(dir0.select(col("d").as("s"), col("s").as("d")))
-        else dir0
-      Components.cut(both.filter(col("s") =!= col("d")).distinct())
-    }
+    val e = Components.cut(
+      dir0.union(dir0.select(col("d").as("s"), col("s").as("d")))
+        .filter(col("s") =!= col("d")).distinct())
 
     // forward: levels(k) = (src, node, sigma) settled at distance k
     val lvl0 = Components.cut(
@@ -131,12 +128,12 @@ object Betweenness {
     */
   private def localRun(
       spark: org.apache.spark.sql.SparkSession, es: Array[(Long, Long)],
-      sources: Seq[Long], maxLevels: Int, undirected: Boolean): DataFrame = {
+      sources: Seq[Long], maxLevels: Int): DataFrame = {
     import spark.implicits._
     val adj = new java.util.HashMap[Long, java.util.LinkedHashSet[Long]]()
     def add(a: Long, b: Long): Unit =
       if (a != b) adj.computeIfAbsent(a, _ => new java.util.LinkedHashSet[Long]()).add(b)
-    es.foreach { case (s, d) => add(s, d); if (undirected) add(d, s) }
+    es.foreach { case (s, d) => add(s, d); add(d, s) }
 
     val mc = java.math.MathContext.UNLIMITED
     val dep = new java.util.HashMap[Long, java.math.BigDecimal]()

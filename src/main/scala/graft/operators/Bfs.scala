@@ -34,12 +34,13 @@ object Bfs {
     */
   private val ReplayBound = 100000
 
-  /** (node, hop) for every node reachable from `source` within `maxHops`,
-    * hop = BFS distance (source itself at hop 0).
+  /** (node, hop) for every node reachable from `source` within `maxHops`
+    * over the edges read as undirected, hop = BFS distance (source itself
+    * at hop 0).
     */
   def run(
       edges: DataFrame, srcCol: String, dstCol: String, source: Long,
-      maxHops: Int = 64, undirected: Boolean = true): DataFrame = {
+      maxHops: Int = 64): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
     val spark = edges.sparkSession
     val e0 = edges.select(
@@ -50,7 +51,7 @@ object Bfs {
       val adjM = new java.util.HashMap[Long, java.util.ArrayList[Long]]()
       def add(a: Long, b: Long): Unit =
         if (a != b) adjM.computeIfAbsent(a, _ => new java.util.ArrayList[Long]()).add(b)
-      es.foreach { case (s, d) => add(s, d); if (undirected) add(d, s) }
+      es.foreach { case (s, d) => add(s, d); add(d, s) }
       val hops = new java.util.HashMap[Long, Long]()
       hops.put(source, 0L)
       var frontier = List(source)
@@ -74,8 +75,7 @@ object Bfs {
         .toSeq.map { case (n, h) => (n, h) }
       return spark.createDataFrame(rows).toDF("node", "hop")
     }
-    val adj = (if (undirected) e0.union(e0.select(col("d").as("s"), col("s").as("d")))
-      else e0)
+    val adj = e0.union(e0.select(col("d").as("s"), col("s").as("d")))
       .filter(col("s") =!= col("d"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

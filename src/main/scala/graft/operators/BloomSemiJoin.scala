@@ -68,10 +68,9 @@ object BloomSemiJoin {
       expectedKeys: Long, fpp: Double = 0.01): DataFrame =
     fact.filter(mightContain(dim, dimKey, expectedKeys, fpp)(col(factKey)))
 
-  /** The probe itself as a Column predicate over `dim`'s `dimKey` values —
-    * for callers that need MEMBERSHIP rather than a filter (e.g. counting
-    * out-of-vocabulary tokens): no false negatives, ≤ `fpp` false
-    * positives. Building it runs one distributed aggregate over `dim`.
+  /** The probe itself as a Column predicate over `dim`'s `dimKey` values:
+    * no false negatives, ≤ `fpp` false positives. Building it runs one
+    * distributed aggregate over `dim`.
     */
   def mightContain(dim: DataFrame, dimKey: String, expectedKeys: Long,
       fpp: Double = 0.01): Column => Column = {

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 object Cdc {
 
   /** Next snapshot after applying `changes` (same data columns as
-    * `snapshot` plus `opCol` ∈ {"I","U","D"}).
+    * `snapshot` plus `op` ∈ {"I","U","D"}).
     *
     * Semantics: D removes the key; I/U upsert the payload (an update to an
     * absent key inserts — upsert semantics; a delete of an absent key is a
@@ -25,13 +25,12 @@ object Cdc {
     * compaction — picking the latest pre-merge — is
     * [[Dedup.firstWriterWins]] on a sequence column upstream).
     */
-  def applyChanges(snapshot: DataFrame, changes: DataFrame, keys: Seq[String],
-      opCol: String = "op"): DataFrame = {
+  def applyChanges(snapshot: DataFrame, changes: DataFrame, keys: Seq[String]): DataFrame = {
     val touched = changes.select(keys.map(col): _*).distinct()
     val survivors = snapshot.join(touched, keys, "left_anti")
     val upserts = changes
-      .filter(col(opCol).isin("I", "U"))
-      .drop(opCol)
+      .filter(col("op").isin("I", "U"))
+      .drop("op")
     survivors.unionByName(upserts)
   }
 

@@ -215,14 +215,12 @@ object Components {
     * (AnnSpec). Same output contract: (id, cluster_id = component min).
     *
     * Non-convergence in `maxIters` rounds (pathological — the bound is
-    * O(log²n) worst case, single digits in practice) THROWS under
-    * `strict` (the default): a truncated edge set is a valid coarsening
-    * but NOT full components, and a stderr line is not a contract. Pass
-    * `strict = false` to accept the coarsening with a warning.
+    * O(log²n) worst case, single digits in practice) THROWS: a truncated
+    * edge set is a valid coarsening but NOT full components.
     */
   def largeStarSmallStar(
       pairs: DataFrame, srcCol: String, dstCol: String,
-      maxIters: Int = 50, strict: Boolean = true): DataFrame = {
+      maxIters: Int = 50): DataFrame = {
     // canonical (hi, lo) orientation, self-loops dropped
     val (edges0, nEdges0) = cutCounted(pairs
       .select(greatest(col(srcCol), col(dstCol)).as("hi"),
@@ -260,14 +258,10 @@ object Components {
       edges = next
       iter += 1
     }
-    if (!done) {
-      val msg = s"[Components] large-star/small-star did NOT converge in " +
-        s"$maxIters rounds — components may still be split; raise maxIters"
-      if (strict) throw new IllegalStateException(msg)
-      System.err.println(msg + " (strict = false: returning the coarsening)")
-    }
+    if (!done)
+      throw new IllegalStateException(s"[Components] large-star/small-star did NOT converge in " +
+        s"$maxIters rounds — components may still be split; raise maxIters")
     // converged: every non-root points straight at its component min
-    // (min-agg guards the contract even if maxIters cut convergence short)
     val roots = edges.groupBy(col("hi").as("id")).agg(min("lo").as("root"))
     val nodes = pairs.select(col(srcCol).as("id"))
       .union(pairs.select(col(dstCol).as("id")))

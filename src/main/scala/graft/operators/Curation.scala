@@ -81,28 +81,24 @@ object Curation {
     * Two stages: a per-source count aggregate (tiny — source cardinality,
     * not corpus; its total is a broadcast single-row cross join, no
     * driver collect), broadcast back onto the corpus, then one codegen'd
-    * filter. The corpus itself never shuffles. `gate` defaults to the
-    * q74 integer-scramble arithmetic replayable in any engine. Output =
-    * the kept rows plus their source's `source_keep_rate`.
+    * filter. The corpus itself never shuffles. The keep gate is the q74
+    * integer-scramble arithmetic, replayable in any engine. Output = the
+    * kept rows plus their source's `source_keep_rate`.
     *
-    * Gate resolution: the default gate has 1/10000 granularity, so the
-    * effective keep rate floors at ~1e-4 — a source so overrepresented
-    * (or a `maxShare` so small) that its computed rate falls below that
-    * keeps ~1e-4 of its rows, not the target share. If sub-1e-4 rates
-    * must be honored, pass a wider `gate` (e.g. the same scramble mod
-    * 10^8) — kept here at 10^4 because the q86 oracle replays this exact
-    * arithmetic.
+    * Gate resolution: the gate has 1/10000 granularity, so the effective
+    * keep rate floors at ~1e-4 — a source so overrepresented (or a
+    * `maxShare` so small) that its computed rate falls below that keeps
+    * ~1e-4 of its rows, not the target share. It stays at 10^4 because the
+    * q86 oracle replays this exact arithmetic.
     */
   def capSourceShare(
-      df: DataFrame, sourceCol: String, idCol: String, maxShare: Double,
-      gate: Column = null): DataFrame = {
+      df: DataFrame, sourceCol: String, idCol: String, maxShare: Double): DataFrame = {
     require(maxShare > 0.0 && maxShare <= 1.0, s"maxShare in (0,1], got $maxShare")
     // pmod, not %: Spark's % is sign-preserving, so a signed id column
     // (e.g. xxhash64-derived) would make the gate negative and those rows
     // bypass the cap entirely; pmod == % on non-negative ids, so the q86
     // oracle replay is unaffected (a signed-id oracle needs ((x%m)+m)%m)
-    val g = Option(gate).getOrElse(
-      pmod((col(idCol) % 100003L) * 53L + 11L, lit(10000L)).cast("double") / lit(10000.0))
+    val g = pmod((col(idCol) % 100003L) * 53L + 11L, lit(10000L)).cast("double") / lit(10000.0)
     val counts = df.groupBy(sourceCol).agg(count(lit(1)).as("__n"))
     val rates = counts
       .crossJoin(broadcast(counts.agg(sum("__n").as("__total"))))

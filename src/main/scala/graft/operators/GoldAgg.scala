@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.Exact
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -20,19 +19,14 @@ object GoldAgg {
     * the medallion's gold write two more jobs, and nothing reads gold by
     * file order). Output year/month column names are parameterized so both
     * the TPC-H query surface (o_year/o_month) and the medallion gold mart
-    * share one implementation.
+    * share one implementation. It is [[monthlySpendState]] finished in
+    * place: one aggregate, one arithmetic.
     */
   def monthlySpend(
       fact: DataFrame, dateCol: String, amountCol: String,
       yearName: String = "o_year", monthName: String = "o_month"): DataFrame =
-    fact
-      .groupBy(
-        year(col(dateCol)).as(yearName),
-        month(col(dateCol)).as(monthName))
-      .agg(
-        Exact.sumD(col(amountCol)).as("total_spend"),
-        Exact.avgD(col(amountCol)).as("avg_spend"),
-        count(lit(1)).as("n_rows"))
+    finish(monthlySpendState(fact, dateCol, amountCol, yearName, monthName),
+      yearName, monthName)
 
   /** Incremental-maintenance form of [[monthlySpend]]: per-batch partial
     * state `(year, month, total_dec, n_rows)` with the total carried as
@@ -64,16 +58,19 @@ object GoldAgg {
       .agg(sum(col("total_dec")).as("total_dec"),
         sum(col("n_vals")).as("n_vals"), sum(col("n_rows")).as("n_rows"))
 
-  /** Publish a monthly state with [[monthlySpend]]'s exact output schema
-    * and arithmetic (decimal total cast to double; avg = that double over
-    * the count — the same formula `Exact.avgD` evaluates).
-    */
+  /** Publish a monthly state as [[monthlySpend]] does, in month order. */
   def finishMonthly(state: DataFrame,
       yearName: String = "o_year", monthName: String = "o_month"): DataFrame =
+    finish(state, yearName, monthName).orderBy(yearName, monthName)
+
+  /** Monthly state → (year, month, total_spend, avg_spend, n_rows): the
+    * decimal total cast to double, avg = that double over the non-null
+    * count (the formula `Exact.avgD` evaluates).
+    */
+  private def finish(state: DataFrame, yearName: String, monthName: String): DataFrame =
     state.select(
       col(yearName), col(monthName),
       col("total_dec").cast("double").as("total_spend"),
       (col("total_dec").cast("double") / col("n_vals")).cast("double").as("avg_spend"),
       col("n_rows"))
-      .orderBy(yearName, monthName)
 }

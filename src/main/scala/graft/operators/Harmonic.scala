@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, S
   * contracted/analytics graphs (the ≤ |nations|² trade net, cluster
   * summaries), and for corpus-scale graphs the standard move is to run
   * the same frontier loop from a SAMPLED source set (the
-  * pivot/HyperBall family) — the `sources` parameter takes that subset.
+  * pivot/HyperBall family) — the estimator mode past `maxExactNodes`.
   * Per round: one join frontier⋈neighbors, one distinct, one anti join
   * against visited — all key-partitioned; per-round lineage cut via
   * [[Components.cutCounted]], whose count is the termination scalar
@@ -28,8 +28,8 @@ object Harmonic {
 
   /** Node-count bound above which an implicit all-sources run switches to
     * the sampled-pivot estimator — exact Θ(V²) pair state must be an
-    * EXPLICIT choice (pass `sources` = all nodes) on large graphs, never
-    * the silent default.
+    * EXPLICIT choice (raise `maxExactNodes`) on large graphs, never the
+    * silent default.
     */
   val MaxExactNodes = 4096L
 
@@ -43,63 +43,44 @@ object Harmonic {
     * BFS layers plus a serial replay of the fixed-point 1/d quantization
     * ([[graft.expressions.FixedPointSumAgg]] at scale 15) and the
     * round-12 finish — bit-identical to the distributed aggregate.
-    * Applies to the exact and explicit-sources modes; the pivot-ESTIMATOR
-    * mode stays distributed (its xxhash64 source sampling is plan-side).
+    * Applies to the exact mode; the pivot-ESTIMATOR mode stays
+    * distributed (its xxhash64 source sampling is plan-side).
     */
   private val ReplayBound = 100000
 
   /** (node, n_reached, harmonic) per source node, harmonic rounded at
     * 12 dp from fixed-point 1/d sums. `und`: undirected edges (uCol <
-    * vCol, deduplicated). `sources`: optional one-column frame limiting
-    * the BFS sources; None = every node when |V| ≤ `maxExactNodes`,
-    * otherwise the deterministic sampled-pivot ESTIMATOR (BFS from the
-    * `SamplePivots` nodes with smallest xxhash64, per-node estimate
-    * scaled by (n−1)/m over distances TO the pivots — exact d(p,v) by
-    * undirected symmetry; n_reached = pivots reaching v).
+    * vCol, deduplicated). Every node is a BFS source when
+    * |V| ≤ `maxExactNodes`; otherwise the deterministic sampled-pivot
+    * ESTIMATOR runs (BFS from the `SamplePivots` nodes with smallest
+    * xxhash64, per-node estimate scaled by (n−1)/m over distances TO the
+    * pivots — exact d(p,v) by undirected symmetry; n_reached = pivots
+    * reaching v).
     */
   def run(und: DataFrame, uCol: String = "u", vCol: String = "v",
-      maxHops: Int = 8, sources: Option[DataFrame] = None,
-      maxExactNodes: Long = MaxExactNodes): DataFrame = {
+      maxHops: Int = 8, maxExactNodes: Long = MaxExactNodes): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
 
-    // explicit sources must be bounded too — the replay collects both
-    val replayInputs = und.select(col(uCol), col(vCol)) +:
-      sources.toSeq.map(sd => sd.select(col(sd.columns.head)).distinct())
-    DriverReplay.probeAll(replayInputs, ReplayBound).foreach { rows =>
-      val probe = rows.head
+    DriverReplay.probe(und.select(col(uCol), col(vCol)), ReplayBound).foreach { probe =>
       val es = probe.map(r => (r.get(0), r.get(1)))
       val nodes: Array[Any] = (es.map(_._1) ++ es.map(_._2)).distinct
-      val seeds: Option[Array[Any]] = rows.lift(1) match {
-        case Some(sp) =>
-          val inGraph = nodes.toSet
-          Some(sp.map(_.get(0)).distinct.filter(inGraph.contains))
-        case None if nodes.length <= maxExactNodes => Some(nodes)
-        case None => None // pivot-estimator mode: distributed path below
-      }
-      seeds.foreach { sd =>
-        return runLocal(und.sparkSession, es, nodes, sd, maxHops,
+      // past maxExactNodes: pivot-estimator mode, distributed path below
+      if (nodes.length <= maxExactNodes)
+        return runLocal(und.sparkSession, es, nodes, maxHops,
           if (probe.isEmpty) StringType else probe.head.schema.fields(0).dataType)
-      }
     }
 
     val nb = und.select(col(uCol).as("node"), col(vCol).as("nbr"))
       .unionByName(und.select(col(vCol).as("node"), col(uCol).as("nbr")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val allNodes = nb.select("node").distinct()
-    var sampledN = -1L // > 0 ⇒ pivot-estimator mode, value = |V|
-    val srcs = sources match {
-      case None =>
-        val nCount = allNodes.count()
-        if (nCount <= maxExactNodes) allNodes
-        else {
-          sampledN = nCount
-          // deterministic pivots: the m smallest (hash, node) — seeded by
-          // the hash function itself, stable across runs and partitions
-          allNodes.orderBy(xxhash64(col("node")), col("node")).limit(SamplePivots)
-        }
-      case Some(sd) =>
-        sd.select(col(sd.columns.head).as("node")).distinct().join(allNodes, "node")
-    }
+    val nCount = allNodes.count()
+    val estimate = nCount > maxExactNodes
+    val srcs =
+      if (!estimate) allNodes
+      // deterministic pivots: the m smallest (hash, node) — seeded by
+      // the hash function itself, stable across runs and partitions
+      else allNodes.orderBy(xxhash64(col("node")), col("node")).limit(SamplePivots)
     var visited = Components.cut(
       srcs.select(col("node").as("src"), col("node"), lit(0).as("dist")))
     var frontier = visited
@@ -119,10 +100,10 @@ object Harmonic {
           frontier = next
         }
       }
-      if (sampledN > 0) {
+      if (estimate) {
         // pivot estimator: aggregate by DESTINATION — d(p,v) = d(v,p) on
         // an undirected graph — and scale by (n−1)/m
-        val scale = (sampledN - 1).toDouble / SamplePivots.toDouble
+        val scale = (nCount - 1).toDouble / SamplePivots.toDouble
         visited
           .filter(col("dist") > 0)
           .groupBy(col("node"))
@@ -153,8 +134,7 @@ object Harmonic {
     */
   private def runLocal(
       spark: org.apache.spark.sql.SparkSession,
-      es: Array[(Any, Any)], nodes: Array[Any], seeds: Array[Any],
-      maxHops: Int,
+      es: Array[(Any, Any)], nodes: Array[Any], maxHops: Int,
       nodeType: DataType): DataFrame = {
     val adj = new java.util.HashMap[Any, java.util.ArrayList[Any]]()
     def add(a: Any, b: Any): Unit =
@@ -171,7 +151,7 @@ object Harmonic {
       java.math.BigDecimal.valueOf(x).setScale(12, java.math.RoundingMode.HALF_UP)
         .doubleValue()
 
-    val out = seeds.iterator.map { src =>
+    val out = nodes.iterator.map { src =>
       val dist = new java.util.HashMap[Any, Int]()
       dist.put(src, 0)
       var frontier = List[Any](src)

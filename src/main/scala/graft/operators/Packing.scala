@@ -27,11 +27,11 @@ object Packing {
 
   /** Adds `out` = exclusive prefix sum of `valueCol` (cast to long) in
     * ascending `orderCol` order. `orderCol` values must be unique (ties
-    * would make the total order, and so the sum, ambiguous).
+    * would make the total order, and so the sum, ambiguous). The scan is
+    * `spark.sql.shuffle.partitions` wide.
     */
-  def prefixSum(df: DataFrame, orderCol: String, valueCol: String, out: String,
-      numPartitions: Int = 0): DataFrame =
-    prefixSumBy(df, Seq(orderCol), valueCol, out, numPartitions)
+  def prefixSum(df: DataFrame, orderCol: String, valueCol: String, out: String): DataFrame =
+    prefixSumBy(df, Seq(orderCol), valueCol, out)
 
   /** [[prefixSum]] over a composite order key: ascending lexicographic
     * (orderCols...) order, which must be duplicate-free as a TUPLE — this
@@ -39,8 +39,8 @@ object Packing {
     * deterministic total order by appending a unique tiebreaker.
     */
   def prefixSumBy(df: DataFrame, orderCols: Seq[String], valueCol: String,
-      out: String, numPartitions: Int = 0): DataFrame =
-    prefixSumByWithTotal(df, orderCols, valueCol, out, numPartitions)._1
+      out: String): DataFrame =
+    prefixSumByWithTotal(df, orderCols, valueCol, out)._1
 
   /** As [[prefixSumBy]], but also returns the grand total of `valueCol` —
     * read off the per-partition counts the scan already collected for its
@@ -51,10 +51,9 @@ object Packing {
     * pass.
     */
   def prefixSumByWithTotal(df: DataFrame, orderCols: Seq[String], valueCol: String,
-      out: String, numPartitions: Int = 0): (DataFrame, Long) = {
+      out: String): (DataFrame, Long) = {
     require(orderCols.nonEmpty, "prefixSumBy needs at least one order column")
-    val n = if (numPartitions > 0) numPartitions
-      else df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val parted = Components.cut(df
       .repartitionByRange(n, orderCols.map(col): _*)
       .sortWithinPartitions(orderCols.head, orderCols.tail: _*)

@@ -13,11 +13,7 @@ import org.apache.spark.sql.functions._
   * `df.sample`, which is fraction-based, partitioning-dependent, and
   * non-replayable). The selection rides [[graft.functions.TopKAgg]]: each
   * partition's partial carries at most n candidates, so the exchange is
-  * O(partitions·n) instead of a corpus sort. For n large enough that
-  * partitions·n itself hurts, `treeGroups = g` inserts a seeded group
-  * level — per-group top-n, then a final merge of g·n candidates — so no
-  * single task ever sees more than max(P·n/g, g·n) candidates (g ≈ √P
-  * balances the levels).
+  * O(partitions·n) instead of a corpus sort.
   *
   * [[rankBins]] assigns each row its global rank-based bin (decile,
   * percentile, ...) under a total order — the "quality bucketing" step of
@@ -30,40 +26,17 @@ object Sampling {
   /** Exactly `min(n, |df|)` rows of `df`, chosen as the n smallest seeded
     * scrambles of `idCol` (non-negative, unique). Deterministic for a
     * given (corpus, seed) and replayable as
-    * `ORDER BY scramble(id), id LIMIT n` — the tree shape does not change
+    * `ORDER BY scramble(id), id LIMIT n` — the partitioning does not change
     * membership, because TopKAgg's (score, id) comparator is a total order.
-    *
-    * `treeGroups` is the escalation for large n·partitions: the direct
-    * path's final merge is one task receiving one bounded partial per map
-    * partition (P·n candidates). With `treeGroups = g > 1`, a first level
-    * computes the top-n WITHIN each of g seeded groups (the global top-n is
-    * a subset of the union of group top-ns, since each group's global
-    * members are ≤ n and survive their own group's cut), and the final task
-    * merges only g·n candidates. Set g ≈ √P so both levels are bounded by
-    * √P·n. Leave 1 for sampling-sized n, where the direct merge is cheaper
-    * than an extra shuffle.
     */
-  def sampleExactN(df: DataFrame, idCol: String, n: Int, seed: Long,
-      treeGroups: Int = 1): DataFrame = {
+  def sampleExactN(df: DataFrame, idCol: String, n: Int, seed: Long): DataFrame = {
     require(n > 0, s"sample size must be positive, got $n")
-    require(treeGroups >= 1, s"treeGroups must be >= 1, got $treeGroups")
     val topkFn = graft.functions.TopKAgg.topK(n)
     // TopKAgg keeps the HIGHEST scores: negate the scramble so "n smallest
     // scrambles" is the kept set; scrambles are < 2^30, exact in a double
     val scored = df
       .select(col(idCol), (-Sharding.scramble(col(idCol), seed).cast("double")).as("__neg"))
-    val candidates =
-      if (treeGroups == 1) scored
-      else scored
-        // independent scramble (re-seeded) for the group split, so group
-        // membership is uncorrelated with the selection order
-        .withColumn("__g",
-          pmod(Sharding.scramble(col(idCol), seed ^ 0x5851f42d4c957f2dL), lit(treeGroups)))
-        .groupBy("__g")
-        .agg(topkFn(col("__neg"), col(idCol)).as("top"))
-        .select(explode(col("top")).as("t"))
-        .select(col("t.id").as(idCol), col("t.score").as("__neg"))
-    val picked = candidates
+    val picked = scored
       .agg(topkFn(col("__neg"), col(idCol)).as("top"))
       .select(explode(col("top")).as("t"))
       .select(col("t.id").as(idCol))
@@ -80,33 +53,23 @@ object Sampling {
     * Inclusion probability is proportional-to-weight without replacement —
     * the quality-weighted corpus subsample that doesn't need a global
     * sort: selection rides the same bounded [[graft.functions.TopKAgg]]
-    * partials as [[sampleExactN]] (O(partitions·n) exchange, optional
-    * `treeGroups` escalation), never ORDER BY ... LIMIT over the corpus.
+    * partials as [[sampleExactN]] (O(partitions·n) exchange), never
+    * ORDER BY ... LIMIT over the corpus.
     *
     * Priorities are rounded to 12 dp BEFORE selection (ties broken by id)
     * so the last-ulp of two engines' `ln` cannot flip membership. Rows
     * with weight ≤ 0 are excluded by contract (weight 0 = never drawn).
     */
   def sampleWeighted(df: DataFrame, idCol: String, weightCol: String, n: Int,
-      seed: Long, treeGroups: Int = 1): DataFrame = {
+      seed: Long): DataFrame = {
     require(n > 0, s"sample size must be positive, got $n")
-    require(treeGroups >= 1, s"treeGroups must be >= 1, got $treeGroups")
     val topkFn = graft.functions.TopKAgg.topK(n)
     val u = (Sharding.scramble(col(idCol), seed).cast("double") + 1.0) / 1000000008.0
     val scored = df
       .filter(col(weightCol) > 0)
       .select(col(idCol),
         round(log(u) / col(weightCol).cast("double"), 12).as("__pri"))
-    val candidates =
-      if (treeGroups == 1) scored
-      else scored
-        .withColumn("__g",
-          pmod(Sharding.scramble(col(idCol), seed ^ 0x5851f42d4c957f2dL), lit(treeGroups)))
-        .groupBy("__g")
-        .agg(topkFn(col("__pri"), col(idCol)).as("top"))
-        .select(explode(col("top")).as("t"))
-        .select(col("t.id").as(idCol), col("t.score").as("__pri"))
-    val picked = candidates
+    val picked = scored
       .agg(topkFn(col("__pri"), col(idCol)).as("top"))
       .select(explode(col("top")).as("t"))
       .select(col("t.id").as(idCol))

@@ -37,14 +37,15 @@ object Sssp {
   private val ReplayBound = 100000
 
   /** (node, dist) for every node reachable from `source` within `rounds`
-    * edges; dist = exact min-weight path (source at 0.0). Unreachable
+    * edges, read as undirected; dist = exact min-weight path (source at
+    * 0.0). Unreachable
     * nodes are absent. A null weight is an unknown length: `min` skips it
     * like SQL's aggregate does, so a node reached only over null-weight
     * edges is present with a null dist.
     */
   def run(
       edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
-      source: Long, rounds: Int = 8, undirected: Boolean = true): DataFrame = {
+      source: Long, rounds: Int = 8): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val spark = edges.sparkSession
     val e0 = edges.select(
@@ -61,7 +62,7 @@ object Sssp {
         (a ++ b).reduceOption((x: Double, y: Double) => math.min(x, y))
       val raw = probe.map(r =>
         (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) None else Some(r.getDouble(2))))
-      val both = if (undirected) raw ++ raw.map(t => (t._2, t._1, t._3)) else raw
+      val both = raw ++ raw.map(t => (t._2, t._1, t._3))
       // parallel edges: keep the lightest (min is order-free)
       val adjM = scala.collection.mutable.Map.empty[(Long, Long), Option[Double]]
       both.foreach { case (s, d, w) =>
@@ -82,8 +83,7 @@ object Sssp {
       }
       return spark.createDataFrame(dist.toSeq).toDF("node", "dist")
     }
-    val adj = (if (undirected) e0.union(e0.select(col("d").as("s"), col("s").as("d"), col("w")))
-      else e0)
+    val adj = e0.union(e0.select(col("d").as("s"), col("s").as("d"), col("w")))
       .filter(col("s") =!= col("d"))
       // parallel edges: only the lightest can ever win a relaxation
       .groupBy("s", "d").agg(min(col("w")).as("w"))

@@ -469,7 +469,7 @@ object DedupQueries {
     * broadcastable by AQE; if the eval set ever outgrows broadcast, the
     * semi join is the same one-shuffle-each-side hash join every dedup
     * query here rides, and [[graft.operators.BloomSemiJoin]] slots in as
-    * the ≤fpp-overcount prefilter (the q54 `useBloom` gear).
+    * the ≤fpp-overcount prefilter.
     */
   def contaminationReport(docs: org.apache.spark.sql.DataFrame,
       k: Int = 8, evalMod: Int = 11): org.apache.spark.sql.DataFrame = {

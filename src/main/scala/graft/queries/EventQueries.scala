@@ -583,10 +583,10 @@ object EventQueries {
     * watermark passes it (the shape that survives an unbounded stream,
     * where Complete's full-state rewrite per batch does not) — using the
     * sentinel watermark flush ([[graft.streaming.StreamOps
-    * .sessionAggAppend]]): data batch, then a sentinel batch advancing
-    * the watermark past every real session, then Spark's trailing
-    * no-data batch flushing them to the sink. Hash-compared against the
-    * SAME gaps-and-islands oracle as q97: Append + sentinel must
+    * .sessionAggAppend]]): one data batch carrying a sentinel that
+    * advances the watermark past every real session, then Spark's
+    * trailing no-data batch flushing them to the sink. Hash-compared
+    * against the SAME gaps-and-islands oracle as q97: Append + sentinel must
     * reconstruct the exact batch answer, held-back-session bugs fail the
     * row count and re-emission bugs fail the hash.
     */
@@ -631,31 +631,32 @@ object EventQueries {
     * broadcast (|event types|² rows). The per-user partitioning is the
     * scale story: no global sort, skew bounded by the busiest user.
     */
-  /** `materialize = false` keeps the whole pipeline in one lazy plan so
-    * PlanShapeSpec can pin the per-user window; the production default
-    * cuts the tiny transition-count frame so the denominator aggregate
-    * doesn't re-run the event-log window pass (Catalyst does not share
-    * subtrees).
-    */
-  def eventTransitions(events: org.apache.spark.sql.DataFrame,
-      materialize: Boolean = true): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val steps = events
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("prev_type", lag("event_type", 1).over(w))
-      .filter(col("prev_type").isNotNull)
-    val countsRaw = steps
-      .groupBy(col("prev_type"), col("event_type").as("next_type"))
-      .agg(count(lit(1)).as("n"))
-    val counts =
-      if (materialize) graft.operators.Components.cut(countsRaw) else countsRaw
+  def eventTransitions(events: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    // cut the tiny count frame so the denominator aggregate doesn't re-run
+    // the event-log window pass (Catalyst does not share subtrees)
+    val counts = graft.operators.Components.cut(transitionCounts(events))
     val totals = counts.groupBy("prev_type").agg(sum("n").as("n_prev"))
     counts
       .join(broadcast(totals), "prev_type")
       .select(col("prev_type"), col("next_type"), col("n"),
         round(col("n").cast("double") / col("n_prev").cast("double"), 12).as("p"))
       .orderBy("prev_type", "next_type")
+  }
+
+  /** (prev_type, next_type, n) over per-user event sequences, as one lazy
+    * plan — the per-user window PlanShapeSpec pins, which the cut in
+    * [[eventTransitions]] executes before any explain could show it.
+    */
+  private[graft] def transitionCounts(
+      events: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    events
+      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+      .withColumn("prev_type", lag("event_type", 1).over(w))
+      .filter(col("prev_type").isNotNull)
+      .groupBy(col("prev_type"), col("event_type").as("next_type"))
+      .agg(count(lit(1)).as("n"))
   }
 
   private val q106 = GraftQuery(
@@ -1259,9 +1260,9 @@ object EventQueries {
     * .clickPurchaseJoinOuter]]): the streaming interval join that also
     * emits every purchase with NO preceding-hour click, as a null-extended
     * row — run for real with the double-sided sentinel watermark flush
-    * ([[graft.streaming.StreamOps.clickPurchaseOuterDrain]]: data batch,
-    * then one far-future click + purchase advancing BOTH branch
-    * watermarks, then the trailing no-data batch null-flushing the
+    * ([[graft.streaming.StreamOps.clickPurchaseOuterDrain]]: one data
+    * batch carrying a far-future click + purchase that advance BOTH
+    * branch watermarks, then the trailing no-data batch null-flushing the
     * unmatched state). Hash-compared against DuckDB's batch LEFT JOIN:
     * held-back outer rows fail the row count, re-emissions fail the hash.
     * On this corpus most purchases are unmatched, so the outer path — the

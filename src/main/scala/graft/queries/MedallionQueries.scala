@@ -516,7 +516,7 @@ object MedallionQueries {
       graft.streaming.StreamingCdcLoad.run(
         s, staged, root, keys = Seq("c_custkey"), seqCol = "seq",
         checkpointDir = ckpt)
-      val (_, snapDir) = graft.streaming.StreamingCdcLoad.latest(s, root).get
+      val (_, snapDir) = graft.pipeline.Versions.latest(s, root).get
       Tables.parquet(s, snapDir).orderBy("c_custkey")
     },
     Some("""SELECT c_custkey, 'V' || c_name AS c_name

@@ -1269,14 +1269,14 @@ object SimilarityQueries {
     Some {
       val rounds = (1 until KcRounds).map { j =>
         val prev = if (j == 1) "prev1" else s"prev$j"
-        s"""s$j AS (SELECT vec_id, embedding, dist FROM (
+        s"""s$j AS MATERIALIZED (SELECT vec_id, embedding, dist FROM (
              SELECT e.vec_id, e.embedding,
                     min(round(1.0 - (${cosSql("e.embedding", "p.embedding")}), 12)) AS dist
              FROM embeddings e CROSS JOIN $prev p
              WHERE e.vec_id NOT IN (SELECT vec_id FROM $prev)
              GROUP BY e.vec_id, e.embedding)
            ORDER BY dist DESC, vec_id LIMIT 1),
-           prev${j + 1} AS (SELECT vec_id, embedding FROM $prev
+           prev${j + 1} AS MATERIALIZED (SELECT vec_id, embedding FROM $prev
                             UNION ALL SELECT vec_id, embedding FROM s$j)"""
       }.mkString(",\n")
       val unions = (1 until KcRounds)

@@ -226,40 +226,15 @@ object TextQueries {
     * fastText convention) + per-document out-of-vocabulary rate — the
     * tokenizer-health metric every ingestion pipeline tracks.
     * Frequency-threshold membership is fully distributive (one word-count
-    * shuffle with map-side partials, no top-k tie ambiguity).
-    *
-    * Membership probe, two gears:
-    *  - `useBloom = false` (exact): the vocab broadcast-left-joins onto
-    *    the exploded corpus.
-    *  - `useBloom = true` (scale path, for a vocab too large to
-    *    broadcast): membership is a [[graft.operators.BloomSemiJoin
-    *    .BloomMightContain]] probe over the vocab keys — the sketch is
-    *    ~1.2 MB per million keys at 1% fpp where a broadcast relation
-    *    would be hundreds of MB, and the probe runs inside whole-stage
-    *    codegen with NO join on the token stream at all. One-sided error
-    *    by construction (no false negatives): a ≤fpp fraction of
-    *    true-OOV tokens passes as in-vocab, so `n_oov`/`oov_frac` can
-    *    only UNDERcount, never overcount — the safe direction for an
-    *    alerting metric. VocabOov spec pins both the equality at fpp→0
-    *    and the error direction.
+    * shuffle with map-side partials, no top-k tie ambiguity); the vocab
+    * broadcast-left-joins onto the exploded corpus.
     */
-  def vocabOov(docs: DataFrame, minCount: Long = 5, useBloom: Boolean = false,
-      fpp: Double = 0.01): DataFrame = {
+  def vocabOov(docs: DataFrame, minCount: Long = 5): DataFrame = {
     val occ = docs.select(col("doc_id"), explode(tokens(col("text"))).as("word"))
     val vocab = occ.groupBy("word").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= minCount)
-    val withIn =
-      if (useBloom) {
-        // size the filter from the actual key count (tiny job over the
-        // already-aggregated vocab — NOT the token stream)
-        val nKeys = math.max(vocab.count(), 1L)
-        val probe = graft.operators.BloomSemiJoin
-          .mightContain(vocab.select("word"), "word", nKeys, fpp)
-        occ.withColumn("__in", when(probe(col("word")), lit(1)))
-      } else
-        occ.join(broadcast(vocab.select(col("word"), lit(1).as("__in"))),
-          Seq("word"), "left")
-    withIn
+    occ.join(broadcast(vocab.select(col("word"), lit(1).as("__in"))),
+        Seq("word"), "left")
       .groupBy("doc_id")
       .agg(
         count(lit(1)).as("n_tokens"),

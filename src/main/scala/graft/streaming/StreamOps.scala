@@ -125,15 +125,14 @@ object StreamOps {
     * Scale (round 12): the data batch stages as ~1 part file per million
     * rows, written in parallel and drained as ONE micro-batch
     * (`maxFilesPerTrigger` = the written part count — identical watermark
-    * progression to the legacy single-file staging), and `statePartitions
-    * = 0` sizes the state store from the drained row count
-    * ([[statePartitionsFor]]) — together these closed q101's
-    * super-linear ×100 reading (327 s: a single coalesce(1) writer
-    * thread on 10 M rows plus an 8-partition state store on 32 cores).
+    * progression to the legacy single-file staging), and the state store
+    * sizes from the drained row count ([[statePartitionsFor]]) — together
+    * these closed q101's super-linear ×100 reading (327 s: a single
+    * coalesce(1) writer thread on 10 M rows plus an 8-partition state
+    * store on 32 cores).
     * The row count rides the same scan as max(ts).
     */
-  def sessionAggAppend(spark: SparkSession, events: DataFrame, scratchDir: String,
-      sentinelUser: Long = Long.MinValue, statePartitions: Int = 0): DataFrame = {
+  def sessionAggAppend(spark: SparkSession, events: DataFrame, scratchDir: String): DataFrame = {
     val data = events.select(
       col("user_id").cast("long").as("user_id"),
       col("ts").cast("timestamp").as("ts"),
@@ -147,19 +146,18 @@ object StreamOps {
     val sentinelTs = new java.sql.Timestamp(
       maxTs.getTime + (90 + 10) * 60 * 1000L)
     val sentinel = data.sparkSession.createDataFrame(
-      java.util.List.of(org.apache.spark.sql.Row(sentinelUser, sentinelTs, 0.0)),
+      java.util.List.of(org.apache.spark.sql.Row(SentinelUser, sentinelTs, 0.0)),
       data.schema)
-    val (staged, dataParts) = stageOrderedParts(scratchDir, Seq(
-      (data.unionByName(sentinel), "000_data", stagingParts(nRows))))
+    val staged = s"$scratchDir/staged"
+    val dataParts = stageParts(staged, data.unionByName(sentinel), stagingParts(nRows))
     runAvailableNow(
       spark,
       s2 => sessionAgg(s2.readStream
         .schema(data.schema)
         .option("maxFilesPerTrigger", dataParts.toString)
         .parquet(staged)),
-      "s_append_sessions", OutputMode.Append(),
-      if (statePartitions > 0) statePartitions else statePartitionsFor(nRows))
-      .filter(col("user_id") =!= sentinelUser)
+      "s_append_sessions", OutputMode.Append(), statePartitionsFor(nRows))
+      .filter(col("user_id") =!= SentinelUser)
   }
 
   /** Part-file count for staging a drain's data batch: one per million
@@ -181,51 +179,27 @@ object StreamOps {
     */
   def statePartitionsFor(nRows: Long): Int = if (nRows >= 2000000L) 32 else 8
 
-  /** Stage frames under `scratchDir/staged` in sequence order: frame k
-    * lands as `parts_k` parquet files sharing one pinned modification
-    * time, 60 s after frame k−1's — the file source orders batches by
-    * modification time, so a sentinel can never land in, or before, the
-    * data batch. A drain sets `maxFilesPerTrigger` to the FIRST
-    * frame's part count so the whole data frame is one micro-batch and
-    * each later (single-part) frame its own — which is why every frame
-    * after the first must stage as exactly one part unless everything is
-    * single-part: a wider trigger would otherwise merge two later frames
-    * into one batch. Returns (stagedDir, firstFrameParts).
+  /** The reserved user id of the drain sentinels: far below any real id,
+    * so a sentinel can never share a session or a join key with real data.
     */
-  private def stageOrderedParts(scratchDir: String,
-      batches: Seq[(DataFrame, String, Int)]): (String, Int) = {
-    require(batches.head._3 == 1 || batches.tail.forall(_._3 == 1),
-      "multi-part staging is only ordered for (data, sentinel...) shapes")
-    import java.nio.file.{Files, Paths}
+  private val SentinelUser = Long.MinValue
+
+  /** Stage `df` (a drain's data plus its sentinels) as `parts` parquet
+    * files in the directory `staged`. A drain sets `maxFilesPerTrigger` to
+    * the returned count, so the whole frame is ONE micro-batch. The count
+    * is of the files WRITTEN, which can undershoot `parts` (empty
+    * partitions emit no file).
+    */
+  private def stageParts(staged: String, df: DataFrame, parts: Int): Int = {
     import scala.jdk.CollectionConverters._
-    val staged = Paths.get(scratchDir, "staged")
-    Files.createDirectories(staged)
-    val t0 = System.currentTimeMillis()
-    val actualParts = batches.zipWithIndex.map { case ((df, name, parts), i) =>
-      val tmp = Paths.get(scratchDir, s"tmp_$name")
-      (if (parts == 1) df.coalesce(1) else df.repartition(parts))
-        .write.mode("overwrite").parquet(tmp.toString)
-      val listing = Files.list(tmp)
-      val found =
-        try listing.iterator().asScala.toSeq
-          .filter(_.toString.endsWith(".parquet"))
-          .sortBy(_.getFileName.toString)
-        finally listing.close()
-      require(found.nonEmpty, s"no parquet in $tmp")
-      found.zipWithIndex.foreach { case (part, j) =>
-        val target = staged.resolve(f"${name}_$j%03d.parquet")
-        Files.move(part, target,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(target,
-          java.nio.file.attribute.FileTime.fromMillis(
-            t0 - (batches.size - 1 - i) * 60000L))
-      }
-      found.size
-    }
-    // the WRITTEN count can undershoot the requested parts (empty
-    // partitions emit no file) — the trigger width must match the files
-    // on disk or the first batch would swallow a later frame
-    (staged.toString, actualParts.head)
+    (if (parts == 1) df.coalesce(1) else df.repartition(parts))
+      .write.mode("overwrite").parquet(staged)
+    val listing = java.nio.file.Files.list(java.nio.file.Paths.get(staged))
+    val written =
+      try listing.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
+      finally listing.close()
+    require(written > 0, s"no parquet in $staged")
+    written
   }
 
   /** Per-user running totals via custom state — the escape hatch for
@@ -407,8 +381,7 @@ object StreamOps {
     * `events` is the BATCH frame (event_id, user_id, event_type, ts).
     */
   def clickPurchaseOuterDrain(spark: SparkSession, events: DataFrame,
-      scratchDir: String, sentinelUser: Long = Long.MinValue,
-      statePartitions: Int = 0): DataFrame = {
+      scratchDir: String): DataFrame = {
     val data = events.select(
       col("event_id").cast("long").as("event_id"),
       col("user_id").cast("long").as("user_id"),
@@ -424,11 +397,11 @@ object StreamOps {
     // parallel staging + count-sized state store: see sessionAggAppend
     val sentinels = data.sparkSession.createDataFrame(
       java.util.List.of(
-        org.apache.spark.sql.Row(-1L, sentinelUser, "click", sentinelTs),
-        org.apache.spark.sql.Row(-2L, sentinelUser, "purchase", sentinelTs)),
+        org.apache.spark.sql.Row(-1L, SentinelUser, "click", sentinelTs),
+        org.apache.spark.sql.Row(-2L, SentinelUser, "purchase", sentinelTs)),
       data.schema)
-    val (staged, dataParts) = stageOrderedParts(scratchDir, Seq(
-      (data.unionByName(sentinels), "000_data", stagingParts(nRows))))
+    val staged = s"$scratchDir/staged"
+    val dataParts = stageParts(staged, data.unionByName(sentinels), stagingParts(nRows))
     runAvailableNow(
       spark,
       s2 => {
@@ -440,9 +413,8 @@ object StreamOps {
           src.filter(col("event_type") === "purchase"),
           src.filter(col("event_type") === "click"))
       },
-      "s_louter_join", OutputMode.Append(),
-      if (statePartitions > 0) statePartitions else statePartitionsFor(nRows))
-      .filter(col("user_id") =!= sentinelUser)
+      "s_louter_join", OutputMode.Append(), statePartitionsFor(nRows))
+      .filter(col("user_id") =!= SentinelUser)
   }
 
   /** Streaming exact dedup: at-least-once sources re-deliver, so drop

@@ -23,20 +23,13 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingCdcLoad {
 
-  /** (version, dir) of the current snapshot, if any batch has committed.
-    * See [[graft.pipeline.Versions.latest]] for the torn-marker fallback
-    * contract.
-    */
-  def latest(spark: SparkSession, root: String): Option[(Long, String)] =
-    Versions.latest(spark, root)
-
-  /** Apply one change batch; returns true if applied, false if `batchId`
+  /** Apply one change batch (`op` ∈ {"I","U","D"}, see
+    * [[Cdc.applyChanges]]); returns true if applied, false if `batchId`
     * was already committed (replay after failure — skipped).
     */
   def applyBatch(spark: SparkSession, changes: DataFrame, root: String,
-      keys: Seq[String], seqCol: String, opCol: String = "op",
-      batchId: Long = 0L): Boolean = {
-    val current = latest(spark, root)
+      keys: Seq[String], seqCol: String, batchId: Long = 0L): Boolean = {
+    val current = Versions.latest(spark, root)
     if (current.exists(_._1 >= batchId)) {
       // normal only for a genuine foreachBatch replay (same checkpoint).
       // A restart with a CLEARED checkpoint restarts batch ids at 0 and
@@ -53,9 +46,9 @@ object StreamingCdcLoad {
       changes, keys, Seq(col(seqCol).desc)).drop(seqCol)
     val snapshot = current match {
       case Some((_, dir)) => graft.Tables.parquet(spark, dir)
-      case None => compacted.drop(opCol).limit(0)
+      case None => compacted.drop("op").limit(0)
     }
-    val next = Cdc.applyChanges(snapshot, compacted, keys, opCol)
+    val next = Cdc.applyChanges(snapshot, compacted, keys)
     // the parquet write drops v<id>/_SUCCESS itself, so the staged
     // version is already recovery-visible; then flip the pointer
     next.write.mode("overwrite").parquet(s"$root/v$batchId")
@@ -64,14 +57,14 @@ object StreamingCdcLoad {
   }
 
   /** Drain all available change files from `srcDir` into the snapshot at
-    * `root`, one version per micro-batch, then stop.
+    * `root`, one file and one version per micro-batch, then stop.
     */
   def run(spark: SparkSession, srcDir: String, root: String, keys: Seq[String],
-      seqCol: String, checkpointDir: String, filesPerBatch: Int = 1): Unit = {
+      seqCol: String, checkpointDir: String): Unit = {
     val schema = graft.Tables.parquet(spark, srcDir).schema
     val q = spark.readStream
       .schema(schema)
-      .option("maxFilesPerTrigger", filesPerBatch)
+      .option("maxFilesPerTrigger", 1)
       .parquet(srcDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>

@@ -189,14 +189,11 @@ class AnnSpec extends SparkSpec {
     assert(got === (0L until 50L).map(i => (i, 0L)).toSet)
   }
 
-  test("largeStarSmallStar: strict throws on non-convergence; strict=false returns the coarsening") {
+  test("largeStarSmallStar: throws on non-convergence") {
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
     intercept[IllegalStateException] {
       Components.largeStarSmallStar(edges, "doc_a", "doc_b", maxIters = 0)
     }
-    val coarse = Components.largeStarSmallStar(edges, "doc_a", "doc_b",
-      maxIters = 0, strict = false)
-    assert(coarse.count() === 3L)
   }
 
   test("largeStarSmallStar agrees with union-find ground truth; beats propagation on diameter") {

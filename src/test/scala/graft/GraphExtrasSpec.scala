@@ -33,15 +33,6 @@ class GraphExtrasSpec extends SparkSpec {
     assert(h1(1L) === 1L && h1(3L) === 2L)
   }
 
-  test("harmonic centrality: sampled-sources path restricts rows, not reachability") {
-    val und = Seq((1L, 2L), (2L, 3L)).toDF("u", "v")
-    val h = graft.operators.Harmonic.run(
-      und, sources = Some(Seq(1L, 99L).toDF("node"))).collect()
-      .map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    assert(h.keySet === Set(1L)) // 99 is off-graph, 2 and 3 not sampled
-    assert(math.abs(h(1L) - 1.5) < 1e-9)
-  }
-
   test("harmonic: distributed exact path is bit-identical to the driver-local path") {
     val und = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (2L, 5L), (6L, 7L))
       .toDF("u", "v")

@@ -149,9 +149,14 @@ object OpsProps extends Properties("Operators") {
     Prop.forAllNoShrink(pTableGen, nPartGen) { (rows, nPart) =>
       rows.isEmpty || {
         import spark.implicits._
-        val got = graft.operators.Packing.prefixSumBy(
-            rows.toDF("k", "id", "v"), Seq("k", "id"), "v", "off", nPart)
-          .select("id", "off").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val key = "spark.sql.shuffle.partitions"
+        val prev = spark.conf.get(key)
+        spark.conf.set(key, nPart.toLong)
+        val got =
+          try graft.operators.Packing.prefixSumBy(
+              rows.toDF("k", "id", "v"), Seq("k", "id"), "v", "off")
+            .select("id", "off").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+          finally spark.conf.set(key, prev)
         val sorted = rows.sortBy(r => (r._1, r._2))
         val offsets = sorted.map(_._3).scanLeft(0L)(_ + _).dropRight(1)
         got == sorted.map(_._2).zip(offsets).toMap
@@ -293,6 +298,40 @@ object OpsProps extends Properties("Operators") {
       routedCorrectly && got == label
     }
   }
+
+  // Bfs and Sssp give the same rows on the driver replay and on the
+  // distributed rounds, on graphs with duplicate edges, self-loops and null
+  // weights, from a source that may be absent from the graph; bounds below
+  // the graph's diameter truncate both routes alike
+  property("Bfs/Sssp driver replay == distributed rounds") = {
+    val edgeGen = for {
+      a <- Gen.chooseNum(0L, 7L)
+      b <- Gen.chooseNum(0L, 7L)
+      w <- Gen.frequency(
+        9 -> Gen.chooseNum(0, 30).map(i => Option(i / 10.0)),
+        1 -> Gen.const(Option.empty[Double]))
+    } yield (a, b, w)
+    val graphGen = Gen.chooseNum(0, 14)
+      .flatMap(n => Gen.listOfN(n, edgeGen))
+      .flatMap(es => Gen.someOf(es).map(dups => es ++ dups)) // duplicate edges
+    Prop.forAllNoShrink(graphGen, Gen.chooseNum(0L, 9L)) { (edges, source) =>
+      import spark.implicits._
+      val df = edges.toDF("src", "dst", "w")
+      def bfs = graft.operators.Bfs.run(df, "src", "dst", source, maxHops = 4)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      def sssp = graft.operators.Sssp.run(df, "src", "dst", "w", source, rounds = 4)
+        .collect().map(r => (r.getLong(0),
+          if (r.isNullAt(1)) None else Some(java.lang.Double.doubleToLongBits(r.getDouble(1)))))
+        .toSeq.sortBy(_._1)
+      val runs = graft.operators.DriverReplay.runs
+      val before = runs.get()
+      val replayed = (bfs, sssp)
+      val replayRan = runs.get() == before + 2
+      val distributed = graft.operators.DriverReplay.distributedOnly(spark)((bfs, sssp))
+      replayRan && runs.get() == before + 2 && replayed == distributed
+    }
+  }
+
   // fixed-point 128-bit sum == serial BigInteger reference, any partitioning
   property("Exact.sumFx == serial fixed-point reference") = {
     val valGen = Gen.oneOf(

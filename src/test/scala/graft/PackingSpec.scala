@@ -26,11 +26,16 @@ class PackingSpec extends SparkSpec {
         Window.orderBy("id").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select("id", "off").as[(Long, Long)].collect().sortBy(_._1)
 
-    for (parts <- Seq(1, 3, 32, 200)) {
-      val got = Packing.prefixSum(df, "id", "toks", "off", numPartitions = parts)
-        .select("id", "off").as[(Long, Long)].collect().sortBy(_._1)
-      assert(got === expected, s"prefix sum diverged at numPartitions=$parts")
-    }
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    try {
+      for (parts <- Seq(1, 3, 32, 200)) {
+        spark.conf.set(key, parts.toLong)
+        val got = Packing.prefixSum(df, "id", "toks", "off")
+          .select("id", "off").as[(Long, Long)].collect().sortBy(_._1)
+        assert(got === expected, s"prefix sum diverged at $parts partitions")
+      }
+    } finally spark.conf.set(key, prev)
   }
 
   test("packBins: offsets contiguous, bin ids monotone, bin_pos < capacity") {

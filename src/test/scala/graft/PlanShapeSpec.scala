@@ -68,10 +68,10 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q106 transition window is per-user (no single-partition stage)") {
-    // pin the UNMATERIALIZED plan: the production path cuts the tiny
+    // pin the count builder's lazy plan: eventTransitions cuts the tiny
     // count frame, which executes (and hides) the window before explain
     val p = graft.queries.EventQueries
-      .eventTransitions(Tables.events(spark, dir), materialize = false)
+      .transitionCounts(Tables.events(spark, dir))
       .queryExecution.explainString(FormattedMode)
     assert(p.contains("Window"), p.take(1200))
     assert(!p.contains("SinglePartition"),

@@ -68,23 +68,14 @@ class SamplingSpec extends SparkSpec {
     }
   }
 
-  test("sampleExactN tree merge (treeGroups>1): identical draw to the direct path at high partition count") {
-    val docs = Tables.documents(spark, sf).select("doc_id", "source").repartition(64)
+  test("sampleExactN: the draw at 64 partitions equals the draw at the default width") {
+    val docs = Tables.documents(spark, sf).select("doc_id", "source")
     val direct = Sampling.sampleExactN(docs, "doc_id", n = 100, seed = 7L)
       .select("doc_id").as[Long].collect().sorted
-    val tree = Sampling.sampleExactN(docs, "doc_id", n = 100, seed = 7L, treeGroups = 8)
+    val wide = Sampling.sampleExactN(docs.repartition(64), "doc_id", n = 100, seed = 7L)
       .select("doc_id").as[Long].collect().sorted
-    assert(tree === direct)
-    // plan pin: the level-1 exchange hashes on the seeded group key, so
-    // the final merge task receives g bounded group buffers (g·n
-    // candidates) instead of one partial per map partition (P·n)
-    val p = Sampling.sampleExactN(docs, "doc_id", n = 100, seed = 7L, treeGroups = 8)
-      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-    assert(p.contains("hashpartitioning(__g"),
-      "tree path must exchange on the group key:\n" + p.take(1200))
-    assert(!Sampling.sampleExactN(docs, "doc_id", n = 100, seed = 7L)
-      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-      .contains("hashpartitioning(__g"), "direct path must not pay the group shuffle")
+    assert(direct.length === 100)
+    assert(wide === direct)
   }
 
   test("quantileNormalize targetRank: exact past the Long-overflow boundary") {
@@ -111,7 +102,7 @@ class SamplingSpec extends SparkSpec {
     assert(e.getMessage.contains("ARITHMETIC_OVERFLOW"), e.getMessage)
   }
 
-  test("sampleWeighted == ORDER BY priority LIMIT n; deterministic; tree path identical") {
+  test("sampleWeighted == ORDER BY priority LIMIT n; deterministic; width-invariant") {
     val docs = Tables.documents(spark, sf).select("doc_id", "n_chars")
     val got = Sampling.sampleWeighted(docs, "doc_id", "n_chars", n = 50, seed = 11L)
       .select("doc_id").as[Long].collect().sorted
@@ -124,10 +115,10 @@ class SamplingSpec extends SparkSpec {
       .orderBy(col("pri").desc, col("doc_id")).limit(50)
       .select("doc_id").as[Long].collect().sorted
     assert(got === naive)
-    val tree = Sampling.sampleWeighted(
-        docs.repartition(64), "doc_id", "n_chars", n = 50, seed = 11L, treeGroups = 8)
+    val wide = Sampling.sampleWeighted(
+        docs.repartition(64), "doc_id", "n_chars", n = 50, seed = 11L)
       .select("doc_id").as[Long].collect().sorted
-    assert(tree === got)
+    assert(wide === got)
     assert(got !== Sampling.sampleWeighted(docs, "doc_id", "n_chars", n = 50, seed = 12L)
       .select("doc_id").as[Long].collect().sorted)
   }

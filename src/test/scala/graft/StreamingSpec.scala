@@ -79,7 +79,7 @@ class StreamingSpec extends SparkSpec {
     // appears)
     val append = StreamOps.sessionAggAppend(
       spark, Tables.events(spark, sf).select("user_id", "ts", "value"),
-      tmpDir("graft-append-sessions"), statePartitions = 8)
+      tmpDir("graft-append-sessions"))
       .orderBy("user_id", "session_start").collect().toSeq
     assert(append.nonEmpty)
     assert(append === complete)
@@ -153,7 +153,7 @@ class StreamingSpec extends SparkSpec {
     // replay of batch 1 must be a no-op
     assert(!graft.streaming.StreamingCdcLoad.applyBatch(spark, b1, root, Seq("k"), "seq", batchId = 1))
 
-    val (v, dir) = graft.streaming.StreamingCdcLoad.latest(spark, root).get
+    val (v, dir) = graft.pipeline.Versions.latest(spark, root).get
     assert(v === 1L)
     val snap = spark.read.parquet(dir).as[(Long, String)].collect().sortBy(_._1).toSeq
     assert(snap === Seq((1L, "a2"), (3L, "c")))
@@ -165,12 +165,12 @@ class StreamingSpec extends SparkSpec {
     val marker = new org.apache.hadoop.fs.Path(s"$root/_LATEST")
     val out = fs.create(marker, true)
     out.close() // empty marker = torn write
-    val (vRec, dirRec) = graft.streaming.StreamingCdcLoad.latest(spark, root).get
+    val (vRec, dirRec) = graft.pipeline.Versions.latest(spark, root).get
     assert(vRec === 1L && dirRec === dir)
     // and the next batch must re-publish a readable marker over the corrupt one
     val b2 = Seq((4L, "d", "I", 30L)).toDF("k", "v", "op", "seq")
     assert(graft.streaming.StreamingCdcLoad.applyBatch(spark, b2, root, Seq("k"), "seq", batchId = 2))
-    assert(graft.streaming.StreamingCdcLoad.latest(spark, root).get._1 === 2L)
+    assert(graft.pipeline.Versions.latest(spark, root).get._1 === 2L)
 
     // end-to-end: drain a staged change dir file-by-file through the stream
     val root2 = tmpDir("graft-cdc-root2")
@@ -179,7 +179,7 @@ class StreamingSpec extends SparkSpec {
     b1.coalesce(1).write.mode("append").parquet(flat)
     graft.streaming.StreamingCdcLoad.run(
       spark, flat, root2, Seq("k"), "seq", tmpDir("graft-cdc-ckpt"))
-    val (_, dir2) = graft.streaming.StreamingCdcLoad.latest(spark, root2).get
+    val (_, dir2) = graft.pipeline.Versions.latest(spark, root2).get
     val snap2 = spark.read.parquet(dir2).as[(Long, String)].collect().toSet
     // file->batch order is not guaranteed, but the k3 insert survives either
     // order and k1 resolves to one of its written states

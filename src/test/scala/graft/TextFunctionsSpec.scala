@@ -57,30 +57,6 @@ class TextFunctionsSpec extends SparkSpec {
     assert(m("prose") > m("tiny"))
   }
 
-  test("vocabOov bloom gear: equal at tight fpp; one-sided undercount at sloppy fpp") {
-    import graft.queries.TextQueries
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    def byDoc(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Long)] =
-      df.collect().map(r => r.getAs[Long]("doc_id") ->
-        (r.getAs[Long]("n_tokens"), r.getAs[Long]("n_oov"))).toMap
-    // minCount=50 so the tiny sf0.001 corpus actually HAS OOV tokens
-    // (at the default 5 every token clears the bar and the test is vacuous)
-    val exact = byDoc(TextQueries.vocabOov(docs, minCount = 50))
-    // bloom construction is deterministic (seeded hashing, no RNG): at
-    // fpp=1e-8 over this corpus's ~1e5 probes the expected FP count is
-    // ~1e-3, and whatever it is, it is the SAME on every run — not flaky
-    val tight = byDoc(TextQueries.vocabOov(docs, minCount = 50, useBloom = true, fpp = 1e-8))
-    assert(tight === exact)
-    // at a sloppy fpp the documented error direction is the ONLY allowed
-    // difference: true-OOV tokens may pass as in-vocab (undercount)
-    val loose = byDoc(TextQueries.vocabOov(docs, minCount = 50, useBloom = true, fpp = 0.25))
-    assert(loose.keySet === exact.keySet)
-    exact.foreach { case (id, (nTok, nOov)) =>
-      assert(loose(id)._1 === nTok, s"doc $id: token count must not change")
-      assert(loose(id)._2 <= nOov, s"doc $id: bloom OOV may only undercount")
-    }
-  }
-
   test("BloomSemiJoin.mightContain: no false negatives; sloppy fpp really FPs") {
     import spark.implicits._
     val vocab = (0 until 2000).map(i => s"w$i").toDF("word")
