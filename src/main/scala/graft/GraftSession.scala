@@ -38,6 +38,11 @@ import org.apache.spark.sql.SparkSession
   *
   * `spark.sql.shuffle.partitions` stays at the core count as the
   * AQE-disabled fallback floor (tests pin their own tiny value).
+  *
+  * [[SharedConfs]] are the confs every session of the engine carries,
+  * the test suites' included: the fork-free `file:` filesystem
+  * ([[NioLocalFileSystem]], [[NioLocalFs]]) and one codegen cache for
+  * every cloned session.
   */
 object GraftSession {
 
@@ -46,11 +51,32 @@ object GraftSession {
     */
   val InitialShufflePartitions = 512
 
+  /** Confs every session in a JVM shares. Hadoop caches one `file:`
+    * `FileSystem` per JVM whatever the conf, so the first session built
+    * decides the class for all of them.
+    *
+    *  - `fs.file.impl` / `fs.AbstractFileSystem.file.impl`: local files go
+    *    through [[NioLocalFileSystem]] and [[NioLocalFs]], which set modes
+    *    and read link status with java.nio instead of a `chmod` or
+    *    `readlink` process per call.
+    *  - `artifact.isolation.enabled = false`: Spark keys its codegen
+    *    cache on (context classloader, code), and an isolated session gets
+    *    a classloader of its own. With isolation on, every `newSession()`
+    *    clone (the stream drains') recompiles byte-identical classes and
+    *    evicts other queries' classes from the 100-entry cache. The engine
+    *    adds no session artifacts, so isolation buys nothing.
+    */
+  val SharedConfs: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName,
+    "spark.sql.artifact.isolation.enabled" -> "false")
+
   def build(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .appName(appName)
       .master(s"local[$cpus]")
+      .config(SharedConfs)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -10,7 +10,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * (cold, then warm-in-JVM) and prints every Spark job the run submitted:
   * job id, wall ms, first stage name — plus the gap between jobs
   * (driver-side think time: planning, collect handling, loops). Printing
-  * the plan is kept out of the cold run's total.
+  * the plan is kept out of the cold run's total. Each run also counts the
+  * OS processes the JVM started (JFR `jdk.ProcessStart`), so a shell-out
+  * on the query's path (a `chmod`, a `readlink`) shows as a number.
   *
   * At sf0.1 the corpus is small enough that most of a slow query's time
   * is job COUNT × fixed job cost (driver-synchronous rounds), not data
@@ -42,6 +44,27 @@ object ProbeQueryJobs {
     def clear(): Unit = jobs.clear()
   }
 
+  /** `body`'s result and the command lines of the OS processes this JVM
+    * started while it ran, in start order, from a JFR `jdk.ProcessStart`
+    * recording (every thread of the JVM, not only the caller's).
+    */
+  def processStarts[T](body: => T): (T, Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    val file = java.nio.file.Files.createTempFile("graft-process-starts", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      val out = try body finally rec.stop()
+      rec.dump(file)
+      (out, jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala.toSeq
+        .sortBy(_.getStartTime).map(_.getString("command")))
+    } finally {
+      rec.close()
+      java.nio.file.Files.deleteIfExists(file)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.build("graft-probe-jobs")
@@ -53,18 +76,21 @@ object ProbeQueryJobs {
       (1 to 2).foreach { run =>
         log.clear()
         val t0 = System.nanoTime()
-        val df = q.run(spark, sfDir)
-        val built = System.nanoTime()
+        val ((df, built), buildProcs) = processStarts {
+          val df = q.run(spark, sfDir)
+          (df, System.nanoTime())
+        }
         if (run == 1) println(s"\n=== $name plan ===\n" +
           df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
         val t1 = System.nanoTime()
-        df.count()
-        val total = (built - t0 + System.nanoTime() - t1) / 1e6
+        val (end, countProcs) = processStarts { df.count(); System.nanoTime() }
+        val procs = buildProcs.size + countProcs.size
+        val total = (built - t0 + end - t1) / 1e6
         // listener bus is async — let the tail events land
         Thread.sleep(300)
         import scala.jdk.CollectionConverters._
         val js = log.jobs.values.asScala.toSeq.sortBy(_.start)
-        println(f"\n=== $name run $run: total $total%.0f ms, ${js.size} jobs ===")
+        println(f"\n=== $name run $run: total $total%.0f ms, ${js.size} jobs, $procs processes ===")
         var prevEnd = -1L
         js.foreach { j =>
           val gap = if (prevEnd < 0) 0L else j.start - prevEnd

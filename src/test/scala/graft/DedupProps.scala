@@ -12,6 +12,7 @@ object DedupProps extends Properties("Dedup") {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
+    .config(GraftSession.SharedConfs)
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
     .getOrCreate()

@@ -13,6 +13,7 @@ object OpsProps extends Properties("Operators") {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
+    .config(GraftSession.SharedConfs)
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
     .getOrCreate()

@@ -9,6 +9,7 @@ object SketchProps extends Properties("Sketches") {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
+    .config(GraftSession.SharedConfs)
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
     .getOrCreate()

@@ -105,6 +105,17 @@ class StreamingSpec extends SparkSpec {
     assert(got.select("event_id").as[Long].collect().sorted === Array(1L, 2L))
   }
 
+  test("a repeated identical drain compiles no new classes") {
+    // q56 drains in a newSession() clone (its state partitions are scoped),
+    // which must share the codegen cache with every other session
+    def drain(): Long = Registry.byName("q56_stream_dedup").run(spark, sf).count()
+    val rows = drain()
+    val compiled = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(drain() === rows)
+    assert(org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      === compiled)
+  }
+
   test("mapGroupsWithState running totals == batch groupBy at end of stream") {
     val got = StreamOps.runAvailableNow(
       spark,
