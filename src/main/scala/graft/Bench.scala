@@ -164,14 +164,19 @@ object Bench {
     // artifact-building query's run-1 (cold) wall time — the min estimator
     // reports the warm run for those queries, and these two maps carry the
     // cost it excludes (round-12 verdict, "What's wrong" #1)
-    val builds = {
-      import scala.jdk.CollectionConverters._
-      graft.queries.Artifacts.buildSecs.asScala.toSeq.sortBy(_._1)
-        .map { case (n, s) => f"""\"$n\":$s%.3f""" }.mkString("{", ",", "}")
-    }
     val cold = results.collect { case QTime(k, _, _, _, _, Some(c)) =>
       f"""\"$k\":$c%.3f""" }.mkString("{", ",", "}")
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir","runs_per_query":$runs,"estimator":"min","extra_runs":${extraCounts(results)},"loadavg_1m":$loads,"overhead_sec":$overheads,"overhead_total":${f"$totalOverhead%.1f"},"artifact_build_sec":$builds,"artifact_consumer_run1_sec":$cold,$policy}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir","runs_per_query":$runs,"estimator":"min","extra_runs":${extraCounts(results)},"loadavg_1m":$loads,"overhead_sec":$overheads,"overhead_total":${f"$totalOverhead%.1f"},"artifact_build_sec":${buildSecsJson()},"artifact_consumer_run1_sec":$cold,$policy}"""
+  }
+
+  /** Per-artifact build seconds of this JVM, 3dp, sorted by artifact name:
+    * the wall cost the min-of-N estimator excludes from artifact-consuming
+    * queries.
+    */
+  private def buildSecsJson(): String = {
+    import scala.jdk.CollectionConverters._
+    graft.queries.Artifacts.buildSecs.asScala.toSeq.sortBy(_._1)
+      .map { case (n, s) => f"""\"$n\":$s%.3f""" }.mkString("{", ",", "}")
   }
 
   /** Artifact-cache discipline (round-10 verdict: the committed total
@@ -185,13 +190,12 @@ object Bench {
     * way the JSON records the policy and the preexisting/built counts,
     * so a recorded total is interpretable from the file alone.
     */
-  private val ArtifactRoot = java.nio.file.Paths.get("/tmp/graft_artifacts")
-
   private def listArtifacts(): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    if (!java.nio.file.Files.isDirectory(ArtifactRoot)) Seq.empty
+    val root = graft.queries.Artifacts.root
+    if (!java.nio.file.Files.isDirectory(root)) Seq.empty
     else {
-      val s = java.nio.file.Files.list(ArtifactRoot)
+      val s = java.nio.file.Files.list(root)
       try s.iterator().asScala.map(_.getFileName.toString)
         .filterNot(_.contains(".build.")).toVector.sorted
       finally s.close()
@@ -203,7 +207,7 @@ object Bench {
     val cachePolicy = sys.env.getOrElse("SPARK_GRAFT_BENCH_CACHE", "cold")
     if (cachePolicy == "cold")
       listArtifacts().foreach(n =>
-        graft.queries.Scratch.deleteRecursively(ArtifactRoot.resolve(n)))
+        graft.queries.Scratch.deleteRecursively(graft.queries.Artifacts.root.resolve(n)))
     val preexisting = listArtifacts()
     val spark = GraftSession.build("graft-bench")
     // untimed warmup: JVM/codegen/parquet-footer costs shouldn't land on
@@ -237,19 +241,12 @@ object Bench {
     }
     val totalOverhead = results.flatMap(_.overheadSecs).sum
     val builtDuringRun = listArtifacts().diff(preexisting)
-    // per-artifact build seconds (additions-only, round 13): the wall cost
-    // the min-of-N estimator excludes from artifact-consuming queries
-    val buildSecJson = {
-      import scala.jdk.CollectionConverters._
-      graft.queries.Artifacts.buildSecs.asScala.toSeq.sortBy(_._1)
-        .map { case (n, s) => f"""\"$n\":$s%.3f""" }.mkString("{", ",", "}")
-    }
     val buildSecTotal = {
       import scala.jdk.CollectionConverters._
       graft.queries.Artifacts.buildSecs.asScala.values.sum
     }
     val cacheJson =
-      s""""artifact_cache":{"policy":"$cachePolicy","preexisting":${preexisting.size},"built_during_run":${builtDuringRun.size},"built":${builtDuringRun.map("\"" + _ + "\"").mkString("[", ",", "]")},"build_sec":$buildSecJson,"build_sec_total":${f"$buildSecTotal%.3f"}}"""
+      s""""artifact_cache":{"policy":"$cachePolicy","preexisting":${preexisting.size},"built_during_run":${builtDuringRun.size},"built":${builtDuringRun.map("\"" + _ + "\"").mkString("[", ",", "]")},"build_sec":${buildSecsJson()},"build_sec_total":${f"$buildSecTotal%.3f"}}"""
     val summary =
       s"""{"metric":"total","value":$total,"unit":"sec","query_count":${results.size},"failed_count":$failed,"sf":"$sfDir","runs_per_query":$runs,"estimator":"min","extra_runs":${extraCounts(results)},"overhead_total":${f"$totalOverhead%.1f"}$loadSpan,$cacheJson,$policy}"""
     // Files.write throws on any I/O failure (a PrintWriter only sets a

@@ -16,16 +16,13 @@ object GraphQueries {
     * from the fact tables with two broadcast dimension hops — the only
     * shuffles are the lineitem⋈orders join and the final edge aggregate.
     */
-  private val tradeLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def tradeEdges(s: org.apache.spark.sql.SparkSession, dir: String) = {
     // the heavy fact-fact join collapses to a <=n_nations^2-row edge list:
-    // land that ONCE per (JVM, dir) — r06 re-ran the 600k-row join for
+    // build that ONCE per input content — r06 re-ran the 600k-row join for
     // q108's node census, q108's normalization, and again for q112 —
     // and reuse it ACROSS sessions (Artifacts: deterministic aggregate,
     // content-keyed on the input fact/dim parquet)
-    val path = tradeLanded.computeIfAbsent(dir, _ =>
-      Artifacts.cached("trade-edges", "v1",
+    val path = Artifacts.cached("trade-edges", "v1",
         Seq("lineitem", "orders", "customer", "supplier", "nation")
           .map(t => s"$dir/$t.parquet")) { p =>
       val li = Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey")
@@ -44,7 +41,7 @@ object GraphQueries {
         .agg(count(lit(1)).cast("double").as("w"))
         .coalesce(1)
         .write.mode("overwrite").parquet(p)
-    })
+    }
     Tables.parquet(s, path)
   }
 
@@ -200,20 +197,6 @@ object GraphQueries {
         .orderBy("node"),
     Some(hitsOracle))
 
-  /** The similarity graph all four traversal queries (q126/q127/q135/q136)
-    * run on: top-5 exact cosine neighbors per vector
-    * ([[graft.operators.NearDup.knnBruteForce]] with every vector as a
-    * query), treated as undirected. Built ONCE per (JVM, scale dir) and
-    * landed to scratch parquet — r06 rebuilt the same all-pairs graph
-    * inside each of the four queries, 4 × ~115 s of the bench; the landed
-    * frame turns the quartet into one build + three parquet reads. The
-    * oracles are NOT pointed at the landed file: each one independently
-    * rebuilds the edge set in SQL (the q22 cosine fragment + a ranked
-    * window), so the graph construction stays oracle-gated four times
-    * over, not self-certified.
-    */
-  private val knnLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Corpus-size bound for the exact O(n²) brute-force graph build. The
     * driver's verification scales (≤ 2000 vectors at sf0.1) stay below it
     * — their oracles demand the EXACT top-5 graph — while anything larger
@@ -242,15 +225,26 @@ object GraphQueries {
     }
   }
 
+  /** The similarity graph all four traversal queries (q126/q127/q135/q136)
+    * run on: top-5 exact cosine neighbors per vector
+    * ([[graft.operators.NearDup.knnBruteForce]] with every vector as a
+    * query), treated as undirected. Built ONCE per input content as an
+    * [[Artifacts]] entry — r06 rebuilt the same all-pairs graph
+    * inside each of the four queries, 4 × ~115 s of the bench; the landed
+    * frame turns the quartet into one build + three parquet reads. The
+    * oracles are NOT pointed at the landed file: each one independently
+    * rebuilds the edge set in SQL (the q22 cosine fragment + a ranked
+    * window), so the graph construction stays oracle-gated four times
+    * over, not self-certified.
+    */
   private def knnTopK(s: org.apache.spark.sql.SparkSession, dir: String) = {
     // cross-session reuse (Artifacts): the build is deterministic — exact
     // top-5 below the brute-force bound, splitmix64-derived hyperplanes
     // above — so a second Verify/Bench in the same sfDir skips it
-    val path = knnLanded.computeIfAbsent(dir, _ =>
-      Artifacts.cached("knn-graph", "k5-v1", Seq(s"$dir/embeddings.parquet")) { p =>
-        knnGraphEdges(Tables.embeddings(s, dir), k = 5)
-          .write.mode("overwrite").parquet(p)
-      })
+    val path = Artifacts.cached("knn-graph", "k5-v1", Seq(s"$dir/embeddings.parquet")) { p =>
+      knnGraphEdges(Tables.embeddings(s, dir), k = 5)
+        .write.mode("overwrite").parquet(p)
+    }
     Tables.parquet(s, path)
   }
 
@@ -1294,36 +1288,33 @@ object GraphQueries {
     * content-keyed dir; explicit read schemas keep a degenerate corpus
     * (no qualifying pairs) readable.
     */
-  private val coPurchaseLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def coPurchaseShared(
       s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val path = coPurchaseLanded.computeIfAbsent(dir, _ =>
-      Artifacts.cached("copurchase", s"cap$CoPurchaseMaxBasket-v1",
+    val path = Artifacts.cached("copurchase", s"cap$CoPurchaseMaxBasket-v1",
         Seq(s"$dir/lineitem.parquet")) { p =>
-        val li = Tables.lineitem(s, dir)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
-        // no cut: AQE reuses the exchange for both sides of the self-join
-        // (measured — a localCheckpoint here costs more than it saves)
-        val sized = li
-          .join(li.groupBy("ok").agg(count(lit(1)).as("basket")), Seq("ok"))
-          .filter(col("basket") <= CoPurchaseMaxBasket)
-          .select("ok", "pk")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          sized.groupBy("pk").agg(count(lit(1)).as("n_ord"))
-            .write.mode("overwrite").parquet(s"$p/nord")
-          val a = sized.select(col("ok"), col("pk").as("pa"))
-          val b = sized.select(col("ok"), col("pk").as("pb"))
-          a.join(b, Seq("ok"))
-            .filter(col("pa") < col("pb"))
-            .groupBy("pa", "pb")
-            .agg(count(lit(1)).as("co"))
-            .write.mode("overwrite").parquet(s"$p/co")
-        } finally sized.unpersist()
-        java.nio.file.Files.createFile(java.nio.file.Paths.get(p, "_SUCCESS"))
-      })
+      val li = Tables.lineitem(s, dir)
+        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+        .distinct()
+      // no cut: AQE reuses the exchange for both sides of the self-join
+      // (measured — a localCheckpoint here costs more than it saves)
+      val sized = li
+        .join(li.groupBy("ok").agg(count(lit(1)).as("basket")), Seq("ok"))
+        .filter(col("basket") <= CoPurchaseMaxBasket)
+        .select("ok", "pk")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        sized.groupBy("pk").agg(count(lit(1)).as("n_ord"))
+          .write.mode("overwrite").parquet(s"$p/nord")
+        val a = sized.select(col("ok"), col("pk").as("pa"))
+        val b = sized.select(col("ok"), col("pk").as("pb"))
+        a.join(b, Seq("ok"))
+          .filter(col("pa") < col("pb"))
+          .groupBy("pa", "pb")
+          .agg(count(lit(1)).as("co"))
+          .write.mode("overwrite").parquet(s"$p/co")
+      } finally sized.unpersist()
+      java.nio.file.Files.createFile(java.nio.file.Paths.get(p, "_SUCCESS"))
+    }
     (s.read.schema("pa LONG, pb LONG, co LONG").parquet(s"$path/co"),
       s.read.schema("pk LONG, n_ord LONG").parquet(s"$path/nord"))
   }

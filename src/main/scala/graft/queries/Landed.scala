@@ -14,9 +14,11 @@ import java.nio.file.{Files, Path, Paths}
   *    verify/bench JVMs — or runs at different scale dirs — can't clobber
   *    each other's files, and stale run directories are swept on the next
   *    JVM's first landing.
-  *  - [[Scratch]]: purely intra-run temp dirs (staged inputs, snapshot
+  *  - [[Scratch]]: only per-run temp dirs (staged inputs, snapshot
   *    roots, checkpoints) — deleted recursively at JVM exit, so repeated
   *    bench/verify runs don't leak disk.
+  * A fixture DERIVED from the inputs (a knn graph, a CSV copy of `orders`)
+  * is neither: it goes through [[Artifacts]], keyed on the inputs' content.
   */
 object Landed {
 

@@ -45,24 +45,22 @@ object SimilarityQueries {
                FROM scored)
              WHERE rank <= 5 ORDER BY q_id, rank"""))
 
-  /** The q23/q78 routed pair set — built ONCE per (JVM, scale dir) and
-    * landed to scratch parquet (the knnLanded/kmeansShared contract):
+  /** The q23/q78 routed pair set — built ONCE per input content as an
+    * [[Artifacts]] entry (the knn-graph/kmeans contract):
     * q23 orders it, q78 closes it into clusters, and q24 reuses it
     * verbatim when the corpus routes above the exact-path bound (where
     * its scaled-knob LSH is the identical computation). Read-back uses
     * an explicit schema so a zero-pair corpus (only _SUCCESS in the dir)
     * still reads as an empty frame instead of failing inference.
     */
-  private val routedPairsLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val PairsSchema = "vec_a LONG, vec_b LONG, cos DOUBLE"
 
   private def routedPairsShared(
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val path = routedPairsLanded.computeIfAbsent(dir, _ =>
-      Artifacts.cached("routed-pairs", "t0.4-v1", Seq(s"$dir/embeddings.parquet")) { p =>
-        NearDup.embeddingNearDupPairsAuto(Tables.embeddings(s, dir), threshold = 0.4)
-          .write.mode("overwrite").parquet(p)
-      })
+    val path = Artifacts.cached("routed-pairs", "t0.4-v1", Seq(s"$dir/embeddings.parquet")) { p =>
+      NearDup.embeddingNearDupPairsAuto(Tables.embeddings(s, dir), threshold = 0.4)
+        .write.mode("overwrite").parquet(p)
+    }
     s.read.schema(PairsSchema).parquet(path)
   }
 
@@ -193,25 +191,22 @@ object SimilarityQueries {
     * recomputes the exact cosine of every emitted edge and re-derives the
     * ranks; AnnSpec pins recall ≥ 0.95 against the brute-force edge set.
     */
-  private val lshGraphLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def q142 = GraftQuery(
     "q142_lsh_knn_graph",
     (s, dir) => {
-      // the builder runs once per (JVM, dir) — the quartet/kmeans landed
-      // contract; repeat invocations (bench best-of-N) copy the scratch
-      // frame to the oracle-visible landing instead of re-bucketing
-      val built = lshGraphLanded.computeIfAbsent(dir, _ =>
-        Artifacts.cached("lsh-knn-graph", "k5-scaled-v1",
-            Seq(s"$dir/embeddings.parquet")) { p =>
-          val emb = Tables.embeddings(s, dir)
-          // driver scales keep the default knobs (hash-stable edges);
-          // larger corpora take the size-scaled bits the probe measured
-          val (bits, tables) = NearDup.scaledLshKnobs(emb.count())
-          NearDup.knnTopKLsh(emb, k = 5, bits = bits, tables = tables)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(p)
-        })
+      // the builder runs once per input content (Artifacts); repeat
+      // invocations (bench best-of-N) copy the cached frame to the
+      // oracle-visible landing instead of re-bucketing
+      val built = Artifacts.cached("lsh-knn-graph", "k5-scaled-v1",
+          Seq(s"$dir/embeddings.parquet")) { p =>
+        val emb = Tables.embeddings(s, dir)
+        // verification scales keep the default knobs (hash-stable edges);
+        // larger corpora take the size-scaled bits the probe measured
+        val (bits, tables) = NearDup.scaledLshKnobs(emb.count())
+        NearDup.knnTopKLsh(emb, k = 5, bits = bits, tables = tables)
+          .coalesce(1)
+          .write.mode("overwrite").parquet(p)
+      }
       val path = Landed.land("q142_lsh_knn_graph", dir)
       Tables.parquet(s, built)
         .repartition(1) // see q24: empty-safe single part file
@@ -532,23 +527,20 @@ object SimilarityQueries {
     * graded by a serially-unrolled CTE replay of the identical rounded
     * recurrence, the q108/q112 differential scheme applied to clustering.
     */
-  /** The q128/q130 clustering, run ONCE per (JVM, scale dir) and landed to
-    * scratch parquet — q130 previously re-ran the full Lloyd recurrence
+  /** The q128/q130 clustering, run ONCE per input content as an
+    * [[Artifacts]] entry — q130 previously re-ran the full Lloyd recurrence
     * that q128 had just produced (the r06 graph-quartet lesson applied
     * here). q128 stays hash-gated against the serial CTE replay; q130
     * copies the same rows to its own oracle-visible landing.
     */
-  private val kmeansLanded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def kmeansShared(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val path = kmeansLanded.computeIfAbsent(dir, _ =>
-      Artifacts.cached("kmeans-assign", s"k$KmK-i$KmIters-s$KmSeed-v1",
-          Seq(s"$dir/embeddings.parquet")) { p =>
-        graft.operators.KMeans.run(
-            Tables.embeddings(s, dir), k = KmK, iterations = KmIters, seed = KmSeed)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(p)
-      })
+    val path = Artifacts.cached("kmeans-assign", s"k$KmK-i$KmIters-s$KmSeed-v1",
+        Seq(s"$dir/embeddings.parquet")) { p =>
+      graft.operators.KMeans.run(
+          Tables.embeddings(s, dir), k = KmK, iterations = KmIters, seed = KmSeed)
+        .coalesce(1)
+        .write.mode("overwrite").parquet(p)
+    }
     Tables.parquet(s, path)
   }
 

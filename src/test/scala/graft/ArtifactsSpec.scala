@@ -1,13 +1,12 @@
 package graft
 
 import graft.queries.Artifacts
-import java.nio.file.{Files, Paths}
-import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** Contract tests for the cross-session artifact cache: content-keyed
   * reuse, fingerprint sensitivity to input changes, tensor round-trip.
   */
-class ArtifactsSpec extends AnyFunSuite {
+class ArtifactsSpec extends SparkSpec {
 
   private def tempInput(content: String): String = {
     val d = Files.createTempDirectory("graft-artifacts-spec")
@@ -28,6 +27,33 @@ class ArtifactsSpec extends AnyFunSuite {
     // input order must not matter
     val in2 = tempInput("other")
     assert(Artifacts.fingerprint(Seq(in, in2)) == Artifacts.fingerprint(Seq(in2, in)))
+  }
+
+  test("fingerprint moves on a same-size, same-mtime parquet rewrite") {
+    def onePartFile(v: Long): Path = {
+      val out = tmpDir("graft-artifacts-pq")
+      spark.range(1).selectExpr(s"CAST($v AS BIGINT) AS v").coalesce(1)
+        .write.option("compression", "uncompressed").parquet(s"$out/t")
+      val parts = Files.list(Paths.get(out, "t"))
+      try parts.filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
+      finally parts.close()
+    }
+    val (one, two) = (onePartFile(1L), onePartFile(2L))
+    assert(Files.size(one) == Files.size(two))
+    val dir = Files.createTempDirectory("graft-artifacts-spec")
+    val data = dir.resolve("data.parquet")
+    Files.copy(one, data)
+    val mtime = Files.getLastModifiedTime(data)
+    // a scale dir's table (file input) and a directory of part files
+    val inputs = Seq(Seq(data.toString), Seq(dir.toString))
+    val before = inputs.map(Artifacts.fingerprint)
+    Files.copy(two, data, StandardCopyOption.REPLACE_EXISTING)
+    Files.setLastModifiedTime(data, mtime)
+    assert(Files.size(data) == Files.size(one))
+    assert(Files.getLastModifiedTime(data) == mtime)
+    inputs.zip(before).foreach { case (in, fp) =>
+      assert(Artifacts.fingerprint(in) != fp, s"fingerprint of $in did not move")
+    }
   }
 
   test("cached builds once and replays from disk on the second call") {
