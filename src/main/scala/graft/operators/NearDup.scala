@@ -13,9 +13,8 @@ import org.apache.spark.sql.functions._
   * the cost of the double loop, so it must only ever run on candidates).
   *
   *  - [[ngramJaccardPairs]]: inverted-index join on hashed shingles. Exact
-  *    (any pair with J ≥ τ > 0 shares a shingle), cost Σ df(shingle)². Hub
-  *    shingles are capped via `maxDocFreq` when exactness may be traded for
-  *    scale (off by default so the result stays oracle-comparable).
+  *    (any pair with J ≥ τ > 0 shares a shingle), cost Σ df(shingle)² over
+  *    distinct shingle sets ([[Clones]]).
   *  - [[minhashLshPairs]]: O(n·k) signatures + slim (id, bucket) band join,
   *    then exact Jaccard verification of candidates only.
   *  - [[simhashPairs]]: 64-bit SimHash, complete 4×16-bit blocking for
@@ -48,8 +47,8 @@ object NearDup {
   private[graft] def ballCoverBroadcastMaxCells: Long =
     sys.props.get("graft.neardup.bcMaxCells").map(_.toLong).getOrElse(100000L)
 
-  /** Distinct (doc_id, shingle) pairs for an n-gram size. */
-  /** `widen = true` (the CORPUS-scale pair builds: ngramJaccardPairs,
+  /** Distinct (doc_id, shingle) pairs for an n-gram size.
+    * `widen = true` (the CORPUS-scale pair builds: ngramJaccardPairs,
     * minhashLshPairs, ngramContainmentPairs) fans a 1-task small-file
     * scan out before the per-doc shingle pass — the compute-dense stage
     * those builds funnel ~everything through (see Tables.widen). The
@@ -65,47 +64,30 @@ object NearDup {
       .filter(size(col("shingles")) > 0)
   }
 
+  /** [[shingleSets]] keyed for [[Clones]]: `__ck` hashes the whole set. */
+  private def cloneKeyedShingleSets(
+      docs: DataFrame, n: Int, widen: Boolean = false): DataFrame =
+    shingleSets(docs, n, widen)
+      .withColumn("__ck", xxhash64(concat_ws("\u0001", col("shingles"))))
+
   /** Exact n-gram Jaccard near-dup pairs: J(a,b) ≥ threshold, a < b.
     * Inverted-index join: explode shingles, self-join on a 64-bit shingle
     * hash (8-byte shuffle keys instead of ~25-byte strings; a collision
     * would need two distinct shingles in the same corpus at the same hash —
     * P ≈ m²/2⁶⁵, negligible), count common, divide by union size.
-    * `maxDocFreq` > 0 drops shingles appearing in more documents than that
-    * (skew guard; makes the result approximate).
     */
-  def ngramJaccardPairs(
-      docs: DataFrame, n: Int, threshold: Double, maxDocFreq: Long = 0L): DataFrame = {
+  def ngramJaccardPairs(docs: DataFrame, n: Int, threshold: Double): DataFrame = {
     // referenced three times (sizes + both join sides): materialize once —
     // the cut avoids the per-call cache leak that ruled out persist here,
-    // and one shingle pass beats three.
-    // `__ck` canonicalizes IDENTICAL shingle sets (exact clones — the
-    // dominant duplication mode in scraped corpora): the quadratic
-    // inverted-index join runs over one REPRESENTATIVE per set, and pairs
-    // expand back afterwards — group-of-g clones cost g·pairs instead of
-    // g² candidate rows per shared shingle. The expansion is exact, not
-    // approximate: identical sets ⇒ identical jaccard against every
-    // third document, and 1.0 within the group. (Key collision would
-    // need two distinct shingle ARRAYS at the same xxhash64 —
-    // P ≈ n_docs²/2⁶⁵, the same risk already accepted per shingle.)
-    val sets = Components.cut(
-      shingleSets(docs, n, widen = true)
-        .withColumn("__ck", xxhash64(concat_ws("\u0001", col("shingles")))))
-    val groups = sets.select("doc_id", "__ck")
-    val repIds = groups.groupBy("__ck").agg(min(col("doc_id")).as("doc_id"))
-    val repSets = sets.join(repIds, Seq("__ck", "doc_id"))
+    // and one shingle pass beats three. The index join runs over one
+    // representative per identical shingle set ([[Clones]]): identical
+    // sets ⇒ identical jaccard against every third document.
+    val sets = Components.cut(cloneKeyedShingleSets(docs, n, widen = true))
+    val clones = Clones(sets.select("doc_id", "__ck"), "doc_id")
+    val repSets = sets.join(clones.reps, Seq("__ck", "doc_id"))
     val sizes = repSets.select(col("doc_id"), size(col("shingles")).as("n_shingles"))
-    val inv0 = repSets.select(col("doc_id"), explode(col("shingles")).as("s"))
+    val inv = repSets.select(col("doc_id"), explode(col("shingles")).as("s"))
       .select(col("doc_id"), xxhash64(col("s")).as("s"))
-    val inv =
-      if (maxDocFreq <= 0) inv0
-      else {
-        // df counts DISTINCT shingle sets, not raw documents: a hub
-        // shingle's posting list is what drives the quadratic cost, and
-        // clones no longer multiply it
-        val rare = inv0.groupBy("s").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDocFreq).select("s")
-        inv0.join(rare, "s")
-      }
     val common = inv.as("a").join(inv.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -117,23 +99,59 @@ object NearDup {
         col("n_common").cast("double") / (col("na") + col("nb") - col("n_common")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
-    // expand representatives back to members: cross-group pairs inherit
-    // the rep pair's exact jaccard (identical sets), intra-group pairs
-    // are exactly 1.0 (n_common = na = nb ⇒ the direct division yields
-    // 1.0 bit-for-bit)
-    val ckOfRep = repIds.select(col("doc_id").as("__rep"), col("__ck"))
-    val expanded = repPairs
-      .join(ckOfRep.select(col("__rep").as("doc_a"), col("__ck").as("cka")), "doc_a")
-      .join(ckOfRep.select(col("__rep").as("doc_b"), col("__ck").as("ckb")), "doc_b")
-      .join(groups.select(col("__ck").as("cka"), col("doc_id").as("ma")), "cka")
-      .join(groups.select(col("__ck").as("ckb"), col("doc_id").as("mb")), "ckb")
+    // intra-group pairs are exactly 1.0 (n_common = na = nb ⇒ the direct
+    // division yields 1.0 bit-for-bit)
+    clones.expand(repPairs, "doc_a", "doc_b")
       .select(least(col("ma"), col("mb")).as("doc_a"),
         greatest(col("ma"), col("mb")).as("doc_b"), col("jaccard"))
-    val intra = groups.as("x").join(groups.as("y"),
-        col("x.__ck") === col("y.__ck") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        lit(1.0).as("jaccard"))
-    expanded.unionByName(intra)
+      .unionByName(clones.intra
+        .select(col("ma").as("doc_a"), col("mb").as("doc_b"), lit(1.0).as("jaccard")))
+  }
+
+  /** Exact DIRECTED n-gram containment pairs: C(a→b) = |S_a ∩ S_b| / |S_a|
+    * ≥ threshold, a ≠ b — the asymmetric twin of [[ngramJaccardPairs]]
+    * (Broder 1997 distinguishes resemblance from containment). Jaccard
+    * misses the training-corpus case that matters most: a short document
+    * fully quoted INSIDE a much longer one scores near-zero Jaccard
+    * (union is large) but containment 1.0. Same inverted-index bound
+    * (Σdf²), same [[Clones]] contraction, with DIRECTION preserved (the
+    * denominator follows the source side's set size; intra-group pairs
+    * are 1.0 both ways by identity).
+    */
+  def ngramContainmentPairs(docs: DataFrame, n: Int, threshold: Double): DataFrame = {
+    val sets = Components.cut(cloneKeyedShingleSets(docs, n, widen = true))
+    val clones = Clones(sets.select("doc_id", "__ck"), "doc_id")
+    val repSets = sets.join(clones.reps, Seq("__ck", "doc_id"))
+    val sizes = repSets.select(col("doc_id"), size(col("shingles")).as("n_shingles"))
+    val inv = repSets.select(col("doc_id"), explode(col("shingles")).as("s"))
+      .select(col("doc_id"), xxhash64(col("s")).as("s"))
+    val common = inv.as("a").join(inv.as("b"),
+        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("ra"), col("b.doc_id").as("rb"))
+      .agg(count(lit(1)).as("n_common"))
+      .join(sizes.select(col("doc_id").as("ra"), col("n_shingles").as("na")), "ra")
+      .join(sizes.select(col("doc_id").as("rb"), col("n_shingles").as("nb")), "rb")
+    // directed rep pairs: denominator = the SOURCE side's set size
+    val repDir = common
+      .select(col("ra"), col("rb"), col("na").as("n_a"), col("n_common"),
+        (col("n_common").cast("double") / col("na").cast("double")).as("containment"))
+      .unionByName(common
+        .select(col("rb").as("ra"), col("ra").as("rb"), col("nb").as("n_a"),
+          col("n_common"),
+          (col("n_common").cast("double") / col("nb").cast("double")).as("containment")))
+      .filter(col("containment") >= threshold)
+    // the expansion keeps direction: source members come from the SOURCE
+    // rep's group, destination members from the destination's
+    val grpSize = sets.select(col("__ck"), size(col("shingles")).as("n_a"))
+      .dropDuplicates("__ck")
+    clones.expand(repDir, "ra", "rb")
+      .select(col("ma").as("doc_a"), col("mb").as("doc_b"), col("n_a"),
+        col("n_common"), col("containment"))
+      .unionByName(clones.sameGroup.filter(col("ma") =!= col("mb"))
+        .join(grpSize, "__ck")
+        .select(col("ma").as("doc_a"), col("mb").as("doc_b"),
+          col("n_a"), col("n_a").cast("long").as("n_common"),
+          lit(1.0).as("containment")))
   }
 
   /** Incremental near-dup maintenance: exact n-gram Jaccard pairs that
@@ -150,100 +168,26 @@ object NearDup {
     * [[ngramJaccardPairs]]. Caller contract: corpus and batch doc_ids are
     * disjoint.
     */
-  /** Exact DIRECTED n-gram containment pairs: C(a→b) = |S_a ∩ S_b| / |S_a|
-    * ≥ threshold, a ≠ b — the asymmetric twin of [[ngramJaccardPairs]]
-    * (Broder 1997 distinguishes resemblance from containment). Jaccard
-    * misses the training-corpus case that matters most: a short document
-    * fully quoted INSIDE a much longer one scores near-zero Jaccard
-    * (union is large) but containment 1.0. Same inverted-index bound
-    * (Σdf² via the optional `maxDocFreq` cap), same clone
-    * canonicalization — identical shingle sets join once as a
-    * representative and expand back exactly, with DIRECTION preserved
-    * (the denominator follows the source side's set size; intra-group
-    * pairs are 1.0 both ways by identity).
-    */
-  def ngramContainmentPairs(
-      docs: DataFrame, n: Int, threshold: Double, maxDocFreq: Long = 0L): DataFrame = {
-    val sets = Components.cut(
-      shingleSets(docs, n, widen = true)
-        .withColumn("__ck", xxhash64(concat_ws("\u0001", col("shingles")))))
-    val groups = sets.select("doc_id", "__ck")
-    val repIds = groups.groupBy("__ck").agg(min(col("doc_id")).as("doc_id"))
-    val repSets = sets.join(repIds, Seq("__ck", "doc_id"))
-    val sizes = repSets.select(col("doc_id"), size(col("shingles")).as("n_shingles"))
-    val inv0 = repSets.select(col("doc_id"), explode(col("shingles")).as("s"))
-      .select(col("doc_id"), xxhash64(col("s")).as("s"))
-    val inv =
-      if (maxDocFreq <= 0) inv0
-      else {
-        val rare = inv0.groupBy("s").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDocFreq).select("s")
-        inv0.join(rare, "s")
-      }
-    val common = inv.as("a").join(inv.as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("ra"), col("b.doc_id").as("rb"))
-      .agg(count(lit(1)).as("n_common"))
-      .join(sizes.select(col("doc_id").as("ra"), col("n_shingles").as("na")), "ra")
-      .join(sizes.select(col("doc_id").as("rb"), col("n_shingles").as("nb")), "rb")
-    // directed rep pairs: denominator = the SOURCE side's set size
-    val repDir = common
-      .select(col("ra"), col("rb"), col("na").as("n_a"), col("n_common"),
-        (col("n_common").cast("double") / col("na").cast("double")).as("containment"))
-      .unionByName(common
-        .select(col("rb").as("ra"), col("ra").as("rb"), col("nb").as("n_a"),
-          col("n_common"),
-          (col("n_common").cast("double") / col("nb").cast("double")).as("containment")))
-      .filter(col("containment") >= threshold)
-    val ckOfRep = repIds.select(col("doc_id").as("__rep"), col("__ck"))
-    // expansion keeps direction: source members come from the SOURCE
-    // rep's group, destination members from the destination's
-    val expanded = repDir
-      .join(ckOfRep.select(col("__rep").as("ra"), col("__ck").as("cka")), "ra")
-      .join(ckOfRep.select(col("__rep").as("rb"), col("__ck").as("ckb")), "rb")
-      .join(groups.select(col("__ck").as("cka"), col("doc_id").as("doc_a")), "cka")
-      .join(groups.select(col("__ck").as("ckb"), col("doc_id").as("doc_b")), "ckb")
-      .select("doc_a", "doc_b", "n_a", "n_common", "containment")
-    val grpSize = sets.select(col("__ck"), size(col("shingles")).as("n_a"))
-      .dropDuplicates("__ck")
-    val intra = groups.as("x").join(groups.as("y"),
-        col("x.__ck") === col("y.__ck") && col("x.doc_id") =!= col("y.doc_id"))
-      .join(grpSize.withColumnRenamed("__ck", "ck2"),
-        col("x.__ck") === col("ck2"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("n_a"), col("n_a").cast("long").as("n_common"),
-        lit(1.0).as("containment"))
-    expanded.unionByName(intra)
-  }
-
   def ngramJaccardPairsIncremental(
-      corpus: DataFrame, batch: DataFrame, n: Int, threshold: Double,
-      maxDocFreq: Long = 0L): DataFrame = {
+      corpus: DataFrame, batch: DataFrame, n: Int, threshold: Double): DataFrame = {
     val all = corpus.select(col("doc_id"), col("text"), lit(false).as("is_new"))
       .unionByName(batch.select(col("doc_id"), col("text"), lit(true).as("is_new")))
-    // same clone canonicalization as ngramJaccardPairs — a batch of
-    // verbatim re-crawls (the COMMON increment in practice) must not pay
-    // g clones x df postings each; only DIRTY groups (containing >= 1 new
-    // member) drive the index join, one representative per distinct set
+    // the [[Clones]] contraction — a batch of verbatim re-crawls (the
+    // COMMON increment in practice) must not pay g clones x df postings
+    // each; only DIRTY groups (containing >= 1 new member) drive the index
+    // join, one representative per distinct set
     val sets0 = Components.cut(
-      shingleSets(all.select("doc_id", "text"), n)
-        .withColumn("__ck", xxhash64(concat_ws("\u0001", col("shingles"))))
+      cloneKeyedShingleSets(all.select("doc_id", "text"), n)
         .join(all.select("doc_id", "is_new"), "doc_id"))
-    val groups = sets0.select("doc_id", "__ck", "is_new")
-    val repIds = groups.groupBy("__ck").agg(min(col("doc_id")).as("doc_id"))
-    val dirty = groups.filter(col("is_new")).select("__ck").distinct()
+    val clones = Clones(sets0.select("doc_id", "__ck", "is_new"), "doc_id")
+    val dirty = sets0.filter(col("is_new")).select("__ck").distinct()
       .withColumn("__dirty", lit(true))
-    val repSets = sets0.join(repIds, Seq("__ck", "doc_id"))
+    val repSets = sets0.join(clones.reps, Seq("__ck", "doc_id"))
       .join(dirty, Seq("__ck"), "left")
       .withColumn("__dirty", coalesce(col("__dirty"), lit(false)))
     val sizes = repSets.select(col("doc_id"), size(col("shingles")).as("n_shingles"))
-    val inv0 = repSets.select(col("doc_id"), col("__dirty"), explode(col("shingles")).as("s0"))
+    val inv = repSets.select(col("doc_id"), col("__dirty"), explode(col("shingles")).as("s0"))
       .select(col("doc_id"), col("__dirty"), xxhash64(col("s0")).as("s"))
-    val inv =
-      if (maxDocFreq <= 0) inv0
-      else inv0.join(
-        inv0.groupBy("s").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDocFreq).select("s"), "s")
     // orientation guard at the GROUP level: a dirty rep always drives;
     // dirty-dirty pairs form once (a < b), dirty-clean once (only the
     // dirty side drives), clean-clean never
@@ -260,27 +204,18 @@ object NearDup {
         col("n_common").cast("double") / (col("na") + col("nb") - col("n_common")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select("ra", "rb", "jaccard")
-    // expand group pairs to member pairs that TOUCH the batch
-    val ckOfRep = repIds.select(col("doc_id").as("rep"), col("__ck"))
-    val expanded = repPairs
-      .join(ckOfRep.select(col("rep").as("ra"), col("__ck").as("cka")), "ra")
-      .join(ckOfRep.select(col("rep").as("rb"), col("__ck").as("ckb")), "rb")
-      .join(groups.select(col("__ck").as("cka"), col("doc_id").as("ma"),
-        col("is_new").as("ma_new")), "cka")
-      .join(groups.select(col("__ck").as("ckb"), col("doc_id").as("mb"),
-        col("is_new").as("mb_new")), "ckb")
-      .filter(col("ma_new") || col("mb_new"))
+    // group pairs expand to the member pairs that TOUCH the batch;
+    // intra-group clone pairs are exactly 1.0, driven by new members only
+    // (a clean group never self-joins)
+    clones.expand(repPairs, "ra", "rb")
+      .filter(col("is_new_a") || col("is_new_b"))
       .select(least(col("ma"), col("mb")).as("doc_a"),
         greatest(col("ma"), col("mb")).as("doc_b"), col("jaccard"))
-    // intra-group clone pairs touching the batch: exactly 1.0, driven by
-    // new members only (a clean group never self-joins)
-    val intra = groups.filter(col("is_new")).as("x").join(groups.as("y"),
-        col("x.__ck") === col("y.__ck") && col("x.doc_id") =!= col("y.doc_id")
-          && (!col("y.is_new") || col("x.doc_id") < col("y.doc_id")))
-      .select(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
-        greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"),
-        lit(1.0).as("jaccard"))
-    expanded.unionByName(intra)
+      .unionByName(clones.sameGroup
+        .filter(col("is_new_a") && col("ma") =!= col("mb")
+          && (!col("is_new_b") || col("ma") < col("mb")))
+        .select(least(col("ma"), col("mb")).as("doc_a"),
+          greatest(col("ma"), col("mb")).as("doc_b"), lit(1.0).as("jaccard")))
   }
 
   /** MinHash+LSH near-dup pairs, verified with exact Jaccard over shingles.
@@ -296,25 +231,23 @@ object NearDup {
       numPerms: Int = 64, bands: Int = 16): DataFrame = {
     require(numPerms % bands == 0, "bands must divide numPerms")
     val rowsPerBand = numPerms / bands
-    // `__ck` canonicalizes IDENTICAL shingle sets (exact clones), the
-    // ngramJaccardPairs contraction: signature, band buckets, est and
-    // exact jaccard are all FUNCTIONS of the set, so one representative
-    // per set runs the whole bucket-join + verify and pairs expand back
-    // exactly afterwards — a group of g clones costs g·pairs instead of
-    // g²·bands candidate rows (measured ×9 over linear on a ×100
-    // clone-heavy corpus without this).
-    val sets0 = Components.cut(shingleSets(docs, n, widen = true)
-      .withColumn("__ck", xxhash64(concat_ws("\u0001", col("shingles")))))
-    val repIds = sets0.groupBy("__ck").agg(min(col("doc_id")).as("doc_id"))
+    // the [[Clones]] contraction: signature, band buckets, est and exact
+    // jaccard are all FUNCTIONS of the set, so one representative per set
+    // runs the whole bucket-join + verify and pairs expand back exactly
+    // afterwards — a group of g clones costs g·pairs instead of g²·bands
+    // candidate rows (measured ×9 over linear on a ×100 clone-heavy corpus
+    // without this).
+    val sets0 = Components.cut(cloneKeyedShingleSets(docs, n, widen = true))
+    val all = Clones(sets0.select("doc_id", "__ck"), "doc_id")
     // referenced three times (bucketing + both re-attach joins)
     val sets = Components.cut(sets0
-      .join(repIds, Seq("__ck", "doc_id"))
+      .join(all.reps, Seq("__ck", "doc_id"))
       .withColumn("sig", Sketches.minhashSignature(col("shingles"), numPerms))
       .filter(col("sig").isNotNull))
     // members of groups whose rep survived the sig filter (sig is
     // set-determined, so survival is group-uniform by construction)
-    val groups = sets0.select("doc_id", "__ck")
-      .join(sets.select(col("__ck")), "__ck")
+    val clones = new Clones(
+      all.members.join(sets.select(col("__ck")), "__ck"), "doc_id", all.reps)
     val buckets = sets
       .select(col("doc_id"), explode(Sketches.bandKeys(col("sig"), bands, rowsPerBand)).as("bucket"))
     val cand = buckets.as("a").join(buckets.as("b"),
@@ -328,26 +261,17 @@ object NearDup {
       .withColumn("jaccard", Sketches.jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "est_jaccard", "jaccard")
-    // expand representatives back to members: cross-group pairs inherit
-    // the rep pair's est/jaccard bit-for-bit (identical signatures and
-    // sets); intra-group pairs are exactly est = 1.0 (all numPerms
-    // components equal) and jaccard = 1.0 (|∩| = |∪|), which every
-    // threshold ≤ 1 keeps — identical to what the un-canonicalized join
-    // emits for clone pairs
-    val ckOfRep = repIds.select(col("doc_id").as("__rep"), col("__ck"))
-    val expanded = repPairs
-      .join(ckOfRep.select(col("__rep").as("doc_a"), col("__ck").as("cka")), "doc_a")
-      .join(ckOfRep.select(col("__rep").as("doc_b"), col("__ck").as("ckb")), "doc_b")
-      .join(groups.select(col("__ck").as("cka"), col("doc_id").as("ma")), "cka")
-      .join(groups.select(col("__ck").as("ckb"), col("doc_id").as("mb")), "ckb")
+    // intra-group pairs are exactly est = 1.0 (all numPerms components
+    // equal) and jaccard = 1.0 (|∩| = |∪|), which every threshold ≤ 1
+    // keeps — identical to what the un-canonicalized join emits for clone
+    // pairs
+    clones.expand(repPairs, "doc_a", "doc_b")
       .select(least(col("ma"), col("mb")).as("doc_a"),
         greatest(col("ma"), col("mb")).as("doc_b"),
         col("est_jaccard"), col("jaccard"))
-    val intra = groups.as("x").join(groups.as("y"),
-        col("x.__ck") === col("y.__ck") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        lit(1.0).as("est_jaccard"), lit(1.0).as("jaccard"))
-    expanded.unionByName(intra)
+      .unionByName(clones.intra
+        .select(col("ma").as("doc_a"), col("mb").as("doc_b"),
+          lit(1.0).as("est_jaccard"), lit(1.0).as("jaccard")))
   }
 
   /** Partial-overlap (containment) pairs via winnowing fingerprints
@@ -363,12 +287,11 @@ object NearDup {
     // project (evaluating the winnow expression ~3x per row) and the
     // self-join recomputes the whole pipeline on each side — profiled at
     // 6 evaluations per document vs 1 here (q35 round-5 triage, PLANS.md)
-    // `__ck` canonicalizes identical fingerprint SETS (exact clones) —
-    // the ngramJaccardPairs contraction: the quadratic inverted-index
-    // join runs over one representative per set, pairs expand back
-    // exactly (shared counts are set-determined), and intra-group pairs
-    // share ALL fingerprints (winnow emits a distinct set, so
-    // n_shared = |fps| bit-for-bit)
+    // `__ck` keys identical fingerprint SETS for the [[Clones]]
+    // contraction: the quadratic inverted-index join runs over one
+    // representative per set, pairs expand back exactly (shared counts are
+    // set-determined), and intra-group pairs share ALL fingerprints
+    // (winnow emits a distinct set, so n_shared = |fps| bit-for-bit)
     // no widen here: measured 1.59 → 1.99 s at sf0.1 — the winnow pass is
     // cheaper than the text shuffle it would buy (contrast shingleSets)
     val fps0 = Components.cut(
@@ -377,36 +300,29 @@ object NearDup {
           TextFunctions.normalizeText(col("text")), k, w).as("fps")))
       .filter(size(col("fps")) > 0)
       .withColumn("__ck", xxhash64(col("fps")))
-    val groups = fps0.select(col("doc_id"), col("__ck"), size(col("fps")).as("nfp"))
-    val repIds = groups.groupBy("__ck").agg(min(col("doc_id")).as("doc_id"))
-    val fps = fps0.join(repIds, Seq("__ck", "doc_id"))
+    val clones = Clones(
+      fps0.select(col("doc_id"), col("__ck"), size(col("fps")).as("nfp")), "doc_id")
+    val fps = fps0.join(clones.reps, Seq("__ck", "doc_id"))
     val inv = fps.select(col("doc_id"), explode(col("fps")).as("fp"))
     val repPairs = inv.as("a").join(inv.as("b"),
         col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-    val ckOfRep = repIds.select(col("doc_id").as("__rep"), col("__ck"))
-    val expanded = repPairs
-      .join(ckOfRep.select(col("__rep").as("doc_a"), col("__ck").as("cka")), "doc_a")
-      .join(ckOfRep.select(col("__rep").as("doc_b"), col("__ck").as("ckb")), "doc_b")
-      .join(groups.select(col("__ck").as("cka"), col("doc_id").as("ma")), "cka")
-      .join(groups.select(col("__ck").as("ckb"), col("doc_id").as("mb")), "ckb")
+    clones.expand(repPairs, "doc_a", "doc_b")
       .select(least(col("ma"), col("mb")).as("doc_a"),
         greatest(col("ma"), col("mb")).as("doc_b"), col("n_shared"))
-    val intra = groups.as("x").join(groups.as("y"),
-        col("x.__ck") === col("y.__ck") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.nfp").cast("long").as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-    expanded.unionByName(intra)
+      .unionByName(clones.intra
+        .select(col("ma").as("doc_a"), col("mb").as("doc_b"),
+          col("nfp_a").cast("long").as("n_shared"))
+        .filter(col("n_shared") >= minShared))
   }
 
   /** SimHash near-dup pairs within `maxHamming` (≤ 3 for complete 4-block
     * blocking). Returns (doc_a, doc_b, hamming).
     *
-    * Canonicalized on the FINGERPRINT itself (the ngramJaccardPairs
-    * contraction, one step simpler): the simhash is a pure function of the
+    * Canonicalized on the FINGERPRINT itself (the [[Clones]] contraction,
+    * one step simpler): the simhash is a pure function of the
     * token stream, so exact clones share it, the block self-join runs over
     * one representative per DISTINCT fingerprint, and pairs expand back —
     * cross-group pairs inherit the rep pair's hamming (same fingerprints),
@@ -428,8 +344,11 @@ object NearDup {
     * canonicalization: the block join runs over one REPRESENTATIVE per
     * distinct hash and pairs expand back afterwards, so an exact-clone
     * group costs g·pairs instead of g² candidate rows per block (the
-    * ngramJaccardPairs `__ck` discipline applied to the hash domain).
-    * Emits (id_a, id_b, hamming) with id_a < id_b. Shared by
+    * [[Clones]] discipline applied to the hash domain). It does not go
+    * through [[Clones]]: the hash IS the group key, so a rep pair carries
+    * its two hashes and expands with two joins straight onto the members,
+    * where going through representative ids would add the two rep → key
+    * joins. Emits (id_a, id_b, hamming) with id_a < id_b. Shared by
     * [[simhashPairs]] (text) and the perceptual-image dedup query
     * (dHash over decoded media, q283).
     */
@@ -705,11 +624,10 @@ object NearDup {
     val v0 = Components.cut(withNorm(emb))
     val allBuckets = Components.cut(
       hyperplaneBuckets(emb, bits, dim, tables))
-    val groups = Components.cut(
+    val clones = Clones(Components.cut(
       allBuckets.groupBy("vec_id")
-        .agg(xxhash64(sort_array(collect_list(col("bkt")))).as("__ck")))
-    val repIds = groups.groupBy("__ck").agg(min(col("vec_id")).as("vec_id"))
-    val repBuckets = allBuckets.join(repIds, Seq("vec_id"))
+        .agg(xxhash64(sort_array(collect_list(col("bkt")))).as("__ck"))), "vec_id")
+    val repBuckets = allBuckets.join(clones.reps, Seq("vec_id"))
     // Ball-cover pruning of the rep candidate join (round-11 ×100
     // decomposition: 93 M rep bucket pairs expanded to 352 M member
     // candidates of which only 11.2 M verified — 31× bloat, all of it
@@ -733,17 +651,17 @@ object NearDup {
     // the 64-dim row width) the join broadcasts; above it the hint is
     // dropped and the join degrades to a shuffle — same rows either way,
     // pinned by NearDupSpec across both routes.
-    val repVec = repIds.join(v0, "vec_id")
+    val repVec = clones.reps.join(v0, "vec_id")
       .select(col("__ck"), col("embedding").as("re"), col("nrm").as("rn"))
     val clampCos = (c: Column) => least(greatest(c, lit(-1.0)), lit(1.0))
-    val radius = groups.join(v0, "vec_id").join(repVec, "__ck")
+    val radius = clones.members.join(v0, "vec_id").join(repVec, "__ck")
       .select(col("__ck"),
         acos(clampCos(Similarity.cosineFromParts(
           Similarity.dotFast(col("embedding"), col("re")),
           col("nrm"), col("rn")))).as("ang"))
       .groupBy("__ck").agg(max(col("ang")).as("radius"))
     val repGeo = Components.cut(
-      repIds.join(v0, "vec_id").join(radius, "__ck")
+      clones.reps.join(v0, "vec_id").join(radius, "__ck")
         .select(col("vec_id").as("rid"), col("embedding").as("rv"),
           col("nrm").as("rnrm"), col("radius")))
     // cheap after materialization: a block-stat count, no recompute
@@ -766,20 +684,12 @@ object NearDup {
         lit(true)))
       .select(col("ra"), col("rb"))
       .dropDuplicates("ra", "rb")
-    val ckOfRep = repIds.select(col("vec_id").as("__rep"), col("__ck"))
     // cells are disjoint, so an expanded member pair arises from exactly
     // one rep pair — no post-expansion dedup needed
-    val cross = repCand
-      .join(ckOfRep.select(col("__rep").as("ra"), col("__ck").as("cka")), "ra")
-      .join(ckOfRep.select(col("__rep").as("rb"), col("__ck").as("ckb")), "rb")
-      .join(groups.select(col("__ck").as("cka"), col("vec_id").as("ma")), "cka")
-      .join(groups.select(col("__ck").as("ckb"), col("vec_id").as("mb")), "ckb")
+    clones.expand(repCand, "ra", "rb")
       .select(least(col("ma"), col("mb")).as("vec_a"),
         greatest(col("ma"), col("mb")).as("vec_b"))
-    val intra = groups.as("x").join(groups.as("y"),
-        col("x.__ck") === col("y.__ck") && col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
-    cross.unionByName(intra)
+      .unionByName(clones.intra.select(col("ma").as("vec_a"), col("mb").as("vec_b")))
       .join(v0.select(col("vec_id").as("vec_a"), col("embedding").as("ea"), col("nrm").as("na")), "vec_a")
       .join(v0.select(col("vec_id").as("vec_b"), col("embedding").as("eb"), col("nrm").as("nb")), "vec_b")
       .filter(Similarity.cosineFromParts(
@@ -917,7 +827,7 @@ object NearDup {
     * candidates at sf0.1). The cap is the 100 TB knob: IDF already pushes
     * hub terms toward zero weight while their df² candidate blowup is
     * what actually kills the join — dropping them bounds the inverted
-    * index the way ngramJaccardPairs' hub-shingle cap does. Weights are
+    * index. Weights are
     * tf·ln(D/df) rounded at 12 dp (the q115 scoring fragment).
     */
   def tfidfCosinePairs(
@@ -928,8 +838,8 @@ object NearDup {
     // (doc × word)-sized cut: __ck derivation and the rep projection read it
     val tf = Components.cut(
       occ.groupBy("doc_id", "word").agg(count(lit(1)).as("tf")))
-    // `__ck` canonicalizes IDENTICAL token MULTISETS (exact clones), the
-    // ngramJaccardPairs contraction: tf·idf weights, norms, dots and cosine
+    // `__ck` keys IDENTICAL token MULTISETS for the [[Clones]]
+    // contraction: tf·idf weights, norms, dots and cosine
     // are all functions of the multiset (df counts members, see below), so
     // the Σ df² inverted-index join runs over one REPRESENTATIVE per
     // multiset — a corpus where every doc has g clones costs the g=1 join,
@@ -939,16 +849,20 @@ object NearDup {
       .groupBy("doc_id")
       .agg(xxhash64(sort_array(collect_list(struct(col("word"), col("tf")))))
         .as("__ck")))
-    val repIds = ck.groupBy("__ck").agg(min(col("doc_id")).as("doc_id"))
+    val clones = Clones(ck, "doc_id")
     val gsz = ck.groupBy("__ck").agg(count(lit(1)).as("gsz"))
     val dTot = docs.agg(count(lit(1)).as("d_total"))
     // df counts DOCUMENTS (clones included): rep tf rows weighted by
     // group size reproduce the raw per-word document frequency exactly
-    val repTf = tf.join(ck, "doc_id").join(repIds, Seq("__ck", "doc_id"))
+    val repTf = tf.join(ck, "doc_id").join(clones.reps, Seq("__ck", "doc_id"))
     val dfreq = repTf.join(gsz, "__ck")
       .groupBy("word").agg(sum(col("gsz")).as("df"))
       .crossJoin(broadcast(dTot))
-      .filter(col("df") <= ceil(lit(maxDocFreqFrac) * col("d_total")))
+      // a term in EVERY document weighs tf·ln(1) = 0: it adds nothing to
+      // a dot or a norm, and a vector of only such terms (two clones at
+      // maxDocFreqFrac = 1) has norm 0 and no cosine, so it is dropped too
+      .filter(col("df") <= ceil(lit(maxDocFreqFrac) * col("d_total"))
+        && col("df") < col("d_total"))
       .select("word", "df")
     // read four ways below (norms + self-dots + both join sides) — cut once
     val wts = Components.cut(repTf
@@ -987,22 +901,12 @@ object NearDup {
       .withColumn("cos", col("dself") / (col("nrm") * col("nrm")))
       .filter(col("cos") >= threshold)
       .select(col("doc_id"), round(col("cos"), 12).as("cos"))
-    val ckOfRep = repIds.select(col("doc_id").as("__rep"), col("__ck"))
-    val groups = ck.select("doc_id", "__ck")
-    val expanded = repPairs
-      .join(ckOfRep.select(col("__rep").as("doc_a"), col("__ck").as("cka")), "doc_a")
-      .join(ckOfRep.select(col("__rep").as("doc_b"), col("__ck").as("ckb")), "doc_b")
-      .join(groups.select(col("__ck").as("cka"), col("doc_id").as("ma")), "cka")
-      .join(groups.select(col("__ck").as("ckb"), col("doc_id").as("mb")), "ckb")
+    clones.expand(repPairs, "doc_a", "doc_b")
       .select(least(col("ma"), col("mb")).as("doc_a"),
         greatest(col("ma"), col("mb")).as("doc_b"), col("cos"))
-    val intra = selfCos
-      .join(ckOfRep.select(col("__rep").as("doc_id"), col("__ck")), "doc_id")
-      .join(groups.select(col("__ck"), col("doc_id").as("ma")), "__ck")
-      .join(groups.select(col("__ck"), col("doc_id").as("mb")), "__ck")
-      .filter(col("ma") < col("mb"))
-      .select(col("ma").as("doc_a"), col("mb").as("doc_b"), col("cos"))
-    expanded.unionByName(intra)
+      .unionByName(clones.sameGroup(selfCos.join(clones.reps, "doc_id"))
+        .filter(col("ma") < col("mb"))
+        .select(col("ma").as("doc_a"), col("mb").as("doc_b"), col("cos")))
   }
 
   /** Approximate top-k cosine neighbors for EVERY vector via hyperplane-LSH

@@ -48,11 +48,10 @@ object SetSimJoin {
       s"threshold must be in (0, 1], got $threshold")
     // (doc_id, sorted distinct shingle-hash array) — read by the ordering
     // join, the verify re-attach (twice), and sizes: materialize once.
-    // `__ck` canonicalizes identical shingle sets (exact clones): the
-    // prefix index and candidate join run over one representative per
-    // set, and pairs expand back exactly afterwards — the same clone
-    // contraction as ngramJaccardPairs (a group of g clones costs g
-    // output pairs, not g² prefix-candidate rows).
+    // `__ck` keys identical shingle sets for the [[Clones]] contraction:
+    // the prefix index and candidate join run over one representative per
+    // set, and pairs expand back exactly afterwards (a group of g clones
+    // costs g output pairs, not g² prefix-candidate rows).
     val sets0 = Components.cut(
       docs.select(col("doc_id"),
           graft.functions.Sketches.wordShingles(col("text"), n).as("sh"))
@@ -60,9 +59,9 @@ object SetSimJoin {
         .select(col("doc_id"),
           array_sort(transform(col("sh"), s => xxhash64(s))).as("sh"))
         .withColumn("__ck", xxhash64(col("sh"))))
-    val groups = sets0.select(col("doc_id"), col("__ck"), size(col("sh")).as("nsh"))
-    val repIds = groups.groupBy("__ck").agg(min(col("doc_id")).as("doc_id"))
-    val sets = sets0.join(repIds, Seq("__ck", "doc_id"))
+    val clones = Clones(
+      sets0.select(col("doc_id"), col("__ck"), size(col("sh")).as("nsh")), "doc_id")
+    val sets = sets0.join(clones.reps, Seq("__ck", "doc_id"))
     val posts = sets.select(col("doc_id"), explode(col("sh")).as("s"))
     val dfreq = posts.groupBy("s").agg(count(lit(1)).as("df"))
     // per-doc (df asc, hash asc) order lives in a doc-sized array sort —
@@ -125,28 +124,20 @@ object SetSimJoin {
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("n_a"), col("n_b"),
         col("n_common"), round(col("jaccard"), 12).as("jaccard"))
-    // expand representatives to members: identical sets ⇒ identical
-    // (n_a, n_b, n_common, jaccard); sizes swap when the member order
-    // flips relative to the rep order
-    val ckOfRep = repIds.select(col("doc_id").as("__rep"), col("__ck"))
-    val expanded = repPairs
-      .join(ckOfRep.select(col("__rep").as("doc_a"), col("__ck").as("cka")), "doc_a")
-      .join(ckOfRep.select(col("__rep").as("doc_b"), col("__ck").as("ckb")), "doc_b")
-      .join(groups.select(col("__ck").as("cka"), col("doc_id").as("ma")), "cka")
-      .join(groups.select(col("__ck").as("ckb"), col("doc_id").as("mb")), "ckb")
+    // identical sets ⇒ identical (n_a, n_b, n_common, jaccard); sizes swap
+    // when the member order flips relative to the rep order, and
+    // intra-group pairs are J = 1 exactly (n_common = n_a = n_b)
+    clones.expand(repPairs, "doc_a", "doc_b")
       .select(
         least(col("ma"), col("mb")).as("doc_a"),
         greatest(col("ma"), col("mb")).as("doc_b"),
         when(col("ma") < col("mb"), col("n_a")).otherwise(col("n_b")).as("n_a"),
         when(col("ma") < col("mb"), col("n_b")).otherwise(col("n_a")).as("n_b"),
         col("n_common"), col("jaccard"))
-    // intra-group pairs: J = 1 exactly (n_common = n_a = n_b)
-    val intra = groups.as("x").join(groups.as("y"),
-        col("x.__ck") === col("y.__ck") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.nsh").cast("long").as("n_a"), col("y.nsh").cast("long").as("n_b"),
-        col("x.nsh").cast("long").as("n_common"), lit(1.0).as("jaccard"))
-    expanded.unionByName(intra)
+      .unionByName(clones.intra
+        .select(col("ma").as("doc_a"), col("mb").as("doc_b"),
+          col("nsh_a").cast("long").as("n_a"), col("nsh_b").cast("long").as("n_b"),
+          col("nsh_a").cast("long").as("n_common"), lit(1.0).as("jaccard")))
   }
 
   /** Blocking + pairwise edit-distance verification — the "candidate

@@ -1141,7 +1141,7 @@ object DedupQueries {
     * Σ|block|² over a (noun × brand)-partitioned catalog, never
     * |parts|². Σ|block|² still grows quadratically when blocks scale
     * with the corpus (the ×10 probe measured 29× for 10× rows), so a
-    * hub-block cap (the q143 maxDocFreq discipline) bounds it: blocks
+    * hub-block cap (the q143 maxDocFreqFrac discipline) bounds it: blocks
     * larger than 200 records are excluded from pairing — at production
     * scale an oversized block means the blocking key is too coarse and
     * needs another field, not more compute. Fields compared: name edit

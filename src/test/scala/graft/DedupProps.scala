@@ -10,12 +10,7 @@ import org.scalacheck.{Gen, Prop, Properties}
   */
 object DedupProps extends Properties("Dedup") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config(GraftSession.SharedConfs)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = SparkSpec.session
 
   private val rowsGen: Gen[List[(String, Long)]] =
     Gen.listOf(Gen.zip(Gen.chooseNum(0, 30).map("id_" + _), Gen.chooseNum(-5000L, 5000L)))

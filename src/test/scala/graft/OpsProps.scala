@@ -11,12 +11,7 @@ import org.scalacheck.{Gen, Prop, Properties}
   */
 object OpsProps extends Properties("Operators") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config(GraftSession.SharedConfs)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = SparkSpec.session
 
   private val rowGen = for {
     key <- Gen.chooseNum(0L, 4L)

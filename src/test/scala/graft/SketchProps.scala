@@ -7,14 +7,9 @@ import org.scalacheck.{Gen, Prop, Properties}
 /** Property tests for the sketch guarantees. */
 object SketchProps extends Properties("Sketches") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config(GraftSession.SharedConfs)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = SparkSpec.session
 
-  private val word = Gen.oneOf(
+  private[graft] val word: Gen[String] = Gen.oneOf(
     "alpha", "bravo", "charlie", "delta", "echo", "foxtrot", "golf", "hotel",
     "india", "juliet", "kilo", "lima", "mike", "november", "oscar", "papa")
 
@@ -33,7 +28,15 @@ object SketchProps extends Properties("Sketches") {
       pairs.contains((1L, 2L))
     }
 
-  // 64-perm MinHash agreement estimates Jaccard with sd <= 1/16; 4 sd bound
+  // The estimate is the mean of 64 agreement indicators, one per
+  // permutation, each 1 with probability p ≈ J. Hoeffding:
+  // P(|est − p| ≥ t) ≤ 2·exp(−2·64·t²), so over ScalaCheck's 100 draws a
+  // run fails with probability ≤ 200·exp(−128·t²), which is ≤ 1e-6 from
+  // t = 0.387 on; the bound is 0.39. The (a·h + b) mod P family is not
+  // exactly min-wise independent, but its bias on these sets is far inside
+  // the 0.004 left over: a pair at J = 0.383 agreed on 0.381 of 20 000
+  // random permutations, and over 20 000 drawn pairs the mean of est − J
+  // was 3e-4. A 4 sd bound (0.25) fails about 1 draw in 4 000.
   property("minhash estimate tracks exact jaccard") = {
     val gen = for {
       common <- Gen.chooseNum(20, 40).flatMap(n => Gen.listOfN(n, word))
@@ -45,7 +48,7 @@ object SketchProps extends Properties("Sketches") {
       val docs = Seq((1L, ta.mkString(" ")), (2L, tb.mkString(" "))).toDF("doc_id", "text")
       NearDup.minhashLshPairs(docs, n = 2, threshold = 0.0, numPerms = 64)
         .select("est_jaccard", "jaccard").collect()
-        .forall(r => math.abs(r.getDouble(0) - r.getDouble(1)) <= 0.25)
+        .forall(r => math.abs(r.getDouble(0) - r.getDouble(1)) <= 0.39)
     }
   }
 

@@ -4,15 +4,22 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for suites (one session per JVM; see spark guide). */
-trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
+/** The one local session every suite and property object uses (one
+  * SparkContext per JVM).
+  */
+object SparkSpec {
+  lazy val session: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config(GraftSession.SharedConfs)
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+}
+
+/** A suite on the shared [[SparkSpec.session]]. */
+trait SparkSpec extends AnyFunSuite {
+  lazy val spark: SparkSession = SparkSpec.session
 
   def jsonDf(schema: org.apache.spark.sql.types.StructType, rows: String*): DataFrame = {
     import spark.implicits._
